@@ -1227,13 +1227,11 @@ object ScaleBench {
     val pool = 4096
     val tpl = (1 to 16).map(i => s"boiler token t$i").mkString(" ")
     // SPREAD variant (r17): the canonical corpus's center distances are
-    // Binomial-concentrated INSIDE the repair window (measured: windowed
-    // projection 17.209M vs exact 17.200M at maxDist 7) — the negative-
-    // result shape. With SPARK_GRAFT_SCALE_SPREAD=1 each doc's variant
-    // token repeats w ∈ {1,2,4,8,16,32} times (by doc index), so the
-    // free template bits flip progressively with w and same-variant
-    // docs sit at center distances spread across MANY window widths —
-    // the multi-scale crawl shape the window exists for.
+    // Binomial-concentrated. With SPARK_GRAFT_SCALE_SPREAD=1 each doc's
+    // variant token repeats w ∈ {1,2,4,8,16,32} times (by doc index), so
+    // the free template bits flip progressively with w and same-variant
+    // docs sit at center distances spread over a wide range — the
+    // multi-scale crawl shape.
     val spread = sys.env.get("SPARK_GRAFT_SCALE_SPREAD").contains("1")
     val vTok = concat(lit(" u"), pmod(col("id"), lit(pool)).cast("string"))
     val textCol =
@@ -1275,8 +1273,8 @@ object ScaleBench {
     // pairs re-expand through ~49-member exact-dup groups to ~10^10
     // OUTPUT pairs: on a dense corpus the pair contract's output is the
     // quadratic, which is precisely what the WARN tells consumers.
-    // Values: "1" = leg + the windowed-repair legs; "only" = this leg
-    // alone.
+    // Values: "1" = this leg + the pair-complete/star legs; "only" =
+    // this leg alone.
     val pairForm = sys.env.get("SPARK_GRAFT_SCALE_PAIRFORM")
     if (pairForm.exists(Set("1", "only"))) {
       val (sec, rows) = t {
@@ -1296,14 +1294,7 @@ object ScaleBench {
       sys.props("graft.stardedup.factor") = "1e18" // never star: old verify
       try leg(maxDist, "pair-complete")
       finally sys.props.remove("graft.stardedup.factor")
-      // r17 attribution pair: the same star path with the metric window
-      // disabled vs default-on — candidate counts land on stderr from
-      // gatedBucketEdges, so the window's reduction is separable from
-      // the star's
-      sys.props("graft.stardedup.window") = "0"
-      try leg(maxDist, "star-nowindow")
-      finally sys.props.remove("graft.stardedup.window")
-      leg(maxDist, "star-windowed")
+      leg(maxDist, "star")
     }
     graft.util.BlockRelease.release(docs)
   }
@@ -1360,10 +1351,7 @@ object ScaleBench {
     sys.props("graft.stardedup.factor") = "1e18" // never star: old verify
     try leg("pair-complete")
     finally sys.props.remove("graft.stardedup.factor")
-    sys.props("graft.stardedup.window") = "0"
-    try leg("star-nowindow")
-    finally sys.props.remove("graft.stardedup.window")
-    leg("star-windowed")
+    leg("star")
     graft.util.BlockRelease.release(docs)
   }
 

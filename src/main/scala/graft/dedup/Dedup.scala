@@ -92,15 +92,12 @@ object Dedup {
     * verify on the bucket-size profile before committing to the
     * pair-complete self-join. */
   private[graft] def minhashBanded(sh: DataFrame, k: Int,
-      bands: Int, keep: Seq[String] = Nil): DataFrame = {
+      bands: Int): DataFrame = {
     val rows = k / bands
-    // `keep`: narrow per-doc columns carried through the banding (r17 —
-    // the group form's ln-size repair window reads |shingles| per member)
-    sh.select((col("doc_id") +: keep.map(col)) :+
-        lshBands(minhashSignature(col("shingles"), k), bands, rows).as("bh"): _*)
-      .select((col("doc_id") +: keep.map(col)) :+ explode(col("bh")).as("b"): _*)
-      .select((col("doc_id") +: keep.map(col)) ++
-        Seq(col("b.band").as("band"), col("b.h").as("h")): _*)
+    sh.select(col("doc_id"),
+        lshBands(minhashSignature(col("shingles"), k), bands, rows).as("bh"))
+      .select(col("doc_id"), explode(col("bh")).as("b"))
+      .select(col("doc_id"), col("b.band").as("band"), col("b.h").as("h"))
       .repartition(col("band"), col("h")) // spread buckets — don't inherit
       //                                     a single-file scan's partitioning
       .cp() // signatures are expensive; never recompute for the self-join
@@ -448,8 +445,7 @@ object Dedup {
       .repartition(col("k"))
       .cp()
     // same codegen-kernel swap as [[shingleCosinePairStage]] (r17): the
-    // raw-cosine expression feeds BOTH the pass decider and the window
-    // distance, and runs once per candidate on the star path's verify
+    // cosine runs once per candidate on the star path's verify
     val emb = src.select(col("doc_id"), md5Embed(col("text")).as("v"))
       .withColumn("n2", graft.functions.VectorFunctions.normSq(col("v")))
       .cp()
@@ -458,10 +454,9 @@ object Dedup {
         col("n2").as("na2")), "ga")
       .join(emb.select(col("doc_id").as("gb"), col("v").as("vb"),
         col("n2").as("nb2")), "gb")
-    val cosRawExpr =
-      graft.functions.VectorFunctions.dot(col("va"), col("vb")) /
-        sqrt(col("na2") * col("nb2"))
-    val cosExpr = round(cosRawExpr, 4)
+    val cosExpr =
+      round(graft.functions.VectorFunctions.dot(col("va"), col("vb")) /
+        sqrt(col("na2") * col("nb2")), 4)
     val edges = gatedBucketEdges(ex, "doc_id", Seq("scope", "k"),
       "shingleCosineGroups",
       pairComplete = () => {
@@ -480,24 +475,11 @@ object Dedup {
         graft.util.BlockRelease.release(cand)
         e
       },
-      // r17: also emit the pair's angular distance from the UNROUNDED
-      // cosine (zero embeddings → null → sentinel: such a member can
-      // never pair, so pruning it is sound; an all-sentinel bucket —
-      // zero CENTER — lands in one cell and is enumerated). The pass
-      // decider stays the rounded cosine; maxDist prices the rounding
-      // in: pass ⟹ cos ≥ tauCos − 5e-5 ⟹ θ ≤ acos(tauCos − 1e-4)
       verify = c => withVecs(c)
-        .withColumn("_craw", cosRawExpr)
         .select(col("ga"), col("gb"),
-          when(col("na2") > 0 && col("nb2") > 0,
-            round(col("_craw"), 4)).as("cos"),
-          when(col("na2") > 0 && col("nb2") > 0,
-            acos(greatest(lit(-1.0), least(lit(1.0), col("_craw")))))
-            .as("_dist"))
+          when(col("na2") > 0 && col("nb2") > 0, cosExpr).as("cos"))
         .withColumn("_pass", coalesce(col("cos") >= tauCos, lit(false))),
-      "ga", "gb",
-      window0 = Some(DistWindow("_dist",
-        math.acos(math.max(-1.0, tauCos - 1e-4)))))
+      "ga", "gb")
     graft.util.BlockRelease.release(ex)
     (shr, emb, edges)
   }
@@ -1136,25 +1118,16 @@ object Dedup {
       // joins against `base` on every q110 run whose density trips and
       // then falls back (sf0.1: fail rate 0.931 — the decision itself
       // is unchanged, it just costs two fewer corpus sorts to reach).
-      // the verify also emits the pair's ANGULAR distance (r17):
-      // acos(cos) is a metric on the sphere (reps all have n2 > 0), so
-      // pass ⟹ θ ≤ acos(τ) and the repair round windows on the carried
-      // center angles — the integer-rational predicate stays the sole
-      // pass decider; the angle only prunes can-never-pass repair pairs
       verify = c => c.select(col("id_a"), col("id_b"),
           col("n2_a"), col("n2_b"),
           VectorFunctions.dot(col("v_a"), col("v_b")).as("_dot"))
         .select(col("id_a"), col("id_b"),
-          pred(col("_dot"), col("n2_a"), col("n2_b")).as("_pass"),
-          acos(greatest(lit(-1.0), least(lit(1.0),
-            col("_dot") / sqrt(col("n2_a") * col("n2_b"))))).as("_dist")),
+          pred(col("_dot"), col("n2_a"), col("n2_b")).as("_pass")),
       "id_a", "id_b",
       carryCols = Seq("v", "n2"),
       // a center row now ships a d-float vector: scale the join-back's
       // broadcast ROW bound down by the width ratio vs a narrow row
-      carryWeight = math.max(1L, d / 3L),
-      window0 = Some(DistWindow("_dist",
-        math.acos(math.min(1.0, tauNum.toDouble / tauDen)))))
+      carryWeight = math.max(1L, d / 3L))
     graft.util.BlockRelease.release(banded)
     edges
   }
@@ -1436,82 +1409,6 @@ object Dedup {
     }
   }
 
-  /** Metric window for the star verify's REPAIR round (r17 — the r16
-    * verdict's one weak mark, the verify-MIXED hot-bucket fallback):
-    * every kernel's pass predicate implies a bound on a 1-D member
-    * "position", so a repair pair whose positions differ by more than
-    * `maxDist` can NEVER verify and is pruned from the round-2
-    * enumeration — sound by the metric, not a heuristic. Two sources:
-    *
-    *  - [[PosWindow]]: a STATIC position computable from the banded
-    *    frame alone. The text kernels use `ln(|shingles|)`: exact
-    *    Jaccard ≥ t forces min(|A|,|B|)/max(|A|,|B|) ≥ t (|A∩B| ≤ min,
-    *    |A∪B| ≥ max — the set-similarity length filter), i.e.
-    *    |ln|A| − ln|B|| ≤ ln(1/t), so `maxDist = ln(1/t)`.
-    *  - [[DistWindow]]: a DYNAMIC position = the member's distance to
-    *    its bucket CENTER, which round 1 computes anyway — `verify`
-    *    emits it as `distCol` (the simhash verify's Hamming popcount;
-    *    the cosine kernels' angular distance via acos). Hamming and
-    *    angular distances obey the triangle inequality, so for a repair
-    *    pair (f, m) of one bucket, d(f,m) ≥ |d(c,f) − d(c,m)| — pairs
-    *    outside the window are pruned. A null/undefined distance maps
-    *    to [[PosSentinel]]: pairs with exactly one undefined side can
-    *    never pass (an undefined side means that MEMBER is
-    *    pair-ineligible — zero embedding), and two undefined sides
-    *    (or an undefined CENTER making every member sentinel) land in
-    *    the same cell and are conservatively enumerated.
-    *
-    * `slack` absorbs floating-point noise in the position computation
-    * (acos near ±1, ln rounding); the effective window is
-    * `maxDist + slack`. The enumeration itself is windowed by cell
-    * quantization (cell = floor(pos / width)): a within-window pair
-    * sits in the same or adjacent cells, so the repair join is an EQUI
-    * join on (bucket key, cell) with the failed side exploded to its 3
-    * neighbor cells — a hot mixed bucket enumerates per cell
-    * neighborhood, not C(|B|,2), and the exact |Δpos| ≤ width filter
-    * runs inside the join. Both the sampled pre-probe and the exact
-    * post-round-1 gate project the WINDOWED enumeration, so the
-    * star/fallback decision prices the pruning in. */
-  private[graft] sealed trait RepairWindow {
-    def maxDist: Double
-    def slack: Double
-    final def width: Double = maxDist + slack
-  }
-
-  /** Static member position over the banded frame's columns. */
-  private[graft] final case class PosWindow(pos: Column, maxDist: Double,
-      slack: Double = 1e-6) extends RepairWindow
-
-  /** Dynamic member position = center distance; `verify` must emit the
-    * pair's metric distance (or null when undefined) as `distCol`. */
-  private[graft] final case class DistWindow(distCol: String,
-      maxDist: Double, slack: Double = 1e-6) extends RepairWindow
-
-  /** Position for pairs whose metric distance is undefined (see
-    * [[RepairWindow]]). Large enough that sentinel cells never touch
-    * real-distance cells, small enough that floor(sentinel/width) fits
-    * a long for every realistic window width (≥ 1e-6). */
-  private[graft] val PosSentinel: Double = 1e9
-
-  /** Kill switch for the repair window (`graft.stardedup.window` /
-    * SPARK_GRAFT_STAR_WINDOW, default on): specs pin pruned ≡ unpruned
-    * output through it, and cells attribute the window's candidate
-    * reduction by flipping it on one JVM. Values: 1/true/0/false. */
-  private[graft] def StarWindowEnabled: Boolean = {
-    val raw = sys.props.get("graft.stardedup.window")
-      .map(("system property graft.stardedup.window", _))
-      .orElse(sys.env.get("SPARK_GRAFT_STAR_WINDOW")
-        .map(("env SPARK_GRAFT_STAR_WINDOW", _)))
-    raw.fold(true) { case (src, s) =>
-      s.trim.toLowerCase match {
-        case "1" | "true"  => true
-        case "0" | "false" => false
-        case other => throw new IllegalArgumentException(
-          s"graft: $src = '$other' is not a boolean (1/true/0/false)")
-      }
-    }
-  }
-
   /** Rep-bucket density-gated candidate generation + exact verify for
     * the `*NearDupGroups` family (r16 — the r15 verdict's one weak
     * mark): the group forms' output needs CONNECTIVITY, not the
@@ -1545,7 +1442,10 @@ object Dedup {
     * rep-bucket-density guard) and engages the star path, whose only
     * hot-key-shaped shuffle (center attach on the bucket key — a hot
     * BUCKET is exactly the gid stage's hot-group shape) rides
-    * [[joinBackBounded]]'s heavy-hitter discipline.
+    * [[joinBackBounded]]'s heavy-hitter discipline. Past the gate, two
+    * repair projections can still send the call back to pair-complete:
+    * a sampled fail-rate probe before round 1, and the exact repair
+    * candidate count after it (both priced against the repair bound).
     *
     * Cheap-verify callers (r16 second round, measured in on the simband
     * cell): when `carryCols` names per-member columns of `banded0` that
@@ -1573,10 +1473,6 @@ object Dedup {
     *          `carryCols` the input also has `<c>_a`/`<c>_b` per carry
     * @param carryCols columns of `banded0`, constant per member id,
     *          carried inline into every candidate frame
-    * @param window metric window for the repair round (r17 — see
-    *          [[RepairWindow]]): prunes repair pairs that can never
-    *          verify and makes both repair projections (probe + exact)
-    *          distance-aware
     * @return verified edges (la, lb), checkpointed; scratch released */
   private[graft] def gatedBucketEdges(banded0: DataFrame, idCol: String,
       keyCols: Seq[String], caller: String,
@@ -1584,16 +1480,8 @@ object Dedup {
       verify: DataFrame => DataFrame,
       la: String, lb: String,
       carryCols: Seq[String] = Nil,
-      carryWeight: Long = 1,
-      window0: Option[RepairWindow] = None): DataFrame = {
-    val window = if (StarWindowEnabled) window0 else None
-    // static positions ride the banded frame as `_pos` from the start;
-    // dynamic (center-distance) positions only exist after round 1
-    val banded = banded0.select(
-      (idCol +: keyCols ++: carryCols).map(col) ++
-        window.collect { case w: PosWindow => w.pos.as("_pos") }: _*)
-    def cellOf(pos: Column): Column =
-      floor(pos / lit(window.map(_.width).getOrElse(1.0))).cast("long")
+      carryWeight: Long = 1): DataFrame = {
+    val banded = banded0.select((idCol +: keyCols ++: carryCols).map(col): _*)
     // carried star-pair emission: the center's carry values ride the
     // centers frame as one struct (min_by pairs them with the min id)
     def carryA(ctrv: Column): Seq[Column] =
@@ -1676,9 +1564,8 @@ object Dedup {
       val starBound = math.max(rows - nBuckets, 1L) // = Σ(|B|−1) ≥ |r1|
       val kSamp = math.ceil(starBound / 20000.0).toLong
       if (kSamp >= 2) {
-        val bHash =
-          pmod(xxhash64(keyCols.map(col): _*), lit(kSamp)) === 0
-        val bS = banded.filter(bHash)
+        val bS = banded.filter(
+          pmod(xxhash64(keyCols.map(col): _*), lit(kSamp)) === 0)
         // sampled-centers side rides the shared broadcast gate (r17
         // second cut — the probe was paying sort-merge exchanges on
         // sample-sized frames, ~19 AQE stage jobs of pure scheduling
@@ -1692,116 +1579,23 @@ object Dedup {
         // either way.
         val cS = graft.util.SizeGate.maybeBroadcast(centersAgg(bS),
           known = Some(nBuckets / kSamp))
-        // sampled star pairs WITH bucket keys kept (the windowed probe
-        // needs per-bucket member positions); the verify itself still
-        // runs on the distinct pair projection. PLANS, not checkpoints
-        // (r17 second cut): r1Sk is consumed once by the verify chain
-        // and once by the stage-2 neighborhood machinery — which only
-        // runs on stage-1 reject and re-derives the sample-sized join
-        // inside its own materialization — so the two eager cp jobs
-        // bought nothing on every probe run
-        val r1Sk = bS.join(cS, keyCols)
+        // a PLAN, not a checkpoint (r17 second cut): the verify's agg
+        // below is its only consumer
+        val r1S = bS.join(cS, keyCols)
           .filter(col(idCol) =!= col("_ctr"))
-        val r1S = r1Sk
           .select(col("_ctr").as(la) +: col(idCol).as(lb) +:
             (carryA(col("_ctrv")) ++ carryB): _*)
           .distinct()
-        val probeProj: (Long, Double, Double) = window match {
-          case None =>
-            // unwindowed: fail rate × Σ(|B|−1)² — the r16 extrapolation
-            val vs = verify(r1S).agg(count(lit(1)),
-              coalesce(sum(when(!col("_pass"), 1L).otherwise(0L)),
-                lit(0L)))
-              .first()
-            val (nS, fS) = (vs.getLong(0), vs.getLong(1))
-            val fHat = if (nS == 0) 0.0 else fS.toDouble / nS
-            (nS, fHat, fHat * sumSq)
-          case Some(w) =>
-            // windowed (r17): the repair enumeration is bounded by each
-            // failed member's 3-cell metric neighborhood, so extrapolate
-            // THAT from the sampled buckets — fail-heavy regimes with
-            // spread positions stay on the star; tight spreads project
-            // like the unwindowed bound and bail as before
-            val vS = verify(r1S).select(
-              Seq(col(la).as("_vla"), col(lb).as("_vlb"),
-                col("_pass").as("_vpass")) ++ (w match {
-                  case dw: DistWindow => Seq(coalesce(
-                    col(dw.distCol).cast("double"), lit(PosSentinel))
-                    .as("_vpos"))
-                  case _: PosWindow => Nil
-                }): _*)
-              .cp()
-            // TWO-STAGE (r17 second cut; PlanMetrics attribution: q110's
-            // reject path paid +10 sample-sized jobs building the 3-cell
-            // machinery below only to confirm a rejection the plain
-            // extrapolation already implied, and ACCEPT-path callers
-            // (the simband maxDist=15 shape) paid it to confirm an
-            // acceptance stage 1 already grants). Stage 1 is the
-            // unwindowed extrapolation from vS alone — one agg, no
-            // joins. Only when it REJECTS does the windowed neighborhood
-            // estimate get built, because only then can the window
-            // change the decision (windowed ≤ unwindowed up to sampling
-            // error); on acceptance the exact post-round-1 windowed
-            // bound remains the backstop.
-            val cnt1 = vS.agg(count(lit(1)),
-              coalesce(sum(when(!col("_vpass"), 1L).otherwise(0L)),
-                lit(0L))).first()
-            val (nS1, fS1) = (cnt1.getLong(0), cnt1.getLong(1))
-            val fHat1 = if (nS1 == 0) 0.0 else fS1.toDouble / nS1
-            if (fHat1 * sumSq <= repairBound * cand2) {
-              graft.util.BlockRelease.release(vS)
-              (nS1, fHat1, fHat1 * sumSq)
-            } else {
-            val mAll = r1Sk.as("s").join(vS.as("v"),
-                col("s._ctr") === col("v._vla") &&
-                  col(s"s.$idCol") === col("v._vlb"))
-              .select(keyCols.map(c => col(s"s.$c")) ++ Seq(
-                col("v._vpass").as("_vpass"),
-                (w match {
-                  case _: PosWindow => col("s._pos")
-                  case _: DistWindow => col("v._vpos")
-                }).as("_pos")): _*)
-              .cp()
-            graft.util.BlockRelease.release(vS)
-            // bucket-cell member counts INCLUDING each center (a center
-            // is a legitimate repair partner; round-1-tried pairs are
-            // anti-joined later, so this only keeps the bound an upper
-            // bound)
-            val posRows = w match {
-              case _: PosWindow =>
-                bS.select(keyCols.map(col) :+ col("_pos"): _*)
-              case _: DistWindow =>
-                mAll.select(keyCols.map(col) :+ col("_pos"): _*)
-                  .unionByName(cS.select(
-                    keyCols.map(col) :+ lit(0.0).as("_pos"): _*))
-            }
-            val cellS = posRows
-              .groupBy(keyCols.map(col) :+ cellOf(col("_pos")).as("_cell"): _*)
-              .agg(count(lit(1)).as("_ccnt"))
-            // stage 1's (pair-level) counts serve the log/fHat — the
-            // per-(bucket, member) recount mAll could provide decides
-            // nothing, so its agg job is not paid
-            val wS = mAll.filter(!col("_vpass"))
-              .select(keyCols.map(col) :+ explode(array(
-                cellOf(col("_pos")) - 1, cellOf(col("_pos")),
-                cellOf(col("_pos")) + 1)).as("_nc"): _*)
-              .as("fc").join(cellS.as("cc"),
-                keyCols.map(c => col(s"fc.$c") === col(s"cc.$c"))
-                  .reduce(_ && _) && col("fc._nc") === col("cc._cell"))
-              .agg(coalesce(sum(col("cc._ccnt")), lit(0L)))
-              .first().getLong(0)
-            graft.util.BlockRelease.release(mAll)
-            (nS1, fHat1, wS.toDouble * kSamp)
-            }
-        }
-        // r1S/r1Sk are plans now — nothing probe-owned holds blocks here
-        val (nS, fHat, projProbe) = probeProj
+        val vs = verify(r1S).agg(count(lit(1)),
+          coalesce(sum(when(!col("_pass"), 1L).otherwise(0L)), lit(0L)))
+          .first()
+        val (nS, fS) = (vs.getLong(0), vs.getLong(1))
+        val fHat = if (nS == 0) 0.0 else fS.toDouble / nS
+        val projProbe = fHat * sumSq
         if (projProbe > repairBound * cand2) {
           System.err.println(
             f"graft.dedup.$caller: sampled star probe ($nS%,d pairs, " +
-            f"fail rate $fHat%.3f) projects " +
-            (if (window.isDefined) "windowed " else "") +
-            f"repair ~$projProbe%,.0f " +
+            f"fail rate $fHat%.3f) projects repair ~$projProbe%,.0f " +
             f"of $cand2%,.0f pair-complete (bound " +
             f"${repairBound}%.2f) — falling back to pair-complete")
           // centersW was never built — the probe aggregated its own slice
@@ -1826,11 +1620,10 @@ object Dedup {
       val v1 = verify(r1).cp()
       graft.util.BlockRelease.release(r1)
       // PASS-HEAVY SHORT-CIRCUIT (r17, measured on the simband
-      // maxDist=15 cell: the windowed leg paid ~3 s of memD/cell
-      // machinery to enumerate an EMPTY repair round): the star's
-      // primary win regime is exactly the one where round 1 has no
-      // fails, so probe that first — one early-terminating job over the
-      // checkpointed v1 — and skip every repair structure when clean.
+      // maxDist=15 cell): the star's primary win regime is exactly the
+      // one where round 1 has no fails, so probe that first — one
+      // early-terminating job over the checkpointed v1 — and skip every
+      // repair structure when clean.
       if (v1.filter(!col("_pass")).isEmpty) {
         val out = v1.filter(col("_pass")).select(col(la), col(lb)).cp()
         System.err.println(
@@ -1840,66 +1633,16 @@ object Dedup {
         graft.util.BlockRelease.release(Seq(centersW, withCtr, v1))
         return out
       }
-      // per-(bucket, member) position + cell for the metric-windowed
-      // repair (r17): static positions already ride withCtr as `_pos`;
-      // dynamic positions attach round 1's center distances (the verify
-      // computed them anyway) — centers sit at 0 by definition.
-      // PLAN ONLY here (r17 second cut — the "probe-underread" tax
-      // recorded on the canonical simband maxDist=7 cell, where the
-      // probe ACCEPTS but the exact windowed bound then REJECTS): the
-      // pre-gate consumer is only the cell-count projection below,
-      // which column-prunes this plan to its narrow position columns —
-      // so a leg that falls back never pays the carry-wide
-      // withCtr ⋈ v1 materialization (+9 s on the 200k cell,
-      // star-windowed 32.2 s vs star-nowindow 23.1 s). The checkpoint
-      // moves past the repair gate, where round 2 reads the carries.
-      val memPlan: Option[DataFrame] = window.map {
-        case _: PosWindow =>
-          withCtr.select((Seq(idCol) ++ keyCols ++ carryCols ++
-            Seq("_ctr", "_pos")).map(col) :+
-            cellOf(col("_pos")).as("_cell"): _*)
-        case dw: DistWindow =>
-          withCtr.as("wc").hint("merge").join(
-              v1.select(col(la).as("_vla"), col(lb).as("_vlb"),
-                coalesce(col(dw.distCol).cast("double"), lit(PosSentinel))
-                  .as("_vpos")).hint("merge"),
-              col("wc._ctr") === col("_vla") &&
-                col(s"wc.$idCol") === col("_vlb"), "left")
-            .select((Seq(idCol) ++ keyCols ++ carryCols ++ Seq("_ctr"))
-              .map(c => col(s"wc.$c")) :+
-              when(col(s"wc.$idCol") === col("wc._ctr"), lit(0.0))
-                .otherwise(coalesce(col("_vpos"), lit(PosSentinel)))
-                .as("_pos"): _*)
-            .withColumn("_cell", cellOf(col("_pos")))
-      }
       // round 2 (the repair): members whose OWN star edge failed re-pair
       // against their whole bucket — per BUCKET, not globally (a member
-      // may pass in one bucket and fail in another). DistWindow fails
-      // carry their center distance straight off v1 (the pair that
-      // failed IS the (center, member) pair whose distance defines the
-      // member's position), so failedRows never needs the memPlan join.
+      // may pass in one bucket and fail in another)
       val fails1 = v1.filter(!col("_pass"))
-        .select(Seq(col(la).as("_fctr"), col(lb).as("_fid")) ++
-          window.collect { case dw: DistWindow =>
-            coalesce(col(dw.distCol).cast("double"), lit(PosSentinel))
-              .as("_fpos") }: _*)
-      val failCols = (idCol +: keyCols ++: carryCols) ++
-        (if (window.isDefined) Seq("_pos", "_cell") else Nil)
-      val failedRows = (window match {
-        case Some(_: DistWindow) =>
-          withCtr.as("w").join(fails1.as("f"),
-              col(s"w.$idCol") === col("f._fid") &&
-                col("w._ctr") === col("f._fctr"))
-            .select((idCol +: keyCols ++: carryCols)
-              .map(c => col(s"w.$c")) :+ col("f._fpos").as("_pos"): _*)
-            .withColumn("_cell", cellOf(col("_pos")))
-            .select(failCols.map(col): _*)
-        case _ =>
-          memPlan.getOrElse(withCtr).as("w").join(fails1.as("f"),
-              col(s"w.$idCol") === col("f._fid") &&
-                col("w._ctr") === col("f._fctr"))
-            .select(failCols.map(c => col(s"w.$c")): _*)
-      }).cp()
+        .select(col(la).as("_fctr"), col(lb).as("_fid"))
+      val failedRows = withCtr.as("w").join(fails1.as("f"),
+          col(s"w.$idCol") === col("f._fid") &&
+            col("w._ctr") === col("f._fctr"))
+        .select((idCol +: keyCols ++: carryCols).map(c => col(s"w.$c")): _*)
+        .cp()
       // ADAPTIVE REPAIR BOUND (r16 second cut — MEASURED on the sf0.1
       // bench): density alone does not decide the star's win. q110's
       // corpus is genuinely near-dup-dense but verify-FAIL-heavy (34.8M
@@ -1915,84 +1658,27 @@ object Dedup {
       // or [[StarRepairCheapFraction]] for carried-column verifies whose
       // per-candidate cost matches pair-complete's) the helper falls
       // back to the pair-complete formulation, having spent only the
-      // linear star work to find out.
-      // narrow centers suffice in the unwindowed projection (it reads
-      // only _bc); the windowed projection (r17) counts each failed
-      // member's 3-cell metric neighborhood instead — the quantity the
-      // windowed round 2 actually enumerates
-      val projRepair = window match {
-        case None =>
-          joinBackBounded(failedRows, centersW, keyCols,
-              "_bc", dropCnt = false, counts = Some((nBuckets, nHot)),
-              rowWeight = carryWeight)
-            .agg(coalesce(sum(col("_bc") - 1), lit(0L))).first().getLong(0)
-        case Some(_) =>
-          // reads memPlan UN-materialized: Catalyst prunes the plan to
-          // (keyCols, _cell), so a DistWindow leg that is about to fall
-          // back pays a narrow merge-join, not the carry-wide build
-          val cc = memPlan.get
-            .groupBy(keyCols.map(col) :+ col("_cell"): _*)
-            .agg(count(lit(1)).as("_ccnt"))
-          val projAgg = failedRows
-            .select(keyCols.map(col) :+ explode(array(col("_cell") - 1,
-              col("_cell"), col("_cell") + 1)).as("_nc"): _*)
-            .as("fc").join(cc.as("cc"),
-              keyCols.map(c => col(s"fc.$c") === col(s"cc.$c"))
-                .reduce(_ && _) && col("fc._nc") === col("cc._cell"))
-            .agg(coalesce(sum(col("cc._ccnt")), lit(0L)))
-          graft.util.PlanAudit.dump(s"${caller}_windowed_projection", projAgg)
-          projAgg.first().getLong(0)
-      }
+      // linear star work to find out. The projection reads only `_bc`
+      // off the checkpointed centers.
+      val projRepair = joinBackBounded(failedRows, centersW, keyCols,
+          "_bc", dropCnt = false, counts = Some((nBuckets, nHot)),
+          rowWeight = carryWeight)
+        .agg(coalesce(sum(col("_bc") - 1), lit(0L))).first().getLong(0)
       if (projRepair > repairBound * cand2) {
         System.err.println(
           f"graft.dedup.$caller: star round 1 found a FAIL-heavy regime " +
-          f"(${if (window.isDefined) "windowed " else ""}repair " +
-          f"projection $projRepair%,d of $cand2%,.0f " +
+          f"(repair projection $projRepair%,d of $cand2%,.0f " +
           f"pair-complete, bound ${repairBound}%.2f via " +
           f"graft.stardedup.repair) — falling back to pair-complete")
-        // nothing window-owned to release: memPlan was never checkpointed
         graft.util.BlockRelease.release(
           Seq(centersW, withCtr, v1, failedRows))
         return pairComplete()
       }
-      // ACCEPTED: now (and only now) materialize the carry-wide member
-      // frame — round 2 scans it twice (m-side join) and reads carries
-      val memD: Option[DataFrame] = window.map {
-        case _: PosWindow => memPlan.get // pure projection of withCtr's cp
-        case _: DistWindow => memPlan.get.cp()
-      }
-      // only the dynamic memD owns blocks
-      val memScratch = window match {
-        case Some(_: DistWindow) => memD.toSeq
-        case _ => Nil
-      }
       val fLtM = col(s"f.$idCol") < col(s"m.$idCol")
-      // windowed (r17): equi-join on (bucket key, cell) with the failed
-      // side exploded to its 3 neighbor cells, then the exact window
-      // filter — a pair outside |Δpos| ≤ width can never verify (the
-      // [[RepairWindow]] soundness argument), and a hot mixed bucket
-      // enumerates cell neighborhoods instead of C(|B|,2)
-      val r2pairs = window match {
-        case None =>
-          failedRows.as("f").hint("merge")
-            .join(banded.as("m").hint("merge"),
-              keyCols.map(c => col(s"f.$c") === col(s"m.$c"))
-                .reduce(_ && _) &&
-                col(s"f.$idCol") =!= col(s"m.$idCol"))
-        case Some(w) =>
-          failedRows
-            .select(failedRows.columns.map(col) :+
-              explode(array(col("_cell") - 1, col("_cell"),
-                col("_cell") + 1)).as("_nc"): _*)
-            .as("f").hint("merge")
-            .join(memD.get.as("m").hint("merge"),
-              keyCols.map(c => col(s"f.$c") === col(s"m.$c"))
-                .reduce(_ && _) &&
-                col("f._nc") === col("m._cell") &&
-                col(s"f.$idCol") =!= col(s"m.$idCol") &&
-                abs(col("f._pos") - col("m._pos")) <= lit(w.width))
-      }
-      val r2Plan = r2pairs
+      val r2Plan = failedRows.as("f").hint("merge")
+        .join(banded.as("m").hint("merge"),
+          keyCols.map(c => col(s"f.$c") === col(s"m.$c")).reduce(_ && _) &&
+            col(s"f.$idCol") =!= col(s"m.$idCol"))
         .select(least(col(s"f.$idCol"), col(s"m.$idCol")).as(la) +:
           greatest(col(s"f.$idCol"), col(s"m.$idCol")).as(lb) +:
           (carryCols.map(c =>
@@ -2016,7 +1702,7 @@ object Dedup {
         f"graft.dedup.$caller: star verify tried ${v1.count()}%,d star " +
         f"+ ${v2.count()}%,d repair candidates " +
         f"(projected pair-complete: $cand2%,.0f)")
-      graft.util.BlockRelease.release(memScratch ++
+      graft.util.BlockRelease.release(
         Seq(centersW, withCtr, v1, failedRows, r2, v2))
       out
     }
@@ -2044,8 +1730,7 @@ object Dedup {
     // distributed Pregel tier (the q40-q49 discipline) — the rep graph
     // is dup-collapsed but still corpus-shaped in the dup-free worst case
     val comp = graft.graph.GraphAlgos.connectedComponents(repEdges,
-      collectThreshold = sys.env.get("SPARK_GRAFT_COLLECT_THRESHOLD")
-        .map(_.toLong).getOrElse(2000000L))
+      collectThreshold = graft.util.SizeGate.collectThreshold(2000000L))
     // normalize component labels to the component's MIN member id (the
     // union-find root choice is arbitrary; min-id is the canonical form
     // every oracle replays)
@@ -2148,12 +1833,11 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     sh.unpersist(blocking = false)
     val reps = mem.filter(col("id") === col("gid") && size(col("shingles")) > 0)
-      .select(col("id").as("doc_id"), col("shingles"),
-        size(col("shingles")).as("n"))
+      .select(col("id").as("doc_id"), col("shingles"))
     // density-gated star verify (r16): dup-light rep buckets keep the
     // pair-complete candidate self-join; near-dup-dense buckets (the
     // 209M-candidate mixed-regime cell) go star + repair
-    val banded = minhashBanded(reps, k, bands, keep = Seq("n"))
+    val banded = minhashBanded(reps, k, bands)
     val edges = gatedBucketEdges(banded, "doc_id", Seq("band", "h"),
       "minhashNearDupGroups",
       pairComplete = () => {
@@ -2172,12 +1856,7 @@ object Dedup {
       verify = c => jaccardOfPairs(c.hint("merge"), reps.hint("merge"))
         .withColumn("_pass",
           coalesce(col("jaccard") >= threshold, lit(false))),
-      "doc_a", "doc_b",
-      // r17: the same ln-size window as the scoped-Jaccard form — the
-      // verify is exact Jaccard, so the length filter applies verbatim
-      window0 = if (threshold > 0)
-        Some(PosWindow(log(col("n")), math.log(1.0 / threshold)))
-      else None)
+      "doc_a", "doc_b")
     val out = groupsFromReps(mem,
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     graft.util.BlockRelease.release(Seq(banded, edges))
@@ -2245,15 +1924,7 @@ object Dedup {
           reps.select(col("doc_id"), col("shingles")).hint("merge"))
         .withColumn("_pass",
           coalesce(col("jaccard") >= threshold, lit(false))),
-      "doc_a", "doc_b",
-      // r17: the set-similarity length filter as a static window —
-      // J ≥ t forces min/max set sizes ≥ t, i.e. |ln nA − ln nB| ≤
-      // ln(1/t) — so a hot posting bucket's repair round windows on
-      // ln(|shingles|) and never pays the join-back verify for pairs
-      // whose sizes alone rule them out
-      window0 = if (threshold > 0)
-        Some(PosWindow(log(col("n")), math.log(1.0 / threshold)))
-      else None)
+      "doc_a", "doc_b")
     val out = groupsFromReps(mem,
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     graft.util.BlockRelease.release(Seq(ex, edges))
@@ -2575,18 +2246,12 @@ object Dedup {
       // banded frame, so candidates carry them inline — no rep
       // join-back, and the repair bound relaxes to the cheap fraction
       // (the simband cell's 0.53×-pair-complete repair regime engages
-      // where the generic bound had to fall back). The verify emits the
-      // Hamming distance it computes anyway (r17): Hamming is a metric,
-      // so the repair round windows on |d(c,f) − d(c,m)| ≤ maxDist —
-      // a verify-MIXED hot band enumerates distance-cell neighborhoods
-      // instead of C(|B|,2)
+      // where the generic bound had to fall back)
       verify = c => c.select(col("doc_a"), col("doc_b"),
-        simhashMd5Dist(f => col(s"${f}_a"), f => col(s"${f}_b"))
-          .as("_dist"))
-        .withColumn("_pass", col("_dist") <= maxDist),
+        (simhashMd5Dist(f => col(s"${f}_a"), f => col(s"${f}_b")) <= maxDist)
+          .as("_pass")),
       "doc_a", "doc_b",
-      carryCols = Seq("fp_lo", "fp_hi"),
-      window0 = Some(DistWindow("_dist", maxDist.toDouble)))
+      carryCols = Seq("fp_lo", "fp_hi"))
     val out = groupsFromReps(mem,
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     graft.util.BlockRelease.release(pairs)

@@ -1,13 +1,14 @@
 package graft.graph
 
 import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.graphx.lib.{ConnectedComponents => CCLib, LabelPropagation => LPLib}
+import org.apache.spark.graphx.lib.{ConnectedComponents => CCLib}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.util.Checkpointer.CheckpointSyntax
 
-/** GraphX-hosted algorithms (SURVEY.md G4 + connected components).
-  * Canonical-edge DataFrames in, (node, label) DataFrames out. */
+/** Label propagation (SURVEY.md G4) and connected components (GraphX
+  * above the collect threshold). Canonical-edge DataFrames in,
+  * (node, label) DataFrames out. */
 object GraphAlgos {
 
   /** Partition count proportional to edge volume (~50k edges/partition,
@@ -34,30 +35,15 @@ object GraphAlgos {
     (Graph.fromEdges(edgeRdd, defaultValue = 0), cached)
   }
 
-  /** Synchronous label propagation (G4; reference GDS call at
-    * project/metrics/community_detection.py:60-62). GraphX built-in treats
-    * each edge bidirectionally. */
-  def labelPropagation(edges: DataFrame, maxSteps: Int = 10): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val (g, scratch) = toGraph(edges)
-    val result = LPLib.run(g, maxSteps)
-    val out = result.vertices.toDF("node", "label").cp()
-    scratch.unpersist(blocking = false)
-    g.unpersist(blocking = false)
-    result.unpersist(blocking = false) // Pregel caches its result graph too
-    out
-  }
-
-  /** Synchronous label propagation as pure DataFrame iteration — same
-    * semantics as the GraphX version (every node adopts its neighborhood's
-    * most frequent label each step; deterministic smallest-label
-    * tie-break), but each superstep is two shuffles of (node, label)
-    * pairs with map-side combine instead of Pregel's per-vertex
-    * Map[label,count] messages — dense graphs propagate an order of
-    * magnitude cheaper, and the same plan scales out. Edge content is
-    * assumed fixed for the instance's lifetime (see Louvain.symTiered's
-    * cache contract). */
+  /** Synchronous label propagation (reference GDS call at
+    * project/metrics/community_detection.py:60-62) as pure DataFrame
+    * iteration: every node adopts its neighborhood's most frequent label
+    * each step, with a deterministic smallest-label tie-break. Each
+    * superstep is two shuffles of (node, label) pairs with map-side
+    * combine instead of Pregel's per-vertex Map[label,count] messages —
+    * dense graphs propagate an order of magnitude cheaper, and the same
+    * plan scales out. Edge content is assumed fixed for the instance's
+    * lifetime (see Louvain.symTiered's cache contract). */
   def labelPropagationDF(edges: DataFrame, maxSteps: Int = 5,
       collectThreshold: Long = 2000000L): DataFrame = {
     val spark = edges.sparkSession

@@ -1,6 +1,5 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Checkpointer.CheckpointSyntax
@@ -12,9 +11,10 @@ import graft.util.Checkpointer.CheckpointSyntax
   * h-index of its neighbors' estimates; the fixpoint is the coreness.
   *
   * Fully parallel (no sequential peeling), converges in a few dozen rounds
-  * on social graphs, message size bounded by `capCore` ints per vertex —
-  * the formulation that survives a 1000-executor graph, unlike
-  * peel-min-degree which is inherently sequential.
+  * on social graphs — the formulation that survives a 1000-executor graph,
+  * unlike peel-min-degree which is inherently sequential. Below the
+  * collect threshold [[run]] peels instead; the peel is the reference the
+  * DataFrame tier is tested against.
   */
 object KCore {
 
@@ -45,11 +45,10 @@ object KCore {
     val (sym, _, _) = tiered.swap.toOption.get
     // At-scale path: the DataFrame h-index iteration. Its per-round
     // shuffles move 16-byte (node, estimate) rows with map-side combine;
-    // the Pregel histogram alternative ([[runPregel]]) allocates a
-    // (capCore+1)-int array per edge side per round, which on a DENSE
-    // graph is a measured multi-GB-per-round storm (ScaleBench: 16 s here
-    // vs 35+ min for Pregel on a 4.5M-edge dense fixture; same fixpoint,
-    // equality-tested).
+    // a Pregel histogram formulation allocates a (capCore+1)-int array
+    // per edge side per round, which on a DENSE graph was a measured
+    // multi-GB-per-round storm (ScaleBench: 16 s here vs 35+ min for
+    // Pregel on a 4.5M-edge dense fixture; same fixpoint).
     // self-loops do not contribute to coreness (peel's CSR routes them
     // out of the adjacency) — drop them here so all tiers agree
     runDFSym(sym.filter(col("src") =!= col("dst"))
@@ -157,78 +156,5 @@ object KCore {
       i += 1
     }
     core
-  }
-
-  /** Pregel h-index with capped histogram messages — kept as the
-    * message-combining formulation for SPARSE graphs (small per-vertex
-    * degree ⇒ small combined histograms). If the result saturates at
-    * `capCore` the caller should rerun with a larger cap (degeneracy
-    * bound k ≤ √(2·|E|)); [[run]] prefers [[runDF]] at scale because the
-    * (capCore+1)-int per-edge message allocation is hostile on dense
-    * graphs (measured — see run()'s scaladoc). */
-  private[graft] def runPregel(edges: DataFrame, maxIter: Int, capCore: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // canonical orientation + distinct + no self-loops: parallel edges
-    // (either orientation) count once and loops not at all — the same
-    // simple-graph semantics as peel/runDF
-    val cached = edges.select(
-        least(col("src").cast("long"), col("dst").cast("long")).as("src"),
-        greatest(col("src").cast("long"), col("dst").cast("long")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct().cache()
-    val nEdges = cached.count()
-    val p = GraphAlgos.sizedPartitions(cached, nEdges)
-    val edgeRdd = cached.as[(Long, Long)].rdd
-      .coalesce(p).map { case (s, d) => Edge(s, d, 1) }
-    val g0 = Graph.fromEdges(edgeRdd, defaultValue = 0)
-    // init: estimate = degree
-    var g = g0.outerJoinVertices(g0.degrees) { (_, _, d) => d.getOrElse(0) }.cache()
-
-    var iter = 0
-    var changed = Long.MaxValue
-    while (iter < maxIter && changed > 0) {
-      // histogram of neighbor estimates (capped); h-index from the top
-      val msgs = g.aggregateMessages[Array[Int]](
-        ctx => {
-          val cap = capCore
-          val a = new Array[Int](cap + 1)
-          a(math.min(ctx.srcAttr, cap)) += 1
-          ctx.sendToDst(a)
-          val b = new Array[Int](cap + 1)
-          b(math.min(ctx.dstAttr, cap)) += 1
-          ctx.sendToSrc(b)
-        },
-        (a, b) => {
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          a
-        })
-      val updated = g.outerJoinVertices(msgs) { (_, est, histOpt) =>
-        histOpt match {
-          case None => 0
-          case Some(hist) =>
-            // h = max k ≤ est with #{nbr est ≥ k} ≥ k
-            var count = 0
-            var k = math.min(est, capCore)
-            var h = 0
-            var i = hist.length - 1
-            while (i >= 0 && h == 0) {
-              count += hist(i)
-              if (count >= i && i <= k) h = i
-              i -= 1
-            }
-            math.min(est, h)
-        }
-      }.cache()
-      updated.vertices.count() // materialize before diff
-      changed = updated.vertices.join(g.vertices)
-        .filter { case (_, (n, o)) => n != o }.count()
-      g.unpersist(blocking = false)
-      g = updated
-      iter += 1
-    }
-    g.vertices.toDF("node", "core")
   }
 }

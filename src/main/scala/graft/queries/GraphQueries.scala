@@ -37,7 +37,7 @@ object GraphQueries {
     * oracle. Unset → each algorithm's default gate (small-graph exact
     * tier at test SFs). */
   private def tier(default: Long): Long =
-    sys.env.get("SPARK_GRAFT_COLLECT_THRESHOLD").map(_.toLong).getOrElse(default)
+    graft.util.SizeGate.collectThreshold(default)
 
   private def labels(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "supplier")

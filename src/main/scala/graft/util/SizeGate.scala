@@ -41,13 +41,32 @@ object SizeGate {
     val raw = sys.props.get(prop).map((s"system property $prop", _))
       .orElse(sys.env.get(env).map((s"env $env", _)))
     raw.fold(default) { case (src, s) =>
-      val v = scala.util.Try(s.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft: $src = '$s' is not a long"))
+      val v = parsedLong(src, s)
       require(v > 0, s"graft: $src = $v must be positive")
       v
     }
   }
+
+  /** The graph/dedup collect-tier gate: `SPARK_GRAFT_COLLECT_THRESHOLD`
+    * (env only — it is a deployment setting, and the forced-distributed
+    * oracle leg sets it to 0) or `default` when unset. */
+  private[graft] def collectThreshold(default: Long): Long =
+    sys.env.get("SPARK_GRAFT_COLLECT_THRESHOLD")
+      .fold(default)(parsedCollectThreshold)
+
+  /** Pure parse behind [[collectThreshold]]: values ≥ 0 (0 forces every
+    * gated algorithm onto its distributed tier); anything else fails
+    * naming the variable. */
+  private[graft] def parsedCollectThreshold(s: String): Long = {
+    val src = "env SPARK_GRAFT_COLLECT_THRESHOLD"
+    val v = parsedLong(src, s)
+    require(v >= 0, s"graft: $src = $v must be >= 0")
+    v
+  }
+
+  private def parsedLong(src: String, s: String): Long =
+    scala.util.Try(s.trim.toLong).getOrElse(
+      throw new IllegalArgumentException(s"graft: $src = '$s' is not a long"))
 
   /** Broadcast `df` iff its row count is below `bound`. Pass `known =
     * Some(n)` when the caller already counted — the gate then costs

@@ -754,6 +754,8 @@ class DedupSpec extends SparkSpec with Matchers {
 
   test("star verify forced: all five group forms equal their pair forms on a near-dup-noised corpus (r16)") {
     import graft.functions.TextFunctions.md5Embed
+    val s2 = spark
+    import s2.implicits._
     // suffix-NOISED replicas: texts DISTINCT (the exact-dup gid stage
     // cannot collapse them) but near-identical — near-dup-DENSE rep
     // buckets, the regime the star verify exists for. Gate factor 0
@@ -764,31 +766,41 @@ class DedupSpec extends SparkSpec with Matchers {
     // against brute truth elsewhere in this suite.
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source")).limit(40)
-    val docs = (0 until 3).map(i => base.select(
+    val noised = (0 until 3).map(i => base.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"),
         concat(col("text"), lit(s" nearvar$i")).as("text"),
         col("source")))
       .reduce(_ unionByName _).localCheckpoint()
-    val ids = docs.select("doc_id").collect().map(_.getLong(0))
+    // Mixed hot-bucket corpus with SPREAD sizes (r17): every doc shares
+    // the word "x" (ONE hot posting bucket), and docs (2j, 2j+1) are
+    // private near-pairs of growing size L = 2+j — word-set Jaccard
+    // L/(L+2) ≥ 0.5, cross-pairs share only "x" (J ≈ 1/sizes < 0.5). In
+    // the hot bucket the center (doc 0, the smallest doc) fails against
+    // almost everyone: verify-MIXED and repair-heavy, so the repair
+    // round carries most of the edges.
+    val spread = (0 until 20).flatMap { j =>
+      val L = 2 + j
+      val a = (1 to L).map(i => s"a${j}_$i")
+      Seq((2L * j, ("x" +: a).mkString(" "), "s"),
+        (2L * j + 1,
+          ("x" +: (a.dropRight(1) :+ s"b$j")).mkString(" "), "s"))
+    }.toDF("doc_id", "text", "source").localCheckpoint()
     def groupsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     def pairsOf(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
       df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1)))
-    sys.props("graft.stardedup.factor") = "0"
-    // keep the repair round engaged even where this corpus is
-    // fail-heavy — the adaptive bound would otherwise fall back to
-    // pair-complete, which the default-path specs already cover
-    sys.props("graft.stardedup.repair") = "1e9"
-    try {
+    def allFive(docs: org.apache.spark.sql.DataFrame, shingleN: Int): Unit = {
+      val ids = docs.select("doc_id").collect().map(_.getLong(0))
       expectGroupsEqualPairs(
         groupsOf(Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5)),
         pairsOf(Dedup.minhashNearDups(docs, "doc_id", "text", 0.5),
           "doc_a", "doc_b"), ids)
       expectGroupsEqualPairs(
         groupsOf(Dedup.jaccardNearDupGroups(
-          docs, "doc_id", "text", "source", 0.5, 3)),
+          docs, "doc_id", "text", "source", 0.5, shingleN)),
         pairsOf(Dedup.ngramJaccardNearDups(
-          docs, "doc_id", "text", "source", 0.5, 3), "doc_a", "doc_b"), ids)
+          docs, "doc_id", "text", "source", 0.5, shingleN),
+          "doc_a", "doc_b"), ids)
       expectGroupsEqualPairs(
         groupsOf(Dedup.shingleCosineGroups(
           docs, "doc_id", "text", "source", 0.6, 3)),
@@ -807,11 +819,21 @@ class DedupSpec extends SparkSpec with Matchers {
           vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16),
           "id_a", "id_b"), ids)
       graft.util.BlockRelease.release(vecs)
-    } finally {
-      sys.props.remove("graft.stardedup.factor")
-      sys.props.remove("graft.stardedup.repair")
     }
-    graft.util.BlockRelease.release(docs)
+    sys.props("graft.stardedup.factor") = "0"
+    // keep the repair round engaged even where a corpus is fail-heavy —
+    // the adaptive bounds would otherwise fall back to pair-complete,
+    // which the default-path specs already cover
+    sys.props("graft.stardedup.repair") = "1e9"
+    sys.props("graft.stardedup.repair.cheap") = "1e9"
+    try {
+      allFive(noised, 3)
+      allFive(spread, 1)
+    } finally {
+      Seq("graft.stardedup.factor", "graft.stardedup.repair",
+        "graft.stardedup.repair.cheap").foreach(sys.props.remove)
+    }
+    graft.util.BlockRelease.release(Seq(noised, spread))
   }
 
   test("star repair round is load-bearing: a non-center chain connects only through round 2 (r16)") {
@@ -940,100 +962,15 @@ class DedupSpec extends SparkSpec with Matchers {
     graft.util.BlockRelease.release(docs)
   }
 
-  test("metric-windowed repair: pruned output equals unpruned across all five kernels, and the window prunes (r17)") {
-    import graft.functions.TextFunctions.md5Embed
-    val s2 = spark
-    import s2.implicits._
-    // Mixed hot-bucket corpus: every doc shares the word "x" (ONE hot
-    // posting bucket whose members' sizes SPREAD), and docs (2j, 2j+1)
-    // are private near-pairs of growing size L = 2+j — word-set Jaccard
-    // L/(L+2) ≥ 0.5, cross-pairs share only "x" (J ≈ 1/sizes < 0.5).
-    // In the hot bucket the center (doc 0, the smallest doc) fails
-    // against almost everyone → verify-MIXED, repair-heavy — exactly
-    // the regime the r17 window targets — and the ln-size positions
-    // span ln 4 .. ln 23 ≫ ln 2, so the window MUST prune (e.g. the
-    // (doc 2, doc 39) repair pair sits 3 size-cells apart).
-    val docs = (0 until 20).flatMap { j =>
-      val L = 2 + j
-      val a = (1 to L).map(i => s"a${j}_$i")
-      Seq((2L * j, ("x" +: a).mkString(" "), "s"),
-        (2L * j + 1,
-          ("x" +: (a.dropRight(1) :+ s"b$j")).mkString(" "), "s"))
-    }.toDF("doc_id", "text", "source").localCheckpoint()
-    val ids = (0L until 40L).toArray
-    def repairTried(err: String): Long =
-      "star verify tried ([0-9,]+) star \\+ ([0-9,]+) repair".r
-        .findFirstMatchIn(err)
-        .fold(-1L)(m => m.group(2).replace(",", "").toLong)
-    def withStar[T](windowOn: Boolean)(body: => T): (T, String) = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val oldErr = System.err
-      sys.props("graft.stardedup.factor") = "0"
-      sys.props("graft.stardedup.repair") = "1e9"
-      sys.props("graft.stardedup.repair.cheap") = "1e9"
-      sys.props("graft.stardedup.window") = if (windowOn) "1" else "0"
-      try {
-        System.setErr(new java.io.PrintStream(buf, true))
-        (body, buf.toString)
-      } finally {
-        System.setErr(oldErr)
-        Seq("graft.stardedup.factor", "graft.stardedup.repair",
-          "graft.stardedup.repair.cheap", "graft.stardedup.window")
-          .foreach(sys.props.remove)
-      }
-    }
-    def groupsOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    def pairsOf(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
-      df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1)))
-
-    // scoped Jaccard: window on/off outputs equal, on-path equals the
-    // pair form's components, and the windowed repair tried FEWER
-    // candidates (the pruning is real, not just sound)
-    val truthJac = pairsOf(Dedup.ngramJaccardNearDups(
-      docs, "doc_id", "text", "source", 0.5, 1), "doc_a", "doc_b")
-    val (gJacOn, errJacOn) = withStar(true)(groupsOf(
-      Dedup.jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)))
-    val (gJacOff, errJacOff) = withStar(false)(groupsOf(
-      Dedup.jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)))
-    expectGroupsEqualPairs(gJacOn, truthJac, ids)
-    gJacOff shouldBe gJacOn
-    val (triedOn, triedOff) = (repairTried(errJacOn), repairTried(errJacOff))
-    withClue(s"windowed repair tried=$triedOn unwindowed=$triedOff: ") {
-      triedOn should be >= 0L
-      triedOff should be > triedOn
-    }
-
-    // the other four kernels: window on ≡ window off (their on-path
-    // truth vs the pair forms is pinned by the r16 forced-star spec)
-    def invariant(run: => Map[Long, (Long, Long)]): Unit = {
-      val (on, _) = withStar(true)(run)
-      val (off, _) = withStar(false)(run)
-      off shouldBe on
-    }
-    invariant(groupsOf(
-      Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5)))
-    invariant(groupsOf(
-      Dedup.simhashNearDupGroupsMd5(docs, "doc_id", "text", 3)))
-    invariant(groupsOf(Dedup.shingleCosineGroups(
-      docs, "doc_id", "text", "source", 0.6, 3)))
-    val vecs = docs.select(col("doc_id"), md5Embed(col("text")).as("v"))
-      .localCheckpoint()
-    invariant(groupsOf(Dedup.cosineNearDupGroups(
-      vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16)))
-    graft.util.BlockRelease.release(Seq(docs, vecs))
-  }
-
-  test("windowed exact-bound REJECT and ACCEPT paths: direct gatedBucketEdges pin (r17 lazy-memPlan cut)") {
+  test("exact-bound REJECT and ACCEPT paths: direct gatedBucketEdges pin") {
     val s2 = spark
     import s2.implicits._
     // One bucket, members 1..5 carrying a 1-D position p = id; verify
-    // passes iff |p_a − p_b| <= 1 and emits the distance (DistWindow
-    // metric). Center = 1 ⇒ round 1 is verify-MIXED deterministically:
-    // (1,2) passes, (1,3)/(1,4)/(1,5) FAIL — the pass-heavy
-    // short-circuit cannot fire, so the exact post-round-1 windowed
-    // bound always runs. True pair graph: the chain (1,2)(2,3)(3,4)(4,5).
+    // passes iff |p_a − p_b| <= 1. Center = 1 ⇒ round 1 is verify-MIXED
+    // deterministically: (1,2) passes, (1,3)/(1,4)/(1,5) FAIL — the
+    // pass-heavy short-circuit cannot fire, and the star (4 pairs) is
+    // below the sampled probe's size, so the exact post-round-1 bound
+    // always decides. True pair graph: the chain (1,2)(2,3)(3,4)(4,5).
     val banded = Seq(1L, 2L, 3L, 4L, 5L)
       .map(i => (i, "b", i.toDouble)).toDF("id", "k", "p")
       .localCheckpoint()
@@ -1044,46 +981,35 @@ class DedupSpec extends SparkSpec with Matchers {
       sys.props("graft.stardedup.factor") = "0"
       sys.props("graft.stardedup.repair") = repairBound
       sys.props("graft.stardedup.repair.cheap") = repairBound
-      sys.props("graft.stardedup.window") = "1"
       try {
         System.setErr(new java.io.PrintStream(buf, true))
         val out = Dedup.gatedBucketEdges(banded, "id", Seq("k"), "specKernel",
-          pairComplete = () => {
-            val pc = banded.as("a").join(banded.as("b"),
-                col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-              .filter(abs(col("a.p") - col("b.p")) <= 1.0)
-              .select(col("a.id").as("la"), col("b.id").as("lb"))
-              .localCheckpoint()
-            pc
-          },
-          verify = c => c
-            .withColumn("_dist", abs(col("p_a") - col("p_b")))
-            .withColumn("_pass", col("_dist") <= 1.0),
+          pairComplete = () => banded.as("a").join(banded.as("b"),
+              col("a.k") === col("b.k") && col("a.id") < col("b.id"))
+            .filter(abs(col("a.p") - col("b.p")) <= 1.0)
+            .select(col("a.id").as("la"), col("b.id").as("lb"))
+            .localCheckpoint(),
+          verify = c => c.withColumn("_pass", abs(col("p_a") - col("p_b")) <= 1.0),
           la = "la", lb = "lb",
-          carryCols = Seq("p"),
-          window0 = Some(Dedup.DistWindow("_dist", 1.0)))
+          carryCols = Seq("p"))
         val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         graft.util.BlockRelease.release(out)
         (pairs, buf.toString)
       } finally {
         System.setErr(oldErr)
         Seq("graft.stardedup.factor", "graft.stardedup.repair",
-          "graft.stardedup.repair.cheap", "graft.stardedup.window")
-          .foreach(sys.props.remove)
+          "graft.stardedup.repair.cheap").foreach(sys.props.remove)
       }
     }
-    // REJECT leg (repair bound 0 < windowed projection): the r17 second
-    // cut must reach pairComplete() without ever checkpointing memPlan —
-    // the cc projection reads it column-pruned and failedRows sources
-    // its positions from v1's distCol.
+    // REJECT leg (repair bound 0 < the exact repair projection 3 × 4):
+    // round 1 runs, then the helper falls back to pair-complete.
     val (rejected, errR) = run("0")
-    withClue(s"expected the exact windowed bound to reject: $errR") {
-      errR should include("falling back to pair-complete")
+    withClue(s"expected the exact repair bound to reject: $errR") {
+      errR should include("star round 1 found a FAIL-heavy regime")
     }
     rejected shouldBe truth
-    // ACCEPT leg (repair bound 1e9): star + windowed repair, with memD
-    // materialized only past the gate; the repair round is load-bearing
-    // for every chain edge beyond (1,2).
+    // ACCEPT leg (repair bound 1e9): star + repair; the repair round is
+    // load-bearing for every chain edge beyond (1,2).
     val (accepted, errA) = run("1e9")
     withClue(s"expected the star+repair rounds to run: $errA") {
       errA should include("repair candidates")
