@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.SizeGate
+
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
   *
@@ -13,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   * per-query median then discards — instead of all runs of one query,
   * which it can't (the r8 q15/q35 incidents). `value` is the sum of
   * medians. SPARK_GRAFT_ONLY=q41_label_prop,q44_fastrp restricts the run
-  * (local profiling loop).
+  * (local profiling loop). Settings are checked before the session
+  * starts: RUNS ≥ 1, CANARY_EVERY ≥ 0, and every ONLY name registered.
   *
   * Noise hardening (r11, VERDICT item 6 — after two rounds of drift
   * forensics): (a) one DISCARDED warm-up sweep of every selected query
@@ -33,10 +36,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val cpus = SparkEntry.cpus
+    val runs = SizeGate.envLong("SPARK_GRAFT_RUNS", 3L, min = 1L).toInt
+    val canaryEvery =
+      SizeGate.envLong("SPARK_GRAFT_CANARY_EVERY", 12L, min = 0L).toInt
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(onlySelection)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -88,7 +92,6 @@ object Bench {
     // against the NEAREST canary sample instead of a stale start-of-run
     // one. Each sample logs to stderr with its timed-call index; the
     // BENCH-SPREAD lines quote each run's nearest sample.
-    val canaryEvery = sys.env.getOrElse("SPARK_GRAFT_CANARY_EVERY", "12").toInt
     val canarySamples = collection.mutable.ArrayBuffer[(Int, Double)]((0, canary))
     var timedCalls = 0
     def maybeMidCanary(): Unit =
@@ -98,42 +101,11 @@ object Bench {
         System.err.println(f"BENCH-CANARY-MID at_call $timedCalls%4d $c%8.3f s")
       }
 
+    // every query has `runs` ≥ 1 samples
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.size % 2 == 1) s(s.size / 2)
+      if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-
-    // SPARK_GRAFT_DIAG=1: after each query, log session-accumulation
-    // telemetry to STDERR (the stdout JSON contract is untouched) — the
-    // instrument for the round-5 "sweep inflation" finding (driver sweep
-    // ~71 s vs clean-session ~43 s; later queries' all-three-runs slow).
-    val diag = sys.env.get("SPARK_GRAFT_DIAG").contains("1")
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMillis: Long = {
-      var t = 0L; gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime)); t
-    }
-    def diagLine(name: String, gcDelta: Long, times: Seq[Double]): Unit = if (diag) {
-      val sc = spark.sparkContext
-      val rt = Runtime.getRuntime
-      val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-      val memUsedMb = sc.getExecutorMemoryStatus.values
-        .map { case (max, remaining) => max - remaining }.sum / (1024 * 1024)
-      val rddInfo = sc.getRDDStorageInfo
-      val nBlocks = rddInfo.map(_.numCachedPartitions).sum
-      val nRdds = sc.getPersistentRDDs.size
-      val nStreams = spark.streams.active.length
-      val nViews = spark.catalog.listTables().count()
-      // min/max across the runs separates "all runs slow" (persistent
-      // state / sustained contention) from "one run slow" (transient)
-      val tmin = if (times.nonEmpty) times.min else -1.0
-      val tmax = if (times.nonEmpty) times.max else -1.0
-      System.err.println(
-        s"""DIAG {"q":"$name","gc_ms":$gcDelta,"heap_mb":$heapMb,""" +
-        s""""storage_mb":$memUsedMb,"blocks":$nBlocks,"rdds":$nRdds,""" +
-        s""""active_streams":$nStreams,"views":$nViews,""" +
-        f""""t_min":$tmin%.3f,"t_max":$tmax%.3f}""")
     }
 
     // INTERLEAVED protocol (r9, VERDICT item 4): run 1 of EVERY query,
@@ -146,7 +118,6 @@ object Bench {
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq.sortBy(_._1)
-    val gcByQuery = collection.mutable.Map[String, Long]().withDefaultValue(0L)
     val timesByQuery =
       collection.mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
     val callIdxByQuery =
@@ -155,7 +126,6 @@ object Bench {
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       timedCalls += 1
       callIdxByQuery(name) :+= timedCalls
-      val gc0 = gcMillis
       val t0 = System.nanoTime()
       // caller-side result release (the BlockReleaseSweepSpec contract):
       // operators returning checkpointed outputs hand ownership to the
@@ -169,7 +139,6 @@ object Bench {
       } catch { case _: Throwable => }
       finally if (r != null) graft.util.BlockRelease.release(r)
       timesByQuery(name) :+= (System.nanoTime() - t0) / 1e9
-      gcByQuery(name) += gcMillis - gc0
       // between-query hygiene: terminated streaming queries (q58/q59
       // start fresh queries every run) otherwise accumulate in the
       // StreamingQueryManager for the life of the session, pinning
@@ -177,11 +146,6 @@ object Bench {
       spark.streams.resetTerminated()
       maybeMidCanary()
     }
-    // SPARK_GRAFT_CONSECUTIVE=1: the r8-and-earlier protocol (all runs of
-    // one query back-to-back) — kept as an experiment switch for the r10
-    // protocol-vs-session-pressure attribution (BENCH_LOCAL_r10 §2); the
-    // contract default stays interleaved.
-    val consecutive = sys.env.get("SPARK_GRAFT_CONSECUTIVE").contains("1")
     // discarded warm-up sweep (r11): every query once, nothing recorded —
     // first-use costs (JIT tiers, shuffle files, projection/sym caches)
     // stop contaminating run 1 of the recorded sweeps
@@ -197,11 +161,7 @@ object Bench {
       System.err.println(
         f"BENCH-WARMUP-SWEEP discarded ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
-    if (consecutive) {
-      queries.foreach { case (name, fn) =>
-        (1 to runs).foreach(_ => timeOne(name, fn))
-      }
-    } else (1 to runs).foreach { run =>
+    (1 to runs).foreach { run =>
       queries.foreach { case (name, fn) => timeOne(name, fn) }
       val roundTotal = queries.map { case (n, _) => timesByQuery(n)(run - 1) }.sum
       System.err.println(f"BENCH-ROUND $run/$runs sweep_total $roundTotal%8.2f s")
@@ -220,7 +180,6 @@ object Bench {
       System.err.println(
         f"BENCH-SPREAD $name%-28s ${times.map(t => f"$t%.3f").mkString(" ")}%s" +
         s"  canary ${near.map(c => f"$c%.3f").mkString(" ")}")
-      diagLine(name, gcByQuery(name), times)
       name -> median(times)
     }
     // The driver records only the LAST 2000 bytes of stdout+stderr and
@@ -270,5 +229,17 @@ object Bench {
     // final stdout output (build.sbt routes forked stdout raw, so no sbt
     // "[info]" prefix lands in the driver's 2000-byte tail window).
     println(line)
+  }
+
+  /** `SPARK_GRAFT_ONLY`'s comma-separated query names. Every name must be
+    * registered, so a typo fails before the session starts instead of
+    * silently shrinking the timed series. */
+  private[graft] def onlySelection(raw: String): Set[String] = {
+    val names = raw.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.diff(SparkEntry.queries.keySet)
+    require(names.nonEmpty, "graft: env SPARK_GRAFT_ONLY selects no query")
+    require(unknown.isEmpty, "graft: env SPARK_GRAFT_ONLY names unknown " +
+      s"queries: ${unknown.toSeq.sorted.mkString(",")}")
+    names
   }
 }

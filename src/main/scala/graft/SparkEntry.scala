@@ -24,6 +24,10 @@ object SparkEntry {
     graft.metrics.CommunityMetrics.structure(edges, communities)
   }
 
+  /** Local-mode core count of the `Verify` and `Bench` mains, which also
+    * use it as their shuffle partition count (`SPARK_GRAFT_CPUS`). */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.defs ++
       VectorQueries.defs ++

@@ -9,7 +9,7 @@ object Verify {
     // the driver always passes two args and dumps everything]
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).headOption.map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -410,11 +410,10 @@ object Dedup {
     // vec_dot/normSq accumulate left-to-right in doubles exactly like the
     // zip_with/aggregate composition they replace (VectorExpressions
     // scaladoc; probe-measured 0 mismatches over 5M corpus pairs, 3.7×)
-    val embPlan = src.select(col("doc_id"), md5Embed(col("text")).as("v"))
+    val emb = src.select(col("doc_id"), md5Embed(col("text")).as("v"))
       .withColumn("n2", graft.functions.VectorFunctions.normSq(col("v")))
-    graft.util.PlanAudit.dump("shingleCosine_embed", embPlan)
-    val emb = embPlan.cp()
-    val outPlan = cand
+      .cp()
+    val out = cand
       .join(emb.select(col("doc_id").as(la), col("v").as("va"), col("n2").as("na2")), la)
       .join(emb.select(col("doc_id").as(lb), col("v").as("vb"), col("n2").as("nb2")), lb)
       .filter(col("na2") > 0 && col("nb2") > 0)
@@ -423,8 +422,7 @@ object Dedup {
           sqrt(col("na2") * col("nb2")), 4)
           .as("cos"))
       .filter(col("cos") >= tauCos)
-    graft.util.PlanAudit.dump("shingleCosineVerify_pairverify", outPlan)
-    val out = outPlan.cp()
+      .cp()
     graft.util.BlockRelease.release(cand)
     (shr, emb, out)
   }
@@ -659,7 +657,8 @@ object Dedup {
     // PRE-checkpoint size estimate, so a stat-less source (in-memory
     // range/Dataset, no parquet footers) reads as kilobytes and the
     // static planner elects a broadcast that only fails when the 14.6 GiB
-    // build side materializes (measured, 500k-doc ScaleBench corpus).
+    // build side materializes (measured on the 500k-doc corpus,
+    // BENCH_LOCAL_r6.md).
     // AQE cannot demote it: the build side has no shuffle stage to
     // re-estimate. SMJ is what accurate stats pick here anyway.
     //
@@ -783,7 +782,7 @@ object Dedup {
     * Zero vectors (all tokens hash-cancelled) have no cosine and are
     * excluded, mirrored by `n2 > 0` in SQL twins.
     *
-    * EXACT-DUP COLLAPSE tier (r12, from the 10× ScaleBench sweep):
+    * EXACT-DUP COLLAPSE tier (r12, from the 10× sweep, BENCH_LOCAL_r12.md):
     * identical vectors produce identical hyperplane signatures in EVERY
     * table, so banding each copy separately multiplies bucket-pair work
     * by the SQUARE of the duplicate multiplicity for zero information —
@@ -867,7 +866,7 @@ object Dedup {
       // session 4): join conditions get no common-subexpression
       // elimination, so the composed pred() re-ran the d-double dot up
       // to 3× per ordered pair; the fused gate runs it once.
-      val outPlan = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
+      val out = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
           col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
             col("a.id") < col("b.id") &&
             graft.functions.VectorExpressions.cosine_rational_gate(
@@ -876,8 +875,7 @@ object Dedup {
         .select(col("a.id").as(la), col("b.id").as(lb),
           dotAB.as("dot"), col("a.n2").as("na2"), col("b.n2").as("nb2"))
         .dropDuplicates(la, lb)
-      graft.util.PlanAudit.dump("cosineNearDupsExact_bandpairs", outPlan)
-      val out = outPlan.cp()
+        .cp()
       graft.util.BlockRelease.release(banded)
       out
     }
@@ -1097,8 +1095,8 @@ object Dedup {
       // only passing pairs reach the distinct. Fused
       // [[graft.functions.CosineRationalGate]] (r17 session 4): one dot
       // per ordered pair instead of up to 3 (no CSE in join conditions).
-      pairComplete = () => {
-        val p = banded.as("a").hint("merge")
+      pairComplete = () =>
+        banded.as("a").hint("merge")
           .join(banded.as("b").hint("merge"),
             col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
               col("a.id") < col("b.id") &&
@@ -1107,9 +1105,7 @@ object Dedup {
                 tauNum, tauDen))
           .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
           .dropDuplicates("id_a", "id_b")
-        graft.util.PlanAudit.dump("cosineNearDupGroups_paircomplete", p)
-        p.cp()
-      },
+          .cp(),
       // carried verify (r16 second round): the banded frame already
       // ships (v, n2) per row — the pair-complete FAT join reads them
       // in place — so the star machinery carries them too and verifies
@@ -1155,7 +1151,7 @@ object Dedup {
     * SCALE_CELLS_r15: distinct side too big to broadcast AND one hot
     * content key). (1) A "fused" cut left the aggregate un-materialized
     * and the join un-hinted, saving ~3 driver jobs per call
-    * (PlanMetrics: q110 35→26 jobs) — but OptimizeSkewedJoin only
+    * (BENCH_LOCAL_r15.md: q110 35→26 jobs) — but OptimizeSkewedJoin only
     * matches a join whose children are both bare shuffle stages, and
     * the fused build side has the final aggregate BETWEEN its shuffle
     * and the join, so the hot probe partition never split. (2) With
@@ -1675,7 +1671,7 @@ object Dedup {
         return pairComplete()
       }
       val fLtM = col(s"f.$idCol") < col(s"m.$idCol")
-      val r2Plan = failedRows.as("f").hint("merge")
+      val r2 = failedRows.as("f").hint("merge")
         .join(banded.as("m").hint("merge"),
           keyCols.map(c => col(s"f.$c") === col(s"m.$c")).reduce(_ && _) &&
             col(s"f.$idCol") =!= col(s"m.$idCol"))
@@ -1691,8 +1687,7 @@ object Dedup {
         .hint("merge")
         .join(v1.select(col(la), col(lb)).hint("merge"),
           Seq(la, lb), "left_anti")
-      graft.util.PlanAudit.dump(s"${caller}_repair_candidates", r2Plan)
-      val r2 = r2Plan.cp()
+        .cp()
       val v2 = verify(r2).cp()
       val out = v1.filter(col("_pass")).select(col(la), col(lb))
         .unionByName(v2.filter(col("_pass")).select(col(la), col(lb)))

@@ -85,7 +85,7 @@ import graft.util.Checkpointer.CheckpointSyntax
   * = 172.8M keys): bloom sidecar 759 MiB on disk = 4.61 B/key (the ~4
   * B/key bitsets + parquet framing — unchanged by the r15 finer
   * [[TargetMBits]] sharding: 2080 rows at this store), idx 17.6 B/key,
-  * store data 5.4 GiB. Stage-logged (SPARK_GRAFT_GATE_LOG) walls: the
+  * store data 5.4 GiB. Per-stage walls (SCALE_CELLS_r15.txt): the
   * FIRST gate after a restart pays the full bloom read + checkpoint
   * (0.8–1.0 s warm-page-cache at this decade under the r15 sorted
   * 1-MiB-row-group layout; the r14 4-MiB-row layout measured 41.6 s
@@ -415,14 +415,14 @@ object IngestIndex {
     * Capacity is env-tunable (r15 — the r14 verdict's evicted-re-cold
     * finding: a session gating MORE stores than fit re-pays a partial
     * cold read, 26.3 s at the 64× decade, on every re-entry): set
-    * SPARK_GRAFT_BLOOM_CACHE_STORES to the number of LIVE stores the
+    * SPARK_GRAFT_BLOOM_CACHE_STORES (≥ 1) to the number of LIVE stores the
     * process gates — each entry pins ~4.6 B/key of executor storage
     * ([[gateWithIndex]]'s measured budget), so the default 4 suits a
     * handful of decade-scale stores on one 128 GiB box. */
-  private val bloomCache =
+  private lazy val bloomCache =
     new BoundedSessionCache[(SparkSession, String), (Set[String], DataFrame)](
-      maxEntries = sys.env.get("SPARK_GRAFT_BLOOM_CACHE_STORES")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(4),
+      maxEntries =
+        SizeGate.envLong("SPARK_GRAFT_BLOOM_CACHE_STORES", 4L, min = 1L).toInt,
       release = v => BlockRelease.release(v._2))
 
   private[graft] def cachedBlooms(spark: SparkSession, storePath: String,
@@ -603,8 +603,6 @@ object IngestIndex {
     val hit = geom.count(needed.contains)
     if (hit.toLong * 4 > geom.length) return None
     val shardList = needed.map(_._3).toSeq.sorted
-    gateLog(s"trickle pruned cold read: $hit of ${geom.length} bloom rows, " +
-      s"${shardList.size} shard values")
     // raw-column predicates reach the parquet reader; the In-pushdown
     // threshold is raised for this read so the shard list is evaluated
     // against row-group stats instead of collapsing to a [min,max] range
@@ -628,18 +626,6 @@ object IngestIndex {
     * [[Dedup.gateAgainstStore]] over the full store read, but the store
     * partitions carrying sidecars are never scanned: their blooms answer
     * for the misses and their idx shards verify the survivors. */
-  /** Dev phase timer (the IngestQueries precedent): set
-    * SPARK_GRAFT_GATE_LOG=1 to print per-stage wall times + survivor
-    * counts of the indexed gate; no-op otherwise. */
-  @inline private def gateLog(label: => String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_GATE_LOG"))
-      System.err.println(s"GATE $label")
-
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime(); val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
   def gateWithIndex(fp: DataFrame, storePath: String,
       excludeBatch: Option[Long]): DataFrame = {
     val spark = fp.sparkSession
@@ -663,18 +649,16 @@ object IngestIndex {
       val indexedMatches: Option[DataFrame] =
         if (covered.isEmpty) None
         else {
-          val ((blooms, transient), tBloom) = timed {
-            val warm = bloomCache.peek((spark, storePath))
-              .exists(_._1.subsetOf(covered.toSet))
+          val warm = bloomCache.peek((spark, storePath))
+            .exists(_._1.subsetOf(covered.toSet))
+          val (blooms, transient) =
             if (warm) (cachedBlooms(spark, storePath, covered), false)
             else trickleBlooms(spark, storePath, covered, keys,
                 nSigs + nH) match {
               case Some(pruned) => (pruned, true)
               case None => (cachedBlooms(spark, storePath, covered), false)
             }
-          }
-          val (survivors, tProbe) = timed(
-            probeSurvivors(blooms, keys, nSigs + nH).cp())
+          val survivors = probeSurvivors(blooms, keys, nSigs + nH).cp()
           if (transient) BlockRelease.release(blooms)
           // one action yields both the empty-survivor fast-path decision
           // and the prune list (≤ 4096 ints — driver-bounded)
@@ -683,8 +667,6 @@ object IngestIndex {
               .cast("int").as("s"))
             .count().collect().map(r => r.getInt(0) -> r.getLong(1))
           val nSurv = shardCounts.map(_._2).sum
-          gateLog(f"blooms $tBloom%6.2f s  probe $tProbe%6.2f s  " +
-            f"survivors=$nSurv%d over ${shardCounts.length}%d idx shards")
           if (nSurv == 0L) { BlockRelease.release(survivors); None }
           else {
             val shards = shardCounts.map(_._1).toSeq.sorted
@@ -696,15 +678,13 @@ object IngestIndex {
             // inner join (not semi): the survivor side carries the hex
             // `h` the verdict tail needs; idx duplicates across parts
             // collapse in the distinct, bounded by partitions × survivors
-            val (verified, tVerify) = timed(
+            val verified =
               readIdx(spark, storePath, covered, pruneDirs, pruneShards)
               .join(SizeGate.maybeBroadcast(survivors, known = Some(nSurv)),
                 Seq("kind", "h1", "h2", "h3"))
               .select(col("kind"), col("h"))
               .distinct()
-              .cp())
-            gateLog(f"verify $tVerify%6.2f s  pruneDirs=" +
-              s"${pruneDirs.map(_.size)} pruneShards=${pruneShards.map(_.size)}")
+              .cp()
             BlockRelease.release(survivors)
             Some(verified)
           }

@@ -66,8 +66,8 @@ object SemDedup {
     * vector, land on 0). 2^bits cells. Exact in doubles: the inputs are
     * integer-valued, the coefficients ±1. The plane table is tabulated
     * ONCE (r9, ADVICE fix: the per-bit md5Planes call was O(bits²·dim)
-    * driver digests — harmless at bits=4, quadratic at the ScaleBench
-    * bits≈11 cells). */
+    * driver digests — harmless at bits=4, quadratic at the 500k-doc
+    * bits≈11 cells of BENCH_LOCAL_r9.md). */
   def srpCellsMd5(v: Column, dim: Int, bits: Int, seed: String): Column = {
     val planes = md5Planes(seed, bits, dim)
     (0 until bits).map { b =>
@@ -145,9 +145,9 @@ object SemDedup {
     // found the per-pair form re-running the norm fold on both sides of
     // every candidate). The per-pair dot runs through the CODEGEN'D
     // DotProduct kernel on a double copy of the codes — the interpreted
-    // aggregate/zip_with lambda measured 50× slower at the 500k
-    // ScaleBench cell (per-pair HOF evaluation dominates). EXACT despite
-    // the doubles: every operand is an integer (|dot| ≤ dim·127²,
+    // aggregate/zip_with lambda measured 51× slower at the 500k-doc
+    // cell (BENCH_LOCAL_r8.md; per-pair HOF evaluation dominates). EXACT
+    // despite the doubles: every operand is an integer (|dot| ≤ dim·127²,
     // 100·dot² ≤ 6.7e12, 81·|ca|²·|cb|² ≤ 5.4e12 — all < 2⁵³), so the
     // double arithmetic and comparisons are value-identical to the
     // integer form the oracle replays.

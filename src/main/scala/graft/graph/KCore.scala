@@ -47,8 +47,8 @@ object KCore {
     // shuffles move 16-byte (node, estimate) rows with map-side combine;
     // a Pregel histogram formulation allocates a (capCore+1)-int array
     // per edge side per round, which on a DENSE graph was a measured
-    // multi-GB-per-round storm (ScaleBench: 16 s here vs 35+ min for
-    // Pregel on a 4.5M-edge dense fixture; same fixpoint).
+    // multi-GB-per-round storm (BENCH_LOCAL_r3.md: 16 s here vs 35+ min
+    // for Pregel on a 4.5M-edge dense fixture; same fixpoint).
     // self-loops do not contribute to coreness (peel's CSR routes them
     // out of the adjacency) — drop them here so all tiers agree
     runDFSym(sym.filter(col("src") =!= col("dst"))
@@ -64,8 +64,9 @@ object KCore {
     * plan-truncating action per round its cost is data-bound (the round-2
     * "339 s at sf0.1" reading measured the old cache()-per-round plan
     * growth plus small-graph fixed costs, both gone — the small tier now
-    * owns small graphs and ScaleBench measures this at 16 s on a dense
-    * 4.5M-edge fixture where the Pregel histogram messages ran 35+ min). */
+    * owns small graphs and BENCH_LOCAL_r3.md records this at 16 s on a
+    * dense 4.5M-edge fixture where the Pregel histogram messages ran 35+
+    * min). */
   def runDF(edges: DataFrame, maxIter: Int = 64): DataFrame =
     runDFSym(Projection.symmetrize(
         edges.select(col("src"), col("dst"), lit(1.0).as("weight")))

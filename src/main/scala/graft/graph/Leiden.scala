@@ -118,10 +118,11 @@ object Leiden {
       // rnbr IS dst and w_ur IS the (already-aggregated) edge weight. The
       // first round is the expensive one (every node participates), and
       // this collapses its 6-join shape to intra ⋈ deg ⋈ deg. Rounds > 1
-      // run the general shape. Measured at the k=10 ScaleBench cell
-      // (4.54M edges): 49.6 → ~36 s, identical output (the general-shape
-      // round-1 result is reproduced exactly — same gain formula, same
-      // tie-break — see LeidenSpec round-1 equality).
+      // run the general shape. Measured at the k=10 scale cell (4.54M
+      // edges, BENCH_LOCAL_r8.md §2): 34.4–46.6 → 22.9–26.2 s, identical
+      // output (the general-shape round-1 result is reproduced exactly —
+      // same gain formula, same tie-break — see LeidenSpec round-1
+      // equality).
       val cand = if (round == 0) {
         intra
           .select(col("src").as("node"), col("dst").as("rnbr"), col("weight").as("w_ur"))

@@ -32,7 +32,8 @@ object GraphQueries {
     * override so the LSH-kNN + distributed-MST path actually runs at the
     * shipped SFs, all of which sit under the 2000-point brute gate) —
     * so the scale path is timed and correctness-checked under the exact
-    * driver protocol (Bench/Verify) instead of only in ScaleBench; the
+    * driver protocol (Bench/Verify) instead of only in an offline scale
+    * harness; the
     * surfaces are invariant-based, so both tiers must pass the same
     * oracle. Unset → each algorithm's default gate (small-graph exact
     * tier at test SFs). */

@@ -40,17 +40,6 @@ object IngestQueries {
     StructField("cid", StringType),
     StructField("text", StringType)))
 
-  /** Dev phase timer: set SPARK_GRAFT_PHASE_LOG=1 to print per-phase wall
-    * times of the q59 composition (used to localize regressions; no-op and
-    * allocation-free in normal runs). */
-  private def phase[A](label: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_LOG")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"PHASE $label%-26s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   private def rm(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -96,12 +85,10 @@ object IngestQueries {
           val hints: IndexedSeq[Option[(Int, Array[Int])]] =
             if (!tableExists(s"$base/users") && !tableExists(s"$base/edges"))
               IndexedSeq(None, None)
-            else phase("  probe buckets") {
-              Streams.probeTouched(Seq(
+            else Streams.probeTouched(Seq(
                 (users, "did", s"$base/users", Streams.DefaultMergeBuckets),
                 (edges, "edge_id", s"$base/edges", Streams.DefaultMergeBuckets)))
-                .toIndexedSeq.map(Option(_))
-            }
+              .toIndexedSeq.map(Option(_))
           // the two merges touch DISJOINT tables and read the same cached
           // batch — run them as concurrent Spark jobs (ST5: independent
           // sinks of one consumer don't serialize at scale either). BOTH
@@ -115,14 +102,10 @@ object IngestQueries {
           import scala.concurrent.{Await, Future}
           import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
-          val fu = Future(phase("  merge users") {
-            Streams.mergeUpsert(users, s"$base/users", "did",
-              touchedHint = hints(0))
-          })
-          val fe = Future(phase("  merge edges") {
-            Streams.mergeUpsert(edges, s"$base/edges", "edge_id",
-              touchedHint = hints(1))
-          })
+          val fu = Future(Streams.mergeUpsert(users, s"$base/users", "did",
+            touchedHint = hints(0)))
+          val fe = Future(Streams.mergeUpsert(edges, s"$base/edges", "edge_id",
+            touchedHint = hints(1)))
           var interrupted = false
           // the grace DEADLINE is fixed at the FIRST interrupt: repeated
           // interrupts must not restart the clock (a stop/retry loop
@@ -182,8 +165,8 @@ object IngestQueries {
       Streams.embedPosts(Streams.subscribe(spark, postsTopic, postSchema)),
       s"$base/vectors", "id", s"$checkpointBase/vectors").start()
     try {
-      phase("await users+edges stream") { usersQ.awaitTermination() }
-      phase("await vectors stream") { vectorsQ.awaitTermination() }
+      usersQ.awaitTermination()
+      vectorsQ.awaitTermination()
     } catch {
       case t: Throwable =>
         // one stream failing must not leave the sibling merging in the
@@ -205,12 +188,10 @@ object IngestQueries {
       spark.read.parquet(s"$base/$table")
         .agg(count(lit(1)).as("n"), k.as("k"))
         .select(lit(table).as("entity"), col("n"), col("k"))
-    val rows = phase("summaries") {
-      agg2("users", count(when(col("handle") === "unknown", 1)))
-        .unionByName(agg2("edges", countDistinct(col("user_did"))))
-        .unionByName(agg2("vectors", countDistinct(col("uri"))))
-        .collect()
-    }
+    val rows = agg2("users", count(when(col("handle") === "unknown", 1)))
+      .unionByName(agg2("edges", countDistinct(col("user_did"))))
+      .unionByName(agg2("vectors", countDistinct(col("uri"))))
+      .collect()
     rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
   }
 

@@ -331,10 +331,10 @@ object VectorQueries {
     * rule [[graft.dedup.SemDedup.nlistBits]] (smallest bits ≥ 4 with
     * 2^bits·400 ≥ n — pure integer arithmetic, replayed by the DuckDB
     * oracle from its own count(*)). At the shipped SFs the rule lands
-    * on bits=4; at the ScaleBench 500k cell it lands on bits=11 (2048
-    * cells) — the SAME registered code path, so nobody can green-light
-    * a fixed-cell config by accident. Per-cell work stays O(target²)
-    * per cell × n/target cells = O(n). */
+    * on bits=4; at the 500k-doc cell (BENCH_LOCAL_r9.md) it lands on
+    * bits=11 (2048 cells) — the SAME registered code path, so nobody can
+    * green-light a fixed-cell config by accident. Per-cell work stays
+    * O(target²) per cell × n/target cells = O(n). */
   /** q93 — HARD-NEGATIVE MINING for contrastive training (the
     * embedding-model data-prep operator: for each anchor, the k
     * most-similar vectors with a DIFFERENT label are the hardest

@@ -25,8 +25,8 @@ object SizeGate {
   /** Default bound: generous for a 128 GiB driver, far below "corpus".
     * Tunable (r15): `graft.sizegate.rows` system property, then
     * SPARK_GRAFT_SIZEGATE_ROWS — size it to the executors' broadcast
-    * budget on a real cluster; the hot-group scale cell lowers it
-    * in-process to force the shuffle-join branch it certifies. */
+    * budget on a real cluster (SCALE_CELLS_r15.txt's hot-group cell ran
+    * at `graft.sizegate.rows=1000` to force the shuffle-join branch). */
   def DefaultRows: Long =
     parsedPositiveLong("graft.sizegate.rows", "SPARK_GRAFT_SIZEGATE_ROWS",
       2000000L)
@@ -48,19 +48,22 @@ object SizeGate {
   }
 
   /** The graph/dedup collect-tier gate: `SPARK_GRAFT_COLLECT_THRESHOLD`
-    * (env only — it is a deployment setting, and the forced-distributed
-    * oracle leg sets it to 0) or `default` when unset. */
+    * (a deployment setting; the forced-distributed oracle leg sets it to
+    * 0, which puts every gated algorithm on its distributed tier) or
+    * `default` when unset. */
   private[graft] def collectThreshold(default: Long): Long =
-    sys.env.get("SPARK_GRAFT_COLLECT_THRESHOLD")
-      .fold(default)(parsedCollectThreshold)
+    envLong("SPARK_GRAFT_COLLECT_THRESHOLD", default, min = 0L)
 
-  /** Pure parse behind [[collectThreshold]]: values ≥ 0 (0 forces every
-    * gated algorithm onto its distributed tier); anything else fails
-    * naming the variable. */
-  private[graft] def parsedCollectThreshold(s: String): Long = {
-    val src = "env SPARK_GRAFT_COLLECT_THRESHOLD"
+  /** An env-only setting (no system-property twin): `default` when
+    * `name` is unset, else its value, which must parse and be ≥ `min`. */
+  private[graft] def envLong(name: String, default: Long, min: Long): Long =
+    sys.env.get(name).fold(default)(parsedEnvLong(name, _, min))
+
+  /** Pure parse behind [[envLong]]: fails naming the variable. */
+  private[graft] def parsedEnvLong(name: String, s: String, min: Long): Long = {
+    val src = s"env $name"
     val v = parsedLong(src, s)
-    require(v >= 0, s"graft: $src = $v must be >= 0")
+    require(v >= min, s"graft: $src = $v must be >= $min")
     v
   }
 

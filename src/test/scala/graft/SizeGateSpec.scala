@@ -5,16 +5,31 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.util.SizeGate
 
-/** Parsing of the collect-tier gate's env value (no session needed). */
+/** Parsing of the validated env settings (no session needed). */
 class SizeGateSpec extends AnyFunSuite with Matchers {
 
+  private def rejected(name: String, raw: String, min: Long): Unit = {
+    val e = intercept[IllegalArgumentException](
+      SizeGate.parsedEnvLong(name, raw, min))
+    e.getMessage should include(name)
+  }
+
   test("collect threshold parse: 0 and positives accepted, malformed or negative named") {
-    SizeGate.parsedCollectThreshold("0") shouldBe 0L
-    SizeGate.parsedCollectThreshold(" 2000000 ") shouldBe 2000000L
-    Seq("abc", "-1").foreach { bad =>
-      val e = intercept[IllegalArgumentException](
-        SizeGate.parsedCollectThreshold(bad))
-      e.getMessage should include("SPARK_GRAFT_COLLECT_THRESHOLD")
+    val name = "SPARK_GRAFT_COLLECT_THRESHOLD"
+    SizeGate.parsedEnvLong(name, "0", 0L) shouldBe 0L
+    SizeGate.parsedEnvLong(name, " 2000000 ", 0L) shouldBe 2000000L
+    Seq("abc", "-1").foreach(rejected(name, _, 0L))
+  }
+
+  test("bounded env settings: values at the minimum accepted, below it or malformed named") {
+    Seq(
+      ("SPARK_GRAFT_BLOOM_CACHE_STORES", 1L, Seq("eight", "0", "-1")),
+      ("SPARK_GRAFT_RUNS", 1L, Seq("abc", "0", "-1")),
+      ("SPARK_GRAFT_CANARY_EVERY", 0L, Seq("abc", "-1"))
+    ).foreach { case (name, min, bad) =>
+      SizeGate.parsedEnvLong(name, min.toString, min) shouldBe min
+      SizeGate.parsedEnvLong(name, " 8 ", min) shouldBe 8L
+      bad.foreach(rejected(name, _, min))
     }
   }
 }
