@@ -73,45 +73,32 @@ object Dedup {
 
   /** MinHash-LSH candidate pairs: shingle → k-minhash signature → band
     * buckets → equality self-join per bucket. Pairs agreeing on ≥1 of
-    * `bands` bands surface as candidates (recall tuned by bands×rows). */
-  def minhashCandidates(sh: DataFrame, k: Int = 64, bands: Int = 16): DataFrame = {
-    val banded = minhashBanded(sh, k, bands)
-    warnBucketDensity(banded, Seq("band", "h"), "minhashNearDups",
-      "minhashNearDupGroups")
-    // materialize the (small, collision-sized) pair set so the banded
-    // blocks can be released NOW — leaked corpus×bands checkpoints stack
-    // across calls in a long session until memory pressure drags every
-    // later job
-    val pairs = minhashBandedPairs(banded)
-    graft.util.BlockRelease.release(banded)
-    pairs
-  }
-
-  /** The checkpointed (doc_id, band, h) banding frame behind
-    * [[minhashCandidates]] — factored r16 so the group form can gate its
-    * verify on the bucket-size profile before committing to the
-    * pair-complete self-join. */
-  private[graft] def minhashBanded(sh: DataFrame, k: Int,
-      bands: Int): DataFrame = {
+    * `bands` bands surface as candidates (recall tuned by bands×rows).
+    * `caller` names the kernel in the bucket-density warning. */
+  def minhashCandidates(sh: DataFrame, k: Int = 64, bands: Int = 16,
+      caller: String = "minhashNearDups"): DataFrame = {
     val rows = k / bands
-    sh.select(col("doc_id"),
+    val banded = sh.select(col("doc_id"),
         lshBands(minhashSignature(col("shingles"), k), bands, rows).as("bh"))
       .select(col("doc_id"), explode(col("bh")).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.h").as("h"))
       .repartition(col("band"), col("h")) // spread buckets — don't inherit
       //                                     a single-file scan's partitioning
       .cp() // signatures are expensive; never recompute for the self-join
-  }
-
-  /** The pair-complete candidate self-join over a [[minhashBanded]]
-    * frame (deduped, checkpointed). */
-  private[graft] def minhashBandedPairs(banded: DataFrame): DataFrame =
-    banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
+    warnBucketDensity(banded, Seq("band", "h"), caller)
+    // materialize the (small, collision-sized) pair set so the banded
+    // blocks can be released NOW — leaked corpus×bands checkpoints stack
+    // across calls in a long session until memory pressure drags every
+    // later job
+    val pairs = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
         col("a.band") === col("b.band") && col("a.h") === col("b.h") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       .cp()
+    graft.util.BlockRelease.release(banded)
+    pairs
+  }
 
   /** Exact Jaccard for given candidate pairs (verification stage): joins
     * shingle sets back in and computes |∩| / |∪|. */
@@ -234,27 +221,9 @@ object Dedup {
     val probe = sh.agg(count(lit(1)),
       approx_count_distinct(struct(col(scopeCol), col("shingles")))).first()
     val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    // inverted-index pair stage shared by both tiers
-    def pairs(src: DataFrame, la: String, lb: String): (DataFrame, DataFrame) = {
-      val ex = src.select(col("doc_id"), col(scopeCol),
-          size(col("shingles")).as("n"), explode(col("shingles")).as("s"))
-        .repartition(col("s"))
-        .cp() // shingling is the expensive part; never twice
-      warnBucketDensity(ex, Seq(scopeCol, "s"), "ngramJaccardNearDups",
-        "jaccardNearDupGroups")
-      val out = ex.as("a").join(ex.as("b"),
-          col("a.s") === col("b.s") &&
-            col(s"a.$scopeCol") === col(s"b.$scopeCol") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as(la), col("b.doc_id").as(lb))
-        .agg(count(lit(1)).as("inter"), max(col("a.n")).as("na"),
-          max(col("b.n")).as("nb"))
-        .select(col(la), col(lb),
-          (col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold)
-      (ex, out)
-    }
+    def pairs(src: DataFrame, la: String, lb: String): (DataFrame, DataFrame) =
+      postingJaccardPairs(src, scopeCol, threshold, la, lb,
+        "ngramJaccardNearDups")
     if (nDocs < collapseRatio * nDistinct) {
       val (ex, out0) = pairs(sh, "doc_a", "doc_b")
       val out = out0.cp() // pair set is output-sized:
@@ -300,6 +269,35 @@ object Dedup {
     }
   }
 
+  /** The inverted-index pair stage of [[ngramJaccardNearDups]]'s tiers
+    * and [[jaccardNearDupGroups]] over `src` (doc_id, scopeCol,
+    * shingles): postings repartitioned by shingle, a bucket-density
+    * warning as `caller`, then the fused co-occurrence self-join — inter
+    * by posting count ≡ |array_intersect|, because the shingle arrays
+    * are DISTINCT hash sets. Returns (checkpointed postings, which the
+    * CALLER releases; pairs (la, lb, jaccard) ≥ threshold, a plan). */
+  private def postingJaccardPairs(src: DataFrame, scopeCol: String,
+      threshold: Double, la: String, lb: String,
+      caller: String): (DataFrame, DataFrame) = {
+    val ex = src.select(col("doc_id"), col(scopeCol),
+        size(col("shingles")).as("n"), explode(col("shingles")).as("s"))
+      .repartition(col("s"))
+      .cp() // shingling is the expensive part; never twice
+    warnBucketDensity(ex, Seq(scopeCol, "s"), caller)
+    val out = ex.as("a").join(ex.as("b"),
+        col("a.s") === col("b.s") &&
+          col(s"a.$scopeCol") === col(s"b.$scopeCol") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as(la), col("b.doc_id").as(lb))
+      .agg(count(lit(1)).as("inter"), max(col("a.n")).as("na"),
+        max(col("b.n")).as("nb"))
+      .select(col(la), col(lb),
+        (col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
+          .as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+    (ex, out)
+  }
+
   /** Shingle-candidate + cosine-verify near-dup pairs (q38's kernel,
     * factored r12): candidates are doc pairs sharing ≥1 exact hashed
     * n-word shingle within a `scopeCol` value (inverted-index equality
@@ -331,7 +329,7 @@ object Dedup {
     // pair stage shared by both tiers (and by the r14 group form)
     def verifiedPairs(src: DataFrame, la: String, lb: String):
         (DataFrame, DataFrame, DataFrame) =
-      shingleCosinePairStage(src, la, lb, tauCos, n)
+      shingleCosinePairStage(src, la, lb, tauCos, n, "shingleCosineVerify")
     val probe = d0.agg(count(lit(1)),
       approx_count_distinct(struct(col("scope"), col("text")))).first()
     val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
@@ -383,14 +381,15 @@ object Dedup {
   /** The shingle-candidate + cosine-verify pair stage over `src`
     * (doc_id, scope, text) — factored r14 so [[shingleCosineVerify]]'s
     * tiers and [[shingleCosineGroups]] share one definition of the
-    * near-dup relation. Returns (shingled frame, embedding frame,
-    * verified pairs) — all three localCheckpointed; the CALLER releases
+    * near-dup relation; `caller` names the kernel in the bucket-density
+    * warning. Returns (shingled frame, embedding frame, verified pairs
+    * (la, lb, cos)) — all three localCheckpointed; the CALLER releases
     * them. The embedding projection is checkpointed BEFORE the pair join
     * (Catalyst otherwise collapses it past the join and re-evaluates the
     * interpreted higher-order md5 fold once per candidate SIDE instead
     * of once per document — measured 14 s → <1 s at sf0.1). */
   private def shingleCosinePairStage(src: DataFrame, la: String,
-      lb: String, tauCos: Double, n: Int):
+      lb: String, tauCos: Double, n: Int, caller: String):
       (DataFrame, DataFrame, DataFrame) = {
     val shr = shingledHashes(src, "doc_id", "text", n, keep = Seq("scope"))
       .cp() // shingling runs once: postings + nz flags
@@ -398,8 +397,7 @@ object Dedup {
         explode(col("shingles")).as("k"))
       .repartition(col("k")) // spread the inverted index
       .cp()
-    warnBucketDensity(ex, Seq("scope", "k"), "shingleCosineVerify",
-      "shingleCosineGroups")
+    warnBucketDensity(ex, Seq("scope", "k"), caller)
     val cand = ex.as("a").join(ex.as("b"),
         col("a.k") === col("b.k") && col("a.scope") === col("b.scope") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -425,61 +423,6 @@ object Dedup {
       .cp()
     graft.util.BlockRelease.release(cand)
     (shr, emb, out)
-  }
-
-  /** Group-form variant of [[shingleCosinePairStage]] (r16): same shr /
-    * ex / emb construction and the same exact-cosine verify, but the
-    * candidate+verify stage rides [[gatedBucketEdges]] — pair-complete
-    * when the posting buckets are dup-light (the oracle regime, plan
-    * unchanged), star+repair when they are near-dup-dense. Returns
-    * (shingled frame, embedding frame, verified edges (ga, gb)) — all
-    * checkpointed; the CALLER releases them. */
-  private def shingleCosineRepStage(src: DataFrame, tauCos: Double,
-      n: Int): (DataFrame, DataFrame, DataFrame) = {
-    val shr = shingledHashes(src, "doc_id", "text", n, keep = Seq("scope"))
-      .cp()
-    val ex = shr.select(col("doc_id"), col("scope"),
-        explode(col("shingles")).as("k"))
-      .repartition(col("k"))
-      .cp()
-    // same codegen-kernel swap as [[shingleCosinePairStage]] (r17): the
-    // cosine runs once per candidate on the star path's verify
-    val emb = src.select(col("doc_id"), md5Embed(col("text")).as("v"))
-      .withColumn("n2", graft.functions.VectorFunctions.normSq(col("v")))
-      .cp()
-    def withVecs(c: DataFrame): DataFrame = c
-      .join(emb.select(col("doc_id").as("ga"), col("v").as("va"),
-        col("n2").as("na2")), "ga")
-      .join(emb.select(col("doc_id").as("gb"), col("v").as("vb"),
-        col("n2").as("nb2")), "gb")
-    val cosExpr =
-      round(graft.functions.VectorFunctions.dot(col("va"), col("vb")) /
-        sqrt(col("na2") * col("nb2")), 4)
-    val edges = gatedBucketEdges(ex, "doc_id", Seq("scope", "k"),
-      "shingleCosineGroups",
-      pairComplete = () => {
-        val cand = ex.as("a").join(ex.as("b"),
-            col("a.k") === col("b.k") && col("a.scope") === col("b.scope") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("ga"), col("b.doc_id").as("gb"))
-          .distinct()
-          .cp()
-        val e = withVecs(cand)
-          .filter(col("na2") > 0 && col("nb2") > 0)
-          .select(col("ga"), col("gb"), cosExpr.as("cos"))
-          .filter(col("cos") >= tauCos)
-          .select(col("ga"), col("gb"))
-          .cp()
-        graft.util.BlockRelease.release(cand)
-        e
-      },
-      verify = c => withVecs(c)
-        .select(col("ga"), col("gb"),
-          when(col("na2") > 0 && col("nb2") > 0, cosExpr).as("cos"))
-        .withColumn("_pass", coalesce(col("cos") >= tauCos, lit(false))),
-      "ga", "gb")
-    graft.util.BlockRelease.release(ex)
-    (shr, emb, edges)
   }
 
   /** COMPACT GROUP form of [[shingleCosineVerify]] — the last of the
@@ -525,7 +468,8 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     val reps = mem0.filter(col("id") === col("gid"))
       .select(col("id").as("doc_id"), col("scope"), col("text"))
-    val (shr, emb, gout) = shingleCosineRepStage(reps, tauCos, n)
+    val (shr, emb, gout) = shingleCosinePairStage(reps, "ga", "gb", tauCos,
+      n, "shingleCosineGroups")
     // eligibility flags per rep (inherited by the whole exact-dup group)
     val repFlags = shr.select(col("doc_id").as("gid"),
         (size(col("shingles")) > 0).as("nz"))
@@ -978,32 +922,33 @@ object Dedup {
         f"prefer $escape for canonicalization-shaped consumers")
   }
 
-  /** Loud diagnosis for the PAIR-form kernels' candidate stage (r17,
-    * verdict item 5): their CONTRACT is the pair-complete set, so the
-    * group forms' star gate cannot apply — but the same hot-bucket
-    * density that trips that gate makes the pair form's candidate
-    * self-join C(|B|,2)-shaped BEFORE the verify filter (a crawl
-    * corpus's low-entropy template bands). One agg over the banded
-    * frame projects the candidate count; above [[StarGateFactor]] ×
-    * banded rows the kernel says so loudly and names the star-gated
-    * group-form escape hatch. Diagnosis only — the pair output is the
-    * caller's contract and is unchanged. */
+  /** Candidate density above which [[warnBucketDensity]] reports a
+    * bucket self-join (projected candidates per banded row). 12 sits
+    * above q114's sf0.1 density (9.5) and below the boilerplate
+    * mixed-regime cell (~31) and q110's collision regime (~73). */
+  private[graft] val BucketDensityWarnAt = 12.0
+
+  /** Loud diagnosis for the kernels' candidate stage (r17, verdict item
+    * 5): a hot bucket (a crawl corpus's low-entropy template bands)
+    * makes the candidate self-join C(|B|,2)-shaped BEFORE the verify
+    * filter, in the pair forms and the group forms alike. One agg over
+    * the banded frame projects the candidate count; above
+    * [[BucketDensityWarnAt]] × banded rows the kernel says so on stderr
+    * before the join runs. Diagnosis only — the output is unchanged. */
   private[graft] def warnBucketDensity(banded: DataFrame,
-      keyCols: Seq[String], caller: String, escape: String): Unit = {
+      keyCols: Seq[String], caller: String): Unit = {
     val r = banded.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("_bc"))
       .agg(coalesce(sum(col("_bc").cast("double") *
         (col("_bc") - 1).cast("double") / 2), lit(0.0)),
         coalesce(sum(col("_bc")), lit(0L))).first()
     val (cand2, rows) = (r.getDouble(0), r.getLong(1))
-    if (cand2 > StarGateFactor * math.max(rows, 1L))
+    if (cand2 > BucketDensityWarnAt * math.max(rows, 1L))
       System.err.println(
         f"WARN graft.dedup.$caller: banding buckets project $cand2%,.0f " +
-        f"pair-complete candidates over $rows%,d banded rows (factor " +
-        f"${cand2 / math.max(rows, 1L)}%,.1f > ${StarGateFactor}%.1f) — " +
-        f"the pair CONTRACT requires them; canonicalization-shaped " +
-        f"consumers should prefer $escape (star-gated, ~linear in " +
-        f"banded rows)")
+        f"candidate pairs over $rows%,d banded rows (factor " +
+        f"${cand2 / math.max(rows, 1L)}%,.1f > ${BucketDensityWarnAt}%.1f) — " +
+        f"the candidate self-join is quadratic in the hot buckets' size")
   }
 
   /** COMPACT GROUP-REPRESENTATIVE near-dup output — the escape hatch for
@@ -1052,8 +997,7 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     val reps = mem.filter(col("id") === col("gid") && col("n2") > 0)
       .select(col("id"), col("v"), col("n2"))
-    val repEdges = cosineRepEdgesGated(reps, tauNum, tauDen, bits,
-      tables, dim)
+    val repEdges = cosineRepEdges(reps, tauNum, tauDen, bits, tables, dim)
     val out = groupsFromReps(mem,
       repEdges.select(col("id_a").as("src"), col("id_b").as("dst")))
     graft.util.BlockRelease.release(repEdges)
@@ -1062,15 +1006,13 @@ object Dedup {
 
   /** Rep-edge stage of [[cosineNearDupGroups]] (r16): the same banding
     * + integer-rational verify as [[cosineNearDupsExact]]'s direct tier
-    * (including its 2^53 exactness guard), but candidate+verify rides
-    * [[gatedBucketEdges]] — the FAT verify-inside-join when the
-    * signature buckets are dup-light (the measured oracle-regime shape;
-    * its collapse probe is skipped outright: reps are distinct vectors
-    * by construction), star+repair when they are near-dup-dense.
-    * `base` must carry (id, v, n2) with n2 > 0. */
-  private[graft] def cosineRepEdgesGated(base: DataFrame, tauNum: Long,
+    * (including its 2^53 exactness guard), with the FAT verify-inside-join
+    * over the signature buckets (its collapse probe is skipped outright:
+    * reps are distinct vectors by construction). `base` must carry
+    * (id, v, n2) with n2 > 0. Returns verified edges (id_a, id_b),
+    * checkpointed. */
+  private[graft] def cosineRepEdges(base: DataFrame, tauNum: Long,
       tauDen: Long, bits: Int, tables: Int, dim: Int): DataFrame = {
-    import graft.functions.VectorFunctions
     require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
     val d = if (dim > 0) dim else base.select(size(col("v"))).first().getInt(0)
     val maxN2 = base.agg(coalesce(max(col("n2")), lit(0.0))).first()
@@ -1079,51 +1021,28 @@ object Dedup {
     require(tauSq * maxN2 * maxN2 <= math.pow(2, 53),
       f"cosineNearDupGroups: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
       "the integer predicate would round; shorten documents or rescale vectors")
-    def pred(dotC: Column, na2C: Column, nb2C: Column): Column =
-      dotC > 0 &&
-        lit(tauDen * tauDen) * dotC * dotC >= lit(tauNum * tauNum) * na2C * nb2C
     val allSigs = graft.functions.VectorExpressions
       .hyperplane_sigs(col("v"), d, "neardup", bits, tables)
     val banded = base.select(col("id"), col("v"), col("n2"),
         posexplode(allSigs).as(Seq("t", "s")))
       .repartition(col("t"), col("s"))
       .cp()
-    val edges = gatedBucketEdges(banded, "id", Seq("t", "s"),
-      "cosineNearDupGroups",
-      // verify INSIDE the join condition (r17 — the [[cosineNearDupsExact]]
-      // bandPairs argument): failing pairs die in the join's inner loop;
-      // only passing pairs reach the distinct. Fused
-      // [[graft.functions.CosineRationalGate]] (r17 session 4): one dot
-      // per ordered pair instead of up to 3 (no CSE in join conditions).
-      pairComplete = () =>
-        banded.as("a").hint("merge")
-          .join(banded.as("b").hint("merge"),
-            col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
-              col("a.id") < col("b.id") &&
-              graft.functions.VectorExpressions.cosine_rational_gate(
-                col("a.v"), col("b.v"), col("a.n2"), col("b.n2"),
-                tauNum, tauDen))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .dropDuplicates("id_a", "id_b")
-          .cp(),
-      // carried verify (r16 second round): the banded frame already
-      // ships (v, n2) per row — the pair-complete FAT join reads them
-      // in place — so the star machinery carries them too and verifies
-      // with ZERO join-backs. The measured probe tax this removes: the
-      // sampled probe's ~19k candidates paid two corpus-shaped merge
-      // joins against `base` on every q110 run whose density trips and
-      // then falls back (sf0.1: fail rate 0.931 — the decision itself
-      // is unchanged, it just costs two fewer corpus sorts to reach).
-      verify = c => c.select(col("id_a"), col("id_b"),
-          col("n2_a"), col("n2_b"),
-          VectorFunctions.dot(col("v_a"), col("v_b")).as("_dot"))
-        .select(col("id_a"), col("id_b"),
-          pred(col("_dot"), col("n2_a"), col("n2_b")).as("_pass")),
-      "id_a", "id_b",
-      carryCols = Seq("v", "n2"),
-      // a center row now ships a d-float vector: scale the join-back's
-      // broadcast ROW bound down by the width ratio vs a narrow row
-      carryWeight = math.max(1L, d / 3L))
+    warnBucketDensity(banded, Seq("t", "s"), "cosineNearDupGroups")
+    // verify INSIDE the join condition (r17 — the [[cosineNearDupsExact]]
+    // bandPairs argument): failing pairs die in the join's inner loop;
+    // only passing pairs reach the distinct. Fused
+    // [[graft.functions.CosineRationalGate]] (r17 session 4): one dot
+    // per ordered pair instead of up to 3 (no CSE in join conditions).
+    val edges = banded.as("a").hint("merge")
+      .join(banded.as("b").hint("merge"),
+        col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
+          col("a.id") < col("b.id") &&
+          graft.functions.VectorExpressions.cosine_rational_gate(
+            col("a.v"), col("b.v"), col("a.n2"), col("b.n2"),
+            tauNum, tauDen))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .cp()
     graft.util.BlockRelease.release(banded)
     edges
   }
@@ -1309,16 +1228,9 @@ object Dedup {
   private[graft] def joinBackBounded(probe: DataFrame, build: DataFrame,
       keyCols: Seq[String], cntCol: String,
       dropCnt: Boolean = true,
-      counts: Option[(Long, Long)] = None,
-      rowWeight: Long = 1): DataFrame = {
+      counts: Option[(Long, Long)] = None): DataFrame = {
     def trim(df: DataFrame) = if (dropCnt) df.drop(cntCol) else df
-    // rowWeight: approximate width of a build row relative to the
-    // narrow (key + long) rows the SizeGate default was tuned for —
-    // callers whose build side carries arrays (the embedding kernel's
-    // per-bucket center vector) scale the ROW bound down so the BYTE
-    // size of a broadcast stays what the gate meant to bound
-    val bound = math.max(1L,
-      graft.util.SizeGate.DefaultRows / math.max(1L, rowWeight))
+    val bound = graft.util.SizeGate.DefaultRows
     val n = counts.map(_._1).getOrElse(build.count())
     if (n < bound)
       return probe.join(
@@ -1344,363 +1256,6 @@ object Dedup {
     val restProbe = probe.join(hotB, keyCols, "left_anti")
     val restJoined = restProbe.join(rest, keyCols)
     hotJoined.unionByName(restJoined)
-  }
-
-  /** Density gate for the group forms' star verify (r16 verdict item 1):
-    * the bucket-pair candidate+verify switches from the pair-complete
-    * self-join to the star+repair formulation when the projected
-    * candidate count Σ C(|bucket|,2) exceeds this factor × banded rows.
-    * Tunable via `graft.stardedup.factor` / SPARK_GRAFT_STAR_FACTOR;
-    * 0 forces the star path whenever any bucket has ≥ 2 members (the
-    * spec's forcing knob). Default 12 (raised from the first cut's 8 —
-    * bench-measured): below it the pair-complete work is bounded-
-    * comparable to the star's own probe machinery, so the plan keeps
-    * the measured pair-complete shape; q114's sf0.1 density sits at 9.5
-    * and paid ~1.5× pure probe tax at factor 8, while the boilerplate
-    * target regime (the mixed-regime cell) projects ~31 and the q110
-    * collision regime ~73 — both still gate through the sampled
-    * fail-rate probe. */
-  private[graft] def StarGateFactor: Double =
-    nonNegDoubleKnob("graft.stardedup.factor", "SPARK_GRAFT_STAR_FACTOR",
-      12.0)
-
-  /** Repair bound for the star verify (see the adaptive-fallback note in
-    * [[gatedBucketEdges]]): round 2 runs only when its exact candidate
-    * projection is at most this fraction of the pair-complete
-    * projection; above it the helper falls back to pair-complete.
-    * Default 0.10 — the measured fail-heavy regimes sit at 0.25 (q110)
-    * and 0.92 (q114) while the boilerplate target regime is ~0.0x.
-    * Tunable via `graft.stardedup.repair` / SPARK_GRAFT_STAR_REPAIR
-    * (specs force it high to pin the repair round end-to-end). */
-  private[graft] def StarRepairFraction: Double =
-    nonNegDoubleKnob("graft.stardedup.repair", "SPARK_GRAFT_STAR_REPAIR",
-      0.10)
-
-  /** Repair bound for CHEAP-verify callers of [[gatedBucketEdges]] —
-    * those whose verify reads only carried columns (simhash: two longs
-    * already on the banded frame), so a star/repair candidate costs the
-    * same as a pair-complete candidate (no content/embedding join-back,
-    * the asymmetry the 0.10 default prices in). The star then wins
-    * whenever its candidate count is meaningfully SMALLER than
-    * pair-complete; 0.7 keeps headroom for the star's fixed extra
-    * stages and the probe's sampling noise. Measured on the simband
-    * cell (SCALE_CELLS_r16.txt): fail rate 0.265 projects repair at
-    * 0.53× pair-complete — inside this bound, where the generic 0.10
-    * (correct for join-back verifies) had to fall back. Tunable via
-    * `graft.stardedup.repair.cheap` / SPARK_GRAFT_STAR_REPAIR_CHEAP. */
-  private[graft] def StarRepairCheapFraction: Double =
-    nonNegDoubleKnob("graft.stardedup.repair.cheap",
-      "SPARK_GRAFT_STAR_REPAIR_CHEAP", 0.7)
-
-  private def nonNegDoubleKnob(prop: String, env: String,
-      default: Double): Double = {
-    val raw = sys.props.get(prop).map((s"system property $prop", _))
-      .orElse(sys.env.get(env).map((s"env $env", _)))
-    raw.fold(default) { case (src, s) =>
-      val v = scala.util.Try(s.trim.toDouble).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft: $src = '$s' is not a double"))
-      require(v >= 0, s"graft: $src = $v must be >= 0")
-      v
-    }
-  }
-
-  /** Rep-bucket density-gated candidate generation + exact verify for
-    * the `*NearDupGroups` family (r16 — the r15 verdict's one weak
-    * mark): the group forms' output needs CONNECTIVITY, not the
-    * pair-complete candidate set, yet every rep-bucket self-join paid
-    * C(|bucket|,2) verify candidates — 209M candidates / 498 s at
-    * ~85-member near-dup-dense rep groups on the r15 mixed-regime cell
-    * (templated boilerplate whose members differ by a suffix: exact-dup
-    * collapse can't touch them, and every bucket pair verifies).
-    *
-    * STAR + REPAIR, exact by construction: per bucket B with center
-    * c = min(B), round 1 tries the |B|−1 star pairs (c, m); round 2
-    * tries {f, m} ⊆ B for every member f whose OWN star edge (c, f)
-    * failed verify (minus already-tried pairs). Any untried pair (a, b)
-    * of B has both (c, a) and (c, b) verified PASS, so a–c–b already
-    * connects them: components over tried-and-passed edges equal
-    * components over the full verified bucket-pair graph (DedupSpec
-    * pins this against a union-find over the pair form, including a
-    * crafted chain where the repair round is load-bearing). Candidate
-    * count: Σ(|B|−1) + Σ|failed(B)|·(|B|−1) — LINEAR in banded rows
-    * when verify mostly passes (the templated-text regime this exists
-    * for), and bounded by star + pair-complete when it mostly fails.
-    *
-    * The gate (one agg straight off the bucket-size groupBy — r17:
-    * nothing is checkpointed before the gate decides, so the dup-light
-    * path pays exactly one agg job and zero checkpoint writes; the agg
-    * also carries the join-back's (rows, hot-keys) probe) keeps the
-    * measured pair-complete plan when projected candidates ≤ [[StarGateFactor]]
-    * × banded rows — the dup-light oracle regime — so the registered
-    * queries' plan shape is unchanged there. When it trips, it says so
-    * loudly with the projected density (the r15 verdict's
-    * rep-bucket-density guard) and engages the star path, whose only
-    * hot-key-shaped shuffle (center attach on the bucket key — a hot
-    * BUCKET is exactly the gid stage's hot-group shape) rides
-    * [[joinBackBounded]]'s heavy-hitter discipline. Past the gate, two
-    * repair projections can still send the call back to pair-complete:
-    * a sampled fail-rate probe before round 1, and the exact repair
-    * candidate count after it (both priced against the repair bound).
-    *
-    * Cheap-verify callers (r16 second round, measured in on the simband
-    * cell): when `carryCols` names per-member columns of `banded0` that
-    * the verify reads (simhash: the two fingerprint longs; the embedding
-    * kernel: the vector + norm the banded frame already ships for the
-    * FAT pair-complete join), every candidate frame fed to `verify`
-    * carries them inline as `<c>_a`/`<c>_b` — no join-back — and the
-    * repair bound relaxes to [[StarRepairCheapFraction]] because the
-    * per-candidate cost asymmetry the 0.10 default prices in
-    * (content/embedding join-back vs the pair-complete join's inline
-    * verify) is gone. Callers carrying WIDE columns also pass
-    * `carryWeight` (approximate row-width multiple of a narrow row) so
-    * the center join-back's broadcast row bound scales down to keep its
-    * BYTE size what the gate meant to bound. The text kernels
-    * (minhash/jaccard/shingle-cosine) keep the join-back verify: their
-    * verify reads shingle ARRAYS whose carriage through banding would
-    * multiply the banded frame's bytes by the band count.
-    *
-    * @param banded0 one row per (member, bucket); extra columns pruned
-    *          except `carryCols`
-    * @param pairComplete today's full formulation — must return the
-    *          verified edges (la, lb), checkpointed
-    * @param verify candidates (la, lb) → same rows + boolean `_pass`
-    *          (a pure function of the pair — bucket-independent); with
-    *          `carryCols` the input also has `<c>_a`/`<c>_b` per carry
-    * @param carryCols columns of `banded0`, constant per member id,
-    *          carried inline into every candidate frame
-    * @return verified edges (la, lb), checkpointed; scratch released */
-  private[graft] def gatedBucketEdges(banded0: DataFrame, idCol: String,
-      keyCols: Seq[String], caller: String,
-      pairComplete: () => DataFrame,
-      verify: DataFrame => DataFrame,
-      la: String, lb: String,
-      carryCols: Seq[String] = Nil,
-      carryWeight: Long = 1): DataFrame = {
-    val banded = banded0.select((idCol +: keyCols ++: carryCols).map(col): _*)
-    // carried star-pair emission: the center's carry values ride the
-    // centers frame as one struct (min_by pairs them with the min id)
-    def carryA(ctrv: Column): Seq[Column] =
-      carryCols.map(c => ctrv.getField(c).as(s"${c}_a"))
-    def carryB: Seq[Column] = carryCols.map(c => col(c).as(s"${c}_b"))
-    // PLAN only, never checkpointed (r17, the r16 q113 watch item): the
-    // r16 cut checkpointed this lazily and let the gate agg materialize
-    // it, so every DUP-LIGHT call — the common case for the registered
-    // corpora — paid a bucket-count-sized checkpoint WRITE (for the
-    // scoped-Jaccard kernel, a distinct-(scope,shingle)-sized frame)
-    // whose blocks were released unread one line later. The gate agg now
-    // reads the groupBy directly; the checkpointed wide `centersW` is
-    // built only past the gate, where its cost buys the whole star path.
-    val centers = banded.groupBy(keyCols.map(col): _*)
-      .agg(min(col(idCol)).as("_ctr"), count(lit(1)).as("_bc"))
-    // WIDTH-AWARE repair bound (measured on the embband cell,
-    // SCALE_CELLS_r16.txt): carried candidates verify inline, but the
-    // repair round still MATERIALIZES them — distinct + anti-join +
-    // checkpoint — and a wide carry multiplies that cost by the row
-    // width. At carryWeight 5 (16-double vectors ×2 per candidate) a
-    // repair of 0.29× pair-complete lost 3.2× to the inline FAT join
-    // (24.2M wide rows ≈ 6.8 GB through the distinct), while narrow
-    // carries (simhash, weight 1) keep the full 0.7 headroom that the
-    // simband maxDist=15 cell validated. Dividing the cheap bound by
-    // the declared width prices the materialization back in.
-    val repairBound =
-      if (carryCols.nonEmpty)
-        StarRepairCheapFraction / math.max(1L, carryWeight)
-      else StarRepairFraction
-    val prof = centers.agg(
-      coalesce(sum(col("_bc").cast("double") *
-        (col("_bc") - 1).cast("double") / 2), lit(0.0)),
-      coalesce(sum(col("_bc")), lit(0L)),
-      count(lit(1)),
-      coalesce(sum(when(col("_bc") >= HotKeyRows, 1L).otherwise(0L)),
-        lit(0L)),
-      coalesce(sum((col("_bc") - 1).cast("double") *
-        (col("_bc") - 1).cast("double")), lit(0.0))).first()
-    val (cand2, rows, nBuckets, nHot) =
-      (prof.getDouble(0), prof.getLong(1), prof.getLong(2), prof.getLong(3))
-    val sumSq = prof.getDouble(4) // Σ(|B|−1)² — the repair-rate scaler
-    if (cand2 <= StarGateFactor * math.max(rows, 1L)) {
-      pairComplete() // centers was never materialized — nothing to release
-    } else {
-      System.err.println(
-        f"graft.dedup.$caller: rep-bucket density projects $cand2%,.0f " +
-        f"pair-complete verify candidates over $rows%,d banded rows " +
-        f"($nBuckets%,d buckets) — star verify engaged " +
-        f"(gate factor ${StarGateFactor}%.1f, graft.stardedup.factor)")
-      // wide centers agg, STAR PATH ONLY (r17: the dup-light path no
-      // longer checkpoints anything — see `centers` above): the wide agg
-      // (one more scan of the banded frame, map-side combined to
-      // bucket-count rows) is paid only past the gate, where it replaces
-      // per-candidate join-backs that dwarf it; carry-less callers get
-      // the narrow frame. r17 second cut: built AFTER the sampled probe
-      // decides — a probe-REJECT leg (q110's registered sf0.1 shape:
-      // density trips, fail rate 0.931, fallback) only ever reads the
-      // SAMPLED slice, so the full corpus-shaped agg + checkpoint (for
-      // the embedding kernel, a per-bucket d-float struct) was pure
-      // waste there; the probe aggregates its own slice directly
-      // (filter-by-bucket-hash then agg ≡ agg then filter — the hash is
-      // a function of the grouping key alone).
-      def centersAgg(src: DataFrame): DataFrame =
-        if (carryCols.isEmpty)
-          src.groupBy(keyCols.map(col): _*)
-            .agg(min(col(idCol)).as("_ctr"), count(lit(1)).as("_bc"))
-        else src.groupBy(keyCols.map(col): _*)
-          .agg(min(col(idCol)).as("_ctr"), count(lit(1)).as("_bc"),
-            min_by(struct(carryCols.map(col): _*), col(idCol))
-              .as("_ctrv"))
-      // SAMPLED FAIL-RATE PRE-PROBE (r16 second cut): before paying the
-      // full round 1 (q110's corpus: a ~13 s star attempt that then
-      // falls back), verify the star pairs of a deterministic
-      // bucket-hash sample (~20k candidates) and extrapolate the repair
-      // projection as f̂ · Σ(|B|−1)². Fail-heavy regimes (collision
-      // buckets, not boilerplate) bail here for the cost of one small
-      // verify; the EXACT post-round-1 bound below remains the backstop
-      // for marginal estimates. Skipped when the star is already
-      // sample-sized (k = 1).
-      val starBound = math.max(rows - nBuckets, 1L) // = Σ(|B|−1) ≥ |r1|
-      val kSamp = math.ceil(starBound / 20000.0).toLong
-      if (kSamp >= 2) {
-        val bS = banded.filter(
-          pmod(xxhash64(keyCols.map(col): _*), lit(kSamp)) === 0)
-        // sampled-centers side rides the shared broadcast gate (r17
-        // second cut — the probe was paying sort-merge exchanges on
-        // sample-sized frames, ~19 AQE stage jobs of pure scheduling
-        // latency per gate-tripping run): its row count is bounded at
-        // the driver by nBuckets/kSamp — the gate's own density
-        // precondition (avg bucket ≥ StarGateFactor·2+1) keeps that in
-        // the hundreds-to-thousands whenever the star engages, and the
-        // uniform bucket hash concentrates the sample tightly around
-        // the expectation; at or above the SizeGate bound the hint is
-        // withheld and the old shuffle join stands. Rows identical
-        // either way.
-        val cS = graft.util.SizeGate.maybeBroadcast(centersAgg(bS),
-          known = Some(nBuckets / kSamp))
-        // a PLAN, not a checkpoint (r17 second cut): the verify's agg
-        // below is its only consumer
-        val r1S = bS.join(cS, keyCols)
-          .filter(col(idCol) =!= col("_ctr"))
-          .select(col("_ctr").as(la) +: col(idCol).as(lb) +:
-            (carryA(col("_ctrv")) ++ carryB): _*)
-          .distinct()
-        val vs = verify(r1S).agg(count(lit(1)),
-          coalesce(sum(when(!col("_pass"), 1L).otherwise(0L)), lit(0L)))
-          .first()
-        val (nS, fS) = (vs.getLong(0), vs.getLong(1))
-        val fHat = if (nS == 0) 0.0 else fS.toDouble / nS
-        val projProbe = fHat * sumSq
-        if (projProbe > repairBound * cand2) {
-          System.err.println(
-            f"graft.dedup.$caller: sampled star probe ($nS%,d pairs, " +
-            f"fail rate $fHat%.3f) projects repair ~$projProbe%,.0f " +
-            f"of $cand2%,.0f pair-complete (bound " +
-            f"${repairBound}%.2f) — falling back to pair-complete")
-          // centersW was never built — the probe aggregated its own slice
-          return pairComplete()
-        }
-      }
-      // full wide centers, checkpointed for the attach/projection reuse —
-      // paid only once the probe has accepted the star (or was skipped)
-      val centersW = centersAgg(banded).cp()
-      // center attach: the bucket key is hot exactly when a bucket is
-      // near-dup-dense, so the attach follows the heavy-hitter split
-      val withCtr = joinBackBounded(banded, centersW, keyCols, "_bc",
-          counts = Some((nBuckets, nHot)), rowWeight = carryWeight)
-        .cp()
-      // round 1: the star — center × other members per bucket; the
-      // center is the bucket min so pairs are already (lo, hi)
-      val r1 = withCtr.filter(col(idCol) =!= col("_ctr"))
-        .select(col("_ctr").as(la) +: col(idCol).as(lb) +:
-          (carryA(col("_ctrv")) ++ carryB): _*)
-        .distinct()
-        .cp()
-      val v1 = verify(r1).cp()
-      graft.util.BlockRelease.release(r1)
-      // PASS-HEAVY SHORT-CIRCUIT (r17, measured on the simband
-      // maxDist=15 cell): the star's primary win regime is exactly the
-      // one where round 1 has no fails, so probe that first — one
-      // early-terminating job over the checkpointed v1 — and skip every
-      // repair structure when clean.
-      if (v1.filter(!col("_pass")).isEmpty) {
-        val out = v1.filter(col("_pass")).select(col(la), col(lb)).cp()
-        System.err.println(
-          f"graft.dedup.$caller: star verify tried ${v1.count()}%,d star " +
-          f"+ 0 repair candidates (all passed; projected pair-complete: " +
-          f"$cand2%,.0f)")
-        graft.util.BlockRelease.release(Seq(centersW, withCtr, v1))
-        return out
-      }
-      // round 2 (the repair): members whose OWN star edge failed re-pair
-      // against their whole bucket — per BUCKET, not globally (a member
-      // may pass in one bucket and fail in another)
-      val fails1 = v1.filter(!col("_pass"))
-        .select(col(la).as("_fctr"), col(lb).as("_fid"))
-      val failedRows = withCtr.as("w").join(fails1.as("f"),
-          col(s"w.$idCol") === col("f._fid") &&
-            col("w._ctr") === col("f._fctr"))
-        .select((idCol +: keyCols ++: carryCols).map(c => col(s"w.$c")): _*)
-        .cp()
-      // ADAPTIVE REPAIR BOUND (r16 second cut — MEASURED on the sf0.1
-      // bench): density alone does not decide the star's win. q110's
-      // corpus is genuinely near-dup-dense but verify-FAIL-heavy (34.8M
-      // projected candidates, repair projection 8.6M — bucket
-      // collisions, not boilerplate), and there the pair-complete FAT
-      // join verifies INLINE while the star must materialize + join
-      // content onto every repair candidate: measured 11.4 s → 63 s.
-      // q114's repair projection was 172k of 188k projected (0.92) —
-      // pure loss. The star's win regime is verify-PASS-heavy buckets
-      // (templated boilerplate: repair ≈ 0), so after the LINEAR round
-      // 1 the exact repair projection Σ_B fails(B)·(|B|−1) gates round
-      // 2: above `repairBound` × pair-complete ([[StarRepairFraction]],
-      // or [[StarRepairCheapFraction]] for carried-column verifies whose
-      // per-candidate cost matches pair-complete's) the helper falls
-      // back to the pair-complete formulation, having spent only the
-      // linear star work to find out. The projection reads only `_bc`
-      // off the checkpointed centers.
-      val projRepair = joinBackBounded(failedRows, centersW, keyCols,
-          "_bc", dropCnt = false, counts = Some((nBuckets, nHot)),
-          rowWeight = carryWeight)
-        .agg(coalesce(sum(col("_bc") - 1), lit(0L))).first().getLong(0)
-      if (projRepair > repairBound * cand2) {
-        System.err.println(
-          f"graft.dedup.$caller: star round 1 found a FAIL-heavy regime " +
-          f"(repair projection $projRepair%,d of $cand2%,.0f " +
-          f"pair-complete, bound ${repairBound}%.2f via " +
-          f"graft.stardedup.repair) — falling back to pair-complete")
-        graft.util.BlockRelease.release(
-          Seq(centersW, withCtr, v1, failedRows))
-        return pairComplete()
-      }
-      val fLtM = col(s"f.$idCol") < col(s"m.$idCol")
-      val r2 = failedRows.as("f").hint("merge")
-        .join(banded.as("m").hint("merge"),
-          keyCols.map(c => col(s"f.$c") === col(s"m.$c")).reduce(_ && _) &&
-            col(s"f.$idCol") =!= col(s"m.$idCol"))
-        .select(least(col(s"f.$idCol"), col(s"m.$idCol")).as(la) +:
-          greatest(col(s"f.$idCol"), col(s"m.$idCol")).as(lb) +:
-          (carryCols.map(c =>
-            when(fLtM, col(s"f.$c")).otherwise(col(s"m.$c")).as(s"${c}_a")) ++
-           carryCols.map(c =>
-            when(fLtM, col(s"m.$c")).otherwise(col(s"f.$c")).as(s"${c}_b"))): _*)
-        .distinct()
-        // already-tried star pairs never re-verify; merge-hinted — v1 is
-        // checkpoint-stat-underestimated (the banding broadcast hazard)
-        .hint("merge")
-        .join(v1.select(col(la), col(lb)).hint("merge"),
-          Seq(la, lb), "left_anti")
-        .cp()
-      val v2 = verify(r2).cp()
-      val out = v1.filter(col("_pass")).select(col(la), col(lb))
-        .unionByName(v2.filter(col("_pass")).select(col(la), col(lb)))
-        .cp()
-      // observability for the cells: actual candidate work vs projected
-      System.err.println(
-        f"graft.dedup.$caller: star verify tried ${v1.count()}%,d star " +
-        f"+ ${v2.count()}%,d repair candidates " +
-        f"(projected pair-complete: $cand2%,.0f)")
-      graft.util.BlockRelease.release(
-        Seq(centersW, withCtr, v1, failedRows, r2, v2))
-      out
-    }
   }
 
   /** Shared tail of the `*NearDupGroups` family (factored r14 when the
@@ -1829,32 +1384,15 @@ object Dedup {
     sh.unpersist(blocking = false)
     val reps = mem.filter(col("id") === col("gid") && size(col("shingles")) > 0)
       .select(col("id").as("doc_id"), col("shingles"))
-    // density-gated star verify (r16): dup-light rep buckets keep the
-    // pair-complete candidate self-join; near-dup-dense buckets (the
-    // 209M-candidate mixed-regime cell) go star + repair
-    val banded = minhashBanded(reps, k, bands)
-    val edges = gatedBucketEdges(banded, "doc_id", Seq("band", "h"),
-      "minhashNearDupGroups",
-      pairComplete = () => {
-        val cand = minhashBandedPairs(banded)
-        val e = jaccardOfPairs(cand, reps)
-          .filter(col("jaccard") >= threshold)
-          .select(col("doc_a"), col("doc_b"))
-          .cp()
-        graft.util.BlockRelease.release(cand)
-        e
-      },
-      // merge-hinted: reps is corpus-shaped with shingle ARRAYS and the
-      // candidate frame's checkpoint stats under-estimate (the banding
-      // broadcast hazard) — a mis-elected broadcast of the array side is
-      // the r9 failure class
-      verify = c => jaccardOfPairs(c.hint("merge"), reps.hint("merge"))
-        .withColumn("_pass",
-          coalesce(col("jaccard") >= threshold, lit(false))),
-      "doc_a", "doc_b")
+    val cand = minhashCandidates(reps, k, bands, "minhashNearDupGroups")
+    val edges = jaccardOfPairs(cand, reps)
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"))
+      .cp()
+    graft.util.BlockRelease.release(cand)
     val out = groupsFromReps(mem,
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    graft.util.BlockRelease.release(Seq(banded, edges))
+    graft.util.BlockRelease.release(edges)
     out
   }
 
@@ -1892,37 +1430,13 @@ object Dedup {
     sh.unpersist(blocking = false)
     val reps = mem.filter(col("id") === col("gid") && size(col("shingles")) > 0)
       .select(col("id").as("doc_id"), col(scopeCol), col("shingles"))
-    val ex = reps.select(col("doc_id"), col(scopeCol),
-        size(col("shingles")).as("n"), explode(col("shingles")).as("s"))
-      .repartition(col("s"))
-      .cp()
-    // density-gated star verify (r16): the posting buckets are the
-    // (scope, shingle) lists; dup-light keeps the fused co-occurrence
-    // self-join (inter by posting count ≡ |array_intersect| — the
-    // shingle arrays are DISTINCT hash sets, so the star path's
-    // jaccardOfPairs computes the identical value)
-    val edges = gatedBucketEdges(ex, "doc_id", Seq(scopeCol, "s"),
-      "jaccardNearDupGroups",
-      pairComplete = () => ex.as("a").join(ex.as("b"),
-          col("a.s") === col("b.s") &&
-            col(s"a.$scopeCol") === col(s"b.$scopeCol") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("inter"), max(col("a.n")).as("na"),
-          max(col("b.n")).as("nb"))
-        .filter(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) >= threshold)
-        .select(col("doc_a"), col("doc_b"))
-        .cp(),
-      // merge-hinted — the minhash form's broadcast-hazard argument
-      verify = c => jaccardOfPairs(c.hint("merge"),
-          reps.select(col("doc_id"), col("shingles")).hint("merge"))
-        .withColumn("_pass",
-          coalesce(col("jaccard") >= threshold, lit(false))),
-      "doc_a", "doc_b")
+    val (ex, pairs) = postingJaccardPairs(reps, scopeCol, threshold,
+      "doc_a", "doc_b", "jaccardNearDupGroups")
+    val edges = pairs.select(col("doc_a"), col("doc_b")).cp()
+    graft.util.BlockRelease.release(ex)
     val out = groupsFromReps(mem,
       edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    graft.util.BlockRelease.release(Seq(ex, edges))
+    graft.util.BlockRelease.release(edges)
     out
   }
 
@@ -2223,30 +1737,13 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     val reps = mem.filter(col("id") === col("gid"))
       .select(col("id").as("doc_id"), col("fp_lo"), col("fp_hi"))
-    val chunkCols = simhashChunkCols(chunks, width)
     // reps are distinct fingerprints by construction, so the pigeonhole
-    // kernel's collapse gate is moot — but a hot BAND (many reps
-    // sharing a low-entropy chunk value, the templated-text shape) is
-    // the r16 density-gate regime: star+repair past the gate, with the
-    // center attach heavy-hitter-split on the (c, chunk) bucket key
-    val banded = reps.select(col("doc_id"), col("fp_lo"), col("fp_hi"),
-      posexplode(array(chunkCols: _*)).as(Seq("c", "chunk")))
-    val pairs = gatedBucketEdges(banded, "doc_id", Seq("c", "chunk"),
-      "simhashNearDupGroupsMd5",
-      pairComplete = () => pigeonholeBandJoin(reps, Seq("fp_lo", "fp_hi"),
-        chunkCols, maxDist, simhashMd5Dist, "doc_a", "doc_b")
-        .select(col("doc_a"), col("doc_b"))
-        .cp(),
-      // cheap verify (r16 second round): the fingerprint longs ride the
-      // banded frame, so candidates carry them inline — no rep
-      // join-back, and the repair bound relaxes to the cheap fraction
-      // (the simband cell's 0.53×-pair-complete repair regime engages
-      // where the generic bound had to fall back)
-      verify = c => c.select(col("doc_a"), col("doc_b"),
-        (simhashMd5Dist(f => col(s"${f}_a"), f => col(s"${f}_b")) <= maxDist)
-          .as("_pass")),
-      "doc_a", "doc_b",
-      carryCols = Seq("fp_lo", "fp_hi"))
+    // kernel's collapse gate is moot
+    val pairs = pigeonholeBandJoin(reps, Seq("fp_lo", "fp_hi"),
+        simhashChunkCols(chunks, width), maxDist, simhashMd5Dist,
+        "doc_a", "doc_b", "simhashNearDupGroupsMd5")
+      .select(col("doc_a"), col("doc_b"))
+      .cp()
     val out = groupsFromReps(mem,
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
     graft.util.BlockRelease.release(pairs)
@@ -2269,6 +1766,29 @@ object Dedup {
     }
     pigeonholePairs(fp, Seq("sh"), chunkCols, maxDist,
       (a, b) => hamming64(a("sh"), b("sh")).cast("long"), collapseRatio)
+  }
+
+  /** The pigeonhole band self-join (factored r16 so the group form and
+    * [[pigeonholePairs]] share one definition): band by `chunkCols`,
+    * warn on hot buckets as `caller`, equality self-join on
+    * (chunk_idx, chunk), distinct, exact `dist` ≤ maxDist. */
+  private def pigeonholeBandJoin(src: DataFrame, fpCols: Seq[String],
+      chunkCols: Seq[Column], maxDist: Int,
+      dist: (String => Column, String => Column) => Column,
+      la: String, lb: String, caller: String): DataFrame = {
+    val banded = src.select(col("doc_id") +: fpCols.map(col) :+
+      posexplode(array(chunkCols: _*)).as(Seq("c", "chunk")): _*)
+    warnBucketDensity(banded, Seq("c", "chunk"), caller)
+    banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
+        col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as(la) +: col("b.doc_id").as(lb) +:
+        (fpCols.map(f => col(s"a.$f").as(s"${f}_a")) ++
+          fpCols.map(f => col(s"b.$f").as(s"${f}_b"))): _*)
+      .distinct()
+      .select(col(la), col(lb),
+        dist(f => col(s"${f}_a"), f => col(s"${f}_b")).as("dist"))
+      .filter(col("dist") <= maxDist)
   }
 
   /** Shared pigeonhole pair kernel for the SimHash tiers: band the
@@ -2297,28 +1817,6 @@ object Dedup {
     * collapse won 20.0 → 11.9 s. The machinery is kept (and spec-pinned)
     * for corpora with extreme fingerprint multiplicity, where the
     * banding's dup-quadratic bucket pairs eventually dominate. */
-  /** The pair-complete pigeonhole band self-join (factored r16 so the
-    * gated group form and [[pigeonholePairs]] share one definition):
-    * band by `chunkCols`, equality self-join on (chunk_idx, chunk),
-    * distinct, exact `dist` ≤ maxDist. */
-  private def pigeonholeBandJoin(src: DataFrame, fpCols: Seq[String],
-      chunkCols: Seq[Column], maxDist: Int,
-      dist: (String => Column, String => Column) => Column,
-      la: String, lb: String): DataFrame = {
-    val banded = src.select(col("doc_id") +: fpCols.map(col) :+
-      posexplode(array(chunkCols: _*)).as(Seq("c", "chunk")): _*)
-    banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
-        col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as(la) +: col("b.doc_id").as(lb) +:
-        (fpCols.map(f => col(s"a.$f").as(s"${f}_a")) ++
-          fpCols.map(f => col(s"b.$f").as(s"${f}_b"))): _*)
-      .distinct()
-      .select(col(la), col(lb),
-        dist(f => col(s"${f}_a"), f => col(s"${f}_b")).as("dist"))
-      .filter(col("dist") <= maxDist)
-  }
-
   private def pigeonholePairs(fp0: DataFrame, fpCols: Seq[String],
       chunkCols: Seq[Column], maxDist: Int,
       dist: (String => Column, String => Column) => Column,
@@ -2327,13 +1825,9 @@ object Dedup {
     val probe = fp.agg(count(lit(1)),
       approx_count_distinct(struct(fpCols.map(col): _*))).first()
     val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    def bandJoin(src: DataFrame, la: String, lb: String): DataFrame = {
-      warnBucketDensity(
-        src.select(col("doc_id"),
-          posexplode(array(chunkCols: _*)).as(Seq("c", "chunk"))),
-        Seq("c", "chunk"), "simhashNearDups", "simhashNearDupGroupsMd5")
-      pigeonholeBandJoin(src, fpCols, chunkCols, maxDist, dist, la, lb)
-    }
+    def bandJoin(src: DataFrame, la: String, lb: String): DataFrame =
+      pigeonholeBandJoin(src, fpCols, chunkCols, maxDist, dist, la, lb,
+        "simhashNearDups")
     if (nDocs < collapseRatio * nDistinct) {
       val out = bandJoin(fp, "doc_a", "doc_b").cp()
       graft.util.BlockRelease.release(fp)

@@ -962,19 +962,11 @@ object TextQueries {
     // the oracle
     val store = System.getProperty("java.io.tmpdir") +
       "/graft_q111_store_" + java.util.UUID.randomUUID().toString
-    val t0 = System.nanoTime()
     graft.streaming.Streams.bootstrapIngestStore(
       d.filter(col("doc_id") % 10 =!= 3), "doc_id", "text", store)
-    val t1 = System.nanoTime()
     val fp = Dedup.docSigGrams(
       d.filter(col("doc_id") % 10 === 3), "doc_id", "text", 8)
     val v = graft.dedup.IngestIndex.gateWithIndex(fp, store, None)
-    val t2 = System.nanoTime()
-    // stage split for the bench ledger (r14 verdict: the headline q111
-    // number is mostly store-build, not gating)
-    System.err.println(
-      f"q111 stage split: bootstrap ${(t1 - t0) / 1e9}%.2f s  " +
-      f"gate ${(t2 - t1) / 1e9}%.2f s")
     // the verdict frame is checkpoint-materialized; drop the transient
     // store's session bloom frame and the store itself so a one-shot
     // oracle run pins nothing and leaves nothing behind

@@ -752,18 +752,14 @@ class DedupSpec extends SparkSpec with Matchers {
     (filtered > Dedup.PairAmplificationWarnAt) shouldBe false
   }
 
-  test("star verify forced: all five group forms equal their pair forms on a near-dup-noised corpus (r16)") {
+  test("all five group forms equal their pair forms: noised, hot-bucket, templated") {
     import graft.functions.TextFunctions.md5Embed
     val s2 = spark
     import s2.implicits._
     // suffix-NOISED replicas: texts DISTINCT (the exact-dup gid stage
     // cannot collapse them) but near-identical — near-dup-DENSE rep
-    // buckets, the regime the star verify exists for. Gate factor 0
-    // forces the star path through EVERY bucket (including fail-heavy
-    // false-positive buckets, so the repair round's exactness is pinned
-    // in both regimes); outputs must equal components over the pair
-    // forms' own output, which the un-forced default path already pins
-    // against brute truth elsewhere in this suite.
+    // buckets; outputs must equal components over the pair forms' own
+    // output, which is pinned against brute truth elsewhere in this suite.
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source")).limit(40)
     val noised = (0 until 3).map(i => base.select(
@@ -774,10 +770,8 @@ class DedupSpec extends SparkSpec with Matchers {
     // Mixed hot-bucket corpus with SPREAD sizes (r17): every doc shares
     // the word "x" (ONE hot posting bucket), and docs (2j, 2j+1) are
     // private near-pairs of growing size L = 2+j — word-set Jaccard
-    // L/(L+2) ≥ 0.5, cross-pairs share only "x" (J ≈ 1/sizes < 0.5). In
-    // the hot bucket the center (doc 0, the smallest doc) fails against
-    // almost everyone: verify-MIXED and repair-heavy, so the repair
-    // round carries most of the edges.
+    // L/(L+2) ≥ 0.5, cross-pairs share only "x" (J ≈ 1/sizes < 0.5):
+    // the hot bucket's min-id member fails against almost everyone.
     val spread = (0 until 20).flatMap { j =>
       val L = 2 + j
       val a = (1 to L).map(i => s"a${j}_$i")
@@ -785,6 +779,14 @@ class DedupSpec extends SparkSpec with Matchers {
         (2L * j + 1,
           ("x" +: (a.dropRight(1) :+ s"b$j")).mkString(" "), "s"))
     }.toDF("doc_id", "text", "source").localCheckpoint()
+    // Templated text + a variant token (the simband cell's shape, mini):
+    // 64 template tokens leave ~6 of the 64 SimHash bit-sums at ±1
+    // (flippable by one variant token), so distinct fingerprints share
+    // template-dominated chunks — dense buckets, MIXED pass/fail at
+    // maxDist 3
+    val tpl = (1 to 64).map(i => s"boiler token t$i").mkString(" ")
+    val templated = (0 until 80).map(i => (i.toLong, s"$tpl u${i % 16}", "s"))
+      .toDF("doc_id", "text", "source").localCheckpoint()
     def groupsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     def pairsOf(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
@@ -820,23 +822,13 @@ class DedupSpec extends SparkSpec with Matchers {
           "id_a", "id_b"), ids)
       graft.util.BlockRelease.release(vecs)
     }
-    sys.props("graft.stardedup.factor") = "0"
-    // keep the repair round engaged even where a corpus is fail-heavy —
-    // the adaptive bounds would otherwise fall back to pair-complete,
-    // which the default-path specs already cover
-    sys.props("graft.stardedup.repair") = "1e9"
-    sys.props("graft.stardedup.repair.cheap") = "1e9"
-    try {
-      allFive(noised, 3)
-      allFive(spread, 1)
-    } finally {
-      Seq("graft.stardedup.factor", "graft.stardedup.repair",
-        "graft.stardedup.repair.cheap").foreach(sys.props.remove)
-    }
-    graft.util.BlockRelease.release(Seq(noised, spread))
+    allFive(noised, 3)
+    allFive(spread, 1)
+    allFive(templated, 3)
+    graft.util.BlockRelease.release(Seq(noised, spread, templated))
   }
 
-  test("star repair round is load-bearing: a non-center chain connects only through round 2 (r16)") {
+  test("group form: a chain linked only by a non-min-id pair stays one component") {
     val s2 = spark
     import s2.implicits._
     // n = 1 shingles = the words themselves, so Jaccard is word-set
@@ -844,13 +836,11 @@ class DedupSpec extends SparkSpec with Matchers {
     // D = {w5..w8, y1..y12}:
     //   J(A,B) = J(B,C) = 5/9 ≥ 0.5;  J(A,C) = 1/9 < 0.5;
     //   J(D,C) = 4/17 < 0.5;  J(D,B) = 4/21 < 0.5.
-    // Bucket "x" = {A,C,B} with center A: star (A,C) FAILS, (A,B)
-    // passes. Buckets w5..w8 = {D,C,B} with center D (min id): BOTH
-    // star edges fail. The load-bearing edge (C,B) is therefore never a
-    // star pair anywhere — it exists ONLY as a round-2 repair pair (C
-    // failed in every bucket containing B) — yet the true components
-    // are {A,B,C} + {D}. A star-only implementation would leave C a
-    // singleton; the pin catches it.
+    // Bucket "x" = {A,C,B} with min id A: (A,C) fails, (A,B) passes.
+    // Buckets w5..w8 = {D,C,B} with min id D: both (D,C) and (D,B)
+    // fail. The edge (C,B) never involves a bucket's min-id member, yet
+    // the true components are {A,B,C} + {D}: a formulation that verified
+    // only min-id pairs would leave C a singleton.
     val a = (1 to 4).map(i => s"w$i").mkString(" ") + " x"
     val c = (5 to 8).map(i => s"w$i").mkString(" ") + " x"
     val b = (1 to 8).map(i => s"w$i").mkString(" ") + " x"
@@ -858,163 +848,46 @@ class DedupSpec extends SparkSpec with Matchers {
       (1 to 12).map(i => s"y$i").mkString(" ")
     val docs = Seq((0L, d, "s"), (1L, a, "s"), (2L, c, "s"), (3L, b, "s"))
       .toDF("doc_id", "text", "source").localCheckpoint()
-    sys.props("graft.stardedup.factor") = "0"
-    sys.props("graft.stardedup.repair") = "1e9"
-    try {
-      val groups = Dedup
-        .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      groups shouldBe Map(
-        0L -> (0L, 1L), 1L -> (1L, 3L), 2L -> (1L, 3L), 3L -> (1L, 3L))
-      // and the pair form agrees (components-of-pairs)
-      val pairs = Dedup
-        .ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 1)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      expectGroupsEqualPairs(groups, pairs, Array(0L, 1L, 2L, 3L))
-    } finally {
-      sys.props.remove("graft.stardedup.factor")
-      sys.props.remove("graft.stardedup.repair")
-    }
-    graft.util.BlockRelease.release(docs)
-  }
-
-  test("star adaptive repair bound: fail-heavy regime falls back to pair-complete, output unchanged (r16)") {
-    val s2 = spark
-    import s2.implicits._
-    // the chain corpus again, but with the DEFAULT repair bound: round
-    // 1 fails (A,C) in bucket x and both star edges in buckets w5..w8,
-    // so the exact repair projection (~18) exceeds 0.10 × 19 projected
-    // pair-complete candidates — the helper must fall back, and the
-    // output must STILL equal the pair form's components (pair-complete
-    // recomputes everything; v1 is discarded)
-    val a = (1 to 4).map(i => s"w$i").mkString(" ") + " x"
-    val c = (5 to 8).map(i => s"w$i").mkString(" ") + " x"
-    val b = (1 to 8).map(i => s"w$i").mkString(" ") + " x"
-    val d = (5 to 8).map(i => s"w$i").mkString(" ") + " " +
-      (1 to 12).map(i => s"y$i").mkString(" ")
-    val docs = Seq((0L, d, "s"), (1L, a, "s"), (2L, c, "s"), (3L, b, "s"))
-      .toDF("doc_id", "text", "source").localCheckpoint()
-    val buf = new java.io.ByteArrayOutputStream()
-    val oldErr = System.err
-    sys.props("graft.stardedup.factor") = "0"
-    try {
-      System.setErr(new java.io.PrintStream(buf, true))
-      val groups = Dedup
-        .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      groups shouldBe Map(
-        0L -> (0L, 1L), 1L -> (1L, 3L), 2L -> (1L, 3L), 3L -> (1L, 3L))
-    } finally {
-      System.setErr(oldErr)
-      sys.props.remove("graft.stardedup.factor")
-    }
-    buf.toString should include ("falling back to pair-complete")
-    graft.util.BlockRelease.release(docs)
-  }
-
-  test("simhash carried-column star: cheap repair bound engages and falls back by knob, output invariant (r16)") {
-    val s2 = spark
-    import s2.implicits._
-    // Templated text + a variant token (the simband cell's shape, mini):
-    // distinct fingerprints share template-dominated chunks, so buckets
-    // are dense and verify is mixed pass/fail. The simhash form's verify
-    // reads ONLY the carried fingerprint longs, so it rides the CHEAP
-    // repair bound (graft.stardedup.repair.cheap). Pin both sides of the
-    // knob end-to-end — bound 0 must fall back (stderr), bound 1e9 must
-    // run the repair round (stderr shows tried counts) — and the output
-    // must equal the pair form's components either way.
-    // 64 template tokens -> ~6 of the 64 bit-sums sit at ±1 (flippable
-    // by one variant token), so variant pairs differ by ~3 bits: MIXED
-    // pass/fail at maxDist 3, dense chunk buckets — deterministic via
-    // md5, asserted below before the knob legs run
-    val tpl = (1 to 64).map(i => s"boiler token t$i").mkString(" ")
-    val docs = (0 until 80).map(i => (i.toLong, s"$tpl u${i % 16}", "s"))
-      .toDF("doc_id", "text", "source").localCheckpoint()
-    val ids = (0L until 80L).toArray
-    val truth = Dedup.simhashNearDupsMd5(docs, "doc_id", "text", 3)
+    val groups = Dedup
+      .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 1)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    groups shouldBe Map(
+      0L -> (0L, 1L), 1L -> (1L, 3L), 2L -> (1L, 3L), 3L -> (1L, 3L))
+    // and the pair form agrees (components-of-pairs)
+    val pairs = Dedup
+      .ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 1)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    def runWith(cheap: String): (Map[Long, (Long, Long)], String) = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val oldErr = System.err
-      sys.props("graft.stardedup.factor") = "0"
-      sys.props("graft.stardedup.repair.cheap") = cheap
-      try {
-        System.setErr(new java.io.PrintStream(buf, true))
-        val g = Dedup.simhashNearDupGroupsMd5(docs, "doc_id", "text", 3)
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-        (g, buf.toString)
-      } finally {
-        System.setErr(oldErr)
-        sys.props.remove("graft.stardedup.factor")
-        sys.props.remove("graft.stardedup.repair.cheap")
-      }
-    }
-    val (gFallback, errFallback) = runWith("1e-12")
-    errFallback should include ("falling back to pair-complete")
-    expectGroupsEqualPairs(gFallback, truth, ids)
-    val (gStar, errStar) = runWith("1e9")
-    errStar should include ("star verify tried")
-    (errStar should not).include("falling back to pair-complete")
-    expectGroupsEqualPairs(gStar, truth, ids)
+    expectGroupsEqualPairs(groups, pairs, Array(0L, 1L, 2L, 3L))
     graft.util.BlockRelease.release(docs)
   }
 
-  test("exact-bound REJECT and ACCEPT paths: direct gatedBucketEdges pin") {
+  test("group forms warn on a hot posting bucket before the join, not when dup-light") {
     val s2 = spark
     import s2.implicits._
-    // One bucket, members 1..5 carrying a 1-D position p = id; verify
-    // passes iff |p_a − p_b| <= 1. Center = 1 ⇒ round 1 is verify-MIXED
-    // deterministically: (1,2) passes, (1,3)/(1,4)/(1,5) FAIL — the
-    // pass-heavy short-circuit cannot fire, and the star (4 pairs) is
-    // below the sampled probe's size, so the exact post-round-1 bound
-    // always decides. True pair graph: the chain (1,2)(2,3)(3,4)(4,5).
-    val banded = Seq(1L, 2L, 3L, 4L, 5L)
-      .map(i => (i, "b", i.toDouble)).toDF("id", "k", "p")
-      .localCheckpoint()
-    val truth = Set((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    def run(repairBound: String): (Set[(Long, Long)], String) = {
+    // 100 docs of two private words each; in the hot corpus every doc
+    // also carries "x" — one posting bucket of 100 members projects
+    // C(100,2) = 4,950 candidates over 300 banded rows (factor 16.5 >
+    // BucketDensityWarnAt); without "x" every bucket is a singleton
+    def corpus(shared: String) = (0 until 100)
+      .map(i => (i.toLong, s"$shared p$i q$i".trim, "s"))
+      .toDF("doc_id", "text", "source").localCheckpoint()
+    def stderrOf(docs: org.apache.spark.sql.DataFrame): String = {
       val buf = new java.io.ByteArrayOutputStream()
       val oldErr = System.err
-      sys.props("graft.stardedup.factor") = "0"
-      sys.props("graft.stardedup.repair") = repairBound
-      sys.props("graft.stardedup.repair.cheap") = repairBound
       try {
         System.setErr(new java.io.PrintStream(buf, true))
-        val out = Dedup.gatedBucketEdges(banded, "id", Seq("k"), "specKernel",
-          pairComplete = () => banded.as("a").join(banded.as("b"),
-              col("a.k") === col("b.k") && col("a.id") < col("b.id"))
-            .filter(abs(col("a.p") - col("b.p")) <= 1.0)
-            .select(col("a.id").as("la"), col("b.id").as("lb"))
-            .localCheckpoint(),
-          verify = c => c.withColumn("_pass", abs(col("p_a") - col("p_b")) <= 1.0),
-          la = "la", lb = "lb",
-          carryCols = Seq("p"))
-        val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val out = Dedup.jaccardNearDupGroups(
+          docs, "doc_id", "text", "source", 0.5, 1)
+        out.count() shouldBe 100L
         graft.util.BlockRelease.release(out)
-        (pairs, buf.toString)
-      } finally {
-        System.setErr(oldErr)
-        Seq("graft.stardedup.factor", "graft.stardedup.repair",
-          "graft.stardedup.repair.cheap").foreach(sys.props.remove)
-      }
+      } finally System.setErr(oldErr)
+      buf.toString
     }
-    // REJECT leg (repair bound 0 < the exact repair projection 3 × 4):
-    // round 1 runs, then the helper falls back to pair-complete.
-    val (rejected, errR) = run("0")
-    withClue(s"expected the exact repair bound to reject: $errR") {
-      errR should include("star round 1 found a FAIL-heavy regime")
-    }
-    rejected shouldBe truth
-    // ACCEPT leg (repair bound 1e9): star + repair; the repair round is
-    // load-bearing for every chain edge beyond (1,2).
-    val (accepted, errA) = run("1e9")
-    withClue(s"expected the star+repair rounds to run: $errA") {
-      errA should include("repair candidates")
-    }
-    accepted shouldBe truth
-    graft.util.BlockRelease.release(banded)
+    val (hot, light) = (corpus("x"), corpus(""))
+    stderrOf(hot) should include (
+      "WARN graft.dedup.jaccardNearDupGroups: banding buckets project")
+    (stderrOf(light) should not).include("WARN graft.dedup")
+    graft.util.BlockRelease.release(Seq(hot, light))
   }
 }
