@@ -918,7 +918,7 @@ object Dedup {
       System.err.println(
         f"WARN graft.dedup.$caller: exact-dup multiplicity projects ~$amp%.1f " +
         f"member pairs per doc (measured pair-form ceiling: right through " +
-        f"multiplicity ~10, 10x slower than the group form by 30) — " +
+        f"multiplicity ~10, 10x slower than the group form by 30); " +
         f"prefer $escape for canonicalization-shaped consumers")
   }
 
@@ -947,7 +947,7 @@ object Dedup {
       System.err.println(
         f"WARN graft.dedup.$caller: banding buckets project $cand2%,.0f " +
         f"candidate pairs over $rows%,d banded rows (factor " +
-        f"${cand2 / math.max(rows, 1L)}%,.1f > ${BucketDensityWarnAt}%.1f) — " +
+        f"${cand2 / math.max(rows, 1L)}%,.1f > ${BucketDensityWarnAt}%.1f): " +
         f"the candidate self-join is quadratic in the hot buckets' size")
   }
 
@@ -1239,7 +1239,7 @@ object Dedup {
     val nHot = counts.map(_._2).getOrElse(hot.count())
     if (nHot >= bound) {
       System.err.println(
-        s"graft.dedup.joinBackBounded: $nHot hot keys (>= $bound) — " +
+        s"graft.dedup.joinBackBounded: $nHot hot keys (>= $bound): " +
         "broadcast branch would be unbounded; falling back to one " +
         "un-hinted shuffle join. Raise graft.hotkey.rows or " +
         "graft.sizegate.rows for this corpus.")

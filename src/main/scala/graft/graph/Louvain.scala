@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
+import graft.metrics.CommunityMetrics
 import graft.util.Checkpointer.CheckpointSyntax
 
 /** Distributed Louvain community detection (SURVEY.md G6; reference GDS
@@ -185,26 +186,6 @@ object Louvain {
     (mapping, contracted, nEdges)
   }
 
-  /** Modularity of a labeling over an already-symmetric edge set (same
-    * double-counted convention as the phase: in_c and tot_c both summed
-    * over directed sym rows, Q = Σ_c [in_c/2m − (tot_c/2m)²]). Two
-    * edge-sized aggregations — the price of knowing what the optimizer
-    * actually achieved. */
-  private[graft] def modularityOf(sym: DataFrame, labels: DataFrame,
-      m2: Double): Double = {
-    val l = labels.select(col("node"), col("label"))
-    val sumIn = sym
-      .join(l.select(col("node").as("src"), col("label").as("cs")), "src")
-      .join(l.select(col("node").as("dst"), col("label").as("cd")), "dst")
-      .filter(col("cs") === col("cd"))
-      .agg(coalesce(sum("weight"), lit(0.0))).first().getDouble(0)
-    val sumTot2 = sym.groupBy(col("src").as("node")).agg(sum("weight").as("k"))
-      .join(l, "node")
-      .groupBy(col("label")).agg(sum(col("k")).as("tot"))
-      .agg(coalesce(sum(col("tot") * col("tot")), lit(0.0))).first().getDouble(0)
-    sumIn / m2 - sumTot2 / (m2 * m2)
-  }
-
   /** Incumbent guard for the pure-distributed tiers: bounded-round
     * synchronous local moving (hash-parity damping, fixed `distRounds`)
     * can leave a TORN mid-flight partition on dense graphs — measured
@@ -216,10 +197,14 @@ object Louvain {
     * one community per CONNECTED COMPONENT — Q = 1 − Σ s_c² ≥ 0, and
     * every community is connected, so Leiden's contract survives the
     * substitution. The CC run is only paid on the rare torn path; the
-    * healthy path pays two edge-sized aggregations to price its result. */
+    * healthy path prices its result with one [[CommunityMetrics.modularity]]
+    * over `sym` (the same Q as over the canonical edges: every edge appears
+    * in both orientations). `m2` is read only to skip an empty graph. */
   private[graph] def incumbentGuard(sym: DataFrame, labels: DataFrame,
       m2: Double, collectThreshold: Long): DataFrame = {
-    if (m2 <= 0.0 || modularityOf(sym, labels, m2) >= 0.0) return labels
+    if (m2 <= 0.0 ||
+        CommunityMetrics.modularity(sym, labels).head().getDouble(0) >= 0.0)
+      return labels
     val comp = GraphAlgos.connectedComponents(
         sym.select(col("src"), col("dst"), col("weight")),
         collectThreshold = collectThreshold)

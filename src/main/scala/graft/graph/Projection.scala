@@ -118,9 +118,4 @@ object Projection {
       .groupBy(col("user").as("src"), col("user_b").as("dst"))
       .agg(count(lit(1)).cast("double").as("weight"))
   }
-
-  /** Weighted degree table from canonical edges. */
-  def degrees(edges: DataFrame): DataFrame =
-    symmetrize(edges).groupBy(col("src").as("node"))
-      .agg(sum(col("weight")).as("degree"))
 }

@@ -47,7 +47,7 @@ object BlockRelease {
     if (leaves.isEmpty && !warnedEmptyProtect) {
       warnedEmptyProtect = true
       System.err.println(
-        "[graft] BlockRelease.protect found no LogicalRDD leaves — the " +
+        "[graft] BlockRelease.protect found no LogicalRDD leaves; the " +
           "frame is NOT shielded from release (plan walk failed or the " +
           "frame is not checkpointed); a later release of this memo's " +
           "blocks can surface as missing-block errors.")

@@ -151,6 +151,67 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
     out(1) shouldBe 1.0 / 13.0 +- 1e-9
   }
 
+  test("modularity and structure of a partial labeling: unlabeled node, isolated labeled node") {
+    val s = spark
+    import s.implicits._
+    // node 8 unlabeled; node 99 labeled but on no edge
+    val labels = ((1L to 4L).map(_ -> 0) ++ (5L to 7L).map(_ -> 1) :+ (99L -> 2))
+      .toDF("node", "label")
+    // m and intra count the 10 edges with both endpoints labeled; the
+    // volumes count every edge: d_0 = 13, d_1 = 4+3+3 = 10 → Q = 9/10 − 269/400
+    val q = CommunityMetrics.modularity(twoCliques, labels).collect()(0)
+    q.getDouble(0) shouldBe (0.9 - 269.0 / 400.0) +- 1e-9
+    q.getDouble(1) shouldBe 10.0
+    q.getLong(2) shouldBe 2L
+    // conductance over m = 13 (all edges); label 2 has no volume
+    val rows = CommunityMetrics.structure(twoCliques, labels).collect()
+      .map(r => r.getInt(0) -> r).toMap
+    rows.keySet shouldBe Set(0, 1, 2)
+    def fixed(r: org.apache.spark.sql.Row) = (r.getLong(1), r.getDouble(2),
+      r.getDouble(3), r.getLong(4), r.getDouble(5))
+    fixed(rows(0)) shouldBe ((4L, 6.0, 1.0, 6L, 13.0))
+    fixed(rows(1)) shouldBe ((3L, 3.0, 1.0, 3L, 10.0))
+    fixed(rows(2)) shouldBe ((1L, 0.0, 0.0, 0L, 0.0))
+    rows(0).getDouble(6) shouldBe 1.0 / 13.0 +- 1e-9
+    rows(1).getDouble(6) shouldBe 1.0 / 10.0 +- 1e-9
+    rows(2).isNullAt(6) shouldBe true
+    rows(0).getDouble(7) shouldBe 1.0
+    rows(1).getDouble(7) shouldBe 1.0
+    rows(2).isNullAt(7) shouldBe true
+  }
+
+  test("building the structure frame starts no Spark job") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val labels = ((1L to 4L).map(_ -> 0) ++ (5L to 8L).map(_ -> 1))
+      .toDF("node", "label")
+    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        js.properties.getProperty("spark.jobGroup.id") match {
+          case "structure-build" => buildJobs.incrementAndGet()
+          case "structure-marker" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("structure-build", "build only")
+      CommunityMetrics.structure(twoCliques, labels)
+      // the listener bus delivers in order: once the marker job's start
+      // arrives, any job the build started has arrived before it
+      sc.setJobGroup("structure-marker", "marker")
+      spark.range(1).count()
+      markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    buildJobs.get() shouldBe 0
+  }
+
   test("Leiden: two cliques + bridge → the two cliques (refined)") {
     val out = graft.graph.Leiden.run(twoCliques, distRounds = 2).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

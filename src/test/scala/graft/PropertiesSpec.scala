@@ -54,8 +54,8 @@ class PropertiesSpec extends SparkSpec with Matchers {
     samples(graphGen.suchThat(_.nonEmpty), 6).foreach { es =>
       val edges = es.toDF("src", "dst").withColumn("weight", lit(1.0))
       val cores = KCore.run(edges).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val degs = Projection.degrees(edges).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val degs = es.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
+        .map { case (node, ends) => node -> ends.length.toDouble }
       cores.foreach { case (node, core) =>
         core should be >= 1
         core.toDouble should be <= degs(node)
@@ -73,6 +73,8 @@ class PropertiesSpec extends SparkSpec with Matchers {
           .map(n => (n, (n % k).toInt)).toDF("node", "label")
         val q = CommunityMetrics.modularity(edges, labels).collect()(0).getDouble(0)
         q should (be >= -0.5 - 1e-9 and be <= 1.0 + 1e-9)
+        CommunityMetrics.modularity(Projection.symmetrize(edges), labels)
+          .collect()(0).getDouble(0) shouldBe q +- 1e-9
         CommunityMetrics.structure(edges, labels)
           .select(col("conductance")).collect()
           .filterNot(_.isNullAt(0)).map(_.getDouble(0))
