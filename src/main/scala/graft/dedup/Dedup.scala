@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.TextExpressions._
 import graft.util.Checkpointer.CheckpointSyntax
+import graft.util.SizeGate
 
 /** Large-scale deduplication operators (LLM-data-pipeline extension set).
   *
@@ -477,26 +478,8 @@ object Dedup {
         "gid")
     // checkpointed so groupsFromReps' leaf-walking release never reaches
     // the caller's input through the singleton branch (d0 is a leaf here)
-    // same hot-gid probe shape as groupsFromReps' attaches: small
-    // repFlags broadcasts whole (covers every rep gid by construction);
-    // a big one is completed with member counts and heavy-hitter-split
-    // (joinBackBounded's discipline)
-    val memProbe = mem0.select(col("id"), col("gid"))
-    val (memFlagged, flagsScratch) =
-      if (repFlags.count() < graft.util.SizeGate.DefaultRows)
-        (memProbe.join(
-          org.apache.spark.sql.functions.broadcast(repFlags), Seq("gid"),
-          "left"), Nil)
-      else {
-        val flagsFull = memProbe.groupBy(col("gid"))
-          .agg(count(lit(1)).as("_mcnt"))
-          .join(repFlags, Seq("gid"), "left")
-          .cp(false) // lazy: buildCounts materializes it
-        (joinBackBounded(memProbe, flagsFull, Seq("gid"), "_mcnt",
-          counts = Some(buildCounts(flagsFull, "_mcnt"))),
-          Seq(flagsFull))
-      }
-    val mem = memFlagged
+    val mem = mem0.select(col("id"), col("gid"))
+      .join(SizeGate.maybeBroadcast(repFlags), Seq("gid"), "left")
       .select(col("id"),
         when(col("nz") && col("pos"), col("gid")).otherwise(col("id"))
           .as("gid"))
@@ -504,8 +487,7 @@ object Dedup {
       .cp()
     val out = groupsFromReps(mem,
       gout.select(col("ga").as("src"), col("gb").as("dst")))
-    graft.util.BlockRelease.release(Seq(mem0, shr, emb, gout) ++
-      flagsScratch)
+    graft.util.BlockRelease.release(Seq(mem0, shr, emb, gout))
     out
   }
 
@@ -1061,43 +1043,12 @@ object Dedup {
     * not a correctness risk) keys a `groupBy.agg(min(id))`, whose
     * map-side partial aggregation collapses hot groups to one row per
     * map task BEFORE the shuffle, followed by a join-back on the two
-    * hash longs: SizeGate-broadcast when the distinct-content side is
-    * small (every registered corpus); otherwise a HEAVY-HITTER-SPLIT
-    * shuffle join (below).
-    *
-    * The join-back CANNOT lean on AQE for its hot keys — r15 MEASURED
-    * NEGATIVE RESULT, two layers deep (mixed-regime scale cell,
-    * SCALE_CELLS_r15: distinct side too big to broadcast AND one hot
-    * content key). (1) A "fused" cut left the aggregate un-materialized
-    * and the join un-hinted, saving ~3 driver jobs per call
-    * (BENCH_LOCAL_r15.md: q110 35→26 jobs) — but OptimizeSkewedJoin only
-    * matches a join whose children are both bare shuffle stages, and
-    * the fused build side has the final aggregate BETWEEN its shuffle
-    * and the join, so the hot probe partition never split. (2) With
-    * the aggregate re-materialized (both exchanges bare and
-    * skew-eligible), the split STILL never fired: skew detection is
-    * COMPRESSED-BYTE-based, and a hot group is by definition millions
-    * of IDENTICAL rows — LZ4 flattens the hot partition below its
-    * neighbors, and AQE *coalesced* it with them instead (final plan:
-    * "AQEShuffleRead coalesced", max-task read 1.7× the hot group). At
-    * 10⁹-row boilerplate the task still decompresses and sort-buffers
-    * 10⁹ rows; byte-blind detection can never see it.
-    *
-    * So boundedness is built BY CONSTRUCTION instead: the aggregate
-    * carries the per-key member count anyway, and keys with count ≥
-    * [[HotKeyRows]] go to a BROADCAST join (there are at most
-    * nDocs/HotKeyRows such keys — a frame bounded by construction, and
-    * the hot rows then never shuffle at all, staying spread across
-    * their input partitions) while the remaining keys take the plain
-    * shuffle join, which then has no key above HotKeyRows and no
-    * dominant partition. The two branches are disjoint and complete
-    * (every probe key is in the aggregate of the probe itself), and
-    * the explicit SizeGate count picks the small-side broadcast from an
-    * EXACT cardinality rather than AQE's byte threshold (10 MB —
-    * marginal exactly where gids is distinct-sized) or
-    * localCheckpoint's under-estimating stats (the banding broadcast
-    * hazard, r9). The ~0.3–0.5 s/call of extra jobs at sf0.1 is fixed,
-    * scale-independent, and amortizes to zero at cluster data sizes.
+    * hash longs through [[SizeGate.maybeBroadcast]]: broadcast when the
+    * distinct-content side is small (every registered corpus), else one
+    * plain shuffle join. There is no heavy-hitter split for a hot
+    * content key on the shuffle side: SCALE_CELLS_r15.txt's hot-group
+    * cell measured a full group query with every join-back forced
+    * through one at 7.2 s, against 6.7 s on the broadcast path.
     *
     * Hash-group purity is GUARDED, not assumed: the aggregate carries
     * min/max of a THIRD independently-seeded hash (8 B each — the first
@@ -1112,20 +1063,6 @@ object Dedup {
     * — the window's null semantics.
     *
     * @param frame must carry a long `id` column plus `contentCols`
-    * FIXED-JOB-COUNT TRIM (r16, verdict item 4 — the measured ~3 extra
-    * driver jobs/call at sf0.1 were the price of the r15 design): the
-    * checkpoints here are LAZY (`localCheckpoint(eager = false)`), so
-    * the materializing job IS the SizeGate probe — one agg action
-    * computes the aggregate, persists its blocks (and the keyed frame's,
-    * when requested) and returns (rows, hot-key rows) folded into a
-    * single row, replacing the r15 sequence of eager-checkpoint job +
-    * count job + (big branch) hot-count job. When the caller already
-    * knows its corpus row count (`knownRows` — every collapse-tier
-    * kernel just probed it) and that bound is under the SizeGate, even
-    * the folded agg is skipped: gids ≤ corpus rows by construction, so
-    * the broadcast decision needs no count at all and the broadcast
-    * build job doubles as the checkpoint materialization.
-    *
     * @param checkpointKeyed materialize the hashed frame once so the
     *          aggregate AND the join-back probe side share it — pass
     *          true when the upstream projection is expensive to
@@ -1134,8 +1071,8 @@ object Dedup {
     *          already cached (the text kernels' shingle cache) or a
     *          plain column-pruned scan
     * @param knownRows an upper bound on `frame`'s row count when the
-    *          caller has one lying around (−1 = unknown); under the
-    *          SizeGate bound it eliminates the probe job entirely
+    *          caller has one lying around (−1 = unknown); it bounds the
+    *          distinct side too, so the broadcast decision runs no count
     * @return (frame + `gid` column with the hash keys dropped,
     *          checkpointed scratch frames — caller releases them once
     *          its consumer is checkpointed) */
@@ -1157,14 +1094,14 @@ object Dedup {
       .withColumn("_gh1", xxhash64(hin: _*))
       .withColumn("_gh2", xxhash64(lit(0x9E3779B97F4A7C15L) +: hin: _*))
       .withColumn("_gh3", xxhash64(lit(0xC2B2AE3D27D4EB4FL) +: hin: _*))
-    // LAZY checkpoints: the first downstream action (the folded probe
-    // agg, or the broadcast build in the knownRows fast path) is the
-    // job that materializes them — see the job-count-trim scaladoc
+    // LAZY checkpoints: the first downstream action (the broadcast
+    // gate's count, or the broadcast build when knownRows is given) is
+    // the job that materializes them
     val keyed = if (checkpointKeyed) keyed0.cp(false) else keyed0
     val gids = keyed.groupBy(col("_gh1"), col("_gh2"))
-      .agg(min(col("id")).as("_gmin"), count(lit(1)).as("_gcnt"),
+      .agg(min(col("id")).as("_gmin"),
         min(col("_gh3")).as("_p1"), max(col("_gh3")).as("_p2"))
-      .select(col("_gh1"), col("_gh2"), col("_gcnt"),
+      .select(col("_gh1"), col("_gh2"),
         when(col("_p1") <=> col("_p2"), col("_gmin"))
           .otherwise(raise_error(lit(
             "graft.dedup.gidByContent: 128-bit content-hash collision — " +
@@ -1172,90 +1109,11 @@ object Dedup {
             "re-key or widen the hash")).cast("long"))
           .as("gid"))
       .cp(false)
-    val joined =
-      if (0L <= knownRows && knownRows < graft.util.SizeGate.DefaultRows)
-        // gids ≤ knownRows < bound by construction: broadcast with no
-        // probe job at all
-        keyed.join(
-          org.apache.spark.sql.functions.broadcast(gids.drop("_gcnt")),
-          Seq("_gh1", "_gh2"))
-      else
-        joinBackBounded(keyed, gids, Seq("_gh1", "_gh2"), "_gcnt",
-          counts = Some(buildCounts(gids, "_gcnt")))
-    val out = joined.drop("_gh1", "_gh2", "_gh3")
+    // gids ≤ knownRows by construction
+    val out = keyed.join(SizeGate.maybeBroadcast(gids,
+        known = Some(knownRows).filter(_ >= 0L)), Seq("_gh1", "_gh2"))
+      .drop("_gh1", "_gh2", "_gh3")
     (out, if (checkpointKeyed) Seq(keyed, gids) else Seq(gids))
-  }
-
-  /** ONE-action (rows, hot-key rows) probe over a checkpointed build
-    * frame — the folded form of [[joinBackBounded]]'s two counts (r16
-    * verdict item 4). Also the job that materializes a LAZY checkpoint
-    * of `build`. */
-  private[graft] def buildCounts(build: DataFrame,
-      cntCol: String): (Long, Long) = {
-    val r = build.agg(count(lit(1)),
-      coalesce(sum(when(col(cntCol) >= HotKeyRows, 1L).otherwise(0L)),
-        lit(0L))).first()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  /** Hot-key bound for [[joinBackBounded]]: a join key carried by at
-    * least this many probe rows is routed through the broadcast branch.
-    * Tunable via the `graft.hotkey.rows` system property, then
-    * SPARK_GRAFT_HOTKEY_ROWS; default 65536 — at most nDocs/65536 keys
-    * can be hot, so the broadcast side is bounded by construction. */
-  private[graft] def HotKeyRows: Long = graft.util.SizeGate
-    .parsedPositiveLong("graft.hotkey.rows", "SPARK_GRAFT_HOTKEY_ROWS",
-      65536L)
-
-  /** Probe ⋈ build (inner, on `keyCols`) where `build` is CHECKPOINTED,
-    * covers every probe key, and carries `cntCol` = the probe-side row
-    * count of that key. Small builds broadcast whole (SizeGate). Big
-    * builds split by heavy hitter: keys with cnt ≥ [[HotKeyRows]] join
-    * map-side from a by-construction-bounded broadcast — hot rows never
-    * shuffle, staying spread across their input partitions — and the
-    * rest take the shuffle join, which then has no dominant key. The
-    * split exists because AQE cannot save the single-join plan in the
-    * hot-key regime (see [[gidByContent]]'s negative result: the skew
-    * detector is compressed-byte-based and identical rows compress to
-    * nothing). `cntCol` is dropped from the output. If the hot side
-    * itself exceeds the SizeGate bound (degenerate: > bound keys each
-    * over HotKeyRows — a corpus of > bound×HotKeyRows rows all in huge
-    * groups), falls back to the un-hinted single join rather than an
-    * unbounded broadcast, and says so loudly. Set `dropCnt = false`
-    * when the count column IS the payload (group sizes). Pass `counts`
-    * = (build rows, hot-key rows) when the caller already probed them
-    * (one [[buildCounts]] action) — the r16 job-count trim. */
-  private[graft] def joinBackBounded(probe: DataFrame, build: DataFrame,
-      keyCols: Seq[String], cntCol: String,
-      dropCnt: Boolean = true,
-      counts: Option[(Long, Long)] = None): DataFrame = {
-    def trim(df: DataFrame) = if (dropCnt) df.drop(cntCol) else df
-    val bound = graft.util.SizeGate.DefaultRows
-    val n = counts.map(_._1).getOrElse(build.count())
-    if (n < bound)
-      return probe.join(
-        org.apache.spark.sql.functions.broadcast(trim(build)), keyCols)
-    val hot = trim(build.filter(col(cntCol) >= HotKeyRows))
-    val nHot = counts.map(_._2).getOrElse(hot.count())
-    if (nHot >= bound) {
-      System.err.println(
-        s"graft.dedup.joinBackBounded: $nHot hot keys (>= $bound): " +
-        "broadcast branch would be unbounded; falling back to one " +
-        "un-hinted shuffle join. Raise graft.hotkey.rows or " +
-        "graft.sizegate.rows for this corpus.")
-      return probe.join(trim(build), keyCols)
-    }
-    val rest = trim(build.filter(col(cntCol) < HotKeyRows))
-    val hotB = org.apache.spark.sql.functions.broadcast(hot)
-    val hotJoined = probe.join(hotB, keyCols)
-    // the rest branch's PROBE must lose the hot rows BEFORE its
-    // exchange — an inner join would only discard them after the
-    // shuffle, re-forming the exact hot partition this split exists to
-    // prevent (cell-measured: max-task read unchanged without this
-    // anti filter). Broadcast anti join = map-side, no shuffle.
-    val restProbe = probe.join(hotB, keyCols, "left_anti")
-    val restJoined = restProbe.join(rest, keyCols)
-    hotJoined.unionByName(restJoined)
   }
 
   /** Shared tail of the `*NearDupGroups` family (factored r14 when the
@@ -1266,10 +1124,8 @@ object Dedup {
     * count — same degenerate-hot-group shape as the gid stage; the
     * groupBy's map-side combine bounds per-task input for a giant canon
     * group where the window serialized it into one task). Both
-    * join-backs here (canon attach, size attach) follow
-    * [[joinBackBounded]]'s heavy-hitter discipline — a giant group is a
-    * hot probe key in each, and the r15 negative result applies
-    * verbatim.
+    * join-backs here (canon attach, size attach) decide broadcast or
+    * shuffle through [[SizeGate.maybeBroadcast]], like the gid stage.
     * `mem` must carry (id, gid) with gid = min member id of the doc's
     * exact-dup group (so the component-min NODE id IS the component-min
     * member id); `repEdges` the verified near-dup edges between reps as
@@ -1280,60 +1136,33 @@ object Dedup {
     // distributed Pregel tier (the q40-q49 discipline) — the rep graph
     // is dup-collapsed but still corpus-shaped in the dup-free worst case
     val comp = graft.graph.GraphAlgos.connectedComponents(repEdges,
-      collectThreshold = graft.util.SizeGate.collectThreshold(2000000L))
+      collectThreshold = SizeGate.collectThreshold(2000000L))
     // normalize component labels to the component's MIN member id (the
     // union-find root choice is arbitrary; min-id is the canonical form
-    // every oracle replays)
-    // canon is rep-graph-sized (dup-collapsed, corpus-shaped only in
-    // the dup-free worst case): checkpointed, and attached through the
-    // same bounded join-back discipline as the gid stage — a giant
-    // exact-dup group is a hot `gid` on the PROBE side here, and the
-    // r15 negative result (gidByContent's scaladoc) showed AQE cannot
-    // split that partition. Small canon broadcasts whole; a big canon
-    // is first completed to cover EVERY gid with its member count
-    // (one map-side-combined agg over mem, only in this rare branch),
-    // then heavy-hitter-split.
+    // every oracle replays). canon is rep-graph-sized (dup-collapsed,
+    // corpus-shaped only in the dup-free worst case): checkpointed
     val canon = comp.join(
         comp.groupBy(col("label")).agg(min(col("node")).as("canon")),
         "label")
       .select(col("node").as("gid"), col("canon"))
-      .cp(false) // lazy: the branch count materializes it
-    val probe = mem.select(col("id").as("doc_id"), col("gid"))
-    val (joined, canonScratch) =
-      if (canon.count() < graft.util.SizeGate.DefaultRows)
-        (probe.join(
-          org.apache.spark.sql.functions.broadcast(canon), Seq("gid"),
-          "left"), Nil)
-      else {
-        val canonFull = probe.groupBy(col("gid"))
-          .agg(count(lit(1)).as("_mcnt"))
-          .join(canon, Seq("gid"), "left")
-          .cp(false) // lazy: buildCounts materializes it
-        (joinBackBounded(probe, canonFull, Seq("gid"), "_mcnt",
-          counts = Some(buildCounts(canonFull, "_mcnt"))),
-          Seq(canonFull))
-      }
-    val out = joined
+      .cp(false) // lazy: the gate's count materializes it
+    val out = mem.select(col("id").as("doc_id"), col("gid"))
+      .join(SizeGate.maybeBroadcast(canon), Seq("gid"), "left")
       // isolated reps (no near-dup edge) and pair-ineligible groups
       // (zero vectors, empty shingle sets) keep their gid as canonical
       .select(col("doc_id"),
         coalesce(col("canon"), col("gid")).as("canon_id"))
       .cp()
-    // group sizes: map-side-combined groupBy + bounded join-back on the
-    // long canon key, never a canon-partitioned window (a giant canon
-    // group must not serialize one task — the gidByContent argument);
-    // group_size doubles as the heavy-hitter count, so the hot branch
-    // is free here
+    // group sizes: map-side-combined groupBy + join-back on the long
+    // canon key, never a canon-partitioned window (a giant canon group
+    // must not serialize one task — the gidByContent argument)
     val sizes = out.groupBy(col("canon_id"))
       .agg(count(lit(1)).as("group_size"))
-      .cp(false) // lazy: buildCounts materializes it
-    val sized = joinBackBounded(out, sizes, Seq("canon_id"),
-        "group_size", dropCnt = false,
-        counts = Some(buildCounts(sizes, "group_size")))
+      .cp(false) // lazy: the gate's count materializes it
+    val sized = out.join(SizeGate.maybeBroadcast(sizes), Seq("canon_id"))
       .select(col("doc_id"), col("canon_id"), col("group_size"))
       .cp()
-    graft.util.BlockRelease.release(Seq(mem, out, canon, sizes) ++
-      canonScratch)
+    graft.util.BlockRelease.release(Seq(mem, out, canon, sizes))
     sized
   }
 
@@ -1579,7 +1408,6 @@ object Dedup {
     * concern. */
   private[graft] def gateAgainstStore(batch: DataFrame, storeSigs: DataFrame,
       storeGrams: DataFrame): DataFrame = {
-    import graft.util.SizeGate
     val batchSigs = batch.select(col("sig")).distinct()
     val nSigs = batchSigs.count()
     val matchedSigs = storeSigs.select(col("sig"))
@@ -1605,7 +1433,6 @@ object Dedup {
     * are valid bounds) and drive the SizeGate broadcasts. */
   private[graft] def gateVerdicts(batch: DataFrame, matchedSigs: DataFrame,
       matchedH: DataFrame, sigBound: Long, hBound: Long): DataFrame = {
-    import graft.util.SizeGate
     val exact = batch
       .join(SizeGate.maybeBroadcast(matchedSigs, known = Some(sigBound)),
         Seq("sig"), "left_semi")

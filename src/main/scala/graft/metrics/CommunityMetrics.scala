@@ -150,9 +150,12 @@ object CommunityMetrics {
       .select(col("label"), col("n_c"), col("cohesion"), col("separation"), col("ecs"))
   }
 
-  /** Global homophily: mean cosine similarity across graph edges minus mean
-    * similarity of random pairs (A5; metrics.py:101-106 computes the edge
-    * mean). `nodeVecs`: (node, v) unit vectors. */
+  /** Global homophily as the edge mean (A5; metrics.py:101-106): one row of
+    * `edge_mean_sim`, the unweighted mean dot product of the endpoint
+    * vectors over the edges whose two endpoints both have a vector, and
+    * `n_edges`, the number of those edges. No random-pair baseline is
+    * subtracted. `nodeVecs`: (node, v) unit vectors, so each dot product is
+    * a cosine similarity. */
   def homophily(edges: DataFrame, nodeVecs: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions._
     val e = edges

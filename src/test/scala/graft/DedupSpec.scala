@@ -577,82 +577,6 @@ class DedupSpec extends SparkSpec with Matchers {
     graft.util.BlockRelease.release(frame +: gidScratch)
   }
 
-  test("gidByContent big-distinct branch: heavy-hitter split == window min-id (r15)") {
-    val s2 = spark
-    import s2.implicits._
-    // force the non-broadcast join-back (distinct side "too big") and a
-    // tiny hot-key bound so the broadcast/anti/shuffle three-way split
-    // actually executes — the branch a real run only takes past 2M
-    // distinct contents, where a correctness bug would otherwise
-    // surface for the first time at cluster scale
-    sys.props("graft.sizegate.rows") = "10"
-    sys.props("graft.hotkey.rows") = "16"
-    try {
-      val rows = (1L to 40L).map(i => (i, "hot hot hot")) ++ // ≥ 16: hot
-        (41L to 50L).map(i => (i, "warm warm")) ++ // 10 < 16: rest
-        (51L to 70L).map(i => (i, s"unique text $i")) ++ // rest singles
-        (71L to 73L).map(i => (i, null.asInstanceOf[String]))
-      val frame = rows.toDF("id", "text").repartition(8).localCheckpoint()
-      val (withGid, gidScratch) = Dedup.gidByContent(frame, Seq("text"))
-      val got = withGid.select("id", "gid").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val expected = frame.select(col("id"),
-          min(col("id")).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("text"))).as("gid"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      got shouldBe expected // complete AND duplicate-free across branches
-      got(40L) shouldBe 1L // hot key via the broadcast branch
-      got(50L) shouldBe 41L // warm key via the shuffle branch
-      graft.util.BlockRelease.release(frame +: gidScratch)
-    } finally {
-      sys.props.remove("graft.sizegate.rows")
-      sys.props.remove("graft.hotkey.rows")
-    }
-  }
-
-  test("group forms: forced big-distinct join-backs match the broadcast path (r15)") {
-    val s2 = spark
-    import s2.implicits._
-    // exercises the rare branches of groupsFromReps' canon/size attaches
-    // and shingleCosineGroups' repFlags attach: same corpus, same
-    // queries, with every join-back forced through the heavy-hitter
-    // split (hot broadcast + anti + shuffle) instead of the whole-side
-    // broadcast — outputs must be identical row for row
-    val base = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"), col("source"))
-    val hot = base.limit(1).select(col("doc_id"), col("text"), col("source"))
-    val docs = ((0 until 3).map(i => base.select(
-        (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text"),
-        col("source"))) ++
-      (0 until 30).map(i => hot.select(
-        (col("doc_id") + lit((i + 10) * 1000000L)).as("doc_id"),
-        col("text"), col("source"))))
-      .reduce(_ unionByName _).localCheckpoint()
-    def runBoth(f: => org.apache.spark.sql.DataFrame):
-        (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
-      val plain = f.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      sys.props("graft.sizegate.rows") = "10"
-      sys.props("graft.hotkey.rows") = "16"
-      try {
-        val forced = f.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        (plain, forced)
-      } finally {
-        sys.props.remove("graft.sizegate.rows")
-        sys.props.remove("graft.hotkey.rows")
-      }
-    }
-    val (mhP, mhF) = runBoth(
-      Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5))
-    mhF shouldBe mhP
-    val (scP, scF) = runBoth(
-      Dedup.shingleCosineGroups(docs, "doc_id", "text", "source", 0.6, 3))
-    scF shouldBe scP
-    mhP should not be empty
-    graft.util.BlockRelease.release(docs)
-  }
-
   test("gidByContent: null LAYOUT is part of the key for same-typed columns (r15)") {
     val s2 = spark
     import s2.implicits._

@@ -1,12 +1,13 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
 import org.scalatest.matchers.should.Matchers
 
 import graft.util.SizeGate
 
-/** Parsing of the validated env settings (no session needed). */
-class SizeGateSpec extends AnyFunSuite with Matchers {
+/** Parsing of the validated env settings, and the broadcast gate. */
+class SizeGateSpec extends SparkSpec with Matchers {
 
   private def rejected(name: String, raw: String, min: Long): Unit = {
     val e = intercept[IllegalArgumentException](
@@ -30,5 +31,20 @@ class SizeGateSpec extends AnyFunSuite with Matchers {
       SizeGate.parsedEnvLong(name, " 8 ", min) shouldBe 8L
       bad.foreach(rejected(name, _, min))
     }
+  }
+
+  test("maybeBroadcast hints below BroadcastRows and not at it, counting when no size is known") {
+    def hinted(df: DataFrame): Boolean = df.queryExecution.analyzed
+      .collect { case h: ResolvedHint => h.hints.strategy }
+      .contains(Some(BROADCAST))
+    val small = spark.range(10).toDF()
+    hinted(small) shouldBe false
+    hinted(SizeGate.maybeBroadcast(small,
+      known = Some(SizeGate.BroadcastRows - 1))) shouldBe true
+    hinted(SizeGate.maybeBroadcast(small,
+      known = Some(SizeGate.BroadcastRows))) shouldBe false
+    hinted(SizeGate.maybeBroadcast(small)) shouldBe true
+    hinted(SizeGate.maybeBroadcast(
+      spark.range(SizeGate.BroadcastRows).toDF())) shouldBe false
   }
 }
