@@ -16,18 +16,12 @@ import graft.util.SizeGate
   * data-plus-collisions, not pairs. That is the only formulation that
   * survives 100 TB.
   *
-  * Exact-dup collapse (r12): the near-dup operators additionally detect
-  * duplicate-heavy corpora (members ≥ ~1.25 × distinct content keys —
-  * the shape of every real crawl) and run their candidate machinery on
-  * one representative per distinct key, expanding surviving group pairs
-  * back to member pairs with output-sized joins — bit-identical pair
-  * sets at a fraction of the bucket-join work. One honest limit: the
-  * pair-complete CONTRACT is itself quadratic in dup-group size (a
-  * 10M-copy boilerplate group owes 5·10¹³ within-pairs from ANY
-  * implementation), so at extreme multiplicities consume the compact
-  * form instead — [[exactDuplicateGroups]] for canonicalization, or the
-  * collapse tier's group-pair stage, which is exactly the pre-expansion
-  * representation.
+  * Exact-dup collapse: five of the pair forms run their candidate
+  * machinery on one representative per distinct content key when the
+  * corpus is duplicate-heavy, through the one expansion in
+  * [[collapsedPairs]]; SimHash has none ([[pigeonholePairs]]). The
+  * pair-complete contract itself stays quadratic in dup-group size, so
+  * at extreme multiplicities consume a `*NearDupGroups` form instead.
   */
 object Dedup {
 
@@ -116,30 +110,15 @@ object Dedup {
   /** Full MinHash near-dup pipeline: candidates → exact-verify → threshold.
     * Runs on shingle HASH sets end-to-end (one-pass shingling, long-array
     * intersections in the verify); signatures and surviving pairs are
-    * identical to the string-shingle formulation.
-    *
-    * EXACT-DUP COLLAPSE tier (r12 — the [[cosineNearDupsExact]]
-    * precedent, same argument in Jaccard space): identical shingle sets
-    * produce identical MinHash signatures and identical Jaccard against
-    * any third set, so banding each copy multiplies bucket-pair work by
-    * the square of the dup multiplicity for zero information. When the
-    * probe (one agg over the already-cached shingles — no extra scan)
-    * sees members ≥ collapseRatio × approx-distinct sets, the pipeline
-    * runs on one representative per distinct set and expands surviving
-    * group pairs back to member pairs (output-sized joins); within-group
-    * pairs have Jaccard ≡ 1.0 when the set is nonempty, and empty-set
-    * pairs have NO Jaccard (0/0 → null in the direct tier, dropped by
-    * the threshold) — mirrored by the nz guard. Pair set and Jaccard
-    * values are bit-for-bit the direct tier's (DedupSpec pins both a
-    * forced-collapse dup-light twin and a natural-trigger replicated
-    * corpus against brute truth). */
+    * identical to the string-shingle formulation. Duplicate-heavy
+    * corpora collapse per distinct shingle set ([[collapsedPairs]]);
+    * an empty set has no Jaccard (0/0 is null), so it never self-pairs. */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, k: Int = 64, bands: Int = 16,
-      collapseRatio: Double = 1.25): DataFrame = {
+      threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame = {
     val sh = shingledHashes(docs, idCol, textCol).cache()
     val probe = sh.agg(count(lit(1)), approx_count_distinct(col("shingles"))).first()
     val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    if (nDocs < collapseRatio * nDistinct) {
+    if (nDocs < CollapseRatio * nDistinct) {
       // direct tier: dup-light corpus — near-dup pairs are output-sized:
       // materialize them and release the corpus-sized shingle cache and
       // the candidate checkpoint before returning
@@ -150,50 +129,13 @@ object Dedup {
       sh.unpersist(blocking = false)
       graft.util.BlockRelease.release(cand)
       out
-    } else {
-      // collapse tier: gid = min member id per distinct shingle set —
-      // via the group family's hash-keyed map-side-combined gid stage
-      // (r15: this tier triggers EXACTLY in the high-multiplicity regime
-      // where a shingle-list-partitioned window's hot key serializes one
-      // task; [[gidByContent]] is the same fix the group forms got)
-      val (withG0, gidScratch) = gidByContent(
-          sh.select(col("doc_id").as("id"), col("shingles")),
-          Seq("shingles"), checkpointKeyed = false,
-          knownRows = nDocs) // sh is cached
-      val withG = withG0
-        .select(col("id").as("doc_id"), col("shingles"), col("gid"))
-        .cp()
-      graft.util.BlockRelease.release(gidScratch)
-      sh.unpersist(blocking = false)
-      warnPairAmplification(withG, "gid", "minhashNearDups",
-        "minhashNearDupGroups", eligible = size(col("shingles")) > 0)
-      val reps = withG.filter(col("doc_id") === col("gid"))
-        .select(col("doc_id"), col("shingles")).cache()
-      val memIds = withG.select(col("doc_id"), col("gid"),
-        (size(col("shingles")) > 0).as("nz"))
+    } else collapsedPairs(sh, "doc_id", Seq("shingles"), nDocs, "doc_a",
+        "doc_b", "minhashNearDups", "minhashNearDupGroups") { reps =>
       val cand = minhashCandidates(reps, k, bands)
-      val gpairs = jaccardOfPairs(cand, reps)
+      val pairs = jaccardOfPairs(cand, reps)
         .filter(col("jaccard") >= threshold)
-      // merge-hinted like the cosine tier: memIds is corpus-sized and
-      // checkpoint stats under-estimate (the banding broadcast hazard)
-      val cross = gpairs.hint("merge")
-        .join(memIds.select(col("gid").as("doc_a"), col("doc_id").as("ida"))
-          .hint("merge"), "doc_a")
-        .hint("merge")
-        .join(memIds.select(col("gid").as("doc_b"), col("doc_id").as("idb"))
-          .hint("merge"), "doc_b")
-        .select(least(col("ida"), col("idb")).as("doc_a"),
-          greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
-      val within = memIds.as("x").hint("merge").join(memIds.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id") &&
-            col("x.nz"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(1.0).as("jaccard"))
-        .filter(lit(1.0) >= threshold)
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(Seq(withG, cand))
-      reps.unpersist(blocking = false)
-      out
+        .select(col("doc_a").as("ga"), col("doc_b").as("gb"), col("jaccard"))
+      (pairs, unitSelfPairs(reps, "jaccard", threshold), Seq(cand))
     }
   }
 
@@ -203,20 +145,11 @@ object Dedup {
     * single-file scan can't serialize the self-join) → per-pair
     * intersection counts via one equality self-join + groupBy → exact
     * Jaccard ≥ threshold. Shuffle ∝ postings + co-occurrences, never
-    * all pairs.
-    *
-    * EXACT-DUP COLLAPSE tier (the [[minhashNearDups]] argument — the
-    * inverted-index join is quadratic in duplicate multiplicity):
-    * identical (scope, shingle set) docs contribute identical posting
-    * rows, so past the gate the index is built over one representative
-    * per distinct (scope, shingle set), surviving group pairs expand to
-    * member pairs (output-sized joins), and within-group pairs emit at
-    * Jaccard ≡ 1.0 (nonempty sets only — empty sets have no postings in
-    * the direct tier and thus no pairs, mirrored by the nz guard).
-    * DedupSpec pins forced twins both ways on a replicated corpus. */
+    * all pairs. Duplicate-heavy corpora collapse per distinct (scope,
+    * shingle set) ([[collapsedPairs]]); an empty set has no postings,
+    * so it never self-pairs. */
   def ngramJaccardNearDups(docs: DataFrame, idCol: String, textCol: String,
-      scopeCol: String, threshold: Double = 0.5, n: Int = 3,
-      collapseRatio: Double = 1.25): DataFrame = {
+      scopeCol: String, threshold: Double = 0.5, n: Int = 3): DataFrame = {
     val sh = shingledHashes(docs, idCol, textCol, n, keep = Seq(scopeCol),
       spread = false).cache() // the q113 rationale: no signature kernel
     val probe = sh.agg(count(lit(1)),
@@ -225,48 +158,18 @@ object Dedup {
     def pairs(src: DataFrame, la: String, lb: String): (DataFrame, DataFrame) =
       postingJaccardPairs(src, scopeCol, threshold, la, lb,
         "ngramJaccardNearDups")
-    if (nDocs < collapseRatio * nDistinct) {
+    if (nDocs < CollapseRatio * nDistinct) {
       val (ex, out0) = pairs(sh, "doc_a", "doc_b")
       val out = out0.cp() // pair set is output-sized:
       // materialize and free the corpus×shingles index blocks
       sh.unpersist(blocking = false)
       graft.util.BlockRelease.release(ex)
       out
-    } else {
-      // hash-keyed gid stage, the minhash tier's argument (r15)
-      val (withG0, gidScratch) = gidByContent(
-          sh.select(col("doc_id").as("id"), col(scopeCol), col("shingles")),
-          Seq(scopeCol, "shingles"), checkpointKeyed = false,
-          knownRows = nDocs) // sh cached
-      val withG = withG0
-        .select(col("id").as("doc_id"), col(scopeCol), col("shingles"),
-          col("gid"))
-        .cp()
-      graft.util.BlockRelease.release(gidScratch)
-      sh.unpersist(blocking = false)
-      warnPairAmplification(withG, "gid", "ngramJaccardNearDups",
-        "jaccardNearDupGroups", eligible = size(col("shingles")) > 0)
-      val reps = withG.filter(col("doc_id") === col("gid"))
-      val (exR, gpairs) = pairs(reps, "ga", "gb")
-      val memIds = withG.select(col("doc_id"), col("gid"),
-        (size(col("shingles")) > 0).as("nz"))
-      val cross = gpairs.hint("merge")
-        .join(memIds.select(col("gid").as("ga"), col("doc_id").as("ida"))
-          .hint("merge"), "ga")
-        .hint("merge")
-        .join(memIds.select(col("gid").as("gb"), col("doc_id").as("idb"))
-          .hint("merge"), "gb")
-        .select(least(col("ida"), col("idb")).as("doc_a"),
-          greatest(col("ida"), col("idb")).as("doc_b"), col("jaccard"))
-      val within = memIds.as("x").hint("merge").join(memIds.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id") &&
-            col("x.nz"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(1.0).as("jaccard"))
-        .filter(lit(1.0) >= threshold)
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(Seq(withG, exR))
-      out
+    } else collapsedPairs(sh, "doc_id", Seq(scopeCol, "shingles"), nDocs,
+        "doc_a", "doc_b", "ngramJaccardNearDups", "jaccardNearDupGroups") {
+      reps =>
+        val (ex, gpairs) = pairs(reps, "ga", "gb")
+        (gpairs, unitSelfPairs(reps, "jaccard", threshold), Seq(ex))
     }
   }
 
@@ -310,21 +213,14 @@ object Dedup {
     * side instead of once per document (measured 14 s → <1 s on 56k
     * sf0.1 candidates).
     *
-    * EXACT-DUP COLLAPSE tier — at the DOCUMENT level, upstream of every
-    * expensive stage: the group key (scope, text) determines the shingle
-    * set AND the embedding, so past the gate the shingling, the
-    * embedding fold, the inverted-index join and the verify all run on
-    * one representative per distinct (scope, text); surviving group
-    * pairs expand to member pairs (output-sized joins), and
-    * within-group pairs emit at cos ≡ 1.0 exactly (dot(v,v) is
-    * bit-equal to n² by identical fold order, and √(n²·n²) = n² exactly
-    * for these integer-valued sums) — guarded by the SAME conditions
-    * the direct tier imposes: a nonempty shingle set (no postings → no
-    * candidate) and n² > 0. DedupSpec pins forced twins both ways on a
-    * replicated corpus. */
+    * Duplicate-heavy corpora collapse per distinct (scope, text)
+    * ([[collapsedPairs]]), upstream of the shingling and the embedding
+    * fold. A rep self-pairs at cos ≡ 1.0 exactly (dot(v,v) is bit-equal
+    * to n² by identical fold order, and √(n²·n²) = n² for these
+    * integer-valued sums) under the direct tier's conditions: a
+    * nonempty shingle set and n² > 0. */
   def shingleCosineVerify(docs: DataFrame, idCol: String, textCol: String,
-      scopeCol: String, tauCos: Double = 0.6, n: Int = 3,
-      collapseRatio: Double = 1.25): DataFrame = {
+      scopeCol: String, tauCos: Double = 0.6, n: Int = 3): DataFrame = {
     val d0 = docs.select(col(idCol).as("doc_id"), col(scopeCol).as("scope"),
       col(textCol).as("text"))
     // pair stage shared by both tiers (and by the r14 group form)
@@ -334,48 +230,19 @@ object Dedup {
     val probe = d0.agg(count(lit(1)),
       approx_count_distinct(struct(col("scope"), col("text")))).first()
     val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    if (nDocs < collapseRatio * nDistinct) {
+    if (nDocs < CollapseRatio * nDistinct) {
       val (shr, emb, out) = verifiedPairs(d0, "doc_a", "doc_b")
       graft.util.BlockRelease.release(Seq(shr, emb))
       out
-    } else {
-      // hash-keyed gid stage, the minhash tier's argument (r15); d0 is a
-      // plain column-pruned projection, cheap to evaluate twice
-      val (withG0, gidScratch) = gidByContent(
-          d0.select(col("doc_id").as("id"), col("scope"), col("text")),
-          Seq("scope", "text"), checkpointKeyed = false, knownRows = nDocs)
-      val withG = withG0
-        .select(col("id").as("doc_id"), col("scope"), col("text"),
-          col("gid"))
-        .cp()
-      graft.util.BlockRelease.release(gidScratch)
-      val reps = withG.filter(col("doc_id") === col("gid"))
-        .select(col("doc_id"), col("scope"), col("text"))
-      val (shr, emb, gout) = verifiedPairs(reps, "ga", "gb")
-      val memIds = withG.select(col("doc_id"), col("gid"))
-      val cross = gout.hint("merge")
-        .join(memIds.select(col("gid").as("ga"), col("doc_id").as("ida"))
-          .hint("merge"), "ga")
-        .hint("merge")
-        .join(memIds.select(col("gid").as("gb"), col("doc_id").as("idb"))
-          .hint("merge"), "gb")
-        .select(least(col("ida"), col("idb")).as("doc_a"),
-          greatest(col("ida"), col("idb")).as("doc_b"), col("cos"))
-      // within-group pairs obey the direct tier's emission conditions:
-      // ≥1 shingle (else no candidate) and n² > 0 (the verify guard)
-      val repFlags = shr.select(col("doc_id").as("gid"),
-          (size(col("shingles")) > 0).as("nz"))
-        .join(emb.select(col("doc_id").as("gid"), (col("n2") > 0).as("pos")), "gid")
-      val within = memIds.as("x").hint("merge").join(memIds.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.gid").as("gid"))
-        .join(repFlags, "gid")
-        .filter(col("nz") && col("pos") && lit(1.0) >= tauCos)
-        .select(col("doc_a"), col("doc_b"), lit(1.0).as("cos"))
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(Seq(withG, shr, emb, gout))
-      out
+    } else collapsedPairs(d0, "doc_id", Seq("scope", "text"), nDocs,
+        "doc_a", "doc_b", "shingleCosineVerify", "shingleCosineGroups") {
+      reps =>
+        val (shr, emb, gpairs) = verifiedPairs(reps, "ga", "gb")
+        val self = shr.filter(size(col("shingles")) > 0)
+          .join(emb.filter(col("n2") > 0), "doc_id")
+          .select(col("doc_id").as("gid"), lit(1.0).as("cos"))
+          .filter(col("cos") >= tauCos)
+        (gpairs, self, Seq(shr, emb))
     }
   }
 
@@ -538,15 +405,10 @@ object Dedup {
     *    ~n·tables/4, so the candidate set is collision-sized, not
     *    dense-cluster-quadratic.
     *
-    * EXACT-DUP COLLAPSE tier (r12 — the [[cosineNearDupsExact]] argument,
-    * float edition): past members ≥ collapseRatio × approx-distinct
-    * normalized vectors (the gate rides the SAME probe action that feeds
-    * autoBanding's count — no extra scan), banding runs on one
-    * representative per distinct nv and group pairs expand output-sized;
-    * within-group sim is COMPUTED from the rep (the direct tier's own
-    * verify expression), never assumed 1.0. Pair set and sims bit-equal
-    * at any config (DedupSpec: forced twin at both spec SFs + replicated
-    * corpus vs brute).
+    * Duplicate-heavy corpora collapse per distinct normalized vector
+    * ([[collapsedPairs]]; the gate rides the probe that feeds
+    * autoBanding's count). A rep's self-pair sim is COMPUTED with the
+    * verify's own expression, never assumed 1.0.
     *
     * @param vecs (id, vector) — vectors need not be pre-normalized
     * @param dim embedding width; callers know it (it's their embed config) —
@@ -556,15 +418,15 @@ object Dedup {
     */
   def cosineNearDups(vecs: DataFrame, idCol: String, vCol: String,
       tau: Double = 0.9, bits: Int = -1, tables: Int = -1,
-      dim: Int = -1, collapseRatio: Double = 1.25): DataFrame = {
+      dim: Int = -1): DataFrame = {
     import graft.functions.VectorFunctions
     val d = if (dim > 0) dim else vecs.select(size(col(vCol))).first().getInt(0)
     val n0 = vecs
       .select(col(idCol).as("id"), VectorFunctions.l2normalize(col(vCol)).as("nv"))
       .cp() // normalize once: banding AND verify read it
-    // ONE probe action carries the autoBanding count AND the r12
-    // exact-dup collapse gate (members vs approx-distinct normalized
-    // vectors) — the separate vecs.count() scan is absorbed
+    // ONE probe action carries the autoBanding count AND the exact-dup
+    // collapse gate (members vs approx-distinct normalized vectors) —
+    // the separate vecs.count() scan is absorbed
     val probe = n0.agg(count(lit(1)), approx_count_distinct(col("nv"))).first()
     val (cnt, nDistinct) = (probe.getLong(0), probe.getLong(1))
     val (b, t) =
@@ -620,51 +482,19 @@ object Dedup {
       graft.util.BlockRelease.release(banded)
       out
     }
-    if (cnt < collapseRatio * nDistinct) {
-      // direct tier: dup-light corpus — band every row as before
-      val out = bandPairs(n0, "id_a", "id_b")
-      graft.util.BlockRelease.release(n0)
-      out
-    } else {
-      // r12 EXACT-DUP COLLAPSE tier (the [[cosineNearDupsExact]]
-      // argument, float edition): identical normalized vectors sign
-      // identically in every table and score identically against any
-      // third vector, so band one representative per distinct nv and
-      // expand group pairs output-sized. Within-group sim is COMPUTED
-      // from the rep (round(dot(nv,nv), 4) — the exact expression the
-      // direct tier's verify evaluates for such a pair), never assumed
-      // 1.0: zero or denormal vectors fall out of the threshold the
-      // same way in both tiers.
-      // hash-keyed gid stage, the minhash tier's argument (r15)
-      val (withG0, gidScratch) = gidByContent(n0.select(col("id"), col("nv")),
-          Seq("nv"), checkpointKeyed = false,
-          knownRows = cnt) // n0 is checkpointed
-      val withG = withG0.cp()
-      graft.util.BlockRelease.release(gidScratch :+ n0)
-      val reps = withG.filter(col("id") === col("gid")).select(col("id"), col("nv"))
-      val gout = bandPairs(reps, "ga", "gb")
-      val memIds = withG.select(col("id"), col("gid"))
-      val cross = gout.hint("merge")
-        .join(memIds.select(col("gid").as("ga"), col("id").as("ida"))
-          .hint("merge"), "ga")
-        .hint("merge")
-        .join(memIds.select(col("gid").as("gb"), col("id").as("idb"))
-          .hint("merge"), "gb")
-        .select(least(col("ida"), col("idb")).as("id_a"),
-          greatest(col("ida"), col("idb")).as("id_b"), col("sim"))
-      val repSim = reps.select(col("id").as("gid"),
-          round(VectorFunctions.dot(col("nv"), col("nv")), 4).as("sim"))
-        .filter(col("sim") >= tau)
-      val within = memIds.as("x").hint("merge").join(memIds.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-          col("x.gid").as("gid"))
-        .join(repSim, "gid")
-        .select(col("id_a"), col("id_b"), col("sim"))
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(Seq(withG, gout))
-      out
-    }
+    val out =
+      if (cnt < CollapseRatio * nDistinct) bandPairs(n0, "id_a", "id_b")
+      else collapsedPairs(n0, "id", Seq("nv"), cnt, "id_a", "id_b",
+          "cosineNearDups", "cosineNearDupGroups") { reps =>
+        // round(dot(nv,nv), 4): the verify's own expression, so zero or
+        // denormal vectors fall out of the threshold as in the direct tier
+        val self = reps.select(col("id").as("gid"),
+            round(VectorFunctions.dot(col("nv"), col("nv")), 4).as("sim"))
+          .filter(col("sim") >= tau)
+        (bandPairs(reps, "ga", "gb"), self, Nil)
+      }
+    graft.util.BlockRelease.release(n0)
+    out
   }
 
   /** The banding-resolution law (see [[cosineNearDups]] scaladoc):
@@ -708,151 +538,108 @@ object Dedup {
     * Zero vectors (all tokens hash-cancelled) have no cosine and are
     * excluded, mirrored by `n2 > 0` in SQL twins.
     *
-    * EXACT-DUP COLLAPSE tier (r12, from the 10× sweep, BENCH_LOCAL_r12.md):
-    * identical vectors produce identical hyperplane signatures in EVERY
-    * table, so banding each copy separately multiplies bucket-pair work
-    * by the SQUARE of the duplicate multiplicity for zero information —
-    * the sweep's 10-way-replicated corpus measured 309 s here (~100× the
-    * pair work of its 50k distinct vectors). Crawl corpora are exactly
-    * this shape (boilerplate, mirrors, re-posts), so when the dup ratio
-    * warrants it the operator bands ONE representative per distinct
-    * vector, then expands surviving group pairs back to member pairs (an
-    * output-sized join) and emits within-group pairs directly through
-    * the same predicate. The pair set is BIT-FOR-BIT the direct tier's
-    * at every SF and banding config: if u = v then (u,x) collides and
-    * verifies iff (v,x) does, and identical vectors always share every
-    * bucket, so within-group pairs were always emitted iff the predicate
-    * holds (cos = 1, i.e. iff tauDen ≥ tauNum) — which is exactly what
-    * the direct emission computes. DedupSpec's lsh-equals-brute pin and
-    * a forced-collapse twin certify the equivalence.
-    *
-    * The TIER GATE rides the maxN2 guard action (same scan, two more
-    * agg columns — no extra job): collapse only when members ≥ 1.25 ×
-    * approx-distinct vectors. Below that the banding savings (∝ 1−1/r²)
-    * cannot pay for the collapse machinery (a corpus-sized window
-    * shuffle + two output-sized expansion joins — measured 2.1× on the
-    * dup-free sf0.1 corpus), and the direct tier runs UNCHANGED. */
+    * Duplicate-heavy corpora collapse per distinct vector
+    * ([[collapsedPairs]]; the gate rides the maxN2 guard's action). A
+    * rep self-pairs iff the predicate holds at dot = na2 = nb2 = n², so
+    * τ > 1 configurations stay correct; na2/nb2 follow the member-pair
+    * orientation. */
   def cosineNearDupsExact(vecs: DataFrame, idCol: String, vCol: String,
       tauNum: Long = 9, tauDen: Long = 10, bits: Int = 12, tables: Int = 48,
-      dim: Int = -1, collapseRatio: Double = 1.25): DataFrame = {
+      dim: Int = -1): DataFrame = {
     import graft.functions.VectorFunctions
-    require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
     val d = if (dim > 0) dim else vecs.select(size(col(vCol))).first().getInt(0)
-    // FAT banding with verify-inside-join — deliberately NOT the float
-    // tier's skinny/dedup-then-verify shape: this tier runs at the oracle
-    // SFs on a DENSE near-dup corpus (sf0.1: 120k true pairs over 5k
-    // docs, ~15 bucket hits per true pair at 96 tables), where filtering
-    // to true pairs BEFORE the distinct keeps the dedup output-sized; a
-    // candidate-first restructure measured 4.5 → 23 s here. The skinny
-    // shape wins in the float tier's regime (huge corpora, collision-
-    // bounded candidates via autoBanding); the two tiers document the
-    // crossover.
     val base = vecs.select(col(idCol).as("id"), col(vCol).as("v"),
         VectorFunctions.dot(col(vCol), col(vCol)).as("n2"))
       .filter(col("n2") > 0)
-    // exactness GUARD, not just a scaladoc bound: the decidability
-    // contract needs every predicate operand exact in doubles, and
-    // |dot| ≤ √(na²·nb²) (Cauchy–Schwarz) makes
-    // max(tauNum², tauDen²)·maxN2² an upper bound for both sides. A
-    // corpus of long-enough documents to break 2^53 must fail LOUDLY
-    // here — silently degrading to float rounding is exactly what this
-    // tier exists to rule out. One cheap aggregation per call, which the
-    // collapse-tier gate rides for free (same scan, two more columns).
+    // one cheap aggregation per call: the exactness guard's max |v|² and
+    // the collapse gate's counts (same scan)
     val probe = base.agg(coalesce(max(col("n2")), lit(0.0)),
       count(lit(1)), approx_count_distinct(col("v"))).first()
     val maxN2 = probe.getDouble(0)
     val nMembers = probe.getLong(1)
     val nDistinct = probe.getLong(2)
+    def bandPairs(src: DataFrame, la: String, lb: String): DataFrame =
+      rationalCosinePairs(src, la, lb, tauNum, tauDen, d, bits, tables,
+        maxN2, "cosineNearDupsExact", keepMetrics = true)
+    if (nMembers < CollapseRatio * nDistinct) bandPairs(base, "id_a", "id_b")
+    else collapsedPairs(base, "id", Seq("v"), nMembers, "id_a", "id_b",
+        "cosineNearDupsExact", "cosineNearDupGroups",
+        sided = Some(("na2", "nb2"))) { reps =>
+      val self = reps.select(col("id").as("gid"), col("n2").as("dot"),
+          col("n2").as("na2"), col("n2").as("nb2"))
+        .filter(col("dot") > 0 && lit(tauDen * tauDen) * col("dot") * col("dot") >=
+          lit(tauNum * tauNum) * col("na2") * col("nb2"))
+      (bandPairs(reps, "ga", "gb"), self, Nil)
+    }
+  }
+
+  /** The banding + integer-rational verify of [[cosineNearDupsExact]]
+    * and [[cosineNearDupGroups]] over `src` (id, v, n2) with n2 > 0:
+    * candidate pairs (la < lb) from `tables` b-bit hyperplane-sign
+    * buckets, deduped, checkpointed; the CALLER releases the result.
+    * `keepMetrics` carries (dot, na2, nb2) through the dedup; the group
+    * form keeps only the ids.
+    *
+    * FAT banding with verify-inside-join — deliberately NOT the float
+    * tier's skinny/dedup-then-verify shape: this tier runs at the oracle
+    * SFs on a DENSE near-dup corpus (sf0.1: 120k true pairs over 5k
+    * docs, ~15 bucket hits per true pair at 96 tables), where filtering
+    * to true pairs BEFORE the distinct keeps the dedup output-sized; a
+    * candidate-first restructure measured 4.5 → 23 s here. The skinny
+    * shape wins in the float tier's regime (huge corpora, collision-
+    * bounded candidates via autoBanding); the two tiers document the
+    * crossover.
+    *
+    * Exactness GUARD, not just a scaladoc bound: the decidability
+    * contract needs every predicate operand exact in doubles, and
+    * |dot| ≤ √(na²·nb²) (Cauchy–Schwarz) makes
+    * max(tauNum², tauDen²)·maxN2² an upper bound for both sides. A
+    * corpus of long-enough documents to break 2^53 fails LOUDLY here —
+    * silently degrading to float rounding is exactly what this tier
+    * exists to rule out. */
+  private def rationalCosinePairs(src: DataFrame, la: String, lb: String,
+      tauNum: Long, tauDen: Long, d: Int, bits: Int, tables: Int,
+      maxN2: Double, caller: String, keepMetrics: Boolean): DataFrame = {
+    import graft.functions.VectorExpressions
+    require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
     val tauSq = math.max(tauNum.toDouble * tauNum, tauDen.toDouble * tauDen)
     require(tauSq * maxN2 * maxN2 <= math.pow(2, 53),
-      f"cosineNearDupsExact: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
+      f"$caller: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
       "the integer predicate would round; shorten documents or rescale vectors")
-    def pred(dotC: Column, na2C: Column, nb2C: Column): Column =
-      dotC > 0 &&
-        lit(tauDen * tauDen) * dotC * dotC >= lit(tauNum * tauNum) * na2C * nb2C
-    val allSigs = graft.functions.VectorExpressions
-      .hyperplane_sigs(col("v"), d, "neardup", bits, tables)
-    // banding self-join shared by both tiers: (la, lb, dot, na2, nb2)
-    // with la < lb, predicate-filtered, deduped
-    def bandPairs(src: DataFrame, la: String, lb: String): DataFrame = {
-      val banded = src.select(col("id"), col("v"), col("n2"),
-          posexplode(allSigs).as(Seq("t", "s")))
-        .repartition(col("t"), col("s"))
-        .cp()
-      val dotAB = VectorFunctions.dot(col("a.v"), col("b.v"))
-      // verify INSIDE the join condition (r17, guide §3/§4): the
-      // quadratic bucket enumeration then drops failing pairs in the
-      // sort-merge join's inner loop instead of emitting them through
-      // the downstream projection — probe-measured ~1.4× on the
-      // dominant stage at identical output (inner-join semantics: the
-      // predicate filters the same rows either side of the join
-      // boundary, and dot/na2/nb2 are functions of the pair, so the
-      // dropDuplicates representative is unaffected). The predicate is
-      // the FUSED [[graft.functions.CosineRationalGate]] kernel (r17
-      // session 4): join conditions get no common-subexpression
-      // elimination, so the composed pred() re-ran the d-double dot up
-      // to 3× per ordered pair; the fused gate runs it once.
-      val out = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
-          col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
-            col("a.id") < col("b.id") &&
-            graft.functions.VectorExpressions.cosine_rational_gate(
-              col("a.v"), col("b.v"), col("a.n2"), col("b.n2"),
-              tauNum, tauDen))
-        .select(col("a.id").as(la), col("b.id").as(lb),
-          dotAB.as("dot"), col("a.n2").as("na2"), col("b.n2").as("nb2"))
-        .dropDuplicates(la, lb)
-        .cp()
-      graft.util.BlockRelease.release(banded)
-      out
-    }
-    if (nMembers < collapseRatio * nDistinct)
-      // direct tier: dup-light corpus — the collapse machinery cannot
-      // pay for itself; band every row exactly as before
-      bandPairs(base, "id_a", "id_b")
-    else {
-      // collapse tier: gid = min member id per distinct vector — the
-      // hash-keyed map-side-combined gid stage (r15, the group family's
-      // fix: this tier triggers exactly when some vector is hot, and a
-      // v-partitioned window serialized that group into one task); mem
-      // feeds banding (reps), both expansion probes and the within
-      // self-join.
-      val (mem0, gidScratch) = gidByContent(
-        base.select(col("id"), col("v"), col("n2")),
-        Seq("v"), checkpointKeyed = false,
-        knownRows = nMembers) // base: pruned scan + dot
-      val mem = mem0.cp()
-      graft.util.BlockRelease.release(gidScratch)
-      warnPairAmplification(mem, "gid", "cosineNearDupsExact",
-        "cosineNearDupGroups", eligible = col("n2") > 0)
-      val reps = mem.filter(col("id") === col("gid"))
-        .select(col("id"), col("v"), col("n2"))
-      val gout = bandPairs(reps, "ga", "gb")
-      // cross-group expansion: |A|·|B| member pairs per surviving group
-      // pair — output-sized by definition. Orientation is per MEMBER
-      // pair (least/greatest), so na2/nb2 swap with it. merge-hinted:
-      // mem is corpus-sized and checkpoint stats under-estimate (the
-      // banding broadcast hazard above).
-      val cross = gout.hint("merge")
-        .join(mem.select(col("gid").as("ga"), col("id").as("ida")).hint("merge"), "ga")
-        .hint("merge")
-        .join(mem.select(col("gid").as("gb"), col("id").as("idb")).hint("merge"), "gb")
-        .select(
-          least(col("ida"), col("idb")).as("id_a"),
-          greatest(col("ida"), col("idb")).as("id_b"),
-          col("dot"),
-          when(col("ida") < col("idb"), col("na2")).otherwise(col("nb2")).as("na2"),
-          when(col("ida") < col("idb"), col("nb2")).otherwise(col("na2")).as("nb2"))
-      // within-group pairs: dot = |v|² exactly; the predicate is applied
-      // (not assumed) so τ > 1 configurations stay correct
-      val within = mem.as("x").hint("merge").join(mem.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
-          col("x.n2").as("dot"), col("x.n2").as("na2"), col("y.n2").as("nb2"))
-        .filter(pred(col("dot"), col("na2"), col("nb2")))
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(Seq(gout, mem))
-      out
-    }
+    val allSigs = VectorExpressions.hyperplane_sigs(col("v"), d, "neardup",
+      bits, tables)
+    val banded = src.select(col("id"), col("v"), col("n2"),
+        posexplode(allSigs).as(Seq("t", "s")))
+      .repartition(col("t"), col("s"))
+      .cp()
+    warnBucketDensity(banded, Seq("t", "s"), caller)
+    // verify INSIDE the join condition (r17, guide §3/§4): the quadratic
+    // bucket enumeration then drops failing pairs in the sort-merge
+    // join's inner loop instead of emitting them through the downstream
+    // projection — probe-measured ~1.4× on the dominant stage at
+    // identical output (dot/na2/nb2 are functions of the pair, so the
+    // dropDuplicates representative is unaffected). The predicate is the
+    // FUSED [[graft.functions.CosineRationalGate]] kernel (r17 session
+    // 4): join conditions get no common-subexpression elimination, so a
+    // composed predicate re-ran the d-double dot up to 3× per ordered
+    // pair; the fused gate runs it once.
+    val ids = Seq(col("a.id").as(la), col("b.id").as(lb))
+    val metrics =
+      if (keepMetrics) Seq(
+        graft.functions.VectorFunctions.dot(col("a.v"), col("b.v")).as("dot"),
+        col("a.n2").as("na2"), col("b.n2").as("nb2"))
+      else Nil
+    val out = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
+        col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
+          col("a.id") < col("b.id") &&
+          VectorExpressions.cosine_rational_gate(
+            col("a.v"), col("b.v"), col("a.n2"), col("b.n2"),
+            tauNum, tauDen))
+      .select(ids ++ metrics: _*)
+      .dropDuplicates(la, lb)
+      .cp()
+    graft.util.BlockRelease.release(banded)
+    out
   }
 
   /** Measured crossover of the pair-complete contract (BENCH_LOCAL_r13.md
@@ -876,33 +663,97 @@ object Dedup {
     if (r.getDouble(0) == 0.0) 0.0 else r.getDouble(1) / r.getDouble(0)
   }
 
-  /** The auto-guard on the pair-complete collapse tiers (r13 verdict
-    * item 5): nothing STOPS a caller from running a pair form on a
-    * multiplicity-100 corpus — the output is still exactly what was
-    * asked for — but past the measured crossover it is the wrong form,
-    * so the tier says so LOUDLY (stderr, the engine's harness channel)
-    * and names the linear escape hatch. Costs one aggregation over the
-    * gid frame the collapse tier just built.
+  /** Members per distinct content key at which the pair forms collapse
+    * (the probe compares members with 1.25 × approx-distinct keys).
+    * Below it the banding savings (∝ 1 − 1/r²) cannot pay for the gid
+    * shuffle and the two expansion joins (measured 2.1× slower on the
+    * dup-free sf0.1 corpus). */
+  private val CollapseRatio = 1.25
+
+  /** The exact-dup collapse of the pair forms (BENCH_LOCAL_r12.md §8).
+    * Identical content keys (shingle set, (scope, text), vector) give
+    * identical signatures and an identical metric against any third
+    * doc, so banding every copy multiplies bucket-pair work by the
+    * square of the dup multiplicity for no information. Instead:
     *
-    * `eligible` restricts the projection to docs the pair form would
-    * actually emit pairs for (r15 ADVICE fix): the gid frames group ALL
-    * pair-ineligible docs together (every < n-token doc shares the
-    * empty shingle list; every zero vector shares v = 0), yet those
-    * docs emit ZERO pairs — on a short-doc-heavy corpus the unfiltered
-    * projection is inflated and the warning fires spuriously,
-    * recommending a group-form switch that would not reduce pair
-    * output. */
-  private[graft] def warnPairAmplification(mem: DataFrame, gidCol: String,
+    *  1. gid = min member id per distinct `contentCols` ([[gidByContent]],
+    *     bounded by `nDocs`), checkpointed with the rest of `frame`; a
+    *     cached `frame` is unpersisted once this is materialized;
+    *  1. `stage` runs the kernel's own pair stage on one rep per gid
+    *     (`frame`'s columns) and returns the group pairs (ga, gb,
+    *     metric…), the rep self-pair frame (gid, metric…) — the reps
+    *     whose self-pair passes the direct tier's emission conditions,
+    *     with the value the direct tier computes — and scratch frames;
+    *  1. group pairs expand to |A|·|B| member pairs oriented (la < lb) —
+    *     the two metrics named `sided` swap with the orientation — and
+    *     every self-paired group emits its C(k,2) within pairs.
+    *
+    * Pair set and metric values are bit-for-bit the direct tier's: if
+    * u ≡ v then (u, x) collides and verifies iff (v, x) does, and
+    * identical docs share every bucket. Measured at dup multiplicity 10:
+    * q24 309.6 → 23.3 s, q36 20.0 → 11.9 s, q33 18.2 → 11.5 s, q38
+    * 24.0 → 16.8 s. Past the measured pair-form ceiling (BENCH_LOCAL_r13
+    * §7: right through multiplicity ~10, 10× slower than the group form
+    * by 30) the expansion says so on stderr and names `escape`; the
+    * projection counts self-paired groups only, since ineligible docs
+    * (empty shingle sets, zero vectors) share one gid yet emit no pairs.
+    * Returns the checkpointed pairs (la, lb, metric…); releases the rest. */
+  private def collapsedPairs(frame: DataFrame, idCol: String,
+      contentCols: Seq[String], nDocs: Long, la: String, lb: String,
       caller: String, escape: String,
-      eligible: Column = lit(true)): Unit = {
-    val amp = pairAmplification(mem.filter(eligible), gidCol)
+      sided: Option[(String, String)] = None)(
+      stage: DataFrame => (DataFrame, DataFrame, Seq[DataFrame])): DataFrame = {
+    val (withG0, gidScratch) = gidByContent(
+      frame.withColumnRenamed(idCol, "id"), contentCols,
+      checkpointKeyed = false, knownRows = nDocs)
+    val withG = withG0.cp()
+    graft.util.BlockRelease.release(gidScratch)
+    frame.unpersist(blocking = false)
+    val (gpairs, self, scratch) = stage(
+      withG.filter(col("id") === col("gid")).drop("gid")
+        .withColumnRenamed("id", idCol))
+    val metrics = gpairs.columns.toSeq.filterNot(Set("ga", "gb"))
+    val mem = withG.select(col("id"), col("gid"))
+    val paired = mem.join(self, "gid")
+    val amp = pairAmplification(paired)
     if (amp > PairAmplificationWarnAt)
       System.err.println(
         f"WARN graft.dedup.$caller: exact-dup multiplicity projects ~$amp%.1f " +
         f"member pairs per doc (measured pair-form ceiling: right through " +
         f"multiplicity ~10, 10x slower than the group form by 30); " +
         f"prefer $escape for canonicalization-shaped consumers")
+    val fwd = col("ida") < col("idb")
+    val oriented = metrics.map { m =>
+      sided match {
+        case Some((a, b)) if m == a => when(fwd, col(a)).otherwise(col(b)).as(a)
+        case Some((a, b)) if m == b => when(fwd, col(b)).otherwise(col(a)).as(b)
+        case _ => col(m)
+      }
+    }
+    // merge-hinted: mem is corpus-sized and checkpoint stats
+    // under-estimate (the banding broadcast hazard, [[cosineNearDups]])
+    val cross = gpairs.hint("merge")
+      .join(mem.select(col("gid").as("ga"), col("id").as("ida")).hint("merge"), "ga")
+      .hint("merge")
+      .join(mem.select(col("gid").as("gb"), col("id").as("idb")).hint("merge"), "gb")
+      .select(least(col("ida"), col("idb")).as(la) +:
+        greatest(col("ida"), col("idb")).as(lb) +: oriented: _*)
+    val within = paired.as("x").hint("merge").join(mem.as("y").hint("merge"),
+        col("x.gid") === col("y.gid") && col("x.id") < col("y.id"))
+      .select(col("x.id").as(la) +: col("y.id").as(lb) +:
+        metrics.map(m => col(s"x.$m")): _*)
+    val out = cross.unionByName(within).cp()
+    graft.util.BlockRelease.release(withG +: gpairs +: scratch)
+    out
   }
+
+  /** Rep self-pair frame of the Jaccard kernels: a nonempty shingle set
+    * pairs with itself at `metric` ≡ 1.0 when that meets `threshold`. */
+  private def unitSelfPairs(reps: DataFrame, metric: String,
+      threshold: Double): DataFrame =
+    reps.filter(size(col("shingles")) > 0)
+      .select(col("doc_id").as("gid"), lit(1.0).as(metric))
+      .filter(col(metric) >= threshold)
 
   /** Candidate density above which [[warnBucketDensity]] reports a
     * bucket self-join (projected candidates per banded row). 12 sits
@@ -941,14 +792,14 @@ object Dedup {
     * every near-dup PAIR, emit every doc's CANONICAL representative
     * (doc_id, canon_id, group_size), where canon_id = the smallest doc
     * id in the doc's connected component under the near-dup relation —
-    * the r12 collapse tier's group structure EXPOSED rather than
+    * the pair forms' collapse group structure EXPOSED rather than
     * expanded, and the form a dedup pipeline actually consumes
     * (keep-canonical, drop the rest — the q73 canonicalization shape).
     *
     * Cost is linear where the pair form is quadratic: exact-dup groups
     * ride ONE window shuffle (gid = min id per identical vector),
     * banding runs on REPRESENTATIVES only (identical vectors band
-    * identically — the collapse-tier argument at `cosineNearDupsExact`),
+    * identically — the [[collapsedPairs]] argument),
     * and components are computed over the rep graph (∝ reps + rep
     * pairs). No within-group or cross-group member-pair expansion ever
     * happens, so dup-group size k costs k rows, not C(k,2).
@@ -979,54 +830,15 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     val reps = mem.filter(col("id") === col("gid") && col("n2") > 0)
       .select(col("id"), col("v"), col("n2"))
-    val repEdges = cosineRepEdges(reps, tauNum, tauDen, bits, tables, dim)
+    val d = if (dim > 0) dim else reps.select(size(col("v"))).first().getInt(0)
+    val maxN2 = reps.agg(coalesce(max(col("n2")), lit(0.0))).first()
+      .getDouble(0)
+    val repEdges = rationalCosinePairs(reps, "id_a", "id_b", tauNum, tauDen,
+      d, bits, tables, maxN2, "cosineNearDupGroups", keepMetrics = false)
     val out = groupsFromReps(mem,
       repEdges.select(col("id_a").as("src"), col("id_b").as("dst")))
     graft.util.BlockRelease.release(repEdges)
     out
-  }
-
-  /** Rep-edge stage of [[cosineNearDupGroups]] (r16): the same banding
-    * + integer-rational verify as [[cosineNearDupsExact]]'s direct tier
-    * (including its 2^53 exactness guard), with the FAT verify-inside-join
-    * over the signature buckets (its collapse probe is skipped outright:
-    * reps are distinct vectors by construction). `base` must carry
-    * (id, v, n2) with n2 > 0. Returns verified edges (id_a, id_b),
-    * checkpointed. */
-  private[graft] def cosineRepEdges(base: DataFrame, tauNum: Long,
-      tauDen: Long, bits: Int, tables: Int, dim: Int): DataFrame = {
-    require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
-    val d = if (dim > 0) dim else base.select(size(col("v"))).first().getInt(0)
-    val maxN2 = base.agg(coalesce(max(col("n2")), lit(0.0))).first()
-      .getDouble(0)
-    val tauSq = math.max(tauNum.toDouble * tauNum, tauDen.toDouble * tauDen)
-    require(tauSq * maxN2 * maxN2 <= math.pow(2, 53),
-      f"cosineNearDupGroups: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
-      "the integer predicate would round; shorten documents or rescale vectors")
-    val allSigs = graft.functions.VectorExpressions
-      .hyperplane_sigs(col("v"), d, "neardup", bits, tables)
-    val banded = base.select(col("id"), col("v"), col("n2"),
-        posexplode(allSigs).as(Seq("t", "s")))
-      .repartition(col("t"), col("s"))
-      .cp()
-    warnBucketDensity(banded, Seq("t", "s"), "cosineNearDupGroups")
-    // verify INSIDE the join condition (r17 — the [[cosineNearDupsExact]]
-    // bandPairs argument): failing pairs die in the join's inner loop;
-    // only passing pairs reach the distinct. Fused
-    // [[graft.functions.CosineRationalGate]] (r17 session 4): one dot
-    // per ordered pair instead of up to 3 (no CSE in join conditions).
-    val edges = banded.as("a").hint("merge")
-      .join(banded.as("b").hint("merge"),
-        col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
-          col("a.id") < col("b.id") &&
-          graft.functions.VectorExpressions.cosine_rational_gate(
-            col("a.v"), col("b.v"), col("a.n2"), col("b.n2"),
-            tauNum, tauDen))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .cp()
-    graft.util.BlockRelease.release(banded)
-    edges
   }
 
   /** Shared exact-dup gid stage of the `*NearDupGroups` family (r15 —
@@ -1185,7 +997,7 @@ object Dedup {
     * Jaccard ≡ 1 ≥ threshold against each other (threshold ≤ 1
     * required), so member-level components equal rep-level components
     * with members attached (the collapse equivalence at
-    * [[minhashNearDups]]); docs whose shingle set is EMPTY can never
+    * [[collapsedPairs]]); docs whose shingle set is EMPTY can never
     * pair (no postings, no signature) and stay singletons. Ids must be
     * numeric (component node ids). */
   def minhashNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
@@ -1470,16 +1282,14 @@ object Dedup {
     * one-shuffle shape: tokens explode locally, the 64 ±1 bit sums ride
     * ONE partial-aggregated groupBy. */
   def simhashNearDupsMd5(docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3,
-      collapseRatio: Double = Double.PositiveInfinity): DataFrame = {
+      maxDist: Int = 3): DataFrame = {
     val chunks = maxDist + 1
     val width = 64 / chunks
     require(width <= 32 && 32 % width == 0,
       s"chunk width $width must divide 32 (supported maxDist: 1, 3, 7)")
     val fp = simhashMd5Fp(docs, idCol, textCol)
     pigeonholePairs(fp, Seq("fp_lo", "fp_hi"),
-      simhashChunkCols(chunks, width), maxDist, simhashMd5Dist,
-      collapseRatio)
+      simhashChunkCols(chunks, width), maxDist, simhashMd5Dist)
   }
 
   /** The md5-twin 64-bit SimHash fingerprint frame (doc_id, fp_lo,
@@ -1539,9 +1349,10 @@ object Dedup {
     * via gid. The pigeonhole candidates are EXACT for the distance bound
     * (any pair within Hamming maxDist shares one of maxDist+1 chunks),
     * so unlike the MinHash form there is no banding-recall pin: engine
-    * components equal true-pair components unconditionally. The SimHash
-    * collapse's r12 negative result (the fingerprint groupBy dominates
-    * and must run per member) applies here too — but the group form's
+    * components equal true-pair components unconditionally. The pair
+    * form's measured negative result for a SimHash collapse
+    * ([[pigeonholePairs]]: the fingerprint groupBy dominates and must
+    * run per member) applies here too — but the group form's
     * win is the OUTPUT, not the banding: C(k,2) pair rows never
     * materialize. */
   def simhashNearDupGroupsMd5(docs: DataFrame, idCol: String,
@@ -1564,8 +1375,6 @@ object Dedup {
     graft.util.BlockRelease.release(gidScratch)
     val reps = mem.filter(col("id") === col("gid"))
       .select(col("id").as("doc_id"), col("fp_lo"), col("fp_hi"))
-    // reps are distinct fingerprints by construction, so the pigeonhole
-    // kernel's collapse gate is moot
     val pairs = pigeonholeBandJoin(reps, Seq("fp_lo", "fp_hi"),
         simhashChunkCols(chunks, width), maxDist, simhashMd5Dist,
         "doc_a", "doc_b", "simhashNearDupGroupsMd5")
@@ -1582,8 +1391,7 @@ object Dedup {
     * distance shares ≥1 exact chunk, so an equality join on
     * (chunk_idx, chunk_value) finds all of them without O(n²). */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 3,
-      collapseRatio: Double = Double.PositiveInfinity): DataFrame = {
+      maxDist: Int = 3): DataFrame = {
     val chunks = maxDist + 1
     val width = 64 / chunks
     val fp = graft.util.SpreadScan.spread(docs) // guide §2.5 (q36/q112 class)
@@ -1592,7 +1400,7 @@ object Dedup {
       shiftrightunsigned(col("sh"), c * width).bitwiseAND(lit((1L << width) - 1))
     }
     pigeonholePairs(fp, Seq("sh"), chunkCols, maxDist,
-      (a, b) => hamming64(a("sh"), b("sh")).cast("long"), collapseRatio)
+      (a, b) => hamming64(a("sh"), b("sh")).cast("long"))
   }
 
   /** The pigeonhole band self-join (factored r16 so the group form and
@@ -1621,75 +1429,17 @@ object Dedup {
   /** Shared pigeonhole pair kernel for the SimHash tiers: band the
     * fingerprint frame (doc_id, fpCols…) by `chunkCols`, self-join on
     * (chunk_idx, chunk_value), distinct, compute `dist` and keep ≤
-    * maxDist — with an EXACT-DUP COLLAPSE tier (the
-    * [[cosineNearDupsExact]] argument in Hamming space): pair semantics
-    * depend ONLY on the fingerprint, so docs with equal fingerprints
-    * band identically and sit at distance 0 from each other; past the
-    * gate the banding runs on one representative per distinct
-    * fingerprint, group pairs expand to member pairs (output-sized
-    * joins), and within-group pairs emit at dist = 0. Pair set and
-    * distances are bit-for-bit the direct tier's (DedupSpec: forced
-    * twins both ways on a replicated corpus).
-    *
-    * MEASURED NEGATIVE RESULT (r12) — collapse is OPT-IN here
-    * (collapseRatio defaults to +∞), unlike the cosine/minhash tiers:
-    * SimHash's dominant cost is the per-doc fingerprint computation
-    * (the token explode + 64-sum groupBy), which collapse CANNOT touch
-    * — the fingerprint IS the group key, so it must be computed for
-    * every member first. On the 10×-replicated 500k-doc sweep corpus
-    * the collapse tier measured 20–21 s vs 16.9 s direct (same JVM
-    * protocol): the window + expansion machinery costs more than the
-    * shrunk banding join saves at any realistic dup ratio. Contrast
-    * minhash, where the 64-hash SIGNATURE stage runs on reps only and
-    * collapse won 20.0 → 11.9 s. The machinery is kept (and spec-pinned)
-    * for corpora with extreme fingerprint multiplicity, where the
-    * banding's dup-quadratic bucket pairs eventually dominate. */
+    * maxDist. No exact-dup collapse: the per-doc fingerprint, which is
+    * the dominant cost and the group key, runs per member anyway, and
+    * the collapse measured slower (20–21 s vs 16.9 s direct at dup
+    * multiplicity 10, BENCH_LOCAL_r12.md §8). */
   private def pigeonholePairs(fp0: DataFrame, fpCols: Seq[String],
       chunkCols: Seq[Column], maxDist: Int,
-      dist: (String => Column, String => Column) => Column,
-      collapseRatio: Double = 1.25): DataFrame = {
+      dist: (String => Column, String => Column) => Column): DataFrame = {
     val fp = fp0.cp()
-    val probe = fp.agg(count(lit(1)),
-      approx_count_distinct(struct(fpCols.map(col): _*))).first()
-    val (nDocs, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    def bandJoin(src: DataFrame, la: String, lb: String): DataFrame =
-      pigeonholeBandJoin(src, fpCols, chunkCols, maxDist, dist, la, lb,
-        "simhashNearDups")
-    if (nDocs < collapseRatio * nDistinct) {
-      val out = bandJoin(fp, "doc_a", "doc_b").cp()
-      graft.util.BlockRelease.release(fp)
-      out
-    } else {
-      // hash-keyed gid stage, the minhash tier's argument (r15)
-      val (withG0, gidScratch) = gidByContent(
-          fp.select(col("doc_id").as("id") +: fpCols.map(col): _*),
-          fpCols, checkpointKeyed = false,
-          knownRows = nDocs) // fp is checkpointed
-      val withG = withG0
-        .select(col("id").as("doc_id") +: fpCols.map(col) :+ col("gid"): _*)
-        .cp()
-      graft.util.BlockRelease.release(gidScratch :+ fp)
-      val reps = withG.filter(col("doc_id") === col("gid"))
-      val gpairs = bandJoin(reps, "ga", "gb")
-      val memIds = withG.select(col("doc_id"), col("gid"))
-      // merge-hinted like the cosine/minhash tiers: memIds is
-      // corpus-sized and checkpoint stats under-estimate
-      val cross = gpairs.hint("merge")
-        .join(memIds.select(col("gid").as("ga"), col("doc_id").as("ida"))
-          .hint("merge"), "ga")
-        .hint("merge")
-        .join(memIds.select(col("gid").as("gb"), col("doc_id").as("idb"))
-          .hint("merge"), "gb")
-        .select(least(col("ida"), col("idb")).as("doc_a"),
-          greatest(col("ida"), col("idb")).as("doc_b"), col("dist"))
-      val within = memIds.as("x").hint("merge").join(memIds.as("y").hint("merge"),
-          col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          lit(0L).as("dist"))
-        .filter(lit(0L) <= maxDist)
-      val out = cross.unionByName(within).cp()
-      graft.util.BlockRelease.release(withG)
-      out
-    }
+    val out = pigeonholeBandJoin(fp, fpCols, chunkCols, maxDist, dist,
+      "doc_a", "doc_b", "simhashNearDups").cp()
+    graft.util.BlockRelease.release(fp)
+    out
   }
 }

@@ -69,12 +69,6 @@ class DedupSpec extends SparkSpec with Matchers {
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     lsh shouldBe truth // LSH (16 bands × 4 rows) recalls all ≥0.5 pairs here,
     //                    and the exact-verify stage removes false positives
-    // r12 collapse-tier twin: forcing the exact-dup collapse on the same
-    // (dup-light) corpus must reproduce the pair set bit-for-bit
-    val collapsed = Dedup.minhashNearDups(docs, "doc_id", "text",
-        threshold = 0.5, collapseRatio = 0.0)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    collapsed shouldBe truth
   }
 
   test("minhash near-dups: dup-heavy corpus takes the collapse tier and matches brute (r12)") {
@@ -113,12 +107,6 @@ class DedupSpec extends SparkSpec with Matchers {
       lsh shouldBe truth // banding recalls every ≥0.9 pair here (miss ≈ 2.6e-3
       //                    per borderline pair, deterministic hyperplanes);
       //                    the exact-verify stage removes all false positives
-      // r12 collapse-tier twin: forced collapse must reproduce
-      // (pair, sim) rows bit-for-bit on the same dup-light corpus
-      val collapsed = Dedup.cosineNearDups(docs, "doc_id", "v", tau = 0.9,
-          collapseRatio = 0.0)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      collapsed shouldBe truth
     }
   }
 
@@ -163,73 +151,70 @@ class DedupSpec extends SparkSpec with Matchers {
     pairs should contain((1L, 2L))
     pairs should not contain ((1L, 3L))
     pairs should not contain ((2L, 3L))
-    // r12 collapse-tier twin: forced collapse must reproduce the pair set
-    val collapsed = Dedup.simhashNearDups(docs, "doc_id", "text", maxDist = 8,
-        collapseRatio = 0.0)
-      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    collapsed shouldBe pairs
   }
 
   test("ngram jaccard: dup-heavy corpus takes the collapse tier and matches the direct tier (r12)") {
     // 3-way replicate under shifted ids: identical (source, shingle set)
     // triples trip the 1.25 gate NATURALLY; (pair, jaccard) rows must
-    // equal the direct tier's (forced via collapseRatio = +∞),
-    // within-group 1.0-Jaccard pairs included
+    // equal a same-scope brute twin — the exact Jaccard of every scoped
+    // pair, the relation the direct tier computes — within-group
+    // 1.0-Jaccard pairs included
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val docs = (0 until 3).map(i => base.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text"), col("source")))
       .reduce(_ unionByName _).localCheckpoint()
-    def run(ratio: Double) =
-      Dedup.ngramJaccardNearDups(docs, "doc_id", "text", scopeCol = "source",
-          threshold = 0.5, collapseRatio = ratio)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val direct = run(Double.PositiveInfinity)
-    val collapsed = run(1.25)
+    val sh = Dedup.shingledHashes(docs, "doc_id", "text", keep = Seq("source"))
+      .cache()
+    val scoped = sh.select(col("doc_id").as("doc_a"), col("source").as("sa"))
+      .crossJoin(sh.select(col("doc_id").as("doc_b"), col("source").as("sb")))
+      .filter(col("doc_a") < col("doc_b") && col("sa") === col("sb"))
+      .select("doc_a", "doc_b")
+    val truth = Dedup.jaccardOfPairs(scoped, sh)
+      .filter(col("jaccard") >= 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val collapsed = Dedup.ngramJaccardNearDups(docs, "doc_id", "text",
+        scopeCol = "source", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    sh.unpersist(blocking = false)
     graft.util.BlockRelease.release(docs)
-    direct should not be empty
-    collapsed shouldBe direct
+    truth should not be empty
+    truth.exists(_._3 == 1.0) shouldBe true // within-group pairs present
+    collapsed shouldBe truth
   }
 
   test("shingle-cosine verify: dup-heavy corpus takes the doc-level collapse tier and matches (r12)") {
     // 3-way replicate: identical (source, text) docs trip the 1.25 gate
-    // NATURALLY; (pair, cos) rows must equal the direct tier's (forced
-    // via collapseRatio = +∞), within-group cos-1.0 pairs included
+    // NATURALLY; (pair, cos) rows must equal a brute twin — every
+    // same-source pair sharing a shingle, verified by the rounded md5Embed
+    // cosine — within-group cos-1.0 pairs included
+    import graft.functions.TextFunctions.md5Embed
+    import graft.functions.VectorFunctions
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val docs = (0 until 3).map(i => base.select(
         (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text"), col("source")))
       .reduce(_ unionByName _).localCheckpoint()
-    def run(ratio: Double) =
-      Dedup.shingleCosineVerify(docs, "doc_id", "text", scopeCol = "source",
-          tauCos = 0.6, collapseRatio = ratio)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val direct = run(Double.PositiveInfinity)
-    val collapsed = run(1.25)
-    graft.util.BlockRelease.release(docs)
-    direct should not be empty
-    direct.exists(_._3 == 1.0) shouldBe true // within-group pairs present
-    collapsed shouldBe direct
-  }
-
-  test("simhash md5 tier: dup-heavy corpus takes the collapse tier, pairs+distances match (r12)") {
-    // 3-way replicate: every fingerprint has 3 exact copies; collapse is
-    // OPT-IN for simhash (measured slower at realistic dup ratios — see
-    // pigeonholePairs scaladoc), so the twin forces BOTH tiers and pins
-    // (pair, dist) equality, within-group dist-0 pairs included
-    val base = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
-    val docs = (0 until 3).map(i => base.select(
-        (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionByName _).localCheckpoint()
-    def run(ratio: Double) =
-      Dedup.simhashNearDupsMd5(docs, "doc_id", "text", maxDist = 3,
-          collapseRatio = ratio)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val direct = run(Double.PositiveInfinity)
-    val collapsed = run(1.25)
-    graft.util.BlockRelease.release(docs)
-    direct should not be empty
-    collapsed shouldBe direct
+    val emb = Dedup.shingledHashes(docs, "doc_id", "text", keep = Seq("source"))
+      .join(docs.select(col("doc_id"), md5Embed(col("text")).as("v")), "doc_id")
+      .withColumn("n2", VectorFunctions.normSq(col("v")))
+      .localCheckpoint()
+    val truth = emb.as("a").join(emb.as("b"),
+        col("a.doc_id") < col("b.doc_id") && col("a.source") === col("b.source") &&
+          arrays_overlap(col("a.shingles"), col("b.shingles")) &&
+          col("a.n2") > 0 && col("b.n2") > 0)
+      .select(col("a.doc_id"), col("b.doc_id"),
+        round(VectorFunctions.dot(col("a.v"), col("b.v")) /
+          sqrt(col("a.n2") * col("b.n2")), 4).as("cos"))
+      .filter(col("cos") >= 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val collapsed = Dedup.shingleCosineVerify(docs, "doc_id", "text",
+        scopeCol = "source", tauCos = 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    graft.util.BlockRelease.release(Seq(emb, docs))
+    truth should not be empty
+    truth.exists(_._3 == 1.0) shouldBe true // within-group pairs present
+    collapsed shouldBe truth
   }
 
   test("decontamination: planted 8-gram overlap flagged, 7-gram overlap is not") {
@@ -281,32 +266,43 @@ class DedupSpec extends SparkSpec with Matchers {
   test("md5-SimHash tier: planted pair found, pigeonhole candidates complete vs brute Hamming") {
     // unit-level redundancy for the q35 oracle: the md5 tier must (a)
     // find the planted near-identical pair, and (b) return EXACTLY the
-    // pairs a brute all-pairs Hamming over its own fingerprints would —
-    // pigeonhole banding is complete for the distance bound, so any
-    // difference is a banding bug
+    // (pair, distance) rows a brute all-pairs Hamming over its own
+    // fingerprints would — pigeonhole banding is complete for the
+    // distance bound, so any difference is a banding bug. Second input:
+    // a 3-way replicated corpus, whose exact copies sit at distance 0.
     val s = spark
     import s.implicits._
+    def banded(docs: org.apache.spark.sql.DataFrame, maxDist: Int) =
+      Dedup.simhashNearDupsMd5(docs, "doc_id", "text", maxDist)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def brute(docs: org.apache.spark.sql.DataFrame, maxDist: Int) = {
+      val fp = Dedup.simhashMd5Fp(docs, "doc_id", "text").localCheckpoint()
+      val out = fp.as("a").join(fp.as("b"), col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id"), col("b.doc_id"),
+          (bit_count(col("a.fp_lo").bitwiseXOR(col("b.fp_lo"))) +
+            bit_count(col("a.fp_hi").bitwiseXOR(col("b.fp_hi")))).cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .filter(_._3 <= maxDist).toSet
+      graft.util.BlockRelease.release(fp)
+      out
+    }
     val base = (1 to 40).map(i => s"token$i").mkString(" ")
-    val docs = Seq(
+    val planted = Seq(
       (1L, base),
       (2L, base.replace("token7", "tokenX")),
       (3L, (100 to 140).map(i => s"zz$i").mkString(" ")),
       (4L, (200 to 230).map(i => s"qq$i").mkString(" "))).toDF("doc_id", "text")
-    val banded = Dedup.simhashNearDupsMd5(docs, "doc_id", "text", maxDist = 7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    banded.map(p => (p._1, p._2)) should contain((1L, 2L))
-    // brute: recompute fingerprints through the same tier at the loosest
-    // bound (63 = any pair shares a chunk? no — derive ground truth by
-    // joining the banded tier at maxDist=63 with 8 chunks... simpler:
-    // maxDist=7 uses 8-bit chunks; a full-distance reference comes from
-    // pairing every doc via a crafted run at the maximum supported bound)
-    val all = Dedup.simhashNearDupsMd5(docs, "doc_id", "text", maxDist = 63)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-    // maxDist=63 with 64 1-bit chunks: every pair within distance 63
-    // shares a chunk unless fingerprints differ in EVERY bit — our
-    // fixture pairs all share ≥1 bit, so `all` is the complete pair set
-    val expected = all.filter(_._2 <= 7).map { case ((a, b), d) => (a, b, d) }.toSet
-    banded shouldBe expected
+    val p = banded(planted, 7)
+    p.map(x => (x._1, x._2)) should contain((1L, 2L))
+    p shouldBe brute(planted, 7)
+    val corpus = Tables.load(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val replicated = (0 until 3).map(i => corpus.select(
+        (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
+      .reduce(_ unionByName _).localCheckpoint()
+    val r = banded(replicated, 3)
+    r.exists(_._3 == 0L) shouldBe true
+    r shouldBe brute(replicated, 3)
+    graft.util.BlockRelease.release(replicated)
   }
 
   test("auto-banding law: small-n config unchanged, bits track corpus size, recall bound holds") {
@@ -358,14 +354,8 @@ class DedupSpec extends SparkSpec with Matchers {
       truth should not be empty
       val lsh = Dedup.cosineNearDupsExact(docs, "doc_id", "v", 9, 10, tables = 96, dim = 16)
         .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // r12 collapse-tier twin: forcing the exact-dup collapse on the
-      // same (dup-light) corpus must reproduce the pair set bit-for-bit
-      val collapsed = Dedup.cosineNearDupsExact(docs, "doc_id", "v", 9, 10,
-          tables = 96, dim = 16, collapseRatio = 0.0)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       graft.util.BlockRelease.release(docs)
       lsh shouldBe truth
-      collapsed shouldBe truth
     }
   }
 
@@ -796,25 +786,42 @@ class DedupSpec extends SparkSpec with Matchers {
     def corpus(shared: String) = (0 until 100)
       .map(i => (i.toLong, s"$shared p$i q$i".trim, "s"))
       .toDF("doc_id", "text", "source").localCheckpoint()
-    def stderrOf(docs: org.apache.spark.sql.DataFrame): String = {
+    def stderrOf(run: => Unit): String = {
       val buf = new java.io.ByteArrayOutputStream()
       val oldErr = System.err
       try {
         System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-        val out = Dedup.jaccardNearDupGroups(
-          docs, "doc_id", "text", "source", 0.5, 1)
-        out.count() shouldBe 100L
-        graft.util.BlockRelease.release(out)
+        run
       } finally System.setErr(oldErr)
       buf.toString("UTF-8")
     }
+    def groups(docs: org.apache.spark.sql.DataFrame): Unit = {
+      val out = Dedup.jaccardNearDupGroups(
+        docs, "doc_id", "text", "source", 0.5, 1)
+      out.count() shouldBe 100L
+      graft.util.BlockRelease.release(out)
+    }
     val (hot, light) = (corpus("x"), corpus(""))
-    val warned = stderrOf(hot)
+    val warned = stderrOf(groups(hot))
     warned should include (
       "WARN graft.dedup.jaccardNearDupGroups: banding buckets project")
     // ASCII only: a non-UTF-8 platform charset prints '?' for anything else
     warned.filter(_ >= 128) shouldBe empty
-    (stderrOf(light) should not).include("WARN graft.dedup")
-    graft.util.BlockRelease.release(Seq(hot, light))
+    (stderrOf(groups(light)) should not).include("WARN graft.dedup")
+    // the pair form's collapse says so when exact-dup multiplicity 30
+    // projects (30 - 1) / 2 = 14.5 member pairs per doc, past
+    // PairAmplificationWarnAt: 100 groups of C(30,2) within pairs
+    val replicated = (0 until 30).map(i => light.select(
+        (col("doc_id") + lit(i * 1000L)).as("doc_id"), col("text")))
+      .reduce(_ unionByName _).localCheckpoint()
+    val amplified = stderrOf {
+      val out = Dedup.minhashNearDups(replicated, "doc_id", "text")
+      out.count() shouldBe 100L * 435L
+      graft.util.BlockRelease.release(out)
+    }
+    amplified should include (
+      "WARN graft.dedup.minhashNearDups: exact-dup multiplicity")
+    amplified.filter(_ >= 128) shouldBe empty
+    graft.util.BlockRelease.release(Seq(hot, light, replicated))
   }
 }
