@@ -16,12 +16,20 @@ import graft.util.SizeGate
   * data-plus-collisions, not pairs. That is the only formulation that
   * survives 100 TB.
   *
-  * Exact-dup collapse: five of the pair forms run their candidate
-  * machinery on one representative per distinct content key when the
-  * corpus is duplicate-heavy, through the one expansion in
-  * [[collapsedPairs]]; SimHash has none ([[pigeonholePairs]]). The
-  * pair-complete contract itself stays quadratic in dup-group size, so
-  * at extreme multiplicities consume a `*NearDupGroups` form instead.
+  * Exact-dup collapse: every near-dup relation here is a function of a
+  * content key (shingle set, (scope, text), vector, fingerprint), so
+  * identical keys give identical signatures and an identical metric
+  * against any third doc: (u, x) collides and verifies iff (v, x) does.
+  * Two skeletons run a kernel on one representative per distinct key.
+  * [[collapsedPairs]] expands rep pairs back to member pairs; four pair
+  * forms take it when the corpus is duplicate-heavy, SimHash never
+  * ([[pigeonholePairs]]). [[collapsedGroups]] always takes it: every
+  * `*NearDupGroups` form attaches members to the components of the rep
+  * graph, which equal the member graph's because identical
+  * pair-eligible docs are near-dups of each other at any threshold the
+  * forms accept. The pair-complete contract itself stays quadratic in
+  * dup-group size, so at extreme multiplicities consume a
+  * `*NearDupGroups` form instead.
   */
 object Dedup {
 
@@ -298,231 +306,48 @@ object Dedup {
     * pair form materialized 41.7M rows at dup multiplicity 30, the
     * largest pair-complete output in the family). Emits (doc_id,
     * canon_id, group_size): components of the "shares ≥1 scoped shingle
-    * AND exact cosine ≥ tauCos" relation, linear in group members —
-    * exact-dup groups by one (scope, text) window, the shingling /
-    * embedding / inverted-index / verify all on REPRESENTATIVES only
-    * (the collapse-tier argument: the group key determines the shingle
-    * set AND the embedding), components over the rep graph, members
-    * attach via gid.
+    * AND exact cosine ≥ tauCos" relation, linear in group members
+    * ([[collapsedGroups]] over one rep per distinct (scope, text): the
+    * group key determines the shingle set AND the embedding).
     *
     * Pair-ineligibility is per TEXT, so it is decided on the REP and
     * inherited: docs whose text yields no shingles (no postings → no
     * candidate) or a zero embedding (the verify's n² > 0 guard) can
-    * never pair — even with an identical twin — and stay singletons
-    * (gid overridden to the doc's own id), exactly the pair form's
-    * emission conditions. Requires tauCos ≤ 1 (identical eligible texts
-    * must be near-dups: their rounded cosine is exactly 1.0). */
+    * never pair — even with an identical twin — and stay singletons,
+    * exactly the pair form's emission conditions. Null text bypasses the
+    * gid stage as a singleton. NON-null degenerate texts (whitespace,
+    * < n tokens) are NOT bypassable: the pair stage's WordShingleHashes
+    * floors at one shingle, so identical degenerate twins DO pair
+    * (cos ≡ 1) and must group. Requires tauCos ≤ 1 (identical eligible
+    * texts must be near-dups: their rounded cosine is exactly 1.0). */
   def shingleCosineGroups(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, tauCos: Double = 0.6, n: Int = 3): DataFrame = {
     require(tauCos <= 1.0,
       "group form needs tauCos <= 1 (identical docs must be near-dups)")
     val d0 = docs.select(col(idCol).cast("long").as("id"),
       col(scopeCol).as("scope"), col(textCol).as("text"))
-    // null-text docs are singletons by the eligibility contract above
-    // (null shingles, null embedding — the pair stage emits nothing for
-    // them): route them AROUND the gid stage (r15). NON-null degenerate
-    // texts (whitespace, < n tokens) are NOT bypassable here — the pair
-    // stage's WordShingleHashes floors at one shingle, so identical
-    // degenerate twins DO pair (cos ≡ 1) and must group; their hot
-    // content key is handled by gidByContent's map-side combine instead.
-    val trivial = col("text").isNull
-    val singletons = d0.filter(trivial)
-      .select(col("id"), col("id").as("gid"))
-    val (withGid, gidScratch) = gidByContent(d0.filter(!trivial),
-      Seq("scope", "text"), checkpointKeyed = false) // plain pruned scan
-    val mem0 = withGid.select(col("id"), col("scope"), col("text"),
-        col("gid"))
-      .cp()
-    graft.util.BlockRelease.release(gidScratch)
-    val reps = mem0.filter(col("id") === col("gid"))
-      .select(col("id").as("doc_id"), col("scope"), col("text"))
-    val (shr, emb, gout) = shingleCosinePairStage(reps, "ga", "gb", tauCos,
-      n, "shingleCosineGroups")
-    // eligibility flags per rep (inherited by the whole exact-dup group)
-    val repFlags = shr.select(col("doc_id").as("gid"),
-        (size(col("shingles")) > 0).as("nz"))
-      .join(emb.select(col("doc_id").as("gid"), (col("n2") > 0).as("pos")),
-        "gid")
-    // checkpointed so groupsFromReps' leaf-walking release never reaches
-    // the caller's input through the singleton branch (d0 is a leaf here)
-    val mem = mem0.select(col("id"), col("gid"))
-      .join(SizeGate.maybeBroadcast(repFlags), Seq("gid"), "left")
-      .select(col("id"),
-        when(col("nz") && col("pos"), col("gid")).otherwise(col("id"))
-          .as("gid"))
-      .unionByName(singletons)
-      .cp()
-    val out = groupsFromReps(mem,
-      gout.select(col("ga").as("src"), col("gb").as("dst")))
-    graft.util.BlockRelease.release(Seq(mem0, shr, emb, gout))
-    out
-  }
-
-  /** Embedding-cosine near-duplicate pairs at threshold `tau` via
-    * signed-random-projection LSH banding (the 100 TB path for vector
-    * dedup): each vector gets `tables` b-bit hyperplane-sign signatures;
-    * candidates come from equality self-joins on (table, signature) —
-    * shuffle ∝ data + collisions, never all pairs — then candidates are
-    * verified with the exact dot product.
-    *
-    * Recall per pair at similarity s: 1 − (1 − p^bits)^tables with
-    * p = 1 − acos(s)/π. At bits=12, tables=48: miss ≈ 3e-4 at s = 0.9 and
-    * ≈ 1.5e-10 at s = 0.97 — true near-duplicates (the use case) sit at
-    * the top of that range. NOT suitable for low thresholds (τ ≲ 0.6):
-    * weakly-similar pairs need tables growing like p^-bits, and the exact
-    * tier (brute τ-join) is the right tool there.
-    *
-    * **Banding resolution AUTO-SCALES with corpus size** (bits/tables = −1,
-    * the default): random-pair bucket collisions cost ~n²·tables·2^-bits
-    * verify evaluations, so FIXED bits turn quadratic one decade above
-    * whatever corpus they were tuned for (measured: 12 bits = 15 s at 50k
-    * docs but 1102 s at 500k — collisions, not signatures, dominate).
-    * bits = max(12, ⌈log2 n⌉ + 2) pins the expected bucket size to O(1)
-    * (collisions ∝ n·tables/4), and tables is re-solved from the recall
-    * law for miss ≤ 3e-4 at s = τ, so recall is corpus-size-invariant.
-    * At 500k/τ=0.9 this picks (21, 207): banding 103M skinny rows
-    * (linear·log), collisions ~1e7 (vs 1.5e9 at fixed 12 bits) —
-    * measured 1102 s → 209 s at 500k, 15.1 → 7.6 s at 50k (with the
-    * skinny-banding restructure below). Explicit bits/tables skip the
-    * count probe and the scaling (the oracle-pinned exact tier passes
-    * fixed values).
-    *
-    * Shape:
-    *  - ALL tables' signatures in one codegen pass ([[graft.functions
-    *    .HyperplaneSigs]]) — the per-table literal-array composition was
-    *    12k+ Catalyst nodes that fell out of whole-stage codegen;
-    *  - banding is SKINNY — (id, t, s) rows, ~24 B each — because with
-    *    auto-scaled tables the banding is what the self-join sorts;
-    *    carrying the vector through it multiplies shuffle/sort bytes by
-    *    dim·8 (measured 47 s vs 7.6 s at 50k, 54 GB of banded state at
-    *    500k). Repartitioned BY (t, s) so a few-file corpus scan's
-    *    partitioning doesn't serialize the bucket join;
-    *  - candidate id-pairs are DEDUPED before vectors are fetched, then
-    *    one sort-merge verify join computes each candidate's dot product
-    *    exactly once. The round-4 objection to staged candidates (8.6M
-    *    materialized for 4.8k pairs at fixed 12 bits in a dense cluster)
-    *    is dissolved by the auto-scaling: collisions are bounded at
-    *    ~n·tables/4, so the candidate set is collision-sized, not
-    *    dense-cluster-quadratic.
-    *
-    * Duplicate-heavy corpora collapse per distinct normalized vector
-    * ([[collapsedPairs]]; the gate rides the probe that feeds
-    * autoBanding's count). A rep's self-pair sim is COMPUTED with the
-    * verify's own expression, never assumed 1.0.
-    *
-    * @param vecs (id, vector) — vectors need not be pre-normalized
-    * @param dim embedding width; callers know it (it's their embed config) —
-    *            the default −1 falls back to a one-row probe, which costs a
-    *            driver action (an extra scan-capable job per call at scale)
-    * @return (id_a, id_b, sim) with id_a < id_b and sim = cosine rounded 4dp
-    */
-  def cosineNearDups(vecs: DataFrame, idCol: String, vCol: String,
-      tau: Double = 0.9, bits: Int = -1, tables: Int = -1,
-      dim: Int = -1): DataFrame = {
-    import graft.functions.VectorFunctions
-    val d = if (dim > 0) dim else vecs.select(size(col(vCol))).first().getInt(0)
-    val n0 = vecs
-      .select(col(idCol).as("id"), VectorFunctions.l2normalize(col(vCol)).as("nv"))
-      .cp() // normalize once: banding AND verify read it
-    // ONE probe action carries the autoBanding count AND the exact-dup
-    // collapse gate (members vs approx-distinct normalized vectors) —
-    // the separate vecs.count() scan is absorbed
-    val probe = n0.agg(count(lit(1)), approx_count_distinct(col("nv"))).first()
-    val (cnt, nDistinct) = (probe.getLong(0), probe.getLong(1))
-    val (b, t) =
-      if (bits > 0 && tables > 0) (bits, tables)
-      else autoBanding(tau, cnt, bits, tables)
-    // SKINNY banding — (id, t, s) only, ~24 B/row: with auto-scaled bits
-    // the banding carries each id `tables` times, and `tables` grows with
-    // ⌈log2 n⌉, so banding bytes are what the self-join sorts/shuffles.
-    // Carrying the vector through the banding (the old verify-in-join
-    // shape) multiplied that by dim·8 B — measured 47 s vs 11 s at 50k
-    // docs, 54 GB of banded state at 500k.
-    //
-    // hint("merge") on BOTH sides (here and in every banding self-join):
-    // the banded set is corpus×tables-sized BY CONSTRUCTION, never a
-    // broadcast candidate — but localCheckpoint propagates the
-    // PRE-checkpoint size estimate, so a stat-less source (in-memory
-    // range/Dataset, no parquet footers) reads as kilobytes and the
-    // static planner elects a broadcast that only fails when the 14.6 GiB
-    // build side materializes (measured on the 500k-doc corpus,
-    // BENCH_LOCAL_r6.md).
-    // AQE cannot demote it: the build side has no shuffle stage to
-    // re-estimate. SMJ is what accurate stats pick here anyway.
-    //
-    // Candidate id-pairs are deduped BEFORE the vectors are fetched: a
-    // true near-dup pair collides in ~tables·p^bits tables, and the
-    // auto-scaled config bounds random collisions at ~n·tables/4, so the
-    // distinct candidate set is collision-sized, and each candidate's
-    // vectors are joined back exactly once for the verify dot product.
-    // Merge-hinted verify joins: neither side may be a broadcast (the
-    // stat-misestimate hazard above) nor a per-partition hash build (the
-    // candidates+vectors intermediate of the second join measured ~7 GB
-    // at 500k docs and blew the per-task memory grant as a hash
-    // relation); sort-merge streams both sides and AQE skew-splits it.
-    def bandPairs(src: DataFrame, la: String, lb: String): DataFrame = {
-      val allSigs = graft.functions.VectorExpressions
-        .hyperplane_sigs(col("nv"), d, "neardup", b, t)
-      val banded = src.select(col("id"), posexplode(allSigs).as(Seq("t", "s")))
-        .repartition(col("t"), col("s"))
-        .cp() // sigs computed once, spread over buckets
-      val candidates = banded.as("a").hint("merge").join(banded.as("b").hint("merge"),
-          col("a.t") === col("b.t") && col("a.s") === col("b.s") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as(la), col("b.id").as(lb))
-        .dropDuplicates(la, lb)
-      val withA = candidates.hint("merge")
-        .join(src.select(col("id").as(la), col("nv").as("va")), la)
-      val out = withA.hint("merge")
-        .join(src.select(col("id").as(lb), col("nv").as("vb")), lb)
-        .select(col(la), col(lb),
-          round(VectorFunctions.dot(col("va"), col("vb")), 4).as("sim"))
-        .filter(col("sim") >= tau)
-        .cp()
-      graft.util.BlockRelease.release(banded)
-      out
+    // no keyed checkpoint: d0 is a plain pruned scan
+    collapsedGroups(d0, Seq("scope", "text"), col("text").isNull,
+        checkpointKeyed = false) { reps =>
+      val (shr, emb, pairs) = shingleCosinePairStage(reps, "src", "dst",
+        tauCos, n, "shingleCosineGroups")
+      val pairless = shr.join(emb, "doc_id")
+        .filter(!(size(col("shingles")) > 0 && col("n2") > 0))
+        .select(col("doc_id").as("gid"))
+      (pairs.select(col("src"), col("dst")), Seq(shr, emb), Some(pairless))
     }
-    val out =
-      if (cnt < CollapseRatio * nDistinct) bandPairs(n0, "id_a", "id_b")
-      else collapsedPairs(n0, "id", Seq("nv"), cnt, "id_a", "id_b",
-          "cosineNearDups", "cosineNearDupGroups") { reps =>
-        // round(dot(nv,nv), 4): the verify's own expression, so zero or
-        // denormal vectors fall out of the threshold as in the direct tier
-        val self = reps.select(col("id").as("gid"),
-            round(VectorFunctions.dot(col("nv"), col("nv")), 4).as("sim"))
-          .filter(col("sim") >= tau)
-        (bandPairs(reps, "ga", "gb"), self, Nil)
-      }
-    graft.util.BlockRelease.release(n0)
-    out
   }
 
-  /** The banding-resolution law (see [[cosineNearDups]] scaladoc):
-    * bits = max(12, ⌈log2 n⌉ + 2) holds expected random-collision work at
-    * O(n·tables); tables solved from the per-pair recall law
-    * 1 − (1 − p^bits)^tables ≥ 1 − 3e-4 at s = τ, p = 1 − acos(τ)/π.
-    * At n ≤ ~1k this reproduces the historical fixed config (12, 48) for
-    * τ = 0.9 exactly, so small-corpus behavior (and every spec golden)
-    * is unchanged. Overrides apply independently. */
-  private[graft] def autoBanding(tau: Double, n: Long,
-      bitsOverride: Int = -1, tablesOverride: Int = -1): (Int, Int) = {
-    val b =
-      if (bitsOverride > 0) bitsOverride
-      else math.max(12, math.ceil(
-        math.log(math.max(n, 2).toDouble) / math.log(2.0)).toInt + 2)
-    val t =
-      if (tablesOverride > 0) tablesOverride
-      else {
-        val p = 1.0 - math.acos(math.min(tau, 1.0)) / math.Pi
-        val hit = math.pow(p, b)
-        math.max(1, math.ceil(math.log(3e-4) / math.log1p(-hit)).toInt)
-      }
-    (b, t)
-  }
-
-  /** [[cosineNearDups]] with a RATIONAL-threshold, integer-exact verify —
-    * the DECIDABLE tier for integer-valued vectors (feature-hash counts
-    * like [[graft.functions.TextFunctions.md5Embed]]'s ±1 bucket sums).
+  /** Embedding-cosine near-duplicate pairs (q24's kernel) by
+    * signed-random-projection LSH banding with a RATIONAL-threshold,
+    * integer-exact verify — the DECIDABLE tier for integer-valued
+    * vectors (feature-hash counts like
+    * [[graft.functions.TextFunctions.md5Embed]]'s ±1 bucket sums). Each
+    * vector gets `tables` b-bit hyperplane-sign signatures; candidates
+    * come from equality self-joins on (table, signature) — shuffle ∝
+    * data + collisions, never all pairs. Recall per pair at cosine s is
+    * 1 − (1 − p^bits)^tables with p = 1 − acos(s)/π; q24 passes 96
+    * tables, whose set-equality with the brute twin it pins.
     *
     * For τ = tauNum/tauDen > 0, `cos(a,b) ≥ τ` is equivalent to
     * `dot > 0 ∧ tauDen²·dot² ≥ tauNum²·|a|²·|b|²` — every operand an
@@ -531,9 +356,8 @@ object Dedup {
     * reproduces the vectors reproduces the PAIR SET bit-for-bit: no
     * floating-point rounding boundary exists for a pair to sit on (the
     * round-5 q24 oracle attempt died on exactly such a boundary).
-    * Candidate generation is unchanged SRP banding (hyperplane signs are
-    * scale-invariant, so raw integer vectors band identically to their
-    * normalized forms); only the verify predicate differs.
+    * Hyperplane signs are scale-invariant, so raw integer vectors band
+    * identically to their normalized forms.
     *
     * Zero vectors (all tokens hash-cancelled) have no cosine and are
     * excluded, mirrored by `n2 > 0` in SQL twins.
@@ -580,15 +404,24 @@ object Dedup {
     * `keepMetrics` carries (dot, na2, nb2) through the dedup; the group
     * form keeps only the ids.
     *
-    * FAT banding with verify-inside-join — deliberately NOT the float
-    * tier's skinny/dedup-then-verify shape: this tier runs at the oracle
-    * SFs on a DENSE near-dup corpus (sf0.1: 120k true pairs over 5k
-    * docs, ~15 bucket hits per true pair at 96 tables), where filtering
-    * to true pairs BEFORE the distinct keeps the dedup output-sized; a
-    * candidate-first restructure measured 4.5 → 23 s here. The skinny
-    * shape wins in the float tier's regime (huge corpora, collision-
-    * bounded candidates via autoBanding); the two tiers document the
-    * crossover.
+    * FAT banding with verify-inside-join, not a skinny (id, t, s)
+    * banding that dedups candidates before fetching vectors: this tier
+    * runs at the oracle SFs on a DENSE near-dup corpus (sf0.1: 120k true
+    * pairs over 5k docs, ~15 bucket hits per true pair at 96 tables),
+    * where filtering to true pairs BEFORE the distinct keeps the dedup
+    * output-sized; a candidate-first restructure measured 4.5 → 23 s
+    * here.
+    *
+    * Merge hints on BOTH sides of the bucket self-join (as in every
+    * banding self-join here): the banded set is corpus×tables-sized BY
+    * CONSTRUCTION, never a broadcast candidate, but localCheckpoint
+    * propagates the PRE-checkpoint size estimate, so a stat-less source
+    * (in-memory range/Dataset, no parquet footers) reads as kilobytes
+    * and the static planner elects a broadcast that only fails when the
+    * build side materializes (14.6 GiB on the 500k-doc corpus,
+    * BENCH_LOCAL_r6.md). AQE cannot demote it: the build side has no
+    * shuffle stage to re-estimate. Sort-merge is what accurate stats
+    * pick here anyway.
     *
     * Exactness GUARD, not just a scaladoc bound: the decidability
     * contract needs every predicate operand exact in doubles, and
@@ -731,7 +564,7 @@ object Dedup {
       }
     }
     // merge-hinted: mem is corpus-sized and checkpoint stats
-    // under-estimate (the banding broadcast hazard, [[cosineNearDups]])
+    // under-estimate (the banding broadcast hazard, [[rationalCosinePairs]])
     val cross = gpairs.hint("merge")
       .join(mem.select(col("gid").as("ga"), col("id").as("ida")).hint("merge"), "ga")
       .hint("merge")
@@ -795,23 +628,13 @@ object Dedup {
     * the pair forms' collapse group structure EXPOSED rather than
     * expanded, and the form a dedup pipeline actually consumes
     * (keep-canonical, drop the rest — the q73 canonicalization shape).
+    * Cost is linear where the pair form is quadratic
+    * ([[collapsedGroups]]): dup-group size k costs k rows, not C(k,2).
     *
-    * Cost is linear where the pair form is quadratic: exact-dup groups
-    * ride ONE window shuffle (gid = min id per identical vector),
-    * banding runs on REPRESENTATIVES only (identical vectors band
-    * identically — the [[collapsedPairs]] argument),
-    * and components are computed over the rep graph (∝ reps + rep
-    * pairs). No within-group or cross-group member-pair expansion ever
-    * happens, so dup-group size k costs k rows, not C(k,2).
-    *
-    * Exactness: gid is exact (vector equality); rep pairs carry the
-    * integer-rational predicate of the exact tier; components over the
-    * rep graph equal components over the full member graph because each
-    * member connects to its rep (identical vectors are near-dups at any
-    * τ ≤ 1) and a member-level edge (a, b) exists iff the rep-level edge
-    * (rep(a), rep(b)) does (the collapse equivalence). Zero vectors have
-    * no cosine: they group by exact equality only (identical zero
-    * vectors share a gid) and never cross-link. */
+    * Rep pairs carry the integer-rational predicate of
+    * [[cosineNearDupsExact]]. Zero vectors have no cosine: they group by
+    * exact equality only (identical zero or null vectors share a gid)
+    * and never cross-link. */
   def cosineNearDupGroups(vecs: DataFrame, idCol: String, vCol: String,
       tauNum: Long = 9, tauDen: Long = 10, bits: Int = 12,
       tables: Int = 48, dim: Int = -1): DataFrame = {
@@ -819,25 +642,61 @@ object Dedup {
     val base = vecs.select(col(idCol).cast("long").as("id"),
       col(vCol).as("v"),
       VectorFunctions.dot(col(vCol), col(vCol)).as("n2"))
-    // exact-dup groups by vector equality — hash-keyed map-side-combined
-    // groupBy (r15; was a v-partitioned window that serialized a hot
-    // vector — e.g. the zero embedding of 10⁹ empty crawl docs — into
-    // one task). Zero/null vectors still GROUP (identical zeros share a
-    // gid, per the contract above); they are excluded at the REP stage.
-    val (withGid, gidScratch) = gidByContent(base, Seq("v"))
-    val mem = withGid.select(col("id"), col("v"), col("n2"), col("gid"))
+    collapsedGroups(base, Seq("v"), lit(false), checkpointKeyed = true) {
+      reps0 =>
+        val reps = reps0.filter(col("n2") > 0).withColumnRenamed("doc_id", "id")
+        val d = if (dim > 0) dim else reps.select(size(col("v"))).first().getInt(0)
+        val maxN2 = reps.agg(coalesce(max(col("n2")), lit(0.0))).first()
+          .getDouble(0)
+        (rationalCosinePairs(reps, "src", "dst", tauNum, tauDen, d, bits,
+          tables, maxN2, "cosineNearDupGroups", keepMetrics = false), Nil, None)
+    }
+  }
+
+  /** The exact-dup collapse of the five `*NearDupGroups` forms, the
+    * group twin of [[collapsedPairs]] (the argument is in the [[Dedup]]
+    * scaladoc):
+    *
+    *  1. rows where `singleton` holds (it must never be null) bypass the
+    *     gid stage as their own group; the rest get gid = min member id
+    *     per distinct `contentCols` ([[gidByContent]], hash-keyed and
+    *     map-side combined, so a hot content key never lands in one
+    *     task). Both are checkpointed as the member frame, and a cached
+    *     `members` (a long `id` plus `contentCols`) is unpersisted;
+    *  1. `stage` runs the kernel's own edge stage on one rep per gid
+    *     (`members`' columns with `id` renamed `doc_id`, bypassed rows
+    *     left out) and returns the verified rep edges (src, dst), scratch
+    *     frames to release at the end and, optionally, the gids whose
+    *     groups are pair-ineligible: their members become singletons;
+    *  1. [[groupsFromReps]] attaches every member to the min id of its
+    *     rep-graph component.
+    *
+    * Returns the checkpointed (doc_id, canon_id, group_size). */
+  private def collapsedGroups(members: DataFrame, contentCols: Seq[String],
+      singleton: Column, checkpointKeyed: Boolean)(
+      stage: DataFrame => (DataFrame, Seq[DataFrame], Option[DataFrame])):
+      DataFrame = {
+    val (withGid, gidScratch) = gidByContent(members.filter(!singleton),
+      contentCols, checkpointKeyed)
+    val mem0 = withGid
+      .unionByName(members.filter(singleton).withColumn("gid", col("id")))
       .cp()
     graft.util.BlockRelease.release(gidScratch)
-    val reps = mem.filter(col("id") === col("gid") && col("n2") > 0)
-      .select(col("id"), col("v"), col("n2"))
-    val d = if (dim > 0) dim else reps.select(size(col("v"))).first().getInt(0)
-    val maxN2 = reps.agg(coalesce(max(col("n2")), lit(0.0))).first()
-      .getDouble(0)
-    val repEdges = rationalCosinePairs(reps, "id_a", "id_b", tauNum, tauDen,
-      d, bits, tables, maxN2, "cosineNearDupGroups", keepMetrics = false)
-    val out = groupsFromReps(mem,
-      repEdges.select(col("id_a").as("src"), col("id_b").as("dst")))
-    graft.util.BlockRelease.release(repEdges)
+    members.unpersist(blocking = false)
+    val (edges, scratch, pairless) = stage(
+      mem0.filter(col("id") === col("gid") && !singleton).drop("gid")
+        .withColumnRenamed("id", "doc_id"))
+    val mem = pairless.fold(mem0) { bad =>
+      mem0.select(col("id"), col("gid"))
+        .join(SizeGate.maybeBroadcast(
+          bad.select(col("gid"), lit(true).as("_pairless"))), Seq("gid"), "left")
+        .select(col("id"),
+          when(col("_pairless"), col("id")).otherwise(col("gid")).as("gid"))
+        .cp()
+    }
+    val out = groupsFromReps(mem, edges)
+    graft.util.BlockRelease.release(
+      (if (mem eq mem0) Nil else Seq(mem0)) ++ scratch :+ edges)
     out
   }
 
@@ -987,64 +846,46 @@ object Dedup {
     * (doc_id, canon_id, group_size) where canon_id = min doc id of the
     * doc's connected component under the exact-Jaccard-≥ threshold
     * relation — i.e. the components of [[minhashNearDups]]'s own pair
-    * output — at cost linear in dup-group members: exact-dup groups ride
-    * ONE window shuffle (gid = min id per identical shingle list),
-    * banding + verify run on REPRESENTATIVES only, components on the rep
-    * graph, members attach via gid. No C(k,2) pair materialization
-    * anywhere.
-    *
-    * Exactness: identical shingle lists have identical signatures and
-    * Jaccard ≡ 1 ≥ threshold against each other (threshold ≤ 1
-    * required), so member-level components equal rep-level components
-    * with members attached (the collapse equivalence at
-    * [[collapsedPairs]]); docs whose shingle set is EMPTY can never
-    * pair (no postings, no signature) and stay singletons. Ids must be
-    * numeric (component node ids). */
+    * output — with banding + verify on one rep per distinct shingle
+    * list ([[collapsedGroups]]; threshold ≤ 1 required, so identical
+    * lists are near-dups). Docs whose shingle set is empty or null can
+    * never pair (no postings, no signature) and stay singletons: they
+    * bypass the gid stage, where the empty array would be a crawl
+    * corpus's hottest content key. Ids must be numeric (component node
+    * ids). */
   def minhashNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame = {
     require(threshold <= 1.0,
       "group form needs threshold <= 1 (identical docs must be near-dups)")
     val sh = shingledHashes(docs, idCol, textCol)
       .select(col("doc_id").cast("long").as("id"), col("shingles"))
-      .cache()
-    // pair-ineligible docs (empty OR null shingle set — no postings, no
-    // signature, so the pair form can never emit for them: singletons by
-    // the components-of-pairs contract) are routed AROUND the gid stage
-    // entirely (r15): the empty array is a crawl corpus's hottest
-    // content key, and the old window computed over those rows only to
-    // have its value discarded by the `when`.
-    val ineligible = coalesce(size(col("shingles")) === 0, lit(true))
-    val singletons = sh.filter(ineligible)
-      .select(col("id"), col("shingles"), col("id").as("gid"))
-    val (withGid, gidScratch) = gidByContent(sh.filter(!ineligible),
-      Seq("shingles"), checkpointKeyed = false) // sh is cached above
-    val mem = withGid.select(col("id"), col("shingles"), col("gid"))
-      .unionByName(singletons)
-      .cp()
-    graft.util.BlockRelease.release(gidScratch)
-    sh.unpersist(blocking = false)
-    val reps = mem.filter(col("id") === col("gid") && size(col("shingles")) > 0)
-      .select(col("id").as("doc_id"), col("shingles"))
-    val cand = minhashCandidates(reps, k, bands, "minhashNearDupGroups")
-    val edges = jaccardOfPairs(cand, reps)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-      .cp()
-    graft.util.BlockRelease.release(cand)
-    val out = groupsFromReps(mem,
-      edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    graft.util.BlockRelease.release(edges)
-    out
+      .cache() // cached, so the gid stage needs no keyed checkpoint
+    collapsedGroups(sh, Seq("shingles"), noShingles, checkpointKeyed = false) {
+      reps =>
+        val cand = minhashCandidates(reps, k, bands, "minhashNearDupGroups")
+        val edges = jaccardOfPairs(cand, reps)
+          .filter(col("jaccard") >= threshold)
+          .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .cp()
+        graft.util.BlockRelease.release(cand)
+        (edges, Nil, None)
+    }
   }
 
+  /** An empty or null shingle set: no postings, no signature, never a
+    * pair — the Jaccard group forms' singleton bypass. */
+  private def noShingles: Column =
+    coalesce(size(col("shingles")) === 0, lit(true))
+
   /** COMPACT GROUP form of [[ngramJaccardNearDups]] (same r14 extension,
-    * same output contract as [[minhashNearDupGroups]] but with the exact
-    * inverted-index kernel and per-`scopeCol` pairing): canon groups are
-    * the connected components of the scoped exact-Jaccard pair relation;
-    * edges never cross scopes, so neither do groups. Representatives =
-    * one doc per distinct (scope, shingle list); the inverted-index
-    * self-join runs on reps only, so dup-group size k costs k rows, not
-    * the pair form's C(k,2) postings blow-up. */
+    * same output contract and singleton bypass as
+    * [[minhashNearDupGroups]] but with the exact inverted-index kernel
+    * and per-`scopeCol` pairing): canon groups are the connected
+    * components of the scoped exact-Jaccard pair relation; edges never
+    * cross scopes, so neither do groups. Representatives = one doc per
+    * distinct (scope, shingle list); the inverted-index self-join runs on
+    * reps only, so dup-group size k costs k rows, not the pair form's
+    * C(k,2) postings blow-up. */
   def jaccardNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, threshold: Double = 0.5, n: Int = 3): DataFrame = {
     require(threshold <= 1.0,
@@ -1053,32 +894,15 @@ object Dedup {
         spread = false) // cheap FNV shingles; measured −0.7 s off (q113)
       .select(col("doc_id").cast("long").as("id"), col(scopeCol),
         col("shingles"))
-      .cache()
-    // same r15 shape as [[minhashNearDupGroups]]: singletons (empty or
-    // null shingle set) bypass the gid stage; eligible docs get a
-    // hash-keyed map-side-combined gid over (scope, shingle list)
-    val ineligible = coalesce(size(col("shingles")) === 0, lit(true))
-    val singletons = sh.filter(ineligible)
-      .select(col("id"), col(scopeCol), col("shingles"),
-        col("id").as("gid"))
-    val (withGid, gidScratch) = gidByContent(sh.filter(!ineligible),
-      Seq(scopeCol, "shingles"), checkpointKeyed = false) // sh cached
-    val mem = withGid
-      .select(col("id"), col(scopeCol), col("shingles"), col("gid"))
-      .unionByName(singletons)
-      .cp()
-    graft.util.BlockRelease.release(gidScratch)
-    sh.unpersist(blocking = false)
-    val reps = mem.filter(col("id") === col("gid") && size(col("shingles")) > 0)
-      .select(col("id").as("doc_id"), col(scopeCol), col("shingles"))
-    val (ex, pairs) = postingJaccardPairs(reps, scopeCol, threshold,
-      "doc_a", "doc_b", "jaccardNearDupGroups")
-    val edges = pairs.select(col("doc_a"), col("doc_b")).cp()
-    graft.util.BlockRelease.release(ex)
-    val out = groupsFromReps(mem,
-      edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    graft.util.BlockRelease.release(edges)
-    out
+      .cache() // cached, so the gid stage needs no keyed checkpoint
+    collapsedGroups(sh, Seq(scopeCol, "shingles"), noShingles,
+        checkpointKeyed = false) { reps =>
+      val (ex, pairs) = postingJaccardPairs(reps, scopeCol, threshold,
+        "src", "dst", "jaccardNearDupGroups")
+      val edges = pairs.select(col("src"), col("dst")).cp()
+      graft.util.BlockRelease.release(ex)
+      (edges, Nil, None)
+    }
   }
 
   /** Exact all-pairs twin of [[cosineNearDupsExact]] (same rational
@@ -1097,19 +921,6 @@ object Dedup {
       .filter(col("dot") > 0 &&
         lit(tauDen * tauDen) * col("dot") * col("dot") >=
           lit(tauNum * tauNum) * col("na2") * col("nb2"))
-  }
-
-  /** Exact all-pairs twin of [[cosineNearDups]] — the spec-side ground
-    * truth (O(n²); never the registered path at scale). */
-  def cosineNearDupsBrute(vecs: DataFrame, idCol: String, vCol: String,
-      tau: Double): DataFrame = {
-    import graft.functions.VectorFunctions
-    val n = vecs.select(col(idCol).as("id"),
-      VectorFunctions.l2normalize(col(vCol)).as("nv"))
-    n.as("a").join(n.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(VectorFunctions.dot(col("a.nv"), col("b.nv")), 4).as("sim"))
-      .filter(col("sim") >= tau)
   }
 
   /** Benchmark DECONTAMINATION (the eval-leak scrub of a training corpus):
@@ -1340,50 +1151,42 @@ object Dedup {
     * escape hatch applied to the SimHash kernel, completing the group
     * family across every near-dup relation the engine ships. Emits
     * (doc_id, canon_id, group_size): components of the Hamming ≤ maxDist
-    * relation over the md5-twin fingerprints, at cost linear in
-    * dup-group members — exact-dup groups ride one window over the
-    * fingerprint pair (identical fingerprints are at distance 0, so they
-    * are near-dups at ANY maxDist ≥ 0 — no threshold caveat, unlike the
-    * Jaccard forms), pigeonhole banding runs on one representative per
-    * distinct fingerprint, components on the rep graph, members attach
-    * via gid. The pigeonhole candidates are EXACT for the distance bound
-    * (any pair within Hamming maxDist shares one of maxDist+1 chunks),
-    * so unlike the MinHash form there is no banding-recall pin: engine
-    * components equal true-pair components unconditionally. The pair
-    * form's measured negative result for a SimHash collapse
+    * relation over the md5-twin fingerprints, with pigeonhole banding on
+    * one rep per distinct fingerprint ([[collapsedGroups]]; identical
+    * fingerprints are at distance 0, so they are near-dups at ANY
+    * maxDist ≥ 0 — no threshold caveat, unlike the Jaccard forms). The
+    * pigeonhole candidates are EXACT for the distance bound (any pair
+    * within Hamming maxDist shares one of maxDist+1 chunks), so unlike
+    * the MinHash form there is no banding-recall pin: engine components
+    * equal true-pair components unconditionally. The pair form's
+    * measured negative result for a SimHash collapse
     * ([[pigeonholePairs]]: the fingerprint groupBy dominates and must
-    * run per member) applies here too — but the group form's
-    * win is the OUTPUT, not the banding: C(k,2) pair rows never
-    * materialize. */
+    * run per member) applies here too — but the group form's win is the
+    * OUTPUT, not the banding: C(k,2) pair rows never materialize.
+    *
+    * Null text has no tokens, hence no fingerprint row: it rejoins the
+    * member frame with a null fingerprint and bypasses the gid stage as
+    * a singleton, as in q114's oracle (a LEFT JOIN from documents). */
   def simhashNearDupGroupsMd5(docs: DataFrame, idCol: String,
       textCol: String, maxDist: Int = 3): DataFrame = {
     val chunks = maxDist + 1
     val width = 64 / chunks
     require(width <= 32 && 32 % width == 0,
       s"chunk width $width must divide 32 (supported maxDist: 1, 3, 7)")
-    // gid over the (fp_lo, fp_hi) fingerprint — narrow keys, but the
-    // same no-combine window shape: a boilerplate fingerprint carried by
-    // 10⁹ docs serialized one task. r15: hash-keyed groupBy + join-back.
-    val (withGid, gidScratch) = gidByContent(
-      simhashMd5Fp(docs, idCol, textCol)
-        .select(col("doc_id").cast("long").as("id"),
-          col("fp_lo"), col("fp_hi")),
-      Seq("fp_lo", "fp_hi"))
-    val mem = withGid
-      .select(col("id"), col("fp_lo"), col("fp_hi"), col("gid"))
-      .cp()
-    graft.util.BlockRelease.release(gidScratch)
-    val reps = mem.filter(col("id") === col("gid"))
-      .select(col("id").as("doc_id"), col("fp_lo"), col("fp_hi"))
-    val pairs = pigeonholeBandJoin(reps, Seq("fp_lo", "fp_hi"),
-        simhashChunkCols(chunks, width), maxDist, simhashMd5Dist,
-        "doc_a", "doc_b", "simhashNearDupGroupsMd5")
-      .select(col("doc_a"), col("doc_b"))
-      .cp()
-    val out = groupsFromReps(mem,
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-    graft.util.BlockRelease.release(pairs)
-    out
+    val fp = simhashMd5Fp(docs, idCol, textCol)
+      .select(col("doc_id").cast("long").as("id"), col("fp_lo"), col("fp_hi"))
+    val noText = docs.filter(col(textCol).isNull)
+      .select(col(idCol).cast("long").as("id"),
+        lit(null).cast("long").as("fp_lo"), lit(null).cast("long").as("fp_hi"))
+    collapsedGroups(fp.unionByName(noText), Seq("fp_lo", "fp_hi"),
+        col("fp_lo").isNull, checkpointKeyed = true) { reps =>
+      val edges = pigeonholeBandJoin(reps, Seq("fp_lo", "fp_hi"),
+          simhashChunkCols(chunks, width), maxDist, simhashMd5Dist,
+          "src", "dst", "simhashNearDupGroupsMd5")
+        .select(col("src"), col("dst"))
+        .cp()
+      (edges, Nil, None)
+    }
   }
 
   /** SimHash near-dup pairs with Hamming ≤ maxDist: pigeonhole banding —

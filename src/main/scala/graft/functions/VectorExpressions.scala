@@ -194,7 +194,7 @@ case class HyperplaneSigs(child: Expression, dim: Int, prefix: String,
   * few smallest-margin bits recovers most hamming-1 misses, and a table
   * catches a pair when either side's EXACT signature equals any of the
   * other side's probe signatures (the asymmetric index×probe join in
-  * [[graft.dedup.Dedup.cosineNearDups]]). Same plane family and seeding as
+  * [[graft.similarity.Ann.lshTopK]]). Same plane family and seeding as
   * [[HyperplaneSigs]] (probes = 0 degenerates to it exactly), so existing
   * signatures/goldens are unchanged wherever the flips are unused. */
 case class HyperplaneProbes(child: Expression, dim: Int, prefix: String,

@@ -78,7 +78,7 @@ object DensityCluster {
 
   /** LSH candidate ε-edges (the scale tier of [[dbscan]]). No driver
     * action before the candidate join (the round-4 discipline of
-    * `Dedup.cosineNearDups`/`Ann.lshTopK`): the centering mean rides a
+    * `Ann.lshTopK`): the centering mean rides a
     * broadcast 1-row aggregate instead of a `first()` probe, and the
     * hyperplane width comes from the `dim` parameter (callers know their
     * embed config; the −1 fallback probes once, documented). */

@@ -116,9 +116,7 @@ object VectorQueries {
     * (the oracle cannot replay engine-side banding); this surface pins
     * the exact parts (the true set, the subset invariant) and the
     * measured part (set equality) as decidable booleans — the
-    * q42/q45/q47 surface pattern. The float-τ native tier
-    * ([[graft.dedup.Dedup.cosineNearDups]]) remains the general-vector
-    * operator, spec-proven equal to brute in DedupSpec.
+    * q42/q45/q47 surface pattern.
     *
     * SCALE GATE (r8, the r7 VERDICT's one `weak` marking on a green
     * query): the brute true-pair twin is Θ(n²) — correct at sf0.1, the

@@ -40,8 +40,7 @@ object Ann {
 
   /** Signed-random-projection signature: `bits` hyperplane sign bits packed
     * into a long. Same `prefix` ⇒ same hyperplanes (deterministic across
-    * runs and call sites — [[lshTopK]] and Dedup.cosineNearDups share the
-    * machinery). */
+    * runs and call sites). */
   def hyperplaneSig(v: Column, dim: Int, prefix: String, bits: Int): Column =
     (0 until bits).map { b =>
       when(VectorFunctions.dot(v, plane(s"$prefix-$b", dim)) >= 0.0,
@@ -64,7 +63,7 @@ object Ann {
     * (The symmetric variant does NOT pay off for banding SELF-joins:
     * both sides then need the probe rows, and measured total row volume
     * stays ≈flat vs classic at equal recall — see BENCH_LOCAL_r7.md —
-    * which is why Dedup.cosineNearDups stays classic.)
+    * which is why the Dedup cosine banding self-joins stay classic.)
     *
     * `dim` is the embedding width — callers know it (q27 reads it off the
     * query vector it already fetched); the default −1 falls back to a

@@ -65,13 +65,15 @@ object BlockRelease {
     } catch { case _: Exception => Seq.empty }
 
   /** Release cache entries AND checkpoint blocks reachable from `df`'s
-    * plan leaves. Safe to call twice; never throws. */
+    * plan leaves. Safe to call twice; never throws. Checkpoint blocks
+    * drop through [[org.apache.spark.rdd.graftbridge.BlockBridge]], so a
+    * deliberate release logs nothing. */
   def release(df: DataFrame): Unit = {
     try df.unpersist(blocking = false)
     catch { case _: Exception => () }
     try df.queryExecution.logical.collectLeaves().foreach {
       case l: LogicalRDD if !protectedIds.contains(l.rdd.id) =>
-        try { l.rdd.unpersist(blocking = false); () }
+        try org.apache.spark.rdd.graftbridge.BlockBridge.dropBlocks(l.rdd)
         catch { case _: Exception => () }
       case _ => ()
     } catch { case _: Exception => () }

@@ -93,42 +93,6 @@ class DedupSpec extends SparkSpec with Matchers {
     lsh shouldBe truth
   }
 
-  test("cosine-LSH near-dups equal brute force on hashed doc embeddings (q24 ground truth)") {
-    import graft.functions.TextExpressions.embed_text
-    // both test scales — sf0.01 is the driver's correctness SF
-    for (d <- Seq(dir, "/root/testdata/sf0.01")) {
-      val docs = Tables.load(spark, d, "documents")
-        .select(col("doc_id"), embed_text(col("text"), 64).as("v"))
-      val truth = Dedup.cosineNearDupsBrute(docs, "doc_id", "v", tau = 0.9)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      truth should not be empty // planted rewordings embed nearly identically
-      val lsh = Dedup.cosineNearDups(docs, "doc_id", "v", tau = 0.9)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      lsh shouldBe truth // banding recalls every ≥0.9 pair here (miss ≈ 2.6e-3
-      //                    per borderline pair, deterministic hyperplanes);
-      //                    the exact-verify stage removes all false positives
-    }
-  }
-
-  test("cosine-LSH float tier: dup-heavy corpus takes the collapse tier and matches brute (r12)") {
-    import graft.functions.TextExpressions.embed_text
-    // 3-way replicate: identical embeddings trip the 1.25 gate NATURALLY;
-    // (pair, sim) rows — within-group sim computed from the rep, not
-    // assumed — must equal the brute twin's
-    val base = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), embed_text(col("text"), 64).as("v"))
-    val docs = (0 until 3).map(i => base.select(
-        (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("v")))
-      .reduce(_ unionByName _).localCheckpoint()
-    val truth = Dedup.cosineNearDupsBrute(docs, "doc_id", "v", tau = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val lsh = Dedup.cosineNearDups(docs, "doc_id", "v", tau = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    graft.util.BlockRelease.release(docs)
-    truth should not be empty
-    lsh shouldBe truth
-  }
-
   test("exact dedup groups: one group per normalized text") {
     val s = spark
     import s.implicits._
@@ -303,23 +267,6 @@ class DedupSpec extends SparkSpec with Matchers {
     r.exists(_._3 == 0L) shouldBe true
     r shouldBe brute(replicated, 3)
     graft.util.BlockRelease.release(replicated)
-  }
-
-  test("auto-banding law: small-n config unchanged, bits track corpus size, recall bound holds") {
-    // historical fixed config reproduced exactly at spec scale — goldens
-    // and measured recalls for small corpora are untouched by the law
-    Dedup.autoBanding(0.9, 500) shouldBe ((12, 48))
-    Dedup.autoBanding(0.9, 5000)._1 shouldBe 15
-    Dedup.autoBanding(0.9, 500000)._1 shouldBe 21
-    // the miss bound is corpus-size-invariant: every returned config
-    // keeps per-pair miss at s = τ under 3e-4 (+ceil slack)
-    val p = 1.0 - math.acos(0.9) / math.Pi
-    for (n <- Seq(100L, 5000L, 500000L, 50000000L, 5000000000L)) {
-      val (b, t) = Dedup.autoBanding(0.9, n)
-      math.pow(1.0 - math.pow(p, b), t) should be <= 3.1e-4
-    }
-    // explicit overrides bypass the law independently
-    Dedup.autoBanding(0.9, 500000, bitsOverride = 12, tablesOverride = 96) shouldBe ((12, 96))
   }
 
   test("rational-threshold exact tier: cos = 0.9 boundary decided exactly, LSH == brute at both SFs") {
@@ -593,61 +540,96 @@ class DedupSpec extends SparkSpec with Matchers {
   }
 
   test("group forms: degenerate hot content — contracts hold at multiplicity (r15)") {
+    import graft.functions.TextFunctions.md5Embed
     val s2 = spark
     import s2.implicits._
     // degenerate hot content a crawl corpus carries by the million:
-    // whitespace-only texts, < n-token boilerplate, and null texts.
-    // WordShingleHashes (all three kernels' shingling) emits >= 1
-    // shingle for ANY non-null text, so whitespace/boilerplate twins
-    // legitimately pair (jaccard / cos == 1) and must come back as ONE
-    // group — collapsed map-side by the hash-keyed gid stage, never a
-    // single hot window task; null text has null shingles / a null
-    // embedding and must be a singleton (the pair forms emit nothing
-    // for it). Components-of-pairs is the master pin either way.
+    // whitespace-only and empty texts, < n-token boilerplate, null texts
+    // and zero vectors. WordShingleHashes (all three shingle kernels)
+    // and the md5 tokenizers (md5Embed, the md5 SimHash) see whitespace-
+    // only and empty text as ONE empty token, so those twins
+    // legitimately pair (jaccard / cos == 1, Hamming 0) and must come
+    // back as ONE group — collapsed map-side by the hash-keyed gid
+    // stage, never a single hot window task; null text has no shingles,
+    // no fingerprint and a null embedding, and the text forms must keep
+    // it as a singleton (the pair forms emit nothing for it).
+    // Components-of-pairs is the master pin; every form must also be
+    // TOTAL: each input id exactly once, group_size = its canon's count.
     val realBase = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source")).limit(30)
     val degenerate = ((1000001L to 1000020L).map(i => (i, "   ", "web")) ++
       (1000021L to 1000040L).map(i => (i, "404 error", "web")) ++
-      (1000041L to 1000045L).map(i => (i, null.asInstanceOf[String], "web")))
+      (1000041L to 1000045L).map(i => (i, null.asInstanceOf[String], "web")) ++
+      (1000046L to 1000050L).map(i => (i, "", "web")))
       .toDF("doc_id", "text", "source")
     val docs = realBase.unionByName(degenerate).localCheckpoint()
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
 
+    def total(out: org.apache.spark.sql.DataFrame,
+        expectedIds: Array[Long]): Map[Long, (Long, Long)] = {
+      val rows = out.select("doc_id", "canon_id", "group_size").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      rows.map(_._1).sorted shouldBe expectedIds.sorted
+      val canonCount = rows.groupBy(_._2).map { case (c, m) => c -> m.length.toLong }
+      rows.foreach { case (_, canon, size) => size shouldBe canonCount(canon) }
+      rows.map(r => r._1 -> (r._2, r._3)).toMap
+    }
+    def pairsOf(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1)))
     def check(groups: Map[Long, (Long, Long)],
         pairs: Array[(Long, Long)]): Unit =
       expectGroupsEqualPairs(groups, pairs, ids)
+    val nulls = 1000041L to 1000045L
 
-    val mh = Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    check(mh,
-      Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-    mh(1000001L) shouldBe ((1000001L, 20L)) // whitespace twins: one group
+    val mh = total(Dedup.minhashNearDupGroups(docs, "doc_id", "text", 0.5), ids)
+    check(mh, pairsOf(Dedup.minhashNearDups(docs, "doc_id", "text", 0.5),
+      "doc_a", "doc_b"))
+    mh(1000001L) shouldBe ((1000001L, 25L)) // whitespace + empty twins: one group
     mh(1000021L) shouldBe ((1000021L, 20L)) // boilerplate twins: one group
-    (1000041L to 1000045L).foreach(i => mh(i) shouldBe ((i, 1L))) // nulls
+    nulls.foreach(i => mh(i) shouldBe ((i, 1L)))
 
-    val jc = Dedup
-      .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 3)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    check(jc,
-      Dedup.ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 3)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-    jc(1000001L) shouldBe ((1000001L, 20L))
-    (1000041L to 1000045L).foreach(i => jc(i) shouldBe ((i, 1L)))
+    val jc = total(Dedup
+      .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 3), ids)
+    check(jc, pairsOf(
+      Dedup.ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 3),
+      "doc_a", "doc_b"))
+    jc(1000001L) shouldBe ((1000001L, 25L))
+    nulls.foreach(i => jc(i) shouldBe ((i, 1L)))
 
-    val sc = Dedup
-      .shingleCosineGroups(docs, "doc_id", "text", "source", 0.6, 3)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    check(sc,
-      Dedup.shingleCosineVerify(docs, "doc_id", "text", "source", 0.6, 3)
-        .select("doc_a", "doc_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
-    sc(1000001L) shouldBe ((1000001L, 20L)) // whitespace twins: one group
+    val sc = total(Dedup
+      .shingleCosineGroups(docs, "doc_id", "text", "source", 0.6, 3), ids)
+    check(sc, pairsOf(
+      Dedup.shingleCosineVerify(docs, "doc_id", "text", "source", 0.6, 3),
+      "doc_a", "doc_b"))
+    sc(1000001L) shouldBe ((1000001L, 25L)) // whitespace + empty twins: one group
     sc(1000021L) shouldBe ((1000021L, 20L)) // boilerplate twins: one group
-    (1000041L to 1000045L).foreach(i => sc(i) shouldBe ((i, 1L))) // nulls
-    graft.util.BlockRelease.release(docs)
+    nulls.foreach(i => sc(i) shouldBe ((i, 1L)))
+
+    val sh = total(Dedup.simhashNearDupGroupsMd5(docs, "doc_id", "text", 3), ids)
+    check(sh, pairsOf(Dedup.simhashNearDupsMd5(docs, "doc_id", "text", 3),
+      "doc_a", "doc_b"))
+    nulls.foreach(i => sh(i) shouldBe ((i, 1L))) // no tokens, no fingerprint
+
+    // the embedding form: null text embeds to a null vector, plus three
+    // zero vectors; both group by exact equality only and never pair
+    val zeros = (1000051L to 1000053L).map(i => (i, Seq.fill(16)(0.0)))
+      .toDF("doc_id", "v")
+    val vecs = docs.select(col("doc_id"), md5Embed(col("text")).as("v"))
+      .unionByName(zeros).localCheckpoint()
+    val vecIds = ids ++ zeros.select("doc_id").collect().map(_.getLong(0))
+    val cg = total(Dedup
+      .cosineNearDupGroups(vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16),
+      vecIds)
+    val sameVec = vecs.select(col("doc_id"),
+        min(col("doc_id")).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("v"))).as("g"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    expectGroupsEqualPairs(cg, pairsOf(Dedup
+        .cosineNearDupsExact(vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16),
+        "id_a", "id_b") ++ sameVec, vecIds)
+    nulls.foreach(i => cg(i) shouldBe ((1000041L, 5L)))
+    (1000051L to 1000053L).foreach(i => cg(i) shouldBe ((1000051L, 3L)))
+    graft.util.BlockRelease.release(Seq(docs, vecs))
   }
 
   test("pair-amplification guard projects over ELIGIBLE members only (r15 ADVICE)") {
