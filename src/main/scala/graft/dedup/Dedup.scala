@@ -1,7 +1,12 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextFunctions._
 import graft.functions.TextExpressions._
@@ -14,7 +19,17 @@ import graft.util.SizeGate
   * candidates come from equality joins on content keys (hash buckets,
   * LSH bands, SimHash chunks), so the shuffle is proportional to
   * data-plus-collisions, not pairs. That is the only formulation that
-  * survives 100 TB.
+  * survives 100 TB. Below it, the MinHash and cosine group forms run on
+  * the driver: one job collects every member's content hashes and band
+  * keys, the driver forms the gids and buckets the reps, a second job
+  * collects the reps' verify payloads, and the driver verifies the rep
+  * candidates with the kernels' exact arithmetic and unions them. The
+  * gate has two parts, both against `SPARK_GRAFT_COLLECT_THRESHOLD`
+  * (default 2M): members × bands before anything reaches the driver,
+  * then the reps' projected candidates Σ C(|B|,2) and payload elements
+  * before any payload does ([[collapsedGroups]]). A distributed job
+  * costs a fixed driver round-trip, so a small corpus pays for dozens of
+  * them in scheduling, not in work.
   *
   * Exact-dup collapse: every near-dup relation here is a function of a
   * content key (shingle set, (scope, text), vector, fingerprint), so
@@ -155,7 +170,7 @@ object Dedup {
     * Jaccard ≥ threshold. Shuffle ∝ postings + co-occurrences, never
     * all pairs. Duplicate-heavy corpora collapse per distinct (scope,
     * shingle set) ([[collapsedPairs]]); an empty set has no postings,
-    * so it never self-pairs. */
+    * so it never self-pairs, and neither does a null scope. */
   def ngramJaccardNearDups(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, threshold: Double = 0.5, n: Int = 3): DataFrame = {
     val sh = shingledHashes(docs, idCol, textCol, n, keep = Seq(scopeCol),
@@ -177,7 +192,8 @@ object Dedup {
         "doc_a", "doc_b", "ngramJaccardNearDups", "jaccardNearDupGroups") {
       reps =>
         val (ex, gpairs) = pairs(reps, "ga", "gb")
-        (gpairs, unitSelfPairs(reps, "jaccard", threshold), Seq(ex))
+        (gpairs, unitSelfPairs(reps.filter(col(scopeCol).isNotNull), "jaccard",
+          threshold), Seq(ex))
     }
   }
 
@@ -226,7 +242,7 @@ object Dedup {
     * fold. A rep self-pairs at cos ≡ 1.0 exactly (dot(v,v) is bit-equal
     * to n² by identical fold order, and √(n²·n²) = n² for these
     * integer-valued sums) under the direct tier's conditions: a
-    * nonempty shingle set and n² > 0. */
+    * nonempty shingle set, n² > 0 and a non-null scope. */
   def shingleCosineVerify(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, tauCos: Double = 0.6, n: Int = 3): DataFrame = {
     val d0 = docs.select(col(idCol).as("doc_id"), col(scopeCol).as("scope"),
@@ -246,7 +262,7 @@ object Dedup {
         "doc_a", "doc_b", "shingleCosineVerify", "shingleCosineGroups") {
       reps =>
         val (shr, emb, gpairs) = verifiedPairs(reps, "ga", "gb")
-        val self = shr.filter(size(col("shingles")) > 0)
+        val self = shr.filter(size(col("shingles")) > 0 && col("scope").isNotNull)
           .join(emb.filter(col("n2") > 0), "doc_id")
           .select(col("doc_id").as("gid"), lit(1.0).as("cos"))
           .filter(col("cos") >= tauCos)
@@ -318,8 +334,9 @@ object Dedup {
     * gid stage as a singleton. NON-null degenerate texts (whitespace,
     * < n tokens) are NOT bypassable: the pair stage's WordShingleHashes
     * floors at one shingle, so identical degenerate twins DO pair
-    * (cos ≡ 1) and must group. Requires tauCos ≤ 1 (identical eligible
-    * texts must be near-dups: their rounded cosine is exactly 1.0). */
+    * (cos ≡ 1) and must group. A null scope never pairs, so its docs are
+    * singletons too. Requires tauCos ≤ 1 (identical eligible texts must
+    * be near-dups: their rounded cosine is exactly 1.0). */
   def shingleCosineGroups(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, tauCos: Double = 0.6, n: Int = 3): DataFrame = {
     require(tauCos <= 1.0,
@@ -327,7 +344,8 @@ object Dedup {
     val d0 = docs.select(col(idCol).cast("long").as("id"),
       col(scopeCol).as("scope"), col(textCol).as("text"))
     // no keyed checkpoint: d0 is a plain pruned scan
-    collapsedGroups(d0, Seq("scope", "text"), col("text").isNull,
+    collapsedGroups(d0, Seq("scope", "text"),
+        col("text").isNull || col("scope").isNull,
         checkpointKeyed = false) { reps =>
       val (shr, emb, pairs) = shingleCosinePairStage(reps, "src", "dst",
         tauCos, n, "shingleCosineGroups")
@@ -434,11 +452,7 @@ object Dedup {
       tauNum: Long, tauDen: Long, d: Int, bits: Int, tables: Int,
       maxN2: Double, caller: String, keepMetrics: Boolean): DataFrame = {
     import graft.functions.VectorExpressions
-    require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
-    val tauSq = math.max(tauNum.toDouble * tauNum, tauDen.toDouble * tauDen)
-    require(tauSq * maxN2 * maxN2 <= math.pow(2, 53),
-      f"$caller: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
-      "the integer predicate would round; shorten documents or rescale vectors")
+    requireExactCosine(tauNum, tauDen, maxN2, caller)
     val allSigs = VectorExpressions.hyperplane_sigs(col("v"), d, "neardup",
       bits, tables)
     val banded = src.select(col("id"), col("v"), col("n2"),
@@ -473,6 +487,19 @@ object Dedup {
       .cp()
     graft.util.BlockRelease.release(banded)
     out
+  }
+
+  /** The rational tier's guards, shared by [[rationalCosinePairs]] and
+    * the driver tier of [[cosineNearDupGroups]]: τ is positive, and
+    * max(tauNum², tauDen²)·maxN2² stays within 2^53, so that every
+    * operand of the integer predicate is exact in doubles. */
+  private def requireExactCosine(tauNum: Long, tauDen: Long, maxN2: Double,
+      caller: String): Unit = {
+    require(tauNum > 0 && tauDen > 0, "rational τ must be positive")
+    val tauSq = math.max(tauNum.toDouble * tauNum, tauDen.toDouble * tauDen)
+    require(tauSq * maxN2 * maxN2 <= math.pow(2, 53),
+      f"$caller: max |v|² = $maxN2%.0f makes τ²·dot² exceed 2^53 — " +
+      "the integer predicate would round; shorten documents or rescale vectors")
   }
 
   /** Measured crossover of the pair-complete contract (BENCH_LOCAL_r13.md
@@ -608,7 +635,14 @@ object Dedup {
       .agg(coalesce(sum(col("_bc").cast("double") *
         (col("_bc") - 1).cast("double") / 2), lit(0.0)),
         coalesce(sum(col("_bc")), lit(0L))).first()
-    val (cand2, rows) = (r.getDouble(0), r.getLong(1))
+    reportBucketDensity(r.getDouble(0), r.getLong(1), caller)
+  }
+
+  /** The stderr line of [[warnBucketDensity]] for `cand2` projected
+    * candidates over `rows` banded rows; the driver tier of
+    * [[collapsedGroups]] counts its buckets itself and calls this. */
+  private def reportBucketDensity(cand2: Double, rows: Long,
+      caller: String): Unit = {
     if (cand2 > BucketDensityWarnAt * math.max(rows, 1L))
       System.err.println(
         f"WARN graft.dedup.$caller: banding buckets project $cand2%,.0f " +
@@ -634,22 +668,50 @@ object Dedup {
     * Rep pairs carry the integer-rational predicate of
     * [[cosineNearDupsExact]]. Zero vectors have no cosine: they group by
     * exact equality only (identical zero or null vectors share a gid)
-    * and never cross-link. */
+    * and never cross-link. A small corpus runs on the driver
+    * ([[collapsedGroups]]), banded on the same `tables` signatures. */
   def cosineNearDupGroups(vecs: DataFrame, idCol: String, vCol: String,
       tauNum: Long = 9, tauDen: Long = 10, bits: Int = 12,
-      tables: Int = 48, dim: Int = -1): DataFrame = {
-    import graft.functions.VectorFunctions
+      tables: Int = 48, dim: Int = -1): DataFrame =
+    cosineGroups(vecs, idCol, vCol, tauNum, tauDen, bits, tables, dim,
+      SizeGate.collectThreshold(2000000L))
+
+  /** [[cosineNearDupGroups]] with the driver tier's bound given
+    * (0 forces the distributed tier). */
+  private[graft] def cosineGroups(vecs: DataFrame, idCol: String,
+      vCol: String, tauNum: Long, tauDen: Long, bits: Int, tables: Int,
+      dim: Int, localBound: Long): DataFrame = {
+    import graft.functions.{CosineRationalGate, VectorExpressions, VectorFunctions}
+    val caller = "cosineNearDupGroups"
     val base = vecs.select(col(idCol).cast("long").as("id"),
       col(vCol).as("v"),
       VectorFunctions.dot(col(vCol), col(vCol)).as("n2"))
-    collapsedGroups(base, Seq("v"), lit(false), checkpointKeyed = true) {
-      reps0 =>
-        val reps = reps0.filter(col("n2") > 0).withColumnRenamed("doc_id", "id")
-        val d = if (dim > 0) dim else reps.select(size(col("v"))).first().getInt(0)
-        val maxN2 = reps.agg(coalesce(max(col("n2")), lit(0.0))).first()
-          .getDouble(0)
-        (rationalCosinePairs(reps, "src", "dst", tauNum, tauDen, d, bits,
-          tables, maxN2, "cosineNearDupGroups", keepMetrics = false), Nil, None)
+    // the first banded vector's length; an all-zero corpus bands nothing
+    val d = if (dim > 0) dim
+      else base.filter(col("n2") > 0).select(size(col("v"))).head(1)
+        .headOption.fold(0)(_.getInt(0))
+    val tier = LocalTier(base, tables, caller, localBound,
+      when(col("n2") > 0,
+        VectorExpressions.hyperplane_sigs(col("v"), d, "neardup", bits, tables)),
+      Seq(col("v"), col("n2")), size(col("v"))) { reps =>
+      def doubles(r: Row): Array[Double] = r.getSeq[Any](0).iterator.map {
+        case x: Number => x.doubleValue
+        case _ => 0.0 // a null element reads as 0 in the kernels
+      }.toArray
+      val vs = reps.map(r => if (r.isNullAt(0)) null else doubles(r))
+      val n2 = reps.map(r => if (r.isNullAt(1)) 0.0 else r.getDouble(1))
+      requireExactCosine(tauNum, tauDen, n2.foldLeft(0.0)(math.max), caller)
+      val (tn2, td2) = ((tauNum * tauNum).toDouble, (tauDen * tauDen).toDouble)
+      (a, b) => CosineRationalGate.passes(math.min(vs(a).length, vs(b).length),
+        vs(a)(_), vs(b)(_), n2(a), n2(b), tn2, td2)
+    }
+    collapsedGroups(base, Seq("v"), lit(false), checkpointKeyed = true,
+        Some(tier)) { reps0 =>
+      val reps = reps0.filter(col("n2") > 0).withColumnRenamed("doc_id", "id")
+      val maxN2 = reps.agg(coalesce(max(col("n2")), lit(0.0))).first()
+        .getDouble(0)
+      (rationalCosinePairs(reps, "src", "dst", tauNum, tauDen, d, bits,
+        tables, maxN2, caller, keepMetrics = false), Nil, None)
     }
   }
 
@@ -671,8 +733,31 @@ object Dedup {
     *  1. [[groupsFromReps]] attaches every member to the min id of its
     *     rep-graph component.
     *
-    * Returns the checkpointed (doc_id, canon_id, group_size). */
+    * A kernel that passes a [[LocalTier]] first gets the driver tier
+    * ([[localGroups]]): one job collects every member's content hashes
+    * and bucket keys, a second the reps' verify payloads, and the driver
+    * runs the same three steps. It runs only while members × bands, and
+    * then the reps' projected candidates Σ C(|B|,2) and payload
+    * elements, stay within the tier's bound (`SPARK_GRAFT_COLLECT_THRESHOLD`,
+    * default 2M, the graph family's collect gate); otherwise the
+    * distributed steps above run.
+    *
+    * Returns (doc_id, canon_id, group_size): checkpointed, or a local
+    * frame from the driver tier. */
   private def collapsedGroups(members: DataFrame, contentCols: Seq[String],
+      singleton: Column, checkpointKeyed: Boolean,
+      local: Option[LocalTier] = None)(
+      stage: DataFrame => (DataFrame, Seq[DataFrame], Option[DataFrame])):
+      DataFrame = local.flatMap(localGroups(_, contentCols, singleton)) match {
+    case Some(out) =>
+      members.unpersist(blocking = false)
+      out
+    case None => distributedGroups(members, contentCols, singleton,
+      checkpointKeyed)(stage)
+  }
+
+  /** The distributed steps of [[collapsedGroups]]. */
+  private def distributedGroups(members: DataFrame, contentCols: Seq[String],
       singleton: Column, checkpointKeyed: Boolean)(
       stage: DataFrame => (DataFrame, Seq[DataFrame], Option[DataFrame])):
       DataFrame = {
@@ -698,6 +783,145 @@ object Dedup {
     graft.util.BlockRelease.release(
       (if (mem eq mem0) Nil else Seq(mem0)) ++ scratch :+ edges)
     out
+  }
+
+  /** A kernel's driver tier for [[collapsedGroups]]: `src` carries the
+    * member columns (a long `id` plus the content columns), `keys` is an
+    * array<long> of one bucket key per band (`bands` of them; null for a
+    * member never banded), `payload` the columns the verify reads and
+    * `size` the payload's element count (its array length).
+    * `verifier` gets the reps' payload rows, ordered by id, runs the
+    * kernel's guards and returns its exact pair predicate over positions
+    * in that array. `caller` names the kernel in the density warning. */
+  private final case class LocalTier(src: DataFrame, bands: Int,
+      caller: String, bound: Long, keys: Column, payload: Seq[Column],
+      size: Column)(val verifier: Array[Row] => (Int, Int) => Boolean)
+
+  /** One member as the driver tier's first job hands it over: `h` is
+    * its content-hash triple and `keys` its band keys, both null for a
+    * singleton; `size` is its payload's element count. */
+  private final case class LocalMember(id: Long, single: Boolean,
+      h: (Long, Long, Long), keys: Array[Long], size: Long)
+
+  private val GroupSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("canon_id", LongType),
+    StructField("group_size", LongType, nullable = false)))
+
+  /** The driver tier of [[collapsedGroups]], or None when the corpus is
+    * past the gate. Two jobs over one spread of the members
+    * ([[graft.util.SpreadScan.spreadInline]]):
+    *
+    *  1. every partition hands over its members' (id, singleton, content
+    *     hashes, keys, payload size), but only while it holds at most an
+    *     equal share of bound / bands members; a partition past its share
+    *     stops reading and refuses the tier, so members × bands ≤ bound
+    *     holds for whatever reaches the driver. The driver forms the gids
+    *     ([[localGids]]) and buckets the reps, and refuses the tier when
+    *     their projected candidates Σ C(|B|,2) or their payload elements
+    *     exceed the bound: no payload has moved yet;
+    *  1. the reps' payloads are collected, and the driver verifies each
+    *     distinct candidate rep pair whose components are still apart
+    *     and unions the verified ones. */
+  private def localGroups(t: LocalTier, contentCols: Seq[String],
+      singleton: Column): Option[DataFrame] = {
+    if (t.bound < t.bands) return None
+    val src = graft.util.SpreadScan.spreadInline(t.src)
+    val rows = src.select(Seq(col("id"), singleton) ++
+      contentHashes(contentCols) ++ Seq(when(!singleton, t.keys),
+        when(!singleton, t.size)): _*).queryExecution.toRdd
+    val share = math.min(t.bound / t.bands / math.max(rows.getNumPartitions, 1),
+      Int.MaxValue - 1L).toInt
+    val parts = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val got = it.take(share + 1).map { r =>
+        val single = r.getBoolean(1)
+        LocalMember(r.getLong(0), single,
+          if (single) null else (r.getLong(2), r.getLong(3), r.getLong(4)),
+          if (r.isNullAt(5)) null else r.getArray(5).toLongArray(),
+          if (r.isNullAt(6)) 0L else math.max(r.getInt(6), 0).toLong)
+      }.toArray
+      if (got.length > share) null else got
+    })
+    if (parts.contains(null)) return None
+    val ms = parts.flatten
+    val ids = ms.map(_.id)
+    val gid = localGids(ids, ms.map(_.h))
+    val reps = ids.indices.filter(i => !ms(i).single && ids(i) == gid(i))
+      .sortBy(ids(_)).toArray
+    val keys = reps.map(ms(_).keys)
+    // the rep buckets per band: candidates and banded rows as the
+    // distributed density warning counts them
+    val buckets = mutable.ArrayBuffer.empty[Array[Int]]
+    var (cand2, banded) = (0.0, 0L)
+    (0 until t.bands).foreach { b =>
+      val byKey = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+      reps.indices.foreach { p =>
+        if (keys(p) != null)
+          byKey.getOrElseUpdate(keys(p)(b), mutable.ArrayBuffer.empty) += p
+      }
+      byKey.valuesIterator.foreach { bk =>
+        banded += bk.size
+        cand2 += bk.size.toDouble * (bk.size - 1) / 2
+        if (bk.size > 1) buckets += bk.toArray
+      }
+    }
+    if (cand2 > t.bound || reps.map(ms(_).size).sum > t.bound) return None
+    val repIds = reps.map(ids(_)) // sorted
+    val payload = src.select(col("id"), struct(t.payload: _*))
+    val width = t.payload.size
+    val fetched = payload.queryExecution.toRdd.mapPartitions(_.collect {
+      case r if java.util.Arrays.binarySearch(repIds, r.getLong(0)) >= 0 =>
+        (r.getLong(0), r.getStruct(1, width).copy(): InternalRow)
+    }).collect()
+    val toRow = CatalystTypeConverters.createToScalaConverter(
+      payload.schema(1).dataType)
+    val byId = mutable.LongMap.from(fetched.iterator.map { case (id, p) =>
+      id -> toRow(p).asInstanceOf[Row] })
+    val pass = t.verifier(repIds.map(byId(_)))
+    reportBucketDensity(cand2, banded, t.caller)
+    val cand = mutable.ArrayBuilder.make[Long]
+    buckets.foreach { bk =>
+      for (x <- bk.indices; y <- x + 1 until bk.length)
+        cand += (bk(x).toLong << 32) | bk(y)
+    }
+    val pairs = cand.result()
+    java.util.Arrays.sort(pairs)
+    val uf = new graft.util.UnionFind.Longs
+    pairs.indices.foreach { c =>
+      if (c == 0 || pairs(c) != pairs(c - 1)) {
+        val (p, q) = ((pairs(c) >>> 32).toInt, pairs(c).toInt)
+        val (a, b) = (repIds(p), repIds(q))
+        if (uf.find(a) != uf.find(b) && pass(p, q)) uf.union(a, b)
+      }
+    }
+    // the union-find root is the component's min gid, i.e. its min id
+    val canon = ids.indices.map(i => if (ms(i).single) ids(i) else uf.find(gid(i)))
+    val sizes = canon.groupMapReduce(identity)(_ => 1L)(_ + _)
+    Some(t.src.sparkSession.createDataFrame(
+      ids.indices.map(i => Row(ids(i), canon(i), sizes(canon(i)))).asJava,
+      GroupSchema))
+  }
+
+  /** The gid step of the driver tier: gid = min id per (`_gh1`, `_gh2`)
+    * of [[contentHashes]], with [[gidByContent]]'s collision error when a
+    * group's `_gh3` differs; a null hash triple marks a singleton, whose
+    * gid is its own id. */
+  private[graft] def localGids(ids: Array[Long],
+      hashes: Array[(Long, Long, Long)]): Array[Long] = {
+    val groups = mutable.HashMap.empty[(Long, Long), (Long, Long)]
+    ids.indices.foreach { i =>
+      val h = hashes(i)
+      if (h != null) groups.get((h._1, h._2)) match {
+        case Some((m, h3)) =>
+          if (h3 != h._3) throw new IllegalStateException(GidCollision)
+          if (ids(i) < m) groups((h._1, h._2)) = (ids(i), h3)
+        case None => groups((h._1, h._2)) = (ids(i), h._3)
+      }
+    }
+    ids.indices.map { i =>
+      val h = hashes(i)
+      if (h == null) ids(i) else groups((h._1, h._2))._1
+    }.toArray
   }
 
   /** Shared exact-dup gid stage of the `*NearDupGroups` family (r15 —
@@ -751,20 +975,7 @@ object Dedup {
       contentCols: Seq[String],
       checkpointKeyed: Boolean = true,
       knownRows: Long = -1L): (DataFrame, Seq[DataFrame]) = {
-    val cs = contentCols.map(col)
-    // xxhash64 SKIPS null inputs (a null column leaves the running hash
-    // untouched), so for same-typed multi-column content (A, null) and
-    // (null, A) would collide in ALL three seeded hashes — a structural
-    // silent merge, not a random collision. A per-column null-pattern
-    // signature (booleans are never null, never skipped) restores the
-    // window's null semantics: the null LAYOUT is part of the key, and
-    // all-null content still hashes to one constant group.
-    val nullSig = cs.map(_.isNull)
-    val hin = cs ++ nullSig
-    val keyed0 = frame
-      .withColumn("_gh1", xxhash64(hin: _*))
-      .withColumn("_gh2", xxhash64(lit(0x9E3779B97F4A7C15L) +: hin: _*))
-      .withColumn("_gh3", xxhash64(lit(0xC2B2AE3D27D4EB4FL) +: hin: _*))
+    val keyed0 = frame.select(col("*") +: contentHashes(contentCols): _*)
     // LAZY checkpoints: the first downstream action (the broadcast
     // gate's count, or the broadcast build when knownRows is given) is
     // the job that materializes them
@@ -774,10 +985,7 @@ object Dedup {
         min(col("_gh3")).as("_p1"), max(col("_gh3")).as("_p2"))
       .select(col("_gh1"), col("_gh2"),
         when(col("_p1") <=> col("_p2"), col("_gmin"))
-          .otherwise(raise_error(lit(
-            "graft.dedup.gidByContent: 128-bit content-hash collision — " +
-            "distinct contents share (xxhash64, xxhash64-seeded); " +
-            "re-key or widen the hash")).cast("long"))
+          .otherwise(raise_error(lit(GidCollision)).cast("long"))
           .as("gid"))
       .cp(false)
     // gids ≤ knownRows by construction
@@ -786,6 +994,29 @@ object Dedup {
       .drop("_gh1", "_gh2", "_gh3")
     (out, if (checkpointKeyed) Seq(keyed, gids) else Seq(gids))
   }
+
+  /** The three independently seeded content hashes `_gh1`, `_gh2`,
+    * `_gh3` of [[gidByContent]] and the driver tier of
+    * [[collapsedGroups]]. xxhash64 SKIPS null inputs (a null column
+    * leaves the running hash untouched), so for same-typed multi-column
+    * content (A, null) and (null, A) would collide in ALL three seeded
+    * hashes — a structural silent merge, not a random collision. A
+    * per-column null-pattern signature (booleans are never null, never
+    * skipped) restores the window's null semantics: the null LAYOUT is
+    * part of the key, and all-null content still hashes to one constant
+    * group. */
+  private def contentHashes(contentCols: Seq[String]): Seq[Column] = {
+    val cs = contentCols.map(col)
+    val hin = cs ++ cs.map(_.isNull)
+    Seq(xxhash64(hin: _*).as("_gh1"),
+      xxhash64(lit(0x9E3779B97F4A7C15L) +: hin: _*).as("_gh2"),
+      xxhash64(lit(0xC2B2AE3D27D4EB4FL) +: hin: _*).as("_gh3"))
+  }
+
+  private val GidCollision =
+    "graft.dedup.gidByContent: 128-bit content-hash collision — " +
+    "distinct contents share (xxhash64, xxhash64-seeded); " +
+    "re-key or widen the hash"
 
   /** Shared tail of the `*NearDupGroups` family (factored r14 when the
     * q110 pattern was extended to the text kernels): components over the
@@ -852,16 +1083,42 @@ object Dedup {
     * never pair (no postings, no signature) and stay singletons: they
     * bypass the gid stage, where the empty array would be a crawl
     * corpus's hottest content key. Ids must be numeric (component node
-    * ids). */
+    * ids). A small corpus runs on the driver ([[collapsedGroups]]),
+    * banded on the same band hashes. */
   def minhashNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame = {
+      threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame =
+    minhashGroups(docs, idCol, textCol, threshold, k, bands,
+      SizeGate.collectThreshold(2000000L))
+
+  /** [[minhashNearDupGroups]] with the driver tier's bound given
+    * (0 forces the distributed tier). */
+  private[graft] def minhashGroups(docs: DataFrame, idCol: String,
+      textCol: String, threshold: Double, k: Int, bands: Int,
+      localBound: Long): DataFrame = {
     require(threshold <= 1.0,
       "group form needs threshold <= 1 (identical docs must be near-dups)")
-    val sh = shingledHashes(docs, idCol, textCol)
-      .select(col("doc_id").cast("long").as("id"), col("shingles"))
+    def members(spread: Boolean) =
+      shingledHashes(docs, idCol, textCol, spread = spread)
+        .select(col("doc_id").cast("long").as("id"), col("shingles"))
+    // the driver tier spreads its own collect (SpreadScan.spreadInline)
+    val tier = LocalTier(members(spread = false), bands,
+      "minhashNearDupGroups", localBound,
+      lshBands(minhashSignature(col("shingles"), k), bands, k / bands)
+        .getField("h"),
+      Seq(col("shingles")), size(col("shingles"))) { reps =>
+      val sets = reps.map(_.getSeq[Long](0).toArray)
+      val sorted = sets.map(_.sorted)
+      // jaccardOfPairs' arithmetic: distinct common hashes over
+      // na + nb − inter, an int promoted to double
+      (a, b) => {
+        val inter = distinctCommon(sorted(a), sorted(b))
+        inter.toDouble / (sets(a).length + sets(b).length - inter) >= threshold
+      }
+    }
+    val sh = members(spread = true)
       .cache() // cached, so the gid stage needs no keyed checkpoint
-    collapsedGroups(sh, Seq("shingles"), noShingles, checkpointKeyed = false) {
-      reps =>
+    collapsedGroups(sh, Seq("shingles"), noShingles, checkpointKeyed = false,
+        Some(tier)) { reps =>
         val cand = minhashCandidates(reps, k, bands, "minhashNearDupGroups")
         val edges = jaccardOfPairs(cand, reps)
           .filter(col("jaccard") >= threshold)
@@ -870,6 +1127,23 @@ object Dedup {
         graft.util.BlockRelease.release(cand)
         (edges, Nil, None)
     }
+  }
+
+  /** |distinct(a) ∩ distinct(b)| of two sorted arrays, as
+    * `size(array_intersect(a, b))` counts it. */
+  private def distinctCommon(a: Array[Long], b: Array[Long]): Int = {
+    var (i, j, n) = (0, 0, 0)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else {
+        val v = a(i)
+        n += 1
+        while (i < a.length && a(i) == v) i += 1
+        while (j < b.length && b(j) == v) j += 1
+      }
+    }
+    n
   }
 
   /** An empty or null shingle set: no postings, no signature, never a
@@ -885,7 +1159,8 @@ object Dedup {
     * cross scopes, so neither do groups. Representatives = one doc per
     * distinct (scope, shingle list); the inverted-index self-join runs on
     * reps only, so dup-group size k costs k rows, not the pair form's
-    * C(k,2) postings blow-up. */
+    * C(k,2) postings blow-up. A null scope never pairs (the pair forms'
+    * `a.scope = b.scope`), so its docs are singletons. */
   def jaccardNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
       scopeCol: String, threshold: Double = 0.5, n: Int = 3): DataFrame = {
     require(threshold <= 1.0,
@@ -895,7 +1170,8 @@ object Dedup {
       .select(col("doc_id").cast("long").as("id"), col(scopeCol),
         col("shingles"))
       .cache() // cached, so the gid stage needs no keyed checkpoint
-    collapsedGroups(sh, Seq(scopeCol, "shingles"), noShingles,
+    collapsedGroups(sh, Seq(scopeCol, "shingles"),
+        noShingles || col(scopeCol).isNull,
         checkpointKeyed = false) { reps =>
       val (ex, pairs) = postingJaccardPairs(reps, scopeCol, threshold,
         "src", "dst", "jaccardNearDupGroups")

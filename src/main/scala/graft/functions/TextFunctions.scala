@@ -20,12 +20,6 @@ object TextFunctions {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count estimate: whitespace tokens + intra-word splits
-    * every 4 chars (a cheap deterministic proxy for tokenizer budgeting). */
-  def subwordCount(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => acc + greatest(ceil(length(t) / lit(4.0)).cast("long"), lit(1L)))
-
   /** GPT-2-style pre-tokenizer regex (the split BPE applies merges inside):
     * contractions, space-prefixed letter runs, digit runs, punctuation
     * runs, whitespace runs. The upstream pattern's `\s+(?!\S)` branch is

@@ -345,16 +345,11 @@ case class CosineRationalGate(va: Expression, vb: Expression,
   override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any = {
     val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
     val lf = elemIsFloat(va); val rf = elemIsFloat(vb)
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += (if (lf) x.getFloat(i).toDouble else x.getDouble(i)) *
-        (if (rf) y.getFloat(i).toDouble else y.getDouble(i))
-      i += 1
-    }
-    java.lang.Boolean.valueOf(s > 0.0 &&
-      td2 * s * s >= tn2 * c.asInstanceOf[Double] * d.asInstanceOf[Double])
+    java.lang.Boolean.valueOf(CosineRationalGate.passes(
+      math.min(x.numElements(), y.numElements()),
+      i => if (lf) x.getFloat(i).toDouble else x.getDouble(i),
+      i => if (rf) y.getFloat(i).toDouble else y.getDouble(i),
+      c.asInstanceOf[Double], d.asInstanceOf[Double], tn2, td2))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -378,6 +373,21 @@ case class CosineRationalGate(va: Expression, vb: Expression,
       newFourth: Expression): CosineRationalGate =
     copy(va = newFirst, vb = newSecond, na2 = newThird, nb2 = newFourth)
   override def prettyName: String = "cosine_rational_gate"
+}
+
+object CosineRationalGate {
+
+  /** The gate as a pure function over `n` coordinates read through `a`
+    * and `b`, with tn2 = tauNum² and td2 = tauDen² as doubles: the
+    * interpreted path and the dedup driver tier both call it, and the
+    * generated code spells out the same loop and comparison. */
+  def passes(n: Int, a: Int => Double, b: Int => Double, na2: Double,
+      nb2: Double, tn2: Double, td2: Double): Boolean = {
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s > 0.0 && td2 * s * s >= tn2 * na2 * nb2
+  }
 }
 
 object VectorExpressions {

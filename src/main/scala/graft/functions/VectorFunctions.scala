@@ -51,8 +51,4 @@ object VectorFunctions {
     when(n === 0.0, transform(a, x => x.cast("double")))
       .otherwise(transform(a, x => x.cast("double") / n))
   }
-
-  /** Element-wise round to `scale` decimals (oracle-friendly output). */
-  def roundArray(a: Column, scale: Int): Column =
-    transform(a, x => round(x, scale))
 }

@@ -32,21 +32,6 @@ object Ann {
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
 
-  /** Deterministic random hyperplane (seeded, unit-free). */
-  private def plane(seed: String, dim: Int): Column =
-    array(Seq.tabulate(dim) { d =>
-      lit(graft.functions.Hashing.mixed(s"$seed-$d").toDouble / Long.MaxValue.toDouble)
-    }: _*)
-
-  /** Signed-random-projection signature: `bits` hyperplane sign bits packed
-    * into a long. Same `prefix` ⇒ same hyperplanes (deterministic across
-    * runs and call sites). */
-  def hyperplaneSig(v: Column, dim: Int, prefix: String, bits: Int): Column =
-    (0 until bits).map { b =>
-      when(VectorFunctions.dot(v, plane(s"$prefix-$b", dim)) >= 0.0,
-        lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** LSH top-k: probe bucket-mates of the query across `tables` hyperplane
     * tables, verify exactly, keep best k. Approximate: recall grows with
     * `tables`, cost with bucket size (2^bits buckets/table).

@@ -29,11 +29,28 @@ import org.apache.spark.sql.DataFrame
   * (oracle-verified across the family).
   */
 object SpreadScan {
-  def spread(df: DataFrame): DataFrame = {
+  def spread(df: DataFrame): DataFrame =
+    if (small(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
+
+  /** [[spread]]'s decision, with the round-robin repartition done on the
+    * RDD under the plan instead of in it. An adaptive plan submits a
+    * plan-level exchange as a job of its own; this shuffle runs inside
+    * the first job over the returned frame, and later jobs over the same
+    * frame reuse its map output. The returned frame carries no size
+    * statistics, so use it for a frame that is collected, not joined. */
+  def spreadInline(df: DataFrame): DataFrame =
+    if (!small(df)) df
+    else org.apache.spark.sql.graftbridge.ColumnBridge.ofInternalRows(
+      df.sparkSession,
+      df.queryExecution.toRdd.map(_.copy()) // scans reuse their row buffers
+        .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      df.schema)
+
+  private def small(df: DataFrame): Boolean = {
     val sess = df.sparkSession
     val target = sess.sparkContext.defaultParallelism
     val maxPB = sess.sessionState.conf.filesMaxPartitionBytes
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < BigInt(maxPB) * target / 2) df.repartition(target) else df
+    df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(maxPB) * target / 2
   }
 }

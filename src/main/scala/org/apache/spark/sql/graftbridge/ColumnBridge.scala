@@ -21,4 +21,13 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A DataFrame over an RDD of rows already in `schema`'s internal
+    * layout; `SparkSession.internalCreateDataFrame` is private[sql]. */
+  def ofInternalRows(spark: org.apache.spark.sql.SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
@@ -366,6 +368,7 @@ class DedupSpec extends SparkSpec with Matchers {
       members.map(m => m -> (canon, members.length.toLong))
     }.toMap
     groups shouldBe expected
+    cosineTiersAgree(docs) shouldBe groups
     // the zero twins share a group; no zero ever links to a nonzero doc
     groups(900001L)._1 shouldBe groups(900002L)._1
     groups(900001L)._2 shouldBe 2L
@@ -388,6 +391,42 @@ class DedupSpec extends SparkSpec with Matchers {
       members.map(m => m -> (canon, members.length.toLong))
     }.toMap
     groups shouldBe expected
+  }
+
+  private def groupMap(df: DataFrame): Map[Long, (Long, Long)] =
+    df.select("doc_id", "canon_id", "group_size").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
+
+  private val DriverBound = 2000000L
+
+  /** The MinHash group form's two tiers on `docs` (threshold 0.5): the
+    * default bound takes the driver tier, bound 0 the distributed one,
+    * and both give the same groups, which are returned. */
+  private def minhashTiersAgree(docs: DataFrame): Map[Long, (Long, Long)] = {
+    val local = Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, DriverBound)
+    val dist = Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, 0L)
+    isLocal(local) shouldBe true
+    isLocal(dist) shouldBe false
+    val g = groupMap(local)
+    groupMap(dist) shouldBe g
+    graft.util.BlockRelease.release(dist)
+    g
+  }
+
+  /** [[minhashTiersAgree]] for the cosine group form (9/10, 96 tables,
+    * 16 dims: q110's configuration). */
+  private def cosineTiersAgree(vecs: DataFrame): Map[Long, (Long, Long)] = {
+    val local = Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, DriverBound)
+    val dist = Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, 0L)
+    isLocal(local) shouldBe true
+    isLocal(dist) shouldBe false
+    val g = groupMap(local)
+    groupMap(dist) shouldBe g
+    graft.util.BlockRelease.release(dist)
+    g
   }
 
   test("pair-amplification guard: multiplicity 30 crosses the measured ceiling, 2 does not") {
@@ -423,6 +462,7 @@ class DedupSpec extends SparkSpec with Matchers {
     val ids = docs.select("doc_id").collect().map(_.getLong(0))
     expectGroupsEqualPairs(groups, pairs, ids)
     groups.values.map(_._2).max should be >= 3L
+    minhashTiersAgree(docs) shouldBe groups
     graft.util.BlockRelease.release(docs)
   }
 
@@ -587,6 +627,7 @@ class DedupSpec extends SparkSpec with Matchers {
     mh(1000001L) shouldBe ((1000001L, 25L)) // whitespace + empty twins: one group
     mh(1000021L) shouldBe ((1000021L, 20L)) // boilerplate twins: one group
     nulls.foreach(i => mh(i) shouldBe ((i, 1L)))
+    minhashTiersAgree(docs) shouldBe mh
 
     val jc = total(Dedup
       .jaccardNearDupGroups(docs, "doc_id", "text", "source", 0.5, 3), ids)
@@ -629,6 +670,7 @@ class DedupSpec extends SparkSpec with Matchers {
         "id_a", "id_b") ++ sameVec, vecIds)
     nulls.foreach(i => cg(i) shouldBe ((1000041L, 5L)))
     (1000051L to 1000053L).foreach(i => cg(i) shouldBe ((1000051L, 3L)))
+    cosineTiersAgree(vecs) shouldBe cg
     graft.util.BlockRelease.release(Seq(docs, vecs))
   }
 
@@ -716,6 +758,8 @@ class DedupSpec extends SparkSpec with Matchers {
         pairsOf(Dedup.cosineNearDupsExact(
           vecs, "doc_id", "v", 9, 10, tables = 96, dim = 16),
           "id_a", "id_b"), ids)
+      minhashTiersAgree(docs)
+      cosineTiersAgree(vecs)
       graft.util.BlockRelease.release(vecs)
     }
     allFive(noised, 3)
@@ -805,5 +849,194 @@ class DedupSpec extends SparkSpec with Matchers {
       "WARN graft.dedup.minhashNearDups: exact-dup multiplicity")
     amplified.filter(_ >= 128) shouldBe empty
     graft.util.BlockRelease.release(Seq(hot, light, replicated))
+  }
+
+  test("group forms' tiers agree at cos = 9/10, at Jaccard = 1/2 and on signed zeros") {
+    val s2 = spark
+    import s2.implicits._
+    def vec(xs: (Int, Double)*) = (0 until 16).map(xs.toMap.getOrElse(_, 0.0))
+    // (0,1,3)·(1,0,3) = 9 over |a|² = |b|² = 10: cos is exactly 9/10, so
+    // the integer predicate holds with equality; (0,3,1)·(1,3,0) likewise.
+    // 6 and 7 differ only in the sign of one zero and are orthogonal to
+    // 1–4; 8 and 9 are the two zero vectors, which have no cosine and
+    // group by content only.
+    val vecs = Seq(
+        1L -> vec(1 -> 1.0, 2 -> 3.0), 2L -> vec(0 -> 1.0, 2 -> 3.0),
+        3L -> vec(1 -> 3.0, 2 -> 1.0), 4L -> vec(0 -> 1.0, 1 -> 3.0),
+        6L -> vec(0 -> -0.0, 8 -> 5.0, 9 -> 7.0), 7L -> vec(8 -> 5.0, 9 -> 7.0),
+        8L -> Seq.fill(16)(-0.0), 9L -> Seq.fill(16)(0.0))
+      .toDF("doc_id", "v").localCheckpoint()
+    val cg = cosineTiersAgree(vecs)
+    cg(1L) shouldBe ((1L, 2L)); cg(2L) shouldBe ((1L, 2L))
+    cg(3L) shouldBe ((3L, 2L)); cg(4L) shouldBe ((3L, 2L))
+    cg(6L) shouldBe ((6L, 2L)); cg(7L) shouldBe ((6L, 2L))
+    cg(8L)._1 shouldBe 8L
+    cg(9L)._1 should (be (8L) or be (9L))
+    // five "a b c d e" (3 shingles) / "a b c d e f g h" (6 shingles)
+    // pairs on private vocabularies: Jaccard exactly 3/6 each
+    val docs = (0 until 5).flatMap { i =>
+      val w = (0 until 8).map(j => s"v${i}w$j")
+      Seq((2L * i, w.take(5).mkString(" ")), (2L * i + 1, w.mkString(" ")))
+    }.toDF("doc_id", "text").localCheckpoint()
+    val mh = minhashTiersAgree(docs)
+    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)
+      .select("doc_a", "doc_b", "jaccard").collect()
+    pairs should not be empty // banding caught some of the five
+    pairs.foreach(_.getDouble(2) shouldBe 0.5)
+    expectGroupsEqualPairs(mh, pairs.map(r => (r.getLong(0), r.getLong(1))),
+      docs.select("doc_id").collect().map(_.getLong(0)))
+    graft.util.BlockRelease.release(Seq(vecs, docs))
+  }
+
+  test("driver tier: a small corpus's MinHash and cosine groups run at most 3 jobs, output included") {
+    import graft.functions.TextFunctions.md5Embed
+    val base = Tables.load(spark, dir, "documents")
+      .select(col("doc_id"), col("text")).limit(80)
+    val docs = (0 until 3).map(i => base.select(
+        (col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
+      .reduce(_ unionByName _).localCheckpoint()
+    val vecs = docs.select(col("doc_id"), md5Embed(col("text")).as("v"))
+      .localCheckpoint()
+    val sc = spark.sparkContext
+    // GraphAlgoSpec's pattern: count the jobs of one job group, and wait
+    // for a marker job so that every earlier job start has arrived
+    def jobsOf(group: String)(run: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          js.properties.getProperty("spark.jobGroup.id") match {
+            case `group` => jobs.incrementAndGet()
+            case "jobs-marker" => markerSeen.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        run
+        sc.setJobGroup("jobs-marker", "marker")
+        spark.range(1).count()
+        markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      jobs.get()
+    }
+    def materialize(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    jobsOf("minhash-groups")(materialize(
+      Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, DriverBound))) should be <= 3
+    jobsOf("cosine-groups")(materialize(
+      Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, DriverBound))) should be <= 3
+    graft.util.BlockRelease.release(Seq(docs, vecs))
+  }
+
+  test("driver tier guards: 2^53 exactness, threshold, gid collision and density warning") {
+    val s2 = spark
+    import s2.implicits._
+    // |v|² = 1.6e7: τ²·|v|⁴ = 100 · 2.56e14 is past 2^53 in both tiers
+    val big = Seq(1L -> Seq.fill(16)(1000.0), 2L -> Seq.fill(16)(999.0))
+      .toDF("doc_id", "v").localCheckpoint()
+    val text = Seq(1L -> "a b c d", 2L -> "a b c e").toDF("doc_id", "text")
+    for (bound <- Seq(DriverBound, 0L)) {
+      val e = intercept[IllegalArgumentException](
+        Dedup.cosineGroups(big, "doc_id", "v", 9, 10, 12, 48, 16, bound))
+      e.getMessage should include ("exceed 2^53")
+      intercept[IllegalArgumentException](
+        Dedup.minhashGroups(text, "doc_id", "text", 1.5, 64, 16, bound))
+    }
+    // the driver gid step: min id per hash pair; a third hash that
+    // differs inside a pair is gidByContent's collision error
+    Dedup.localGids(Array(5L, 3L, 9L, 4L),
+      Array((1L, 2L, 7L), (1L, 2L, 7L), null, (1L, 3L, 7L))) shouldBe
+      Array(3L, 3L, 9L, 4L)
+    val collision = intercept[IllegalStateException](Dedup.localGids(
+      Array(5L, 3L), Array((1L, 2L, 7L), (1L, 2L, 8L))))
+    collision.getMessage should include ("128-bit content-hash collision")
+    // a templated corpus packs the band buckets: both tiers print the
+    // same density line for each form
+    def warnings(run: => Unit): Seq[String] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val oldErr = System.err
+      try {
+        System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+        run
+      } finally System.setErr(oldErr)
+      buf.toString("UTF-8").linesIterator
+        .filter(_.startsWith("WARN graft.dedup.")).toSeq
+    }
+    val tpl = (1 to 64).map(i => s"boiler token t$i").mkString(" ")
+    val docs = (0 until 80).map(i => (i.toLong, s"$tpl u$i"))
+      .toDF("doc_id", "text").localCheckpoint()
+    val vecs = docs.select(col("doc_id"),
+      graft.functions.TextFunctions.md5Embed(col("text")).as("v")).localCheckpoint()
+    def both(form: Long => DataFrame, caller: String): Unit = {
+      val lines = Seq(DriverBound, 0L).map(b => warnings(form(b).count()))
+      lines.head should have size 1
+      lines.head.head should startWith (s"WARN graft.dedup.$caller: banding buckets project")
+      lines(1) shouldBe lines.head
+    }
+    both(Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, _),
+      "minhashNearDupGroups")
+    both(Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, _),
+      "cosineNearDupGroups")
+    graft.util.BlockRelease.release(Seq(big, docs, vecs))
+  }
+
+  test("driver tier gate: members × bands and the reps' payload elements stay within the bound") {
+    val s2 = spark
+    import s2.implicits._
+    // four long docs on private vocabularies: 29,998 word 3-shingles
+    // each, so ~120k payload elements against 64 banded rows and at most
+    // 16 · C(4,2) = 96 candidates
+    val long = (0 until 4).map(i => (i.toLong,
+        (0 until 30000).map(j => s"d${i}w$j").mkString(" ")))
+      .toDF("doc_id", "text").localCheckpoint()
+    def groups(bound: Long) =
+      Dedup.minhashGroups(long, "doc_id", "text", 0.5, 64, 16, bound)
+    val fits = groups(200000L)
+    isLocal(fits) shouldBe true
+    val g = groupMap(fits)
+    g.values.toSet shouldBe (0L until 4L).map(i => (i, 1L)).toSet
+    // the payload alone is past 100k; 48 is past members × bands
+    for (bound <- Seq(100000L, 48L)) {
+      val over = groups(bound)
+      isLocal(over) shouldBe false
+      groupMap(over) shouldBe g
+      graft.util.BlockRelease.release(over)
+    }
+    graft.util.BlockRelease.release(long)
+  }
+
+  test("null scope never pairs: scoped pair and group forms agree in the direct and collapse tiers") {
+    val s2 = spark
+    import s2.implicits._
+    // docs 1, 2: identical text, null source; docs 3, 4: identical text,
+    // source "s". With 20 distinct docs the pair forms take their direct
+    // tier (24 members over 22 keys); alone, the four take the collapse
+    // tier. Null never equals null in the oracles' `a.source = b.source`.
+    val twin = "the quick brown fox jumps over the lazy dog"
+    val other = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    val probe = Seq((1L, twin, null.asInstanceOf[String]),
+      (2L, twin, null.asInstanceOf[String]), (3L, other, "s"), (4L, other, "s"))
+    val distinct = (5L to 24L).map(i =>
+      (i, (0 until 9).map(j => s"d${i}w$j").mkString(" "), "s"))
+    for (rows <- Seq(probe ++ distinct, probe)) {
+      val docs = rows.toDF("doc_id", "text", "source").localCheckpoint()
+      val ids = rows.map(_._1).toArray
+      def pairsOf(df: DataFrame) =
+        df.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      val jp = pairsOf(Dedup.ngramJaccardNearDups(docs, "doc_id", "text", "source", 0.5, 3))
+      val cp = pairsOf(Dedup.shingleCosineVerify(docs, "doc_id", "text", "source", 0.6, 3))
+      jp.toSet shouldBe Set((3L, 4L))
+      cp.toSet shouldBe Set((3L, 4L))
+      expectGroupsEqualPairs(groupMap(Dedup.jaccardNearDupGroups(
+        docs, "doc_id", "text", "source", 0.5, 3)), jp, ids)
+      expectGroupsEqualPairs(groupMap(Dedup.shingleCosineGroups(
+        docs, "doc_id", "text", "source", 0.6, 3)), cp, ids)
+      graft.util.BlockRelease.release(docs)
+    }
   }
 }

@@ -13,10 +13,12 @@ out="${1:-BENCH_FORCED_last.json}"
 
 # the distributed-tier query set fixed by the r10 verdict: q40-q49
 # (graph family), PageRank variants q94/q101, and q15 (modularity reads
-# the same projection machinery)
+# the same projection machinery); plus the MinHash and cosine near-dup
+# group kernels q110/q112, whose small corpora otherwise run on the driver
 ONLY=q40_kcore,q41_label_prop,q42_louvain,q43_connected_components
 ONLY=$ONLY,q44_fastrp,q45_leiden,q46_density,q47_modularity_opt
 ONLY=$ONLY,q48_hdbscan,q49_ep2_pipeline,q94_pagerank,q101_ppr,q15_modularity
+ONLY=$ONLY,q110_neardup_groups,q112_minhash_neardup_groups
 
 SPARK_GRAFT_COLLECT_THRESHOLD=0 \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
