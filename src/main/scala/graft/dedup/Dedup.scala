@@ -24,10 +24,11 @@ import graft.util.SizeGate
   * keys, the driver forms the gids and buckets the reps, a second job
   * collects the reps' verify payloads, and the driver verifies the rep
   * candidates with the kernels' exact arithmetic and unions them. The
-  * gate has two parts, both against `SPARK_GRAFT_COLLECT_THRESHOLD`
-  * (default 2M): members × bands before anything reaches the driver,
-  * then the reps' projected candidates Σ C(|B|,2) and payload elements
-  * before any payload does ([[collapsedGroups]]). A distributed job
+  * gate has two parts, both against the collect gate
+  * ([[SizeGate.collectThreshold]], default 2M): members × bands before
+  * anything reaches the driver, then the reps' projected candidates
+  * Σ C(|B|,2) and payload elements before any payload does
+  * ([[collapsedGroups]]). A distributed job
   * costs a fixed driver round-trip, so a small corpus pays for dozens of
   * them in scheduling, not in work.
   *
@@ -672,15 +673,7 @@ object Dedup {
     * ([[collapsedGroups]]), banded on the same `tables` signatures. */
   def cosineNearDupGroups(vecs: DataFrame, idCol: String, vCol: String,
       tauNum: Long = 9, tauDen: Long = 10, bits: Int = 12,
-      tables: Int = 48, dim: Int = -1): DataFrame =
-    cosineGroups(vecs, idCol, vCol, tauNum, tauDen, bits, tables, dim,
-      SizeGate.collectThreshold(2000000L))
-
-  /** [[cosineNearDupGroups]] with the driver tier's bound given
-    * (0 forces the distributed tier). */
-  private[graft] def cosineGroups(vecs: DataFrame, idCol: String,
-      vCol: String, tauNum: Long, tauDen: Long, bits: Int, tables: Int,
-      dim: Int, localBound: Long): DataFrame = {
+      tables: Int = 48, dim: Int = -1): DataFrame = {
     import graft.functions.{CosineRationalGate, VectorExpressions, VectorFunctions}
     val caller = "cosineNearDupGroups"
     val base = vecs.select(col(idCol).cast("long").as("id"),
@@ -690,7 +683,8 @@ object Dedup {
     val d = if (dim > 0) dim
       else base.filter(col("n2") > 0).select(size(col("v"))).head(1)
         .headOption.fold(0)(_.getInt(0))
-    val tier = LocalTier(base, tables, caller, localBound,
+    val tier = LocalTier(base, tables, caller,
+      SizeGate.collectThreshold(2000000L),
       when(col("n2") > 0,
         VectorExpressions.hyperplane_sigs(col("v"), d, "neardup", bits, tables)),
       Seq(col("v"), col("n2")), size(col("v"))) { reps =>
@@ -738,8 +732,8 @@ object Dedup {
     * and bucket keys, a second the reps' verify payloads, and the driver
     * runs the same three steps. It runs only while members × bands, and
     * then the reps' projected candidates Σ C(|B|,2) and payload
-    * elements, stay within the tier's bound (`SPARK_GRAFT_COLLECT_THRESHOLD`,
-    * default 2M, the graph family's collect gate); otherwise the
+    * elements, stay within the tier's bound (the graph family's collect
+    * gate, [[SizeGate.collectThreshold]], default 2M); otherwise the
     * distributed steps above run.
     *
     * Returns (doc_id, canon_id, group_size): checkpointed, or a local
@@ -1034,11 +1028,10 @@ object Dedup {
     * (src, dst). Releases `mem`; returns a checkpointed frame. */
   private[graft] def groupsFromReps(mem: DataFrame,
       repEdges: DataFrame): DataFrame = {
-    // rep-graph components; SPARK_GRAFT_COLLECT_THRESHOLD=0 forces the
-    // distributed Pregel tier (the q40-q49 discipline) — the rep graph
-    // is dup-collapsed but still corpus-shaped in the dup-free worst case
-    val comp = graft.graph.GraphAlgos.connectedComponents(repEdges,
-      collectThreshold = SizeGate.collectThreshold(2000000L))
+    // rep-graph components, behind the collect gate (the q40-q49
+    // discipline) — the rep graph is dup-collapsed but still
+    // corpus-shaped in the dup-free worst case
+    val comp = graft.graph.GraphAlgos.connectedComponents(repEdges)
     // normalize component labels to the component's MIN member id (the
     // union-find root choice is arbitrary; min-id is the canonical form
     // every oracle replays). canon is rep-graph-sized (dup-collapsed,
@@ -1086,15 +1079,7 @@ object Dedup {
     * ids). A small corpus runs on the driver ([[collapsedGroups]]),
     * banded on the same band hashes. */
   def minhashNearDupGroups(docs: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame =
-    minhashGroups(docs, idCol, textCol, threshold, k, bands,
-      SizeGate.collectThreshold(2000000L))
-
-  /** [[minhashNearDupGroups]] with the driver tier's bound given
-    * (0 forces the distributed tier). */
-  private[graft] def minhashGroups(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, k: Int, bands: Int,
-      localBound: Long): DataFrame = {
+      threshold: Double = 0.5, k: Int = 64, bands: Int = 16): DataFrame = {
     require(threshold <= 1.0,
       "group form needs threshold <= 1 (identical docs must be near-dups)")
     def members(spread: Boolean) =
@@ -1102,7 +1087,7 @@ object Dedup {
         .select(col("doc_id").cast("long").as("id"), col("shingles"))
     // the driver tier spreads its own collect (SpreadScan.spreadInline)
     val tier = LocalTier(members(spread = false), bands,
-      "minhashNearDupGroups", localBound,
+      "minhashNearDupGroups", SizeGate.collectThreshold(2000000L),
       lshBands(minhashSignature(col("shingles"), k), bands, k / bands)
         .getField("h"),
       Seq(col("shingles")), size(col("shingles"))) { reps =>

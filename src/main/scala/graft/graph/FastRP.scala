@@ -29,8 +29,7 @@ object FastRP {
     * @param iterationWeights β_k per propagation round (round 1..k)
     * @return (node, embedding array<double> unit-norm) */
   def run(edges: DataFrame, dim: Int = 64,
-      iterationWeights: Seq[Double] = Seq(0.0, 1.0, 1.0),
-      collectThreshold: Long = 2000000L): DataFrame = {
+      iterationWeights: Seq[Double] = Seq(0.0, 1.0, 1.0)): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Small-graph tier (same gate as Louvain/Leiden/Hdbscan): under the
@@ -41,7 +40,8 @@ object FastRP {
     // cache (FastRP's weighted averaging needs exactly it) — and the
     // cache path also closes a per-call leak: the old inline tier
     // returned without releasing its checkpointed sym.
-    val tiered = Louvain.symTiered(edges, collectThreshold)
+    val tiered = Louvain.symTiered(edges,
+      graft.util.SizeGate.collectThreshold(2000000L))
     if (tiered.isRight) {
       val (es, _) = tiered.toOption.get
       return runInMemory(es, dim, iterationWeights).toSeq.toDF("node", "embedding")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.util.Checkpointer.CheckpointSyntax
 
 /** Label propagation (SURVEY.md G4) and connected components (GraphX
-  * above the collect threshold). Canonical-edge DataFrames in,
-  * (node, label) DataFrames out. */
+  * above the collect gate, [[graft.util.SizeGate.collectThreshold]]).
+  * Canonical-edge DataFrames in, (node, label) DataFrames out. */
 object GraphAlgos {
 
   /** Partition count proportional to edge volume (~50k edges/partition,
@@ -44,8 +44,7 @@ object GraphAlgos {
     * dense graphs propagate an order of magnitude cheaper, and the same
     * plan scales out. Edge content is assumed fixed for the instance's
     * lifetime (see Louvain.symTiered's cache contract). */
-  def labelPropagationDF(edges: DataFrame, maxSteps: Int = 5,
-      collectThreshold: Long = 2000000L): DataFrame = {
+  def labelPropagationDF(edges: DataFrame, maxSteps: Int = 5): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // Small-graph tier (same gate as the Louvain family): the synchronous
@@ -54,7 +53,8 @@ object GraphAlgos {
     // collected array rides Louvain's r10 session cache — LPA is
     // weight-agnostic (lpaInMemory counts adjacency), so the shared
     // weighted array serves unchanged.
-    val tiered = Louvain.symTiered(edges, collectThreshold)
+    val tiered = Louvain.symTiered(edges,
+      graft.util.SizeGate.collectThreshold(2000000L))
     if (tiered.isRight) {
       val csr = SeqCommunity.build(tiered.toOption.get._1)
       return lpaInMemory(csr, maxSteps).toSeq.toDF("node", "label")
@@ -138,15 +138,16 @@ object GraphAlgos {
 
   /** Connected components (label = min vertex id). Small-graph tier:
     * min-root union-find on the collected edge list — identical labels to
-    * the GraphX formulation; above the threshold, GraphX's pointer-jumping
-    * Pregel. */
-  def connectedComponents(edges: DataFrame,
-      collectThreshold: Long = 2000000L): DataFrame = {
+    * the GraphX formulation; above the collect gate (2M edges by default),
+    * GraphX's pointer-jumping Pregel. Callers nest it (q45, DBSCAN,
+    * HDBSCAN's extraction, the dedup group forms), and each call reads
+    * the gate itself. */
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .cp()
-    if (pairs.count() <= collectThreshold) {
+    if (pairs.count() <= graft.util.SizeGate.collectThreshold(2000000L)) {
       val es = pairs.as[(Long, Long)].collect()
       graft.util.BlockRelease.release(pairs) // edge-sized; don't leak per call
       val uf = new graft.util.UnionFind.Longs

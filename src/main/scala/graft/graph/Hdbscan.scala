@@ -16,17 +16,21 @@ import graft.util.Checkpointer.CheckpointSyntax
   *
   *  1. **Core distances**: distance to the minPts-th nearest neighbor —
   *     EXACT at every scale (r10): in-memory brute under `bruteThreshold`
-  *     points, block-pair partitioned passes above it ([[blockedCores]] —
-  *     every point pair is evaluated in exactly one memory-bounded task).
+  *     points (read through the collect gate, so a gate of 0 forces the
+  *     blocked tier), block-pair partitioned passes above it
+  *     ([[blockedCores]] — every point pair is evaluated in exactly one
+  *     memory-bounded task).
   *  2. **Mutual reachability**: d_mreach(a,b) = max(core_a, core_b, d(a,b)),
   *     never materialized as an edge set — each block-pair task folds it
   *     inside its local dense Prim ([[blockedMstEdges]]), whose ≤ P−1
   *     output edges form an exact MST superset by the cycle property.
-  *  3. **MST**: Kruskal over the collected sparsified union when it fits,
-  *     else distributed Borůvka: each component picks its minimum
-  *     outgoing edge (deterministic total order on (w, a, b)), components
-  *     merge by pointer-doubling over the chosen-edge functional graph —
-  *     O(log n) rounds of node-sized shuffles, never all-pairs.
+  *  3. **MST**: Kruskal over the collected sparsified union when it fits
+  *     the collect gate ([[graft.util.SizeGate.collectThreshold]], 5M
+  *     edges by default), else distributed Borůvka: each component picks
+  *     its minimum outgoing edge (deterministic total order on (w, a, b)),
+  *     components merge by pointer-doubling over the chosen-edge
+  *     functional graph — O(log n) rounds of node-sized shuffles, never
+  *     all-pairs.
   *  4. **Hierarchy extraction** on the collected MST (n−1 edges — NODE-
   *     sized, the same collect-threshold discipline as [[Louvain]]):
   *     single-linkage dendrogram via union-find, condensed tree with
@@ -46,10 +50,12 @@ object Hdbscan {
     * @param taskTarget      ≈ points per block in the exact at-scale tier
     *                        (a task holds two blocks; memory ∝ taskTarget,
     *                        per-task work ∝ taskTarget²)
+    * @param bruteThreshold  default of the brute gate: at most this many
+    *                        points run the in-memory exact tier; the collect
+    *                        gate's setting, when one is made, replaces it
     * @return (id, label) — label = min member id of the cluster, −1 noise */
   def run(points: DataFrame, minPts: Int = 5, minClusterSize: Int = 5,
-      taskTarget: Int = 2048, bruteThreshold: Long = 2000L,
-      collectThreshold: Long = 5000000L): DataFrame = {
+      taskTarget: Int = 2048, bruteThreshold: Long = 2000L): DataFrame = {
     require(minPts >= 1, s"minPts ($minPts) must be ≥ 1")
     require(taskTarget >= 2, s"taskTarget ($taskTarget) must be ≥ 2")
     // minClusterSize = 1 is degenerate HDBSCAN (every point a cluster, no
@@ -72,7 +78,7 @@ object Hdbscan {
     // shuffle overhead at this size. Above the threshold, the block-pair
     // partitioned tier below — still EXACT (every pair charged to exactly
     // one task), just memory-bounded and distributed.
-    if (n <= bruteThreshold) {
+    if (n <= graft.util.SizeGate.collectThreshold(bruteThreshold)) {
       val pts = points.select(col("id"), col("v"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
       return exactInMemory(pts, minPts, minClusterSize).toSeq.toDF("id", "label")
@@ -101,14 +107,15 @@ object Hdbscan {
     // distributed Borůvka rounds (several eager jobs each, O(log n) of
     // them) are reserved for unions that genuinely exceed one executor.
     val nCand = mre.count()
+    val gate = graft.util.SizeGate.collectThreshold(5000000L)
     val labels =
-      if (nCand <= collectThreshold) {
+      if (nCand <= gate) {
         val edges = kruskalMst(mre.select(col("a"), col("b"), col("w"))
           .as[(Long, Long, Double)].collect())
         val ids = points.select(col("id")).as[Long].collect()
         extractLabels(edges, ids, minClusterSize).toSeq.toDF("id", "label")
       } else {
-        runDistributedMst(points, mre, minClusterSize, collectThreshold)
+        runDistributedMst(points, mre, minClusterSize, gate)
       }
     // both branches have materialized everything derived from the
     // sparsified edges — release them instead of leaking per call
@@ -122,13 +129,13 @@ object Hdbscan {
   /** Distributed Borůvka MST + hierarchy extraction — the at-scale path of
     * [[run]] once the candidate edge set no longer fits in memory. */
   private def runDistributedMst(points: DataFrame, mre: DataFrame,
-      minClusterSize: Int, collectThreshold: Long): DataFrame = {
+      minClusterSize: Int, gate: Long): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     val mst = boruvkaMst(mre).cp()
     val mstSize = mst.count()
 
-    val out = if (mstSize <= collectThreshold) {
+    val out = if (mstSize <= gate) {
         val edges = mst.select(col("a"), col("b"), col("w"))
           .as[(Long, Long, Double)].collect()
         val ids = points.select(col("id")).as[Long].collect()
@@ -138,7 +145,7 @@ object Hdbscan {
         // at-scale tier: EXACT recursive condensed-tree extraction —
         // EOM semantics preserved at every scale (no flat-cut fallback)
         extractLabelsDistributed(mst, points.select(col("id")),
-          minClusterSize, topFit = collectThreshold)
+          minClusterSize, topFit = gate)
       }
     graft.util.BlockRelease.release(mst)
     out

@@ -13,7 +13,8 @@ import graft.util.Checkpointer.CheckpointSyntax
   * Fully parallel (no sequential peeling), converges in a few dozen rounds
   * on social graphs — the formulation that survives a 1000-executor graph,
   * unlike peel-min-degree which is inherently sequential. Below the
-  * collect threshold [[run]] peels instead; the peel is the reference the
+  * collect gate ([[graft.util.SizeGate.collectThreshold]], 2M symmetrized
+  * edges by default) [[run]] peels instead; the peel is the reference the
   * DataFrame tier is tested against.
   */
 object KCore {
@@ -22,8 +23,7 @@ object KCore {
     *   cores. Content assumed fixed for the instance's lifetime (see
     *   Louvain.symTiered's cache contract).
     * @return (node, core) DataFrame */
-  def run(edges: DataFrame, maxIter: Int = 64,
-      collectThreshold: Long = 2000000L): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 64): DataFrame = {
     // Small-graph tier (same gate as the Louvain family): exact
     // Batagelj–Zaveršnik peeling on the collected graph. Coreness is
     // unique, so this returns bit-identical cores to the h-index fixpoint
@@ -34,7 +34,8 @@ object KCore {
     // symmetrized edges ride Louvain's r10 session cache — coreness is
     // weight-agnostic (peel reads adjacency only), so the weighted shared
     // array serves unchanged and q40 shares q42/q45/q47's one collect
-    val tiered = Louvain.symTiered(edges, collectThreshold)
+    val tiered = Louvain.symTiered(edges,
+      graft.util.SizeGate.collectThreshold(2000000L))
     if (tiered.isRight) {
       val (es, _) = tiered.toOption.get
       val csr = SeqCommunity.build(es)
@@ -51,37 +52,23 @@ object KCore {
     // for Pregel on a 4.5M-edge dense fixture; same fixpoint).
     // self-loops do not contribute to coreness (peel's CSR routes them
     // out of the adjacency) — drop them here so all tiers agree
-    runDFSym(sym.filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst")), maxIter, ownsSym = false)
+    hIndexCores(sym.filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst")), maxIter)
   }
 
-  /** h-index k-core as pure DataFrame iteration (no GraphX): per round,
+  /** h-index k-core as pure DataFrame iteration (no GraphX) over a
+    * symmetric, deduped (src, dst) edge set without self-loops: per round,
     * every node's new estimate is max over distinct neighbor-estimate
     * values v of min(v, #neighbors with estimate ≥ v), capped by its own
-    * estimate — the same fixpoint, expressed as two shuffles per round
-    * (grouped histogram + running count) with map-side combine, 16-byte
-    * rows throughout. THE at-scale path since round 3: with one
-    * plan-truncating action per round its cost is data-bound (the round-2
-    * "339 s at sf0.1" reading measured the old cache()-per-round plan
-    * growth plus small-graph fixed costs, both gone — the small tier now
-    * owns small graphs and BENCH_LOCAL_r3.md records this at 16 s on a
-    * dense 4.5M-edge fixture where the Pregel histogram messages ran 35+
-    * min). */
-  def runDF(edges: DataFrame, maxIter: Int = 64): DataFrame =
-    runDFSym(Projection.symmetrize(
-        edges.select(col("src"), col("dst"), lit(1.0).as("weight")))
-      .select(col("src"), col("dst")).distinct() // parallel edges count once
-      .filter(col("src") =!= col("dst")) // self-loops don't contribute
-      .cp(), maxIter)
-
-  /** [[runDF]] over an ALREADY symmetric, deduped, materialized (src, dst)
-    * edge set — run() hands its tier-gate sym straight in, so the
-    * at-scale path does not symmetrize the full edge set twice.
-    * `ownsSym` = false when the frame derives from the cache-owned tier
-    * sym (r12, Louvain.symTiered): releasing it would cascade into the
-    * cached checkpoint blocks through the plan leaves. */
-  private def runDFSym(sym: DataFrame, maxIter: Int,
-      ownsSym: Boolean = true): DataFrame = {
+    * estimate — the same fixpoint as the peel, expressed as two shuffles
+    * per round (grouped histogram + running count) with map-side
+    * combine, 16-byte rows throughout. With one plan-truncating action
+    * per round its cost is data-bound; BENCH_LOCAL_r3.md records it at
+    * 16 s on a dense 4.5M-edge fixture where the Pregel histogram
+    * messages ran 35+ min. `sym` derives from the cache-owned tier sym
+    * (Louvain.symTiered) and is not released here: that would cascade
+    * into the cached checkpoint blocks through the plan leaves. */
+  private def hIndexCores(sym: DataFrame, maxIter: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     var est = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("int").as("est")).cp()
@@ -116,8 +103,7 @@ object KCore {
       iter += 1
     }
     val out = est.cp()
-    graft.util.BlockRelease.release(
-      if (ownsSym) Seq(est, sym) else Seq(est))
+    graft.util.BlockRelease.release(est)
     out.select(col("node"), col("est").as("core"))
   }
 

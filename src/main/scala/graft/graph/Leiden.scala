@@ -22,16 +22,17 @@ object Leiden {
     *   for the instance's lifetime (see Louvain.symTiered's cache contract)
     * @return (node, label) */
   def run(edges0: DataFrame, distRounds: Int = 2,
-      collectThreshold: Long = 2000000L, maxLevels: Int = 4): DataFrame = {
+      maxLevels: Int = 4): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
+    val gate = graft.util.SizeGate.collectThreshold(2000000L)
 
     // Small-graph tier (same gate as Louvain/Hdbscan): under the collect
     // threshold the exact sequential Leiden runs directly — the
     // distributed rounds' per-round cost is pure scheduler latency there.
     // Collected artifacts ride Louvain's r10 session cache (q42/q45/q47
     // share one symmetrize+collect per cached projection).
-    val tiered = Louvain.symTiered(edges0, collectThreshold)
+    val tiered = Louvain.symTiered(edges0, gate)
     if (tiered.isRight) {
       val (es, m2) = tiered.toOption.get
       val label = leidenInMemory(es, m2)
@@ -58,9 +59,9 @@ object Leiden {
       .cp()
     val (mapping, contracted, nEdges) = Louvain.coarsenUntilFits(
       ref.select(col("node"), col("ref").as("comm")), contractedRef,
-      phase.m2, distRounds, collectThreshold, maxLevels)
+      phase.m2, distRounds, gate, maxLevels)
 
-    val out = (if (nEdges <= collectThreshold) {
+    val out = (if (nEdges <= gate) {
       val finished = leidenInMemory(contracted.as[(Long, Long, Double)].collect(), phase.m2)
       val labelDf = finished.toSeq.toDF("rl", "label")
       mapping.join(broadcast(labelDf), mapping("comm") === labelDf("rl"))
@@ -74,7 +75,7 @@ object Leiden {
     // partition is connected per community, so the Leiden contract holds
     // for the substitute too
     // sym0 is cache-owned (r12, see Louvain.symTiered) — not released here
-    Louvain.incumbentGuard(sym0, out, phase.m2, collectThreshold)
+    Louvain.incumbentGuard(sym0, out, phase.m2)
   }
 
   /** Distributed Leiden refinement: within each coarse community, nodes

@@ -26,9 +26,10 @@ import graft.util.Checkpointer.CheckpointSyntax
   *     shrinks graphs by orders of magnitude per level — the super-graph of
   *     even a planetary social graph fits on one executor — so the remaining
   *     levels run the classic sequential algorithm on the collected
-  *     super-graph (capped by `collectThreshold` edges; above it, another
-  *     distributed round runs first). Same hybrid Spark's own GraphFrames
-  *     ecosystem implementations use.
+  *     super-graph (capped by the collect gate,
+  *     [[graft.util.SizeGate.collectThreshold]], 2M edges by default;
+  *     above it, another distributed round runs first). Same hybrid
+  *     Spark's own GraphFrames ecosystem implementations use.
   */
 object Louvain {
 
@@ -40,16 +41,6 @@ object Louvain {
       deg: DataFrame,        // (node, k) weighted degrees
       contracted: DataFrame, // (csrc, cdst, weight) contraction by comm
       m2: Double)            // 2m
-
-  /** Distributed phase shared by Louvain and Leiden: local-move rounds on
-    * the full graph, then contraction. */
-  private[graph] def distributedPhase(edges0: DataFrame, distRounds: Int): Phase = {
-    val sym = Projection.symmetrize(edges0)
-      .groupBy("src", "dst").agg(sum("weight").as("weight"))
-      .cp()
-    val m2 = sym.agg(sum("weight")).first().getDouble(0) // 2m
-    distributedPhaseSym(sym, distRounds, m2)
-  }
 
   /** Distributed local-move rounds over an ALREADY-SYMMETRIC edge set that
     * may carry self-loops (a contracted super-graph: the (c,c) row holds 2×
@@ -190,7 +181,7 @@ object Louvain {
     * synchronous local moving (hash-parity damping, fixed `distRounds`)
     * can leave a TORN mid-flight partition on dense graphs — measured
     * Q < 0 on the near-complete sf0.01 co-engagement graph when the
-    * in-memory finish is gated off (`collectThreshold` below the
+    * in-memory finish is gated off (the collect gate below the
     * super-graph size, exactly the degrade path a 100 TB dense graph
     * takes). An optimizer must never return a partition worse than a
     * trivial incumbent it could always have emitted; the canonical one is
@@ -201,13 +192,12 @@ object Louvain {
     * over `sym` (the same Q as over the canonical edges: every edge appears
     * in both orientations). `m2` is read only to skip an empty graph. */
   private[graph] def incumbentGuard(sym: DataFrame, labels: DataFrame,
-      m2: Double, collectThreshold: Long): DataFrame = {
+      m2: Double): DataFrame = {
     if (m2 <= 0.0 ||
         CommunityMetrics.modularity(sym, labels).head().getDouble(0) >= 0.0)
       return labels
     val comp = GraphAlgos.connectedComponents(
-        sym.select(col("src"), col("dst"), col("weight")),
-        collectThreshold = collectThreshold)
+        sym.select(col("src"), col("dst"), col("weight")))
       .select(col("node"), col("label"))
       .cp()
     graft.util.BlockRelease.release(labels) // superseded checkpoint
@@ -215,7 +205,7 @@ object Louvain {
   }
 
   /** Symmetric deduped edge set + its directed edge count + 2m — the
-    * shared tier gate: a graph under `collectThreshold` directed edges
+    * shared tier gate: a graph under the collect gate's directed edges
     * (≤ ~50 MB of (long,long,double) rows) fits comfortably on one
     * executor, so the exact sequential algorithm runs directly and the
     * distributed machinery — whose per-round cost is fixed scheduler
@@ -291,7 +281,7 @@ object Louvain {
     * CACHE-owned since r12 — callers must not release it; before r12
     * ownership passed to the caller, and each of the seven sym-consuming
     * entry points re-symmetrized per call). A forced-distributed run
-    * (threshold 0) never consults the COLLECT cache — the checkpointed-
+    * (gate 0) never consults the COLLECT cache — the checkpointed-
     * sym cache still serves it, because reusing an executor-resident
     * shuffle product changes cost, not formulation.
     *
@@ -339,10 +329,11 @@ object Louvain {
     *   for the instance's lifetime (see [[symTiered]]'s cache contract)
     * @return (node, label) */
   def run(edges0: DataFrame, distRounds: Int = 4,
-      collectThreshold: Long = 2000000L, maxLevels: Int = 4): DataFrame = {
+      maxLevels: Int = 4): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val tiered = symTiered(edges0, collectThreshold)
+    val gate = graft.util.SizeGate.collectThreshold(2000000L)
+    val tiered = symTiered(edges0, gate)
     if (tiered.isRight) {
       // small-graph tier: exact sequential Louvain on the collected graph
       val (es, m2in) = tiered.toOption.get
@@ -353,9 +344,9 @@ object Louvain {
     val ph = distributedPhaseSym(sym, distRounds, m2in)
     val (mapping, contracted, nEdges) =
       coarsenUntilFits(ph.comm, ph.contracted, ph.m2, distRounds,
-        collectThreshold, maxLevels)
+        gate, maxLevels)
 
-    val out = (if (nEdges <= collectThreshold) {
+    val out = (if (nEdges <= gate) {
       // ---- phase 2: classic sequential Louvain on the collected super-graph ----
       val superEdges = contracted.as[(Long, Long, Double)].collect()
       val superLabel = localLouvain(superEdges, ph.m2)
@@ -370,18 +361,17 @@ object Louvain {
     }).cp() // node-sized, lineage-free — lets everything below go
     graft.util.BlockRelease.release(Seq(ph.deg, ph.comm, mapping, contracted))
     // sym is cache-owned (r12, see symTiered) — not released here
-    incumbentGuard(sym, out, ph.m2, collectThreshold)
+    incumbentGuard(sym, out, ph.m2)
   }
 
   /** Modularity optimization à la GDS (SURVEY.md G7; reference call at
     * project/metrics/community_detection.py:78-83): local moving WITHOUT
     * coarsening. Small-graph tier runs the exact sequential move passes;
     * above threshold it is exactly the distributed phase, labels as-is. */
-  def modularityOptimization(edges0: DataFrame, rounds: Int = 8,
-      collectThreshold: Long = 2000000L): DataFrame = {
+  def modularityOptimization(edges0: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val tiered = symTiered(edges0, collectThreshold)
+    val tiered = symTiered(edges0, graft.util.SizeGate.collectThreshold(2000000L))
     if (tiered.isRight) {
       val (es, m2) = tiered.toOption.get
       SeqCommunity.localMoveOnly(es, m2).toSeq.toDF("node", "label")
@@ -392,7 +382,7 @@ object Louvain {
         .cp()
       graft.util.BlockRelease.release(Seq(ph.deg, ph.comm))
       // sym is cache-owned (r12, see symTiered) — not released here
-      incumbentGuard(sym, out, m2, collectThreshold)
+      incumbentGuard(sym, out, m2)
     }
   }
 

@@ -41,24 +41,25 @@ object PageRank {
     * rank = trust flowing out through the link structure). `None` is
     * classic uniform PageRank. Same integer-ppm contract either way.
     *
-    * TIERED (r10, the Louvain/KCore/Leiden collect-threshold discipline
-    * applied to the last iterative algorithm without it): under
-    * `collectThreshold` SYMMETRIZED edges, the rounds run as an
-    * in-memory integer loop over one collected edge array — the
-    * distributed formulation's ~4 eager jobs per checkpointed round are
-    * pure scheduler floor at that size. The loop replays the IDENTICAL
+    * TIERED (r10, the Louvain/KCore/Leiden collect-gate discipline
+    * applied to the last iterative algorithm without it): under the
+    * collect gate ([[graft.util.SizeGate.collectThreshold]], 2M
+    * SYMMETRIZED edges by default), the rounds run as an in-memory
+    * integer loop over one collected edge array — the distributed
+    * formulation's ~4 eager jobs per checkpointed round are pure
+    * scheduler floor at that size. The loop replays the IDENTICAL
     * integer ops in the identical order (sums of longs are associative,
     * so per-node accumulation order is immaterial — the decidability
-    * argument above), so both tiers are oracle-equal;
-    * `SPARK_GRAFT_COLLECT_THRESHOLD=0` forces the distributed path in
-    * the driver gates (PageRankSpec pins tier equality). */
+    * argument above), so both tiers are oracle-equal; a gate of 0
+    * (`SPARK_GRAFT_COLLECT_THRESHOLD=0`) forces the distributed path
+    * (PageRankSpec pins tier equality). */
   def run(edges: DataFrame, iters: Int = 5,
-      seed: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None,
-      collectThreshold: Long = 2000000L): DataFrame = {
+      seed: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column] = None): DataFrame = {
     // iters >= 1 is load-bearing: with an empty loop the returned pr would
     // be a lazy plan over k, whose checkpoint blocks are released below.
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    if (collectThreshold > 0 && edges.count() * 2 <= collectThreshold)
+    val gate = graft.util.SizeGate.collectThreshold(2000000L)
+    if (gate > 0 && edges.count() * 2 <= gate)
       return runInMemory(edges, iters, seed)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -82,12 +83,13 @@ object PageRank {
       seed.map(p => when(p(node), lit(amount)).otherwise(lit(0L)))
         .getOrElse(lit(amount))
     // Node-sized frames (ranks, strengths, contributions) BROADCAST below
-    // the 2M-node tier — the per-round sym-shuffle disappears and each
+    // the engine's broadcast gate (SizeGate.BroadcastRows), counted once
+    // as the n nodes — the per-round sym-shuffle disappears and each
     // round is one map-side join + one partial-agg exchange. Above the
-    // tier the joins shuffle on node id (the 100 TB shape); identical
-    // results either way (same tiering discipline as collectThreshold).
-    val bcastTier = n <= 2000000L
-    def maybeB(df: DataFrame): DataFrame = if (bcastTier) broadcast(df) else df
+    // gate the joins shuffle on node id (the 100 TB shape); identical
+    // results either way.
+    def maybeB(df: DataFrame): DataFrame =
+      graft.util.SizeGate.maybeBroadcast(df, known = Some(n))
     var pr = k.select($"src".as("node"),
       baseMass($"src", 1000000L / nBase).as("pr"))
     var lastCkpt: DataFrame = null

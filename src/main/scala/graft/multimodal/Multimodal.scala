@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column handling for a training-data pipeline: image/audio/
   * video payloads travel as opaque `binary` columns with typed metadata
@@ -17,16 +16,6 @@ import org.apache.spark.sql.types._
   * shuffle-free column derivation) is real and tested.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),   // image | audio | video
-    StructField("payload", BinaryType),                   // opaque encoded bytes
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("duration_ms", LongType),
-      StructField("codec", StringType))))))
 
   case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte],
       width: Int, height: Int, duration_ms: Long, codec: String)

@@ -17,6 +17,16 @@ import graft.functions.VectorFunctions
   * q40–q44 run the iterative algorithms (h-index k-core, GraphX LPA,
   * connected components, DataFrame Louvain, FastRP) — not SQL-expressible,
   * driver rows-only check + golden/invariant ScalaTests (GraphAlgoSpec).
+  *
+  * No query passes a tier: every algorithm reads the collect gate
+  * ([[graft.util.SizeGate.collectThreshold]]) at each of its gates,
+  * nested ones included (q45's intra-community components, DBSCAN's and
+  * HDBSCAN's components, HDBSCAN's brute gate). Unset, each gate keeps
+  * its default (the exact in-memory tier at the test SFs);
+  * `SPARK_GRAFT_COLLECT_THRESHOLD=0` puts every one of them on its
+  * distributed formulation, so the scale path is timed and
+  * correctness-checked under the driver protocol (Bench/Verify). The
+  * surfaces are invariant-based, so both tiers pass the same oracle.
   */
 object GraphQueries {
 
@@ -24,21 +34,6 @@ object GraphQueries {
 
   private def graph(spark: SparkSession, dir: String): DataFrame =
     Projection.supplierGraph(spark, dir)
-
-  /** Tier gate for the iterative algorithms, env-overridable:
-    * `SPARK_GRAFT_COLLECT_THRESHOLD=0` forces every q40–q49 run through
-    * the DISTRIBUTED formulations — including HDBSCAN's, whose
-    * small-graph gate is `bruteThreshold` (threaded through the same
-    * override so the LSH-kNN + distributed-MST path actually runs at the
-    * shipped SFs, all of which sit under the 2000-point brute gate) —
-    * so the scale path is timed and correctness-checked under the exact
-    * driver protocol (Bench/Verify) instead of only in an offline scale
-    * harness; the
-    * surfaces are invariant-based, so both tiers must pass the same
-    * oracle. Unset → each algorithm's default gate (small-graph exact
-    * tier at test SFs). */
-  private def tier(default: Long): Long =
-    graft.util.SizeGate.collectThreshold(default)
 
   private def labels(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "supplier")
@@ -89,20 +84,18 @@ object GraphQueries {
     * supersteps stay cheap (measured: 9 s vs 339 s for the DataFrame twin
     * at sf0.1 — the DF version wins only on sparse fast-converging
     * graphs). */
-  val q40KCore: Q = (spark, dir) => KCore.run(graph(spark, dir), collectThreshold = tier(2000000L))
+  val q40KCore: Q = (spark, dir) => KCore.run(graph(spark, dir))
 
   /** q41 — label propagation (G4, GraphX built-in). 5 synchronous steps:
     * LPA either converges or enters the known 2-cycle well before that on
     * co-engagement-density graphs, and each Pregel superstep costs a fixed
     * scheduling quantum. */
   val q41LabelProp: Q = (spark, dir) =>
-    GraphAlgos.labelPropagationDF(graph(spark, dir), maxSteps = 5,
-      collectThreshold = tier(2000000L))
+    GraphAlgos.labelPropagationDF(graph(spark, dir), maxSteps = 5)
 
   /** q43 — connected components (min-id labels). */
   val q43ConnectedComponents: Q = (spark, dir) =>
-    GraphAlgos.connectedComponents(graph(spark, dir),
-      collectThreshold = tier(2000000L))
+    GraphAlgos.connectedComponents(graph(spark, dir))
 
   /** Shared surface for the community-detection queries (q44's precedent
     * extended to partitions): labels themselves are tie-break/coarsening-
@@ -155,7 +148,7 @@ object GraphQueries {
     * GraphAlgoSpec). */
   val q42Louvain: Q = (spark, dir) => {
     val g = graph(spark, dir)
-    partitionSurface(g, Louvain.run(g, collectThreshold = tier(2000000L)),
+    partitionSurface(g, Louvain.run(g),
       nationModularity(spark, dir, g))
   }
 
@@ -168,7 +161,7 @@ object GraphQueries {
     * piece; a singleton community is one piece). Pinned true per node. */
   val q45Leiden: Q = (spark, dir) => {
     val g = graph(spark, dir)
-    val lab = graft.graph.Leiden.run(g, collectThreshold = tier(2000000L))
+    val lab = graft.graph.Leiden.run(g)
     val intra = g
       .join(lab.select(col("node").as("src"), col("label").as("ls")), "src")
       .join(lab.select(col("node").as("dst"), col("label").as("ld")), "dst")
@@ -242,8 +235,7 @@ object GraphQueries {
   val q47ModularityOpt: Q = (spark, dir) => {
     val g = graph(spark, dir)
     partitionSurface(g,
-      Louvain.modularityOptimization(g, rounds = 4,
-        collectThreshold = tier(2000000L)),
+      Louvain.modularityOptimization(g, rounds = 4),
       nationModularity(spark, dir, g))
   }
 
@@ -279,8 +271,7 @@ object GraphQueries {
       .select(col("vec_id").as("id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
     clusterSurface(
-      graft.graph.Hdbscan.run(pts, minPts = 4, minClusterSize = 4,
-        bruteThreshold = tier(2000L), collectThreshold = tier(5000000L)),
+      graft.graph.Hdbscan.run(pts, minPts = 4, minClusterSize = 4),
       minClusterSize = 4)
   }
 
@@ -293,13 +284,11 @@ object GraphQueries {
     * planted fixture) while node totality and the label contracts are
     * hash-oracled via [[clusterSurface]]. */
   val q49Ep2Pipeline: Q = (spark, dir) => {
-    val emb = FastRP.run(graph(spark, dir), dim = 128,
-      collectThreshold = tier(2000000L))
+    val emb = FastRP.run(graph(spark, dir), dim = 128)
     clusterSurface(
       graft.graph.Hdbscan.run(
         emb.select(col("node").as("id"), col("embedding").as("v")),
-        minPts = 4, minClusterSize = 4,
-        bruteThreshold = tier(2000L), collectThreshold = tier(5000000L)),
+        minPts = 4, minClusterSize = 4),
       minClusterSize = 4)
   }
 
@@ -311,8 +300,7 @@ object GraphQueries {
     * gate pins it (a dropped node, wrong width or unnormalized vector
     * all shows up as a hash mismatch). */
   val q44FastRP: Q = (spark, dir) => {
-    FastRP.run(graph(spark, dir), dim = 32,
-        collectThreshold = tier(2000000L))
+    FastRP.run(graph(spark, dir), dim = 32)
       .select(col("node"), size(col("embedding")).as("dim"),
         round(VectorFunctions.l2norm(col("embedding")), 4).as("norm"))
   }
@@ -324,8 +312,7 @@ object GraphQueries {
     * algorithm sits under a FULL hash oracle (the q40/q41 recursive-CTE
     * discipline) — no rows-only concession. Edge-linear per round. */
   val q94PageRank: Q = (spark, dir) =>
-    graft.graph.PageRank.run(graph(spark, dir), iters = 5,
-        collectThreshold = tier(2000000L))
+    graft.graph.PageRank.run(graph(spark, dir), iters = 5)
       .select(col("node"), col("pr").as("pr_ppm"))
 
   /** q101 — PERSONALIZED PageRank (TrustRank-shaped: teleport mass only
@@ -335,8 +322,7 @@ object GraphQueries {
     * integer-ppm loop and full recursive-CTE oracle as q94. */
   val q101Ppr: Q = (spark, dir) =>
     graft.graph.PageRank.run(graph(spark, dir), iters = 5,
-        seed = Some(node => node % 7 === 0),
-        collectThreshold = tier(2000000L))
+        seed = Some(node => node % 7 === 0))
       .select(col("node"), col("pr").as("pr_ppm"))
 
   val defs: Map[String, Q] = Map(

@@ -569,9 +569,6 @@ object VectorQueries {
     "q74_quantize" -> q74Quantize,
     "q79_semdedup" -> q79SemDedup)
 
-  private val cosExpr =
-    "list_inner_product(a.v, b.v) / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v)))"
-
   val oracles: Map[String, String] = Map(
     // q110 — md5Embed twin (the q24 fragment) → exact-dup gid window →
     // brute TRUE rep pairs under the identical integer predicate →

@@ -40,25 +40,9 @@ object Tables {
   }
 }
 
-/** Reference-shaped case classes (typed Dataset entities).
+/** Reference-shaped stream schemas (the crawler's topics).
   * Schemas inferred in SURVEY.md §1.2. */
 object Entities {
-  /** User profile — producer_main.py:62-71. */
-  case class UserProfile(did: String, handle: String, displayName: String, description: String)
-
-  /** Post — producer_main.py:52-57. */
-  case class Post(uri: String, cid: String, text: String, author: String)
-
-  /** Engagement edge (LIKED/POSTED union, SURVEY.md SET4). */
-  case class Engagement(userDid: String, postUri: String, engType: String)
-
-  /** SCD-2 community membership — postgres-schema.sql:42-48. */
-  case class Membership(
-      communityId: String,
-      memberId: String,
-      validFrom: java.sql.Timestamp,
-      validTo: Option[java.sql.Timestamp])
-
   /** Tagged-union user-stream record (one topic, two shapes —
     * consumer_user.py:79-82): profile fields null for LIKED events and
     * vice versa; `recType` is the discriminator. */

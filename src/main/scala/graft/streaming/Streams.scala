@@ -99,36 +99,9 @@ object Streams {
   private def bucketExpr(c: Column, nBuckets: Int): Column =
     pmod(xxhash64(c), lit(nBuckets)).cast("int")
 
-  /** Pass as `buckets` to let table CREATION size its own bucket count
-    * from the first batch's measured on-disk bytes (see [[chooseBuckets]])
-    * instead of asking the caller to predict table scale. Existing tables
-    * always keep their marker-pinned count regardless. */
-  val AutoBuckets: Int = -1
-
-  /** The creation-time auto-sizing law: enough buckets that the CREATING
-    * batch lands under `targetBytes` (128 MB default) per bucket, rounded
-    * up to a power of two (pow2 keeps pmod routing stable-ish under
-    * future manual re-layouts that double the count), never below
-    * [[DefaultMergeBuckets]] (small tables stay cheap to probe/swap) and
-    * never above 4096 (a directory per bucket; 4096 × 128 MB ≈ 0.5 TB of
-    * FIRST-batch state is past the point where a managed table format is
-    * the right tool). The first batch under-predicts final table size —
-    * the count it picks is a floor sized to evidence, not a forecast. */
-  private[graft] def chooseBuckets(bytes: Long,
-      targetBytes: Long = 128L << 20): Int = {
-    val needed = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    val pow2 = java.lang.Long.highestOneBit(needed) *
-      (if (java.lang.Long.bitCount(needed) == 1) 1 else 2)
-    math.min(4096L, math.max(DefaultMergeBuckets.toLong, pow2)).toInt
-  }
-
   /** A table's pinned bucket count (`_graft_buckets` marker wins over the
     * caller's default — mixing counts would route a key to a bucket its
-    * old rows are not in). [[AutoBuckets]] resolves to
-    * [[DefaultMergeBuckets]] here: for an EXISTING unmarked (legacy flat)
-    * table there is no byte evidence yet worth a relayout, and for
-    * creation the auto-sizing happens after the first write measures the
-    * batch (see the creation branch of [[mergeUpsert]]). */
+    * old rows are not in). */
   private def resolveBuckets(fs: org.apache.hadoop.fs.FileSystem,
       tableDir: org.apache.hadoop.fs.Path, default: Int): Int = {
     val markerPath = new org.apache.hadoop.fs.Path(tableDir, "_graft_buckets")
@@ -136,8 +109,7 @@ object Streams {
       val in = fs.open(markerPath)
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toInt
       finally in.close()
-    } else if (default == AutoBuckets) DefaultMergeBuckets
-    else default
+    } else default
   }
 
   /** ONE touched-bucket probe serving several derived merges of a shared
@@ -182,9 +154,7 @@ object Streams {
     * recorded count always wins, so a caller changing the default can
     * never split a key across two layouts. (Delta/Iceberg MERGE is the
     * managed-production answer; this is the same discipline on raw
-    * parquet.) Pass [[AutoBuckets]] to let creation pick the count from
-    * the first batch's measured bytes ([[chooseBuckets]]) instead of
-    * predicting table scale up front.
+    * parquet.)
     *
     * Crash safety, per bucket: live bucket dir → staged at
     * `<table>__old/__bucket=n`, then the freshly-written bucket renamed
@@ -200,20 +170,13 @@ object Streams {
     * for table creation and one-shot migration of a legacy flat layout. */
   def mergeUpsert(batch: DataFrame, tablePath: String, keyCol: String,
       buckets: Int = DefaultMergeBuckets,
-      touchedHint: Option[(Int, Array[Int])] = None,
-      autoTargetBucketBytes: Long = 128L << 20): Unit = {
+      touchedHint: Option[(Int, Array[Int])] = None): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     val tableDir = new Path(tablePath)
     val stageDir = new Path(tablePath + "__old")
     val tmpDir = new Path(tablePath + "__tmp")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // a crashed creation-time auto relayout (below) can orphan its
-    // transient dir; it is never live state, so clear it unconditionally
-    val relayoutDir = new Path(tablePath + "__tmp_relayout")
-    if (fs.exists(relayoutDir) && !fs.delete(relayoutDir, true))
-      throw new java.io.IOException(s"cannot clear stale $relayoutDir")
 
     // ---- crash recovery FIRST: a crash mid-swap leaves pre-merge state
     // staged under __old (whole table or single buckets, live side gone) —
@@ -340,34 +303,9 @@ object Streams {
       return
     }
 
-    // creation-time AUTO-SIZING: the first write (at the default count)
-    // doubles as the measurement — if the MEASURED bytes want more than
-    // the default buckets, re-layout the already-written columnar data
-    // under the chosen count before the swap. The relayout costs one
-    // extra read+write of the batch, paid only at creation and only when
-    // the first batch is ≥ buckets × target (≈ 2 GB at the defaults) —
-    // exactly the tables where a wrong pinned count would hurt forever.
-    var pinnedBuckets = nBuckets
-    if (!incremental && buckets == AutoBuckets) {
-      val auto = chooseBuckets(
-        fs.getContentSummary(tmpDir).getLength, autoTargetBucketBytes)
-      if (auto != nBuckets) {
-        val relaid = relayoutDir
-        spark.read.parquet(tmpDir.toString)
-          .withColumn("__bucket", bucketExpr(col(keyCol), auto))
-          .write.partitionBy("__bucket").mode("overwrite")
-          .parquet(relaid.toString)
-        if (!fs.delete(tmpDir, true))
-          throw new java.io.IOException(s"cannot clear $tmpDir for relayout")
-        if (!fs.rename(relaid, tmpDir))
-          throw new java.io.IOException(s"cannot install relayout $relaid")
-        pinnedBuckets = auto
-      }
-    }
-
     if (!incremental) {
       // table creation / legacy migration: whole-dir staged swap
-      writeMarker(tmpDir, pinnedBuckets)
+      writeMarker(tmpDir, nBuckets)
       if (fs.exists(stageDir) && !fs.delete(stageDir, true))
         throw new java.io.IOException(s"cannot clear stale $stageDir")
       if (fs.exists(tableDir) && !fs.rename(tableDir, stageDir))

@@ -15,10 +15,9 @@ import org.apache.spark.sql.functions.broadcast
   * count once. Below [[BroadcastRows]] the frame
   * broadcasts — map-side join, zero shuffle on the big side; at or above
   * it the frame is returned un-hinted and AQE/the planner picks the
-  * shuffle join that actually fits. Same tiering discipline as
-  * `PageRank.run`'s node-tier `maybeB` and the graph algos'
-  * `collectThreshold` — identical results either way, only the exchange
-  * strategy changes.
+  * shuffle join that actually fits. Same tiering discipline as the
+  * graph algos' [[collectThreshold]] — identical results either way,
+  * only the exchange strategy changes.
   */
 object SizeGate {
 
@@ -28,12 +27,25 @@ object SizeGate {
     * join-backs need no heavy-hitter split there). */
   val BroadcastRows: Long = 2000000L
 
-  /** The graph/dedup collect-tier gate: `SPARK_GRAFT_COLLECT_THRESHOLD`
+  /** The collect-tier gate of the graph and dedup operators, read by
+    * each operator at each of its gates: the value of the innermost
+    * [[withCollectThreshold]] scope, else `SPARK_GRAFT_COLLECT_THRESHOLD`
     * (a deployment setting; the forced-distributed oracle leg sets it to
-    * 0, which puts every gated algorithm on its distributed tier) or
-    * `default` when unset. */
+    * 0, which puts every gate, nested ones included, on its distributed
+    * tier), else `default`. */
   private[graft] def collectThreshold(default: Long): Long =
-    envLong("SPARK_GRAFT_COLLECT_THRESHOLD", default, min = 0L)
+    scoped.value.getOrElse(
+      envLong("SPARK_GRAFT_COLLECT_THRESHOLD", default, min = 0L))
+
+  private val scoped = new scala.util.DynamicVariable[Option[Long]](None)
+
+  /** Runs `body` with every [[collectThreshold]] read on this thread
+    * returning `n` (0 forces every distributed tier). Tests pick a tier
+    * with it; the engine takes no threshold parameter. */
+  private[graft] def withCollectThreshold[T](n: Long)(body: => T): T = {
+    require(n >= 0, s"graft: collect threshold $n must be >= 0")
+    scoped.withValue(Some(n))(body)
+  }
 
   /** An env-only setting (no system-property twin): `default` when
     * `name` is unset, else its value, which must parse and be ≥ `min`. */

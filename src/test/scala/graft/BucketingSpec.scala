@@ -96,14 +96,16 @@ class BucketingSpec extends SparkSpec with Matchers {
     val dir = "/root/testdata/sf0.001"
     val g = graft.graph.Projection.supplierGraph(spark, dir)
     val before = graft.graph.Louvain.checkpointedSymEntries
-    // threshold 0 forces the distributed ALGORITHM; the checkpointed sym
+    // gate 0 forces the distributed ALGORITHM; the checkpointed sym
     // (an executor-resident shuffle product) is still shared — reusing it
     // changes cost, not formulation (see Louvain.symTiered scaladoc)
-    graft.graph.Louvain.run(g, collectThreshold = 0).count() should be > 0L
+    def forced[T](body: => T): T =
+      graft.util.SizeGate.withCollectThreshold(0L)(body)
+    forced(graft.graph.Louvain.run(g)).count() should be > 0L
     graft.graph.Louvain.checkpointedSymEntries shouldBe (before + 1)
     // a second forced algorithm on the same instance hits the entry
     // (same count — no second insertion) and still answers correctly
-    val cores = graft.graph.KCore.run(g, collectThreshold = 0)
+    val cores = forced(graft.graph.KCore.run(g))
     cores.count() should be > 0L
     graft.graph.Louvain.checkpointedSymEntries shouldBe (before + 1)
     // the forced run must agree with the collect tier on the same graph

@@ -402,12 +402,23 @@ class DedupSpec extends SparkSpec with Matchers {
 
   private val DriverBound = 2000000L
 
+  /** `form` under the collect gate `bound` (0 forces the distributed tier). */
+  private def at[T](bound: Long)(form: => T): T =
+    graft.util.SizeGate.withCollectThreshold(bound)(form)
+
+  private def minhashForm(docs: DataFrame, threshold: Double = 0.5) =
+    Dedup.minhashNearDupGroups(docs, "doc_id", "text", threshold, 64, 16)
+
+  /** q110's configuration: 9/10, 96 tables, 16 dims. */
+  private def cosineForm(vecs: DataFrame, tables: Int = 96) =
+    Dedup.cosineNearDupGroups(vecs, "doc_id", "v", 9, 10, 12, tables, 16)
+
   /** The MinHash group form's two tiers on `docs` (threshold 0.5): the
     * default bound takes the driver tier, bound 0 the distributed one,
     * and both give the same groups, which are returned. */
   private def minhashTiersAgree(docs: DataFrame): Map[Long, (Long, Long)] = {
-    val local = Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, DriverBound)
-    val dist = Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, 0L)
+    val local = at(DriverBound)(minhashForm(docs))
+    val dist = at(0L)(minhashForm(docs))
     isLocal(local) shouldBe true
     isLocal(dist) shouldBe false
     val g = groupMap(local)
@@ -416,11 +427,10 @@ class DedupSpec extends SparkSpec with Matchers {
     g
   }
 
-  /** [[minhashTiersAgree]] for the cosine group form (9/10, 96 tables,
-    * 16 dims: q110's configuration). */
+  /** [[minhashTiersAgree]] for the cosine group form. */
   private def cosineTiersAgree(vecs: DataFrame): Map[Long, (Long, Long)] = {
-    val local = Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, DriverBound)
-    val dist = Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, 0L)
+    val local = at(DriverBound)(cosineForm(vecs))
+    val dist = at(0L)(cosineForm(vecs))
     isLocal(local) shouldBe true
     isLocal(dist) shouldBe false
     val g = groupMap(local)
@@ -927,9 +937,9 @@ class DedupSpec extends SparkSpec with Matchers {
     def materialize(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     jobsOf("minhash-groups")(materialize(
-      Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, DriverBound))) should be <= 3
+      at(DriverBound)(minhashForm(docs)))) should be <= 3
     jobsOf("cosine-groups")(materialize(
-      Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, DriverBound))) should be <= 3
+      at(DriverBound)(cosineForm(vecs)))) should be <= 3
     graft.util.BlockRelease.release(Seq(docs, vecs))
   }
 
@@ -942,10 +952,10 @@ class DedupSpec extends SparkSpec with Matchers {
     val text = Seq(1L -> "a b c d", 2L -> "a b c e").toDF("doc_id", "text")
     for (bound <- Seq(DriverBound, 0L)) {
       val e = intercept[IllegalArgumentException](
-        Dedup.cosineGroups(big, "doc_id", "v", 9, 10, 12, 48, 16, bound))
+        at(bound)(cosineForm(big, tables = 48)))
       e.getMessage should include ("exceed 2^53")
       intercept[IllegalArgumentException](
-        Dedup.minhashGroups(text, "doc_id", "text", 1.5, 64, 16, bound))
+        at(bound)(minhashForm(text, threshold = 1.5)))
     }
     // the driver gid step: min id per hash pair; a third hash that
     // differs inside a pair is gidByContent's collision error
@@ -978,10 +988,8 @@ class DedupSpec extends SparkSpec with Matchers {
       lines.head.head should startWith (s"WARN graft.dedup.$caller: banding buckets project")
       lines(1) shouldBe lines.head
     }
-    both(Dedup.minhashGroups(docs, "doc_id", "text", 0.5, 64, 16, _),
-      "minhashNearDupGroups")
-    both(Dedup.cosineGroups(vecs, "doc_id", "v", 9, 10, 12, 96, 16, _),
-      "cosineNearDupGroups")
+    both(b => at(b)(minhashForm(docs)), "minhashNearDupGroups")
+    both(b => at(b)(cosineForm(vecs)), "cosineNearDupGroups")
     graft.util.BlockRelease.release(Seq(big, docs, vecs))
   }
 
@@ -994,8 +1002,7 @@ class DedupSpec extends SparkSpec with Matchers {
     val long = (0 until 4).map(i => (i.toLong,
         (0 until 30000).map(j => s"d${i}w$j").mkString(" ")))
       .toDF("doc_id", "text").localCheckpoint()
-    def groups(bound: Long) =
-      Dedup.minhashGroups(long, "doc_id", "text", 0.5, 64, 16, bound)
+    def groups(bound: Long) = at(bound)(minhashForm(long))
     val fits = groups(200000L)
     isLocal(fits) shouldBe true
     val g = groupMap(fits)

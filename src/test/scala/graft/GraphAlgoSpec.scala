@@ -6,6 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.graph.{FastRP, GraphAlgos, KCore, Louvain, Projection}
 import graft.metrics.CommunityMetrics
+import graft.util.SizeGate.withCollectThreshold
 
 /** Golden-graph tests (FIXTURES.md §B): exact values for deterministic
   * algorithms, invariants for heuristic ones. */
@@ -45,10 +46,15 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
   test("DataFrame k-core equals the sequential peel") {
     Seq(trianglePendant, twoCliques,
       Projection.supplierGraph(spark, "/root/testdata/sf0.001")).foreach { g =>
-      // run() peels below the collect threshold: the reference
+      // run() peels below the collect gate: the reference; gate 0
+      // forces the DataFrame h-index tier
       val peel = KCore.run(g).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val df = KCore.runDF(g).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      val df = withCollectThreshold(0L)(KCore.run(g))
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       df shouldBe peel // h-index fixpoint ≡ peeling
+      // the forced run cached g's checkpointed sym: drop it, so later
+      // suites' cache counts do not see this one
+      Louvain.invalidateCollected(g)
     }
   }
 
@@ -92,14 +98,14 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
     // threshold of 1 directed edge can never be met by this graph: the
     // old code aborted with require(); now extra DISTRIBUTED coarsening
     // levels run and, once converged, the distributed labels are returned
-    val louvain = Louvain.run(twoCliques, collectThreshold = 1L, maxLevels = 3)
+    val louvain = withCollectThreshold(1L)(Louvain.run(twoCliques, maxLevels = 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     louvain.keySet shouldBe (1L to 8L).toSet // total partition, no abort
     Set(louvain(1L), louvain(2L), louvain(3L), louvain(4L)).size shouldBe 1
     Set(louvain(5L), louvain(6L), louvain(7L), louvain(8L)).size shouldBe 1
     louvain(1L) should not be louvain(5L)
-    val leiden = graft.graph.Leiden.run(twoCliques, distRounds = 2,
-      collectThreshold = 1L, maxLevels = 3)
+    val leiden = withCollectThreshold(1L)(
+        graft.graph.Leiden.run(twoCliques, distRounds = 2, maxLevels = 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     leiden.keySet shouldBe (1L to 8L).toSet
     Set(leiden(1L), leiden(2L), leiden(3L), leiden(4L)).size shouldBe 1
@@ -289,6 +295,79 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
       en != ln || (!en && exact(k) != lsh(k))
     }
     disagree.toDouble / exact.size should be <= 0.02
+  }
+
+  test("collect gate 0 reaches nested component gates: GraphX components, same labels") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    // the listener pattern above: the jobs of one job group that run
+    // GraphX code, a marker job fencing off every earlier job start
+    def graphxJobsOf(group: String)(run: => Unit): Int = {
+      val graphx = new java.util.concurrent.atomic.AtomicInteger(0)
+      val markerSeen = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          js.properties.getProperty("spark.jobGroup.id") match {
+            case `group` =>
+              if (js.stageInfos.exists(_.details.contains("org.apache.spark.graphx.")))
+                graphx.incrementAndGet()
+            case "nested-marker" => markerSeen.countDown()
+            case _ =>
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        run
+        sc.setJobGroup("nested-marker", "marker")
+        spark.range(1).count()
+        markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      graphx.get()
+    }
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // each step runs once in the default scope and once under gate 0; the
+    // step's other gates are fixed by its parameters, so the component
+    // step is the only choice that differs
+    def bothScopes(name: String)(step: => Map[Long, Long]): Map[Long, Long] = {
+      var byDefault, forced = Map.empty[Long, Long]
+      withClue(s"$name: ") {
+        graphxJobsOf(s"$name-default") { byDefault = step } shouldBe 0
+        graphxJobsOf(s"$name-forced") {
+          forced = withCollectThreshold(0L)(step)
+        } should be > 0
+        forced shouldBe byDefault
+      }
+      byDefault
+    }
+
+    // DBSCAN's components over the exact ε-graph (bruteThreshold = 0
+    // turns the brute gate off): two clusters and one noise point
+    val pts = (Seq.tabulate(5)(i => (i.toLong, Seq(1.0, 0.01 * i, 0.0))) ++
+      Seq.tabulate(5)(i => (10L + i, Seq(0.0, 1.0, 0.01 * i))) :+
+      ((99L, Seq(0.0, 0.0, 1.0)))).toDF("id", "v")
+      .select(col("id"), graft.functions.VectorFunctions.l2normalize(col("v")).as("v"))
+    val db = bothScopes("dbscan")(labels(graft.graph.DensityCluster.dbscan(
+      pts, eps = 0.9, minPts = 2, bruteThreshold = 0L, exactCandidates = true)))
+    db(99L) shouldBe -1L
+    (0L to 4L).map(db).toSet shouldBe Set(0L)
+    (10L to 14L).map(db).toSet shouldBe Set(10L)
+
+    // HDBSCAN's extraction levels over a two-chain MST: topFit = 5 leaves
+    // a below-pivot forest, whose components are the nested gate
+    val chains = (0 until 9).map(i => (i.toLong, i + 1L, 0.10 + 0.01 * i)) ++
+      (0 until 9).map(i => (100L + i, 101L + i, 0.12 + 0.01 * i)) :+
+      ((9L, 100L, 5.0))
+    val ids = (0L to 9L) ++ (100L to 109L)
+    val hd = bothScopes("hdbscan-extraction")(labels(
+      graft.graph.Hdbscan.extractLabelsDistributed(chains.toDF("a", "b", "w"),
+        ids.toDF("id"), minClusterSize = 4, topFit = 5, minDriverBatch = 1)))
+    hd shouldBe graft.graph.Hdbscan.extractLabels(chains.toArray, ids.toArray, 4)
   }
 
   test("Leiden: total single-label partition on the testdata graph") {

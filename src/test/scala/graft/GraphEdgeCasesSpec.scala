@@ -50,10 +50,10 @@ class GraphEdgeCasesSpec extends SparkSpec with Matchers {
       c <- 0 to 1; i <- 0 until 12; j <- (i + 1) until 12
     } yield (c * 100L + i, c * 100L + j, 1.0)
     val edges = (cliques :+ ((0L, 100L, 1.0))).toDF("src", "dst", "weight")
-    for (lab <- Seq(
-        Leiden.run(edges, collectThreshold = 0L),
-        Louvain.run(edges, collectThreshold = 0L),
-        Louvain.modularityOptimization(edges, collectThreshold = 0L))) {
+    for (lab <- graft.util.SizeGate.withCollectThreshold(0L)(Seq(
+        Leiden.run(edges),
+        Louvain.run(edges),
+        Louvain.modularityOptimization(edges)))) {
       val labels = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       labels.keySet shouldBe cliques.flatMap(e => Seq(e._1, e._2)).toSet // totality
       CommunityMetrics.modularity(edges, lab).head().getDouble(0) should be >= 0.0

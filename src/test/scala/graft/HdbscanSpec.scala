@@ -104,8 +104,8 @@ class HdbscanSpec extends SparkSpec with Matchers {
     val base = Hdbscan.run(fixture, minPts = 4, minClusterSize = 5,
         bruteThreshold = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Hdbscan.run(fixture, minPts = 4, minClusterSize = 5,
-        bruteThreshold = 0L, collectThreshold = 20L) // force two-phase extraction
+    val dist = graft.util.SizeGate.withCollectThreshold(20L)( // force two-phase extraction
+        Hdbscan.run(fixture, minPts = 4, minClusterSize = 5, bruteThreshold = 0L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     dist.size shouldBe 72
     dist shouldBe base

@@ -104,6 +104,14 @@ class StreamingSpec extends SparkSpec with Matchers {
       Set("a1", "a2", "a3")
   }
 
+  /** The bucket count pinned in a state table's `_graft_buckets` marker. */
+  private def marker(table: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(table + "/_graft_buckets")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toInt
+    finally in.close()
+  }
+
   test("mergeUpsert keep-latest semantics: 10 randomized batch sequences vs a reference map") {
     val s2 = spark
     import s2.implicits._
@@ -142,6 +150,15 @@ class StreamingSpec extends SparkSpec with Matchers {
         .map(r => r.getString(0) -> r.getString(1)).toMap
       withClue(s"seed=$seed after $nBatches batches: ") {
         got shouldBe ref.toMap
+        // the creating merge's count is pinned in the marker, and a later
+        // merge asking for another count honors it
+        marker(table) shouldBe 4
+        Streams.mergeUpsert(Seq(("k0", s"last$seed")).toDF("k", "v"), table,
+          "k", buckets = Streams.DefaultMergeBuckets)
+        marker(table) shouldBe 4
+        spark.read.parquet(table).collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap shouldBe
+          (ref.toMap + ("k0" -> s"last$seed"))
       }
     }
   }
@@ -568,55 +585,6 @@ class StreamingSpec extends SparkSpec with Matchers {
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
     spark.sql("SELECT k FROM dedup_t").collect().map(_.getString(0)).sorted shouldBe Array("a", "b")
-  }
-
-  test("AutoBuckets: creation sizes the bucket count from measured bytes; marker pins it") {
-    val s2 = spark
-    import s2.implicits._
-    // the law itself
-    Streams.chooseBuckets(0L) shouldBe Streams.DefaultMergeBuckets
-    Streams.chooseBuckets(1L << 30) shouldBe Streams.DefaultMergeBuckets // 8 needed -> floor 16
-    Streams.chooseBuckets(5L << 30) shouldBe 64 // 40 buckets needed -> pow2 64
-    Streams.chooseBuckets(Long.MaxValue / 4) shouldBe 4096 // cap
-    def marker(table: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(table + "/_graft_buckets")
-      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim.toInt
-      finally in.close()
-    }
-    // small creation batch: auto resolves to the default floor
-    val dir = Files.createTempDirectory("autobuckets").toFile.getAbsolutePath
-    val small = s"$dir/small"
-    Streams.mergeUpsert((1 to 50).map(i => (s"k$i", i)).toDF("k", "v"),
-      small, "k", buckets = Streams.AutoBuckets)
-    marker(small) shouldBe Streams.DefaultMergeBuckets
-    // a batch big relative to a TINY target forces the creation relayout;
-    // the marker pins the measured choice and later merges honor it
-    val big = s"$dir/big"
-    // values must be incompressible or parquet dictionaries shrink the
-    // measured bytes under any target: unique mixed hex per row
-    val batch = (1 to 5000).map(i =>
-      (s"k$i", (1 to 12).map(j => ((i * 31L + j) * 2654435761L).toHexString)
-        .mkString)).toDF("k", "v")
-    Streams.mergeUpsert(batch, big, "k", buckets = Streams.AutoBuckets,
-      autoTargetBucketBytes = 2048L)
-    val pinned = marker(big)
-    pinned should be > Streams.DefaultMergeBuckets
-    // layout matches the pinned count (a dir per non-empty bucket, <= pinned)
-    val fs = new org.apache.hadoop.fs.Path(big)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketDirs = fs.listStatus(new org.apache.hadoop.fs.Path(big))
-      .map(_.getPath.getName).filter(_.startsWith("__bucket="))
-      .map(_.stripPrefix("__bucket=").toInt)
-    bucketDirs.length should be <= pinned
-    bucketDirs.max should be < pinned
-    // incremental merge against the auto-laid table: keep-latest still holds
-    Streams.mergeUpsert(Seq(("k1", "UPDATED")).toDF("k", "v"), big, "k",
-      buckets = Streams.AutoBuckets)
-    marker(big) shouldBe pinned
-    val out = spark.read.parquet(big)
-    out.count() shouldBe 5000
-    out.filter($"k" === "k1").select("v").as[String].head() shouldBe "UPDATED"
   }
 
   test("ingestGateSink: streaming verdicts == batch gate on a two-increment corpus; retry converges (ST2)") {

@@ -72,8 +72,8 @@ class PageRankSpec extends SparkSpec with Matchers {
     for (seed <- Seq(None, Some((n: org.apache.spark.sql.Column) => n % 2 === 0))) {
       val inMem = PageRank.run(edges(es), iters = 5, seed = seed)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = PageRank.run(edges(es), iters = 5, seed = seed,
-          collectThreshold = 0L)
+      val dist = graft.util.SizeGate.withCollectThreshold(0L)(
+          PageRank.run(edges(es), iters = 5, seed = seed))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       withClue(s"seeded=${seed.isDefined}: ") { inMem shouldBe dist }
       inMem.values.toSet.size should be > 1 // the fixture isn't degenerate

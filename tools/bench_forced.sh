@@ -14,7 +14,12 @@ out="${1:-BENCH_FORCED_last.json}"
 # the distributed-tier query set fixed by the r10 verdict: q40-q49
 # (graph family), PageRank variants q94/q101, and q15 (modularity reads
 # the same projection machinery); plus the MinHash and cosine near-dup
-# group kernels q110/q112, whose small corpora otherwise run on the driver
+# group kernels q110/q112, whose small corpora otherwise run on the driver.
+# Every operator reads the collect gate itself at each of its gates, so
+# =0 also reaches the nested component gates: q45's intra-community
+# components, DBSCAN's components (q46 above its 2,000-point in-memory
+# tier, q64 always) and HDBSCAN's extraction levels (q48/q49, once the MST
+# outgrows the 4,096-edge driver batch) run GraphX components here.
 ONLY=q40_kcore,q41_label_prop,q42_louvain,q43_connected_components
 ONLY=$ONLY,q44_fastrp,q45_leiden,q46_density,q47_modularity_opt
 ONLY=$ONLY,q48_hdbscan,q49_ep2_pipeline,q94_pagerank,q101_ppr,q15_modularity
