@@ -806,11 +806,10 @@ object Dedup {
     * past the gate. Two jobs over one spread of the members
     * ([[graft.util.SpreadScan.spreadInline]]):
     *
-    *  1. every partition hands over its members' (id, singleton, content
-    *     hashes, keys, payload size), but only while it holds at most an
-    *     equal share of bound / bands members; a partition past its share
-    *     stops reading and refuses the tier, so members × bands ≤ bound
-    *     holds for whatever reaches the driver. The driver forms the gids
+    *  1. the members' (id, singleton, content hashes, keys, payload size)
+    *     are collected within bound / bands rows
+    *     ([[SizeGate.collectWithin]]), so members × bands ≤ bound holds
+    *     for whatever reaches the driver. The driver forms the gids
     *     ([[localGids]]) and buckets the reps, and refuses the tier when
     *     their projected candidates Σ C(|B|,2) or their payload elements
     *     exceed the bound: no payload has moved yet;
@@ -824,20 +823,13 @@ object Dedup {
     val rows = src.select(Seq(col("id"), singleton) ++
       contentHashes(contentCols) ++ Seq(when(!singleton, t.keys),
         when(!singleton, t.size)): _*).queryExecution.toRdd
-    val share = math.min(t.bound / t.bands / math.max(rows.getNumPartitions, 1),
-      Int.MaxValue - 1L).toInt
-    val parts = rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-      val got = it.take(share + 1).map { r =>
-        val single = r.getBoolean(1)
-        LocalMember(r.getLong(0), single,
-          if (single) null else (r.getLong(2), r.getLong(3), r.getLong(4)),
-          if (r.isNullAt(5)) null else r.getArray(5).toLongArray(),
-          if (r.isNullAt(6)) 0L else math.max(r.getInt(6), 0).toLong)
-      }.toArray
-      if (got.length > share) null else got
-    })
-    if (parts.contains(null)) return None
-    val ms = parts.flatten
+    val ms = SizeGate.collectWithin(rows, t.bound / t.bands)(_.map { r =>
+      val single = r.getBoolean(1)
+      LocalMember(r.getLong(0), single,
+        if (single) null else (r.getLong(2), r.getLong(3), r.getLong(4)),
+        if (r.isNullAt(5)) null else r.getArray(5).toLongArray(),
+        if (r.isNullAt(6)) 0L else math.max(r.getInt(6), 0).toLong)
+    }.toArray).getOrElse(return None).flatten
     val ids = ms.map(_.id)
     val gid = localGids(ids, ms.map(_.h))
     val reps = ids.indices.filter(i => !ms(i).single && ids(i) == gid(i))

@@ -188,13 +188,15 @@ object Louvain {
     * one community per CONNECTED COMPONENT — Q = 1 − Σ s_c² ≥ 0, and
     * every community is connected, so Leiden's contract survives the
     * substitution. The CC run is only paid on the rare torn path; the
-    * healthy path prices its result with one [[CommunityMetrics.modularity]]
-    * over `sym` (the same Q as over the canonical edges: every edge appears
-    * in both orientations). `m2` is read only to skip an empty graph. */
+    * healthy path prices its result with one distributed
+    * [[CommunityMetrics.modularity]] over `sym` (the same Q as over the
+    * canonical edges: every edge appears in both orientations; `sym` is
+    * past the collect gate on every caller's path, so the metric's collect
+    * tier would only refuse). `m2` is read only to skip an empty graph. */
   private[graph] def incumbentGuard(sym: DataFrame, labels: DataFrame,
       m2: Double): DataFrame = {
     if (m2 <= 0.0 ||
-        CommunityMetrics.modularity(sym, labels).head().getDouble(0) >= 0.0)
+        CommunityMetrics.distributedModularity(sym, labels).head().getDouble(0) >= 0.0)
       return labels
     val comp = GraphAlgos.connectedComponents(
         sym.select(col("src"), col("dst"), col("weight")))

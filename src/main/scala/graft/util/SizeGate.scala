@@ -1,5 +1,8 @@
 package graft.util
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
@@ -45,6 +48,25 @@ object SizeGate {
   private[graft] def withCollectThreshold[T](n: Long)(body: => T): T = {
     require(n >= 0, s"graft: collect threshold $n must be >= 0")
     scoped.withValue(Some(n))(body)
+  }
+
+  /** The bounded collect of the collect tiers: every partition's rows,
+    * packed on the executor by `pack` (which must consume its iterator),
+    * or None when they weigh more than `bound` units (`units(row)` each).
+    * Every partition hands `pack` rows only while it holds at most an
+    * equal share of the bound; a partition past its share stops reading
+    * and refuses, so nothing past the bound reaches the driver. A bound
+    * ≤ 0 runs no job. One job. */
+  private[graft] def collectWithin[R, P: ClassTag](rows: RDD[R], bound: Long,
+      units: R => Long = (_: R) => 1L)(pack: Iterator[R] => P): Option[Array[P]] = {
+    if (bound <= 0) return None
+    val share = bound / math.max(rows.getNumPartitions, 1)
+    val parts = rows.sparkContext.runJob(rows, (it: Iterator[R]) => {
+      var used = 0L
+      val packed = pack(it.takeWhile { r => used += units(r); used <= share })
+      if (used > share) None else Some(packed)
+    })
+    if (parts.contains(None)) None else Some(parts.map(_.get))
   }
 
   /** An env-only setting (no system-property twin): `default` when

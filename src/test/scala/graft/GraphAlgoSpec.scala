@@ -110,6 +110,9 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
     leiden.keySet shouldBe (1L to 8L).toSet
     Set(leiden(1L), leiden(2L), leiden(3L), leiden(4L)).size shouldBe 1
     Set(leiden(5L), leiden(6L), leiden(7L), leiden(8L)).size shouldBe 1
+    // the forced runs cached twoCliques' checkpointed sym: drop it, so
+    // later suites' cache counts do not see this one
+    Louvain.invalidateCollected(twoCliques)
   }
 
   test("Louvain sequential tier: label-node movement does not merge distinct communities") {
@@ -186,36 +189,113 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
     rows(2).isNullAt(7) shouldBe true
   }
 
-  test("building the structure frame starts no Spark job") {
-    val s = spark
-    import s.implicits._
+  /** The jobs started by `run` under job group `group`: a marker job
+    * fences off every earlier job start (the listener bus delivers in
+    * order). */
+  private def jobsOf(group: String)(run: => Unit): Int = {
     val sc = spark.sparkContext
-    val labels = ((1L to 4L).map(_ -> 0) ++ (5L to 8L).map(_ -> 1))
-      .toDF("node", "label")
-    val buildJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         js.properties.getProperty("spark.jobGroup.id") match {
-          case "structure-build" => buildJobs.incrementAndGet()
-          case "structure-marker" => markerSeen.countDown()
+          case `group` => jobs.incrementAndGet()
+          case "jobs-marker" => markerSeen.countDown()
           case _ =>
         }
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("structure-build", "build only")
-      CommunityMetrics.structure(twoCliques, labels)
-      // the listener bus delivers in order: once the marker job's start
-      // arrives, any job the build started has arrived before it
-      sc.setJobGroup("structure-marker", "marker")
+      sc.setJobGroup(group, group)
+      run
+      sc.setJobGroup("jobs-marker", "marker")
       spark.range(1).count()
       markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    buildJobs.get() shouldBe 0
+    jobs.get()
+  }
+
+  private def cliqueLabels: DataFrame = {
+    val s = spark
+    import s.implicits._
+    ((1L to 4L).map(_ -> 0) ++ (5L to 8L).map(_ -> 1)).toDF("node", "label")
+  }
+
+  /** Unit vectors of nodes 1..8 in 3 dimensions. */
+  private def cliqueVecs: DataFrame = {
+    val s = spark
+    import s.implicits._
+    (1L to 8L).map { n =>
+      val v = Seq(1.0 + n % 2, n % 3, 0.5 * n)
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      n -> v.map(_ / norm)
+    }.toDF("node", "v")
+  }
+
+  private def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("metrics driver tier: <= 2 jobs per modularity, <= 3 per consumed metric") {
+    val (labels, vecs) = (cliqueLabels, cliqueVecs)
+    val members = labels.join(vecs, "node").select(col("label"), col("v")).cache()
+    members.count()
+    jobsOf("modularity") {
+      val q = CommunityMetrics.modularity(twoCliques, labels)
+      q.isLocal shouldBe true
+      q.head().getDouble(0) shouldBe (12.0 / 13.0 - 0.5) +- 1e-9
+    } should be <= 2
+    Seq[(String, () => DataFrame)](
+      "structure" -> (() => CommunityMetrics.structure(twoCliques, labels)),
+      "ecs" -> (() => CommunityMetrics.ecs(members)),
+      "homophily" -> (() => CommunityMetrics.homophily(twoCliques, vecs))
+    ).foreach { case (name, metric) =>
+      withClue(s"$name: ") {
+        jobsOf(name) {
+          val df = metric()
+          df.isLocal shouldBe true
+          materialize(df)
+        } should be <= 3
+        // the distributed plans are lazy: building them collects nothing
+        jobsOf(s"$name-forced") {
+          withCollectThreshold(0L)(metric()).isLocal shouldBe false
+        } shouldBe 0
+      }
+    }
+    jobsOf("modularity-forced") {
+      withCollectThreshold(0L)(CommunityMetrics.modularity(twoCliques, labels))
+    } shouldBe 0
+    members.unpersist()
+  }
+
+  test("bounded collect: a partition past its share refuses; the metrics fall back alike") {
+    val sc = spark.sparkContext
+    // partitions of 1 and 5 rows: a bound of 6 gives each a share of 3
+    val rows = sc.parallelize(Seq(1), 1).union(sc.parallelize(1 to 5, 1))
+    val read = sc.longAccumulator("rows read")
+    val counted = rows.map { x => read.add(1); x }
+    graft.util.SizeGate.collectWithin(counted, 6L)(_.toArray) shouldBe None
+    read.value shouldBe 1L + 4L // the 5-row partition stops after share + 1
+    graft.util.SizeGate.collectWithin(rows, 10L)(_.toArray).map(_.flatten.toSeq) shouldBe
+      Some(Seq(1, 1, 2, 3, 4, 5))
+    jobsOf("bound-0") {
+      graft.util.SizeGate.collectWithin(rows, 0L)(_.toArray) shouldBe None
+    } shouldBe 0
+    // all 13 edges in the last of 4 partitions: a gate of 14 gives each
+    // partition 3 rows, a gate of 100 gives 25
+    val skewed = spark.createDataFrame(
+      sc.parallelize(Seq.empty[org.apache.spark.sql.Row], 3)
+        .union(sc.parallelize(twoCliques.collect().toSeq, 1)),
+      twoCliques.schema)
+    def rowsOf(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    val refused = withCollectThreshold(14L)(CommunityMetrics.structure(skewed, cliqueLabels))
+    val local = withCollectThreshold(100L)(CommunityMetrics.structure(skewed, cliqueLabels))
+    refused.isLocal shouldBe false
+    local.isLocal shouldBe true
+    local.schema shouldBe refused.schema
+    rowsOf(local) shouldBe rowsOf(refused)
   }
 
   test("Leiden: two cliques + bridge → the two cliques (refined)") {

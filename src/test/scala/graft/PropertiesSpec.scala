@@ -109,4 +109,80 @@ class PropertiesSpec extends SparkSpec with Matchers {
       actual shouldBe expected
     }
   }
+
+  /** A labeled graph for the tier check: weighted edges over nodes 0..n
+    * (self-loops and duplicate edges included, possibly none), labels
+    * that skip some endpoints and cover two edge-less nodes (one of
+    * them a singleton community), unit or zero node vectors for some
+    * nodes, and optionally one node repeated in the labels or vectors. */
+  private final case class Labeled(edges: Seq[(Long, Long, Double)],
+      labels: Seq[(Long, Int)], vecs: Seq[(Long, Seq[Double])])
+
+  private val labeledGen: Gen[Labeled] = for {
+    n <- Gen.chooseNum(1, 9)
+    nEdges <- Gen.oneOf(Gen.const(0), Gen.chooseNum(1, 24))
+    edges <- Gen.listOfN(nEdges, for {
+      a <- Gen.chooseNum(0, n); b <- Gen.chooseNum(0, n)
+      w <- Gen.oneOf(0.5, 1.0, 2.0, 3.0)
+    } yield (a.toLong, b.toLong, w))
+    k <- Gen.chooseNum(1, 4) // 1: one community holds every labeled node
+    labels <- Gen.sequence[List[Option[(Long, Int)]], Option[(Long, Int)]](
+      (0 to n + 1).map(node => Gen.option(Gen.chooseNum(0, k - 1).map(node.toLong -> _))))
+    dim <- Gen.chooseNum(2, 4)
+    vecs <- Gen.sequence[List[Option[(Long, Seq[Double])]], Option[(Long, Seq[Double])]](
+      (0 to n + 1).map(node => Gen.option(Gen.frequency(
+        1 -> Gen.const(Seq.fill(dim)(0.0)), // the zero vector
+        6 -> Gen.listOfN(dim, Gen.chooseNum(-1.0, 1.0)).map { v =>
+          val norm = math.sqrt(v.map(x => x * x).sum)
+          if (norm == 0.0) v else v.map(_ / norm)
+        }).map(node.toLong -> _))))
+    repeat <- Gen.chooseNum(0, 3) // 1: a label row twice, 2: a vector row twice
+  } yield {
+    val lab = labels.flatten :+ ((n + 2).toLong -> 99)
+    val vs = vecs.flatten
+    Labeled(edges, if (repeat == 1) lab :+ lab.head else lab,
+      if (repeat == 2 && vs.nonEmpty) vs :+ vs.head else vs)
+  }
+
+  test("metrics driver tier equals the distributed tier on generated inputs") {
+    val s = spark
+    import s.implicits._
+    import graft.util.SizeGate.withCollectThreshold
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.headOption.map(String.valueOf)).toSeq
+    def same(a: Any, b: Any): Unit = (a, b) match {
+      case (x: Double, y: Double) => x shouldBe y +- 1e-9 * math.max(1.0, math.abs(y))
+      case _ => a shouldBe b
+    }
+    val fixed = Seq(
+      Labeled(Nil, Seq(1L -> 0, 2L -> 1), Seq(1L -> Seq(1.0, 0.0))), // no edges
+      Labeled(Seq((1L, 1L, 2.0), (1L, 2L, 1.0), (1L, 2L, 1.0), (2L, 3L, 0.5)),
+        Seq(1L -> 0, 2L -> 0, 3L -> 0), // one community, self-loop, duplicate
+        Seq(1L -> Seq(0.0, 0.0), 2L -> Seq(0.6, 0.8), 3L -> Seq(0.6, 0.8))))
+    (fixed ++ samples(labeledGen, 14)).foreach { g =>
+      val edges = g.edges.toDF("src", "dst", "weight")
+      val labels = g.labels.toDF("node", "label")
+      val vecs = g.vecs.toDF("node", "v")
+      val members = g.labels.flatMap { case (node, l) =>
+        g.vecs.filter(_._1 == node).map(v => (l, v._2)) }.toDF("label", "v")
+      val repeatedLabel = g.labels.map(_._1).distinct.length < g.labels.length
+      val repeatedVec = g.vecs.map(_._1).distinct.length < g.vecs.length
+      Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)](
+        ("modularity", () => CommunityMetrics.modularity(edges, labels), !repeatedLabel),
+        ("structure", () => CommunityMetrics.structure(edges, labels), !repeatedLabel),
+        ("ecs", () => CommunityMetrics.ecs(members), true),
+        ("homophily", () => CommunityMetrics.homophily(edges, vecs), !repeatedVec)
+      ).foreach { case (name, metric, driver) =>
+        withClue(s"$name on $g: ") {
+          val (local, dist) = (metric(), withCollectThreshold(0L)(metric()))
+          local.isLocal shouldBe driver // a repeated node refuses the tier
+          dist.isLocal shouldBe false
+          local.schema shouldBe dist.schema
+          val (l, d) = (rowsOf(local), rowsOf(dist))
+          l.length shouldBe d.length
+          l.zip(d).foreach { case (lr, dr) => lr.zip(dr).foreach { case (a, b) => same(a, b) } }
+        }
+      }
+    }
+  }
 }
