@@ -1280,8 +1280,12 @@ object Dedup {
     * increments) still can never overcount — the store remains a semi
     * side — so no store-wide distinct is needed, which is what lets the
     * streaming sink ([[graft.streaming.Streams.ingestGateSink]]) append
-    * per-batch store partitions and leave compaction as a maintenance
-    * concern. */
+    * one store partition per micro-batch.
+    *
+    * Verdicts: exact dups flag by the matched signatures; per-doc shared
+    * grams count against the matched grams. The matched sets are
+    * intersections with the batch key sets, so the batch key counts
+    * bound them and drive their SizeGate broadcasts. */
   private[graft] def gateAgainstStore(batch: DataFrame, storeSigs: DataFrame,
       storeGrams: DataFrame): DataFrame = {
     val batchSigs = batch.select(col("sig")).distinct()
@@ -1297,25 +1301,12 @@ object Dedup {
       .join(SizeGate.maybeBroadcast(batchH, known = Some(nH)),
         Seq("h"), "left_semi")
       .distinct()
-    gateVerdicts(batch, matchedSigs, matchedH, nSigs, nH)
-  }
-
-  /** Verdict assembly shared by [[gateAgainstStore]] and the indexed
-    * gate ([[IngestIndex.gateWithIndex]]): given the MATCHED key sets
-    * (store keys proven present in the batch — however they were found),
-    * flag exact dups and count per-doc shared grams. `sigBound`/`hBound`
-    * bound the matched sets (they are intersections with the batch key
-    * sets, so the batch key counts — which every caller already has —
-    * are valid bounds) and drive the SizeGate broadcasts. */
-  private[graft] def gateVerdicts(batch: DataFrame, matchedSigs: DataFrame,
-      matchedH: DataFrame, sigBound: Long, hBound: Long): DataFrame = {
     val exact = batch
-      .join(SizeGate.maybeBroadcast(matchedSigs, known = Some(sigBound)),
+      .join(SizeGate.maybeBroadcast(matchedSigs, known = Some(nSigs)),
         Seq("sig"), "left_semi")
       .select(col("doc_id"), lit(true).as("xd"))
-    val batchG = batch.select(col("doc_id"), explode(col("grams")).as("h"))
     val shared = batchG
-      .join(SizeGate.maybeBroadcast(matchedH, known = Some(hBound)),
+      .join(SizeGate.maybeBroadcast(matchedH, known = Some(nH)),
         Seq("h"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("ns")) // grams already distinct per doc
     batch

@@ -85,66 +85,6 @@ object BloomSketch {
         .bitwiseAND(lit(1L)) === lit(1L)
     }.reduce(_ && _)
   }
-
-  // ---------------------------------------------------------------------
-  // WIDE variant (the ingest-index sidecar, graft.dedup.IngestIndex):
-  // k ≤ 4 hash rows of 30-BIT positions — rows 0..1 sliced from the
-  // key's FIRST u60 (md5 hex chars 1-15), rows 2..3 from its SECOND
-  // (chars 16-30) — so one bitset scales to m = 2^30 bits and four
-  // independent rows reach FP ≈ p^4 from ~4 bytes/key of sidecar (the
-  // regime where a novel micro-batch's survivor set is tens of keys,
-  // not thousands). Wide blooms are INTERNAL index structures (never
-  // oracled, never collected past one SizeGate'd survivors frame), so
-  // the probe takes per-ROW geometry columns: a store whose key count
-  // outgrew one bitset shards the key space and each shard row carries
-  // its own mBits.
-  // ---------------------------------------------------------------------
-
-  /** k 30-bit positions from two u60s: k ≤ 4, 64 ≤ m ≤ 2^30, m a power
-    * of two. */
-  private[graft] def requireWideDims(mBits: Int, k: Int): Unit = {
-    require(mBits >= 64 && mBits <= (1 << 30) && Integer.bitCount(mBits) == 1,
-      "wide bloom: mBits must be a power of two in [64, 2^30]")
-    require(k > 0 && k <= 4, "wide bloom: 0 < k <= 4 (2 x 30 bits per u60)")
-  }
-
-  /** Which source long and shift hash row r reads: rows 0..1 slice u1,
-    * rows 2..3 slice u2, 30 bits each. */
-  @inline private[graft] def wideShift(r: Int): Int = 30 * (r & 1)
-
-  /** Build a wide bitset from the two packed u60 LONG keys (md5 hex
-    * chars 1-15 and 16-30, already parsed — the ingest index
-    * materializes them once per key and feeds both this build and the
-    * idx writer): ONE array<long> of k·m/64 words per group (same
-    * row-major word layout as the 17-bit variant). Rows with either key
-    * null are skipped. */
-  def bloom_build_wide(u60a: Column, u60b: Column, mBits: Int,
-      k: Int = 4): Column = {
-    requireWideDims(mBits, k)
-    column(BloomWideAgg(expression(u60a), expression(u60b), mBits, k)
-      .toAggregateExpression())
-  }
-
-  /** Probe a wide bitset whose geometry arrives as COLUMNS (`mBitsCol`
-    * must hold powers of two in the wide range; k is fixed per call
-    * site): true iff all k positions of (`u60a`, `u60b`) are set in
-    * `words`. Builtin expressions only — a probe over (keys × bloom
-    * rows) stays one codegen span. */
-  def bloom_probe_wide(u60a: Column, u60b: Column, words: Column,
-      mBitsCol: Column, k: Int = 4): Column = {
-    require(k > 0 && k <= 4, "wide bloom: 0 < k <= 4")
-    val m = mBitsCol.cast("long")
-    val wordsPerRow = (m / 64L).cast("long")
-    (0 until k).map { r =>
-      val src = if (r < 2) u60a else u60b
-      val p = shiftrightunsigned(src, wideShift(r)).bitwiseAND(m - 1L)
-      val word = element_at(words,
-        (shiftrightunsigned(p, 6) + lit(r.toLong) * wordsPerRow + lit(1L))
-          .cast("int"))
-      call_function("shiftright", word, p.bitwiseAND(lit(63L)).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-  }
 }
 
 /** The bitset-building aggregate: buffer = k·m/64 longs, update sets k
@@ -225,86 +165,6 @@ case class BloomHexAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BloomHexAgg =
     copy(child = newChildren.head)
-}
-
-/** Wide-bloom builder: identical buffer/merge/serde discipline to
-  * [[BloomHexAgg]], but positions are k ≤ 4 30-bit slices of the two
-  * packed u60 keys so one bitset covers up to 2^30 bits and four
-  * independent hash rows. Internal (ingest-index sidecar) — not
-  * oracle-replayable, hence a separate aggregate rather than a mode
-  * flag on the 17-bit class whose slicing IS its oracle contract. */
-case class BloomWideAgg(
-    childA: Expression,
-    childB: Expression,
-    mBits: Int,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  BloomSketch.requireWideDims(mBits, k)
-  private val wordsPerRow = mBits / 64
-
-  override def children: Seq[Expression] = Seq(childA, childB)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bloom_build_wide"
-
-  override def createAggregationBuffer(): Array[Long] =
-    new Array[Long](k * wordsPerRow)
-
-  override def update(buf: Array[Long],
-      input: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
-    val va = childA.eval(input)
-    val vb = childB.eval(input)
-    if (va != null && vb != null) {
-      val ua = va.asInstanceOf[Long]
-      val ub = vb.asInstanceOf[Long]
-      var r = 0
-      while (r < k) {
-        val u = if (r < 2) ua else ub
-        val p = ((u >>> BloomSketch.wideShift(r)) & (mBits - 1)).toInt
-        buf(r * wordsPerRow + (p >>> 6)) |= 1L << (p & 63)
-        r += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) |= b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = {
-    val boxed = new Array[Any](buf.length)
-    var i = 0
-    while (i < buf.length) { boxed(i) = buf(i); i += 1 }
-    new GenericArrayData(boxed)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = createAggregationBuffer()
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong; i += 1 }
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomWideAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomWideAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomWideAgg =
-    copy(childA = newChildren(0), childB = newChildren(1))
 }
 
 object BloomHexAgg {

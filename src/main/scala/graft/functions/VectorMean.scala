@@ -13,29 +13,43 @@ import org.apache.spark.sql.functions.udaf
   * the shuffle carries one (dim-length array, long) per group per partition
   * rather than every row — the property that makes a 100 TB centroid job a
   * single cheap shuffle.
+  *
+  * Null vectors are skipped. Every other vector of a group must have the
+  * group's length (`[]` has length 0); a mismatch throws an
+  * `IllegalArgumentException` naming both lengths, whatever the
+  * partitioning or row order. The buffer is empty while its count is 0,
+  * so a group of only `[]` averages to `[]` and a group of only nulls to
+  * null.
   */
 object VectorMean extends Aggregator[Seq[Double], (Array[Double], Long), Seq[Double]] {
 
   override def zero: (Array[Double], Long) = (Array.emptyDoubleArray, 0L)
 
+  private def requireLength(a: Int, b: Int): Unit =
+    if (a != b) throw new IllegalArgumentException(
+      s"graft: VectorMean over vectors of lengths ${math.min(a, b)} and " +
+        s"${math.max(a, b)} in one group")
+
   override def reduce(b: (Array[Double], Long), v: Seq[Double]): (Array[Double], Long) = {
     if (v == null) b
     else {
       val (sum, n) = b
-      val s = if (sum.length == 0) new Array[Double](v.length) else sum
+      val s = if (n == 0L) new Array[Double](v.length) else sum
+      requireLength(s.length, v.length)
       var i = 0
-      while (i < v.length && i < s.length) { s(i) += v(i); i += 1 }
+      while (i < s.length) { s(i) += v(i); i += 1 }
       (s, n + 1)
     }
   }
 
   override def merge(a: (Array[Double], Long), b: (Array[Double], Long)): (Array[Double], Long) = {
-    if (a._1.length == 0) b
-    else if (b._1.length == 0) a
+    if (a._2 == 0L) b
+    else if (b._2 == 0L) a
     else {
       val s = a._1
+      requireLength(s.length, b._1.length)
       var i = 0
-      while (i < s.length && i < b._1.length) { s(i) += b._1(i); i += 1 }
+      while (i < s.length) { s(i) += b._1(i); i += 1 }
       (s, a._2 + b._2)
     }
   }

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions, VectorSum}
+import graft.functions.VectorFunctions
 import graft.util.Checkpointer.CheckpointSyntax
 
 /** FastRP node embeddings (SURVEY.md G1; reference GDS call at
@@ -14,7 +14,7 @@ import graft.util.Checkpointer.CheckpointSyntax
   * normalization, combined with per-iteration weights (Chen et al., FastRP).
   *
   * Round cost: ONE edge-sized shuffle (edges ⋈ vectors on src, map-side
-  * partial VectorSum on dst) plus ONE node-sized join. The per-node degree
+  * partial VectorWeightedSum on dst) plus ONE node-sized join. The per-node degree
   * and the β-weighted accumulator ride in the same state row as the current
   * vector, so no second node-sized join per round; previous round state is
   * unpersisted as soon as the next is materialized (bounded storage across a

@@ -452,8 +452,8 @@ object CommunityMetrics {
   }
 
   /** The ECS rows of collected (label, v) members, or None when the
-    * vectors differ in length or have none (VectorMean's result would
-    * depend on the row order there). */
+    * vectors differ in length or have none, which the distributed plans
+    * handle (VectorMean rejects mixed lengths). */
   private def localEcs(members: (Array[Any], Array[Array[Double]])): Option[Seq[Row]] = {
     val (labels, vs) = members
     val dim = vs.headOption.fold(1)(_.length)

@@ -586,70 +586,76 @@ object Streams {
     * corpus: its fingerprints land in the `batch=bootstrap` partition —
     * bit-compatible with what each micro-batch computes (same
     * [[graft.dedup.Dedup.docSigGrams]] kernel), and never collides with
-    * the numeric per-batch partitions the sink writes. */
+    * the numeric per-batch partitions the sink writes. Re-running it
+    * rewrites that partition in place; the next gate reads the new
+    * content, since every gate lists the store afresh. */
   def bootstrapIngestStore(docs: DataFrame, idCol: String, textCol: String,
-      storePath: String, n: Int = 8): Unit = {
-    val fp = graft.dedup.Dedup.docSigGrams(docs, idCol, textCol, n)
+      storePath: String, n: Int = 8): Unit =
+    graft.dedup.Dedup.docSigGrams(docs, idCol, textCol, n)
       .select(col("sig"), col("grams"))
-      .cp() // three consumers: store write, idx, bloom
-    try {
-      graft.dedup.IngestIndex
-        .invalidatePart(docs.sparkSession, storePath, "batch=bootstrap")
-      fp.write.mode("overwrite").parquet(s"$storePath/batch=bootstrap")
-      graft.dedup.IngestIndex.writeSidecars(fp, storePath, "batch=bootstrap")
-    } finally graft.util.BlockRelease.release(fp)
+      .write.mode("overwrite").parquet(s"$storePath/batch=bootstrap")
+
+  /** The fingerprint store's (sig, grams) rows, read from its `batch=*`
+    * partitions minus `batch=<excludeBatch>` — a retried micro-batch must
+    * not gate against the fingerprints its own earlier (possibly partial)
+    * attempt appended, or every replayed doc reads as a duplicate of
+    * itself. An empty frame when the store does not exist yet (the
+    * bootstrap-less first increment) or holds no other partition. Each
+    * call lists the store afresh, so a partition rewritten in place is
+    * read as it is now. */
+  private def readIngestStore(spark: SparkSession, storePath: String,
+      excludeBatch: Option[Long]): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(storePath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val parts = if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+        .map(_.getPath.getName)
+        .filterNot(n => excludeBatch.exists(b => n == s"batch=$b"))
+        .sorted
+    if (parts.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        ingestStoreSchema)
+    else spark.read.schema(ingestStoreSchema)
+      .parquet(parts.map(n => s"$storePath/$n"): _*)
   }
 
-  /** Fold all fingerprint-store partitions (and sidecars) into one —
-    * offline maintenance; see [[graft.dedup.IngestIndex.compact]] for
-    * the quiescence contract and crash-safety ordering. */
-  def compactIngestStore(spark: SparkSession, storePath: String): Unit =
-    graft.dedup.IngestIndex.compact(spark, storePath)
+  /** Gate a fingerprinted batch (doc_id, sig, grams) against the store
+    * at `storePath` with [[graft.dedup.Dedup.gateAgainstStore]], every
+    * partition but `batch=<excludeBatch>` read by [[readIngestStore]]. */
+  private[graft] def gateAgainstIngestStore(fp: DataFrame, storePath: String,
+      excludeBatch: Option[Long]): DataFrame = {
+    val store = readIngestStore(fp.sparkSession, storePath, excludeBatch)
+    graft.dedup.Dedup.gateAgainstStore(fp, store.select(col("sig")),
+      store.select(explode(col("grams")).as("h")))
+  }
 
   /** One micro-batch of the ingest gate (the [[ingestGateSink]] kernel,
     * factored out so a retry is directly testable): fingerprint the
     * batch, gate it against every store partition EXCEPT this batch's
-    * own via the INDEXED gate ([[graft.dedup.IngestIndex.gateWithIndex]]
-    * — bloom-probe the batch keys, exact-verify only the survivors
-    * against shard-pruned idx partitions, raw-scan only partitions that
-    * lack sidecars; verdicts identical to the full-store
-    * [[graft.dedup.Dedup.gateAgainstStore]] scan by the no-FN argument
-    * in IngestIndex's scaladoc), then idempotently (mode=overwrite per
-    * batch-keyed partition) write (a) the accepted docs' fingerprints
-    * into the store WITH their idx/bloom sidecar partitions and (b)
+    * own, then idempotently (mode=overwrite per batch-keyed partition)
+    * write (a) the accepted docs' fingerprints into the store and (b)
     * every verdict row (doc_id, exact_dup, n_grams, n_shared, drop_doc)
     * to the output table. Deterministic given the batch content, so a
     * foreachBatch retry with the same batchId converges to byte-equal
-    * state (ST2) — the self-exclusion (applied to store, idx, AND bloom
-    * partitions alike) is what makes the retried gate read the same
-    * store the first attempt saw. */
+    * state (ST2) — the self-exclusion is what makes the retried gate
+    * read the same store the first attempt saw. */
   private[graft] def ingestGateBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, storePath: String, outPath: String,
       n: Int): Unit = {
-    // five consumers (gate keys, gate grams via the verdict plan, the
-    // accepted-fingerprint join, the store write, the sidecar writes):
-    // fingerprint once
+    // three consumers (gate sig keys, gate gram keys and verdict plan,
+    // the accepted-fingerprint join): fingerprint once
     val fp = graft.dedup.Dedup.docSigGrams(batch, idCol, textCol, n)
       .cp()
     try {
-      // a retry overwrites its own partition in place — drop any cached
-      // plan over its previous attempt's files before gating/writing
-      graft.dedup.IngestIndex
-        .invalidatePart(fp.sparkSession, storePath, s"batch=$batchId")
-      val verdicts = graft.dedup.IngestIndex
-        .gateWithIndex(fp, storePath, Some(batchId))
+      // two consumers: the accepted-fingerprint join and the verdict write
+      val verdicts = gateAgainstIngestStore(fp, storePath, Some(batchId)).cp()
       try {
-        val accepted = fp
-          .join(verdicts.filter(!col("drop_doc")).select(col("doc_id")),
+        fp.join(verdicts.filter(!col("drop_doc")).select(col("doc_id")),
             Seq("doc_id"))
           .select(col("sig"), col("grams"))
-          .cp()
-        try {
-          accepted.write.mode("overwrite")
-            .parquet(s"$storePath/batch=$batchId")
-          graft.dedup.IngestIndex
-            .writeSidecars(accepted, storePath, s"batch=$batchId")
-        } finally graft.util.BlockRelease.release(accepted)
+          .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
         verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       } finally graft.util.BlockRelease.release(verdicts)
     } finally graft.util.BlockRelease.release(fp)
@@ -661,43 +667,30 @@ object Streams {
     * before producing it): subscribe the document topic, then each
     * micro-batch is gated against the persisted fingerprint store with
     * [[graft.dedup.Dedup.gateAgainstStore]] and the store grows by the
-    * ACCEPTED docs' fingerprints only (the store side of the gate is
-    * left-semi, so the per-batch append-only partitions need no
-    * store-wide distinct — compaction stays a maintenance concern, never
-    * a correctness one). Verdicts land in `outPath`, one partition per
-    * batch; both writes are per-batchId overwrites, so same-checkpoint
-    * replays converge (ST2). A FRESH checkpoint over a non-empty store
-    * re-gates the topic against fingerprints of the same docs (batch ids
-    * restart at 0 but prior partitions persist) — bootstrap a new store
-    * (or [[bootstrapIngestStore]]) when re-consuming from earliest.
+    * ACCEPTED docs' fingerprints only, one `batch=<id>` partition per
+    * non-empty micro-batch (the store side of the gate is left-semi, so
+    * the append-only partitions need no store-wide distinct). Verdicts
+    * land in `outPath`, one partition per batch; both writes are
+    * per-batchId overwrites, so same-checkpoint replays converge (ST2).
+    * A FRESH checkpoint over a non-empty store re-gates the topic
+    * against fingerprints of the same docs (batch ids restart at 0 but
+    * prior partitions persist) — bootstrap a new store (or
+    * [[bootstrapIngestStore]]) when re-consuming from earliest.
     * Batch↔store only: within-batch duplicates are the upstream
     * [[dedupStream]]'s job, matching the batch-tier
     * [[graft.dedup.Dedup.incrementalIngestGate]] contract.
     *
-    * `compactEvery = k > 0` auto-compacts IN-STREAM every k batches,
-    * TIERED: after batch B's writes commit, the small recent partitions
-    * that can never be retried again (bootstrap + numeric batches < B —
-    * see the safety argument on [[graft.dedup.IngestIndex.compact]])
-    * fold into a new generation, and prior generations merge under the
-    * size-tiered GEOMETRIC carry (r14: a generation is rewritten only
-    * into one at least twice its size), so the amortized fold cost stays
-    * O(1) per batch while a stream of ANY length holds O(k + log store)
-    * store partitions — generation count no longer grows with stream
-    * length, and no stream-stopping maintenance window is ever needed.
-    * Verdicts are unaffected (spec-pinned against an uncompacted twin);
-    * 0 disables and leaves maintenance to the offline
-    * [[compactIngestStore]], whose full merge folds everything to one
-    * generation. */
+    * The gate reads only the store's `batch=*` partitions, so stores
+    * written by earlier versions gate unchanged: their `_idx` and
+    * `_bloom` directories are never read, and their `batch=compacted_*`
+    * partitions are read like any other. */
   def ingestGateSink(docs: DataFrame, idCol: String, textCol: String,
       storePath: String, outPath: String, checkpoint: String,
-      n: Int = 8, compactEvery: Int = 0): DataStreamWriter[org.apache.spark.sql.Row] =
+      n: Int = 8): DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ingestGateBatch(batch, batchId, idCol, textCol, storePath, outPath, n)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.dedup.IngestIndex.compact(batch.sparkSession, storePath,
-            onlyBelow = Some(batchId), includeCompacted = false)
       }
 }

@@ -24,7 +24,6 @@ class SizeGateSpec extends SparkSpec with Matchers {
 
   test("bounded env settings: values at the minimum accepted, below it or malformed named") {
     Seq(
-      ("SPARK_GRAFT_BLOOM_CACHE_STORES", 1L, Seq("eight", "0", "-1")),
       ("SPARK_GRAFT_RUNS", 1L, Seq("abc", "0", "-1"))
     ).foreach { case (name, min, bad) =>
       SizeGate.parsedEnvLong(name, min.toString, min) shouldBe min

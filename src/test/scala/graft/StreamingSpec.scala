@@ -609,30 +609,36 @@ class StreamingSpec extends SparkSpec with Matchers {
       .toDF("doc_id", "text")
     val inc2 = Seq(("d", i2dupNovel), ("e", i2novel)).toDF("doc_id", "text")
 
-    val root = Files.createTempDirectory("ingestgate").toFile.getAbsolutePath
-    val (topic, store, outP, ckpt) =
-      (s"$root/topic", s"$root/store", s"$root/out", s"$root/ckpt")
-    new java.io.File(topic).mkdirs()
-    def stage(name: String, docs: Seq[(String, String)]): Unit = {
-      val w = new java.io.PrintWriter(s"$topic/$name")
-      docs.foreach { case (id, t) =>
-        w.println(s"""{"doc_id":"$id","text":"$t"}""")
-      }
-      w.close()
-    }
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
+    // one sink per temp root: stage(name, docs) drops a topic file,
+    // drain() runs the sink over everything staged so far
+    final class Flow(prefix: String) {
+      val root = Files.createTempDirectory(prefix).toFile.getAbsolutePath
+      val (topic, store, outP, ckpt) =
+        (s"$root/topic", s"$root/store", s"$root/out", s"$root/ckpt")
+      new java.io.File(topic).mkdirs()
+      def stage(name: String, docs: Seq[(String, String)]): Unit = {
+        val w = new java.io.PrintWriter(s"$topic/$name")
+        docs.foreach { case (id, t) =>
+          w.println(s"""{"doc_id":"$id","text":"$t"}""")
+        }
+        w.close()
+      }
+      def drain(): Unit = {
+        val q = Streams.ingestGateSink(
+          Streams.subscribe(spark, topic, docSchema),
+          "doc_id", "text", store, outP, ckpt).start()
+        q.awaitTermination()
+      }
+    }
+    val flow = new Flow("ingestgate")
+    import flow.{drain, outP, stage, store}
 
     Streams.bootstrapIngestStore(corpus, "doc_id", "text", store)
-    def drain(): Unit = {
-      val q = Streams.ingestGateSink(
-        Streams.subscribe(spark, topic, docSchema),
-        "doc_id", "text", store, outP, ckpt).start()
-      q.awaitTermination()
-    }
     stage("inc1.json", Seq(("a", i1dupC1), ("b", i1nearC2), ("c", i1novel)))
     drain()
     stage("inc2.json", Seq(("d", i2dupNovel), ("e", i2novel)))
@@ -687,45 +693,31 @@ class StreamingSpec extends SparkSpec with Matchers {
     drain()
     verdictMap(spark.read.parquet(outP)) shouldBe streamed
 
-    // in-stream auto-compaction twin (compactEvery=1): verdicts
-    // identical, store folds to O(1) partitions as the stream runs, and
-    // a retry of the LAST batch (the only one structured streaming can
-    // replay) still converges — the folded partitions are all
-    // pre-current-batch history, so self-exclusion semantics hold
-    val root2 = Files.createTempDirectory("ingestgate_ac").toFile.getAbsolutePath
-    val (topic2, store2, outP2, ckpt2) =
-      (s"$root2/topic", s"$root2/store", s"$root2/out", s"$root2/ckpt")
-    new java.io.File(topic2).mkdirs()
-    def stage2(name: String, docs: Seq[(String, String)]): Unit = {
-      val w = new java.io.PrintWriter(s"$topic2/$name")
-      docs.foreach { case (id, t) =>
-        w.println(s"""{"doc_id":"$id","text":"$t"}""")
-      }
-      w.close()
-    }
-    Streams.bootstrapIngestStore(corpus, "doc_id", "text", store2)
-    def drain2(): Unit = {
-      val q = Streams.ingestGateSink(
-        Streams.subscribe(spark, topic2, docSchema),
-        "doc_id", "text", store2, outP2, ckpt2, compactEvery = 1).start()
-      q.awaitTermination()
-    }
-    // same two-increment cadence as the uncompacted flow above
-    stage2("inc1.json", Seq(("a", i1dupC1), ("b", i1nearC2), ("c", i1novel)))
-    drain2()
-    stage2("inc2.json", Seq(("d", i2dupNovel), ("e", i2novel)))
-    drain2()
-    verdictMap(spark.read.parquet(outP2)) shouldBe streamed
-    def dataDirs(p: String) = new java.io.File(p).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getName).sorted.toSeq
-    // batch 1 compacted {bootstrap, batch=0} away; itself remains
-    dataDirs(store2) shouldBe Seq("batch=1", "batch=compacted_0")
-    val before2 = spark.read.parquet(store2).collect()
-      .map(r => (r.getString(0), r.getSeq[String](1).mkString(","))).sorted
-    Streams.ingestGateBatch(inc2, 1L, "doc_id", "text", store2, outP2, 8)
-    spark.read.parquet(store2).collect()
-      .map(r => (r.getString(0), r.getSeq[String](1).mkString(","))).sorted shouldBe before2
-    verdictMap(spark.read.parquet(outP2)) shouldBe streamed
+    // a store path that does not exist yet (no bootstrap): the store
+    // reads as empty, so every doc is accepted with nothing shared
+    val fresh = new Flow("ingestgate_fresh")
+    fresh.stage("inc1.json", Seq(("a", i1dupC1), ("b", i1nearC2), ("c", i1novel)))
+    fresh.drain()
+    verdictMap(spark.read.parquet(fresh.outP)) shouldBe
+      Map("a" -> (false, 3L, 0L, false), "b" -> (false, 3L, 0L, false),
+        "c" -> (false, 3L, 0L, false))
+
+    // re-bootstrap in place: after the gate has read the first
+    // bootstrap, a second one rewrites batch=bootstrap with new content,
+    // and the next micro-batch is gated against that content: f repeats
+    // the new bootstrap doc, g repeats c1, which the rewrite removed
+    val reboot = new Flow("ingestgate_reboot")
+    Streams.bootstrapIngestStore(corpus, "doc_id", "text", reboot.store)
+    reboot.stage("inc1.json", Seq(("a", i1dupC1), ("b", i1nearC2), ("c", i1novel)))
+    reboot.drain()
+    verdictMap(spark.read.parquet(reboot.outP)) shouldBe
+      streamed.filter { case (id, _) => Set("a", "b", "c")(id) }
+    Streams.bootstrapIngestStore(Seq(("c3", i2novel)).toDF("doc_id", "text"),
+      "doc_id", "text", reboot.store)
+    reboot.stage("inc3.json", Seq(("f", i2novel), ("g", i1dupC1)))
+    reboot.drain()
+    val rebooted = verdictMap(spark.read.parquet(reboot.outP))
+    rebooted("f") shouldBe ((true, 3L, 3L, true))
+    rebooted("g") shouldBe ((false, 3L, 0L, false))
   }
 }

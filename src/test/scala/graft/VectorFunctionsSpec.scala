@@ -53,6 +53,36 @@ class VectorFunctionsSpec extends SparkSpec with Matchers {
       .orderBy("g").collect()
     out(0).getSeq[Double](1) shouldBe Seq(2.0, 3.0)
     out(1).getSeq[Double](1) shouldBe Seq(5.0, 6.0)
+
+    // one group in row order, at 1 and at 4 partitions (parallelize keeps
+    // the order and slices it contiguously)
+    def meanAt(vs: Seq[Seq[Double]], parts: Int): Seq[Double] =
+      spark.sparkContext.parallelize(vs, parts).toDF("v")
+        .agg(VectorMean(col("v"))).head().getSeq[Double](0)
+    def lengthError(vs: Seq[Seq[Double]], parts: Int): String = {
+      val e = intercept[Exception](meanAt(vs, parts))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case x: IllegalArgumentException => x.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $e"))
+    }
+    val layouts = Seq(1, 4)
+    // mixed lengths fail alike in every layout and row order; [] counts
+    // as length 0
+    layouts.map(lengthError(Seq(Nil, Nil, Seq(1.0, 3.0), Seq(3.0, 5.0)), _))
+      .distinct shouldBe Seq("graft: VectorMean over vectors of lengths 0 and 2 in one group")
+    layouts.flatMap(p => Seq(
+      lengthError(Seq(Seq(1.0, 1.0, 1.0), Seq(2.0, 2.0)), p),
+      lengthError(Seq(Seq(2.0, 2.0), Seq(1.0, 1.0, 1.0)), p)))
+      .distinct shouldBe Seq("graft: VectorMean over vectors of lengths 2 and 3 in one group")
+    // a group of only [] averages to []
+    layouts.foreach(meanAt(Seq(Nil, Nil, Nil), _) shouldBe Nil)
+    // one fixed length: in one partition the sum is the row-order fold
+    val rng = new scala.util.Random(7)
+    val fixed = Seq.fill(9)(Seq.fill(5)(rng.nextGaussian()))
+    val fold = fixed.foldLeft(Seq.fill(5)(0.0))((a, v) =>
+      a.zip(v).map { case (x, y) => x + y }).map(_ / fixed.size)
+    meanAt(fixed, 1).map(java.lang.Double.doubleToRawLongBits) shouldBe
+      fold.map(java.lang.Double.doubleToRawLongBits)
   }
 
   test("CosineRationalGate ≡ composed vec_dot predicate (codegen + interpreted, boundary/negative/null/float)") {
