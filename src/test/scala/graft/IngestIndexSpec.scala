@@ -3,18 +3,16 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
-import graft.dedup.{Dedup, IngestIndex}
+import graft.dedup.Dedup
 import graft.streaming.Streams
 
-/** The fingerprint-store index sidecar (r12 verdict item 1): the indexed
-  * gate must be verdict-IDENTICAL to the full-store scan — the bloom
-  * prefilter has no false negatives and the idx verify removes the false
-  * positives — across sidecar-covered, legacy, and mixed stores, and
-  * compaction (item 2) must preserve gate semantics while collapsing the
-  * store to O(1) directories. */
+/** The crawl-increment gate against a persisted fingerprint store, called
+  * directly through [[Streams.gateAgainstIngestStore]] (the suite keeps
+  * the name it had when the store carried index sidecars): an empty store
+  * accepts everything, and a store rewritten in place by a second
+  * bootstrap is gated against its new content, never a stale copy. */
 class IngestIndexSpec extends SparkSpec with Matchers {
 
   private def mix(x0: Long): Long = { // splitmix64 finalizer
@@ -32,18 +30,6 @@ class IngestIndexSpec extends SparkSpec with Matchers {
     ids.toDF("doc_id", "text")
   }
 
-  /** store docs 0..n-1; batch: exact dups of 0..4, near-dups of 5..9
-    * (one token appended), short doc, empty doc, novels. */
-  private def corpusAndBatch(n: Int): (DataFrame, DataFrame) = {
-    val store = docsDf(Seq.tabulate(n)(i => (s"s$i", docText(i, 40))))
-    val batch = docsDf(
-      Seq.tabulate(5)(i => (s"x$i", docText(i, 40))) ++
-      Seq.tabulate(5)(i => (s"nr$i", docText(i + 5, 40) + " extra")) ++
-      Seq(("short", "three tokens only"), ("empty", "")) ++
-      Seq.tabulate(8)(i => (s"nov$i", docText(900000L + i, 40))))
-    (store, batch)
-  }
-
   private def verdictMap(df: DataFrame): Map[String, (Boolean, Long, Long, Boolean)] =
     df.select("doc_id", "exact_dup", "n_grams", "n_shared", "drop_doc")
       .collect()
@@ -51,244 +37,18 @@ class IngestIndexSpec extends SparkSpec with Matchers {
         (r.getBoolean(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
       .toMap
 
-  /** The reference verdicts: the r12 full-scan gate over the same store
-    * content. */
-  private def fullScanVerdicts(fp: DataFrame, store: DataFrame): Map[String, (Boolean, Long, Long, Boolean)] =
-    verdictMap(Dedup.gateAgainstStore(
-      fp, store.select(col("sig")),
-      store.select(explode(col("grams")).as("h"))))
-
   private def fpOf(docs: DataFrame): DataFrame =
     Dedup.docSigGrams(docs, "doc_id", "text", 8).localCheckpoint()
-
-  test("gateWithIndex == gateAgainstStore on a sidecar-covered multi-partition store") {
-    val (store, batch) = corpusAndBatch(60)
-    val root = Files.createTempDirectory("idxgate").toFile.getAbsolutePath
-    val storeFp = fpOf(store)
-    // three store partitions, all with sidecars
-    Seq(0, 1, 2).foreach { b =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(3)) === b)
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$root/batch=$b")
-      IngestIndex.writeSidecars(part, root, s"batch=$b")
-    }
-    val fp = fpOf(batch)
-    val indexed = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
-    val full = fullScanVerdicts(fp,
-      storeFp.select(col("sig"), col("grams")))
-    indexed shouldBe full
-    // semantics sanity: exact dups flagged, near-dups dropped via grams,
-    // novels kept, the short doc (< 8 tokens, 0 grams) only exact-gated
-    indexed("x0")._1 shouldBe true
-    indexed("nr0")._4 shouldBe true
-    indexed("nr0")._1 shouldBe false
-    indexed("nov0")._4 shouldBe false
-    indexed("short") shouldBe ((false, 0L, 0L, false))
-  }
-
-  test("legacy store (no sidecars) and mixed store fall back partition-wise") {
-    val (store, batch) = corpusAndBatch(40)
-    val storeFp = fpOf(store)
-    val fp = fpOf(batch)
-    val full = fullScanVerdicts(fp, storeFp.select(col("sig"), col("grams")))
-
-    // fully legacy: data partitions only
-    val legacyRoot = Files.createTempDirectory("idxleg").toFile.getAbsolutePath
-    Seq(0, 1).foreach { b =>
-      storeFp.filter(pmod(hash(col("doc_id")), lit(2)) === b)
-        .select(col("sig"), col("grams"))
-        .write.mode("overwrite").parquet(s"$legacyRoot/batch=$b")
-    }
-    verdictMap(IngestIndex.gateWithIndex(fp, legacyRoot, None)) shouldBe full
-
-    // mixed: partition 0 indexed, partition 1 legacy
-    val mixedRoot = Files.createTempDirectory("idxmix").toFile.getAbsolutePath
-    Seq(0, 1).foreach { b =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(2)) === b)
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$mixedRoot/batch=$b")
-      if (b == 0) IngestIndex.writeSidecars(part, mixedRoot, s"batch=$b")
-    }
-    verdictMap(IngestIndex.gateWithIndex(fp, mixedRoot, None)) shouldBe full
-  }
 
   test("empty store and all-novel batch: every doc accepted, zero shared") {
     val batch = docsDf(Seq.tabulate(6)(i => (s"n$i", docText(7000L + i, 30))))
     val fp = fpOf(batch)
     val root = Files.createTempDirectory("idxempty").toFile.getAbsolutePath
-    val v = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
+    val v = verdictMap(Streams.gateAgainstIngestStore(fp, root, None))
     v.values.foreach { case (xd, _, ns, drop) =>
       xd shouldBe false; ns shouldBe 0L; drop shouldBe false
     }
     v.size shouldBe 6
-  }
-
-  test("sharded bloom and partitioned idx paths gate identically (forced small thresholds)") {
-    val s2 = spark
-    import s2.implicits._
-    val (store, batch) = corpusAndBatch(50)
-    val storeFp = fpOf(store)
-    val fp = fpOf(batch)
-    val full = fullScanVerdicts(fp, storeFp.select(col("sig"), col("grams")))
-
-    val root = Files.createTempDirectory("idxshard").toFile.getAbsolutePath
-    val part = storeFp.select(col("sig"), col("grams"))
-    part.write.mode("overwrite").parquet(s"$root/batch=0")
-    // force the at-scale layouts: inflate the key count so the idx takes
-    // the partitionBy(shard) branch and the bloom shards (sbits > 0)
-    val keys = IngestIndex.fpKeys(part).distinct().localCheckpoint()
-    IngestIndex.writeIdxKeys(keys, IngestIndex.PartitionedIdxKeys,
-      root, "batch=0")
-    IngestIndex.writeBloomKeys(keys,
-      Map(IngestIndex.KindSig -> 100L,
-        IngestIndex.KindGram ->
-          (IngestIndex.MaxMBits.toLong / IngestIndex.BitsPerKeyPerRow) * 4),
-      root, "batch=0")
-    graft.util.BlockRelease.release(keys)
-    // layout really is the at-scale one
-    new java.io.File(s"$root/_idx/batch=0").listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("ps=")) should be > 0
-    val blooms = spark.read.parquet(s"$root/_bloom/batch=0")
-    blooms.select("sbits").as[Int].collect().max should be > 0
-
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe full
-  }
-
-  test("stale bloom shard layout routes to legacy tier, compact repairs it (r15 ADVICE)") {
-    val (store, batch) = corpusAndBatch(40)
-    val storeFp = fpOf(store)
-    val fp = fpOf(batch)
-    val full = fullScanVerdicts(fp, storeFp.select(col("sig"), col("grams")))
-    val root = Files.createTempDirectory("idxlayout").toFile.getAbsolutePath
-    Seq(0, 1).foreach { b =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(2)) === b)
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$root/batch=$b")
-      IngestIndex.writeSidecars(part, root, s"batch=$b")
-    }
-    // simulate a pre-r14 sidecar on partition 0: SHARDED rows (sbits > 0)
-    // with no layout stamp — probing them under the current shard
-    // derivation would look keys up in the wrong bitset (silent false
-    // negatives), so the gate must treat the partition as uncovered
-    val bdir = s"$root/_bloom/batch=0"
-    val old = spark.read.schema(IngestIndex.bloomSchema).parquet(bdir)
-      .select(col("kind"), lit(3).as("sbits"), col("m_bits"),
-        col("shard"), col("words")) // no layout column, like an old file
-      .localCheckpoint()
-    old.write.mode("overwrite").parquet(bdir)
-    graft.util.BlockRelease.release(old)
-
-    IngestIndex.bloomLayoutCurrent(spark, root, "batch=0") shouldBe false
-    IngestIndex.bloomLayoutCurrent(spark, root, "batch=1") shouldBe true
-    // partition 0 answers through the raw-scan tier: verdicts exact
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe full
-
-    // compact classifies the stale part as uncovered -> always folds it
-    // and rebuilds the sidecar under the current layout
-    IngestIndex.compact(spark, root)
-    val parts = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName)
-    parts.toSeq shouldBe Seq("batch=compacted_0")
-    IngestIndex.bloomLayoutCurrent(spark, root, "batch=compacted_0") shouldBe true
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe full
-    IngestIndex.releaseStoreCaches(spark, root)
-  }
-
-  test("trickle pruned cold read: small probe reads few bloom rows, verdicts exact (r15)") {
-    val s2 = spark
-    import s2.implicits._
-    val (store, _) = corpusAndBatch(50)
-    val storeFp = fpOf(store)
-    val root = Files.createTempDirectory("idxtrickle").toFile.getAbsolutePath
-    val part = storeFp.select(col("sig"), col("grams"))
-    part.write.mode("overwrite").parquet(s"$root/batch=0")
-    // force sharded blooms (the layout the pruned read exists for)
-    val keys = IngestIndex.fpKeys(part).distinct().localCheckpoint()
-    IngestIndex.writeIdxKeys(keys, 10L, root, "batch=0")
-    IngestIndex.writeBloomKeys(keys,
-      Map(IngestIndex.KindSig -> 100L,
-        IngestIndex.KindGram ->
-          (IngestIndex.TargetMBits.toLong / IngestIndex.BitsPerKeyPerRow) * 32),
-      root, "batch=0")
-    graft.util.BlockRelease.release(keys)
-    spark.read.schema(IngestIndex.bloomSchema).parquet(s"$root/_bloom/batch=0")
-      .select("sbits").as[Int].collect().max should be > 0
-
-    // a SHORT doc (no grams: one sig key) maps to one bloom row of many
-    // -> the trickle path takes it; an exact store dup must still be
-    // caught through the pruned frame (no false negatives)
-    val probe = docsDf(Seq(("t0", "tiny short doc here")))
-    val probeFp = fpOf(probe)
-    val pKeys = IngestIndex.fpKeys(probeFp).distinct().localCheckpoint()
-    val pruned = IngestIndex.trickleBlooms(spark, root, Seq("batch=0"),
-      pKeys, 1L)
-    pruned.isDefined shouldBe true
-    graft.util.BlockRelease.release(pKeys)
-    pruned.foreach(graft.util.BlockRelease.release(_))
-    // end-to-end: a fresh session cache + tiny batch -> gate verdicts
-    // equal the full scan whichever bloom path answered
-    IngestIndex.releaseStoreCaches(spark, root)
-    val dupDoc = store.filter(col("doc_id") === "s0")
-      .select(lit("t1").as("doc_id"), col("text"))
-    val tiny = probe.unionByName(dupDoc)
-    val tinyFp = fpOf(tiny)
-    verdictMap(IngestIndex.gateWithIndex(tinyFp, root, None)) shouldBe
-      fullScanVerdicts(tinyFp, storeFp.select(col("sig"), col("grams")))
-    IngestIndex.releaseStoreCaches(spark, root)
-  }
-
-  test("compaction preserves verdicts, collapses directories, converges on re-run") {
-    val (store, batch) = corpusAndBatch(60)
-    val storeFp = fpOf(store)
-    val fp = fpOf(batch)
-    val root = Files.createTempDirectory("idxcompact").toFile.getAbsolutePath
-    Seq(0, 1, 2, 3).foreach { b =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(4)) === b)
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$root/batch=$b")
-      if (b < 2) IngestIndex.writeSidecars(part, root, s"batch=$b") // mixed on purpose
-    }
-    val before = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
-
-    Streams.compactIngestStore(spark, root)
-    def dataDirs() = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch=")).map(_.getName)
-    dataDirs().toSeq shouldBe Seq("batch=compacted_0")
-    new java.io.File(s"$root/_idx").listFiles().map(_.getName).toSeq shouldBe
-      Seq("batch=compacted_0")
-    new java.io.File(s"$root/_bloom").listFiles().map(_.getName).toSeq shouldBe
-      Seq("batch=compacted_0")
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe before
-
-    // a later increment lands next to the compacted partition; compacting
-    // again folds it in and bumps the generation
-    val inc = storeFp.limit(0).select(col("sig"), col("grams"))
-      .unionByName(fpOf(docsDf(Seq(("z1", docText(555555L, 40)))))
-        .select(col("sig"), col("grams")))
-    inc.write.mode("overwrite").parquet(s"$root/batch=7")
-    IngestIndex.writeSidecars(inc, root, "batch=7")
-    Streams.compactIngestStore(spark, root)
-    dataDirs().toSeq shouldBe Seq("batch=compacted_1")
-    val after = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
-    after shouldBe before // z1 is novel w.r.t. the batch: no verdict change
-
-    // tiered (in-stream) fold: new numeric parts fold into a FRESH
-    // generation, the existing one stays untouched, verdicts unchanged;
-    // the offline full merge then folds the levels
-    Seq(9, 10).foreach { b =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(4)) === (b % 4))
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$root/batch=$b")
-      IngestIndex.writeSidecars(part, root, s"batch=$b")
-    }
-    IngestIndex.compact(spark, root, onlyBelow = Some(11L),
-      includeCompacted = false)
-    dataDirs().sorted.toSeq shouldBe
-      Seq("batch=compacted_1", "batch=compacted_2")
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe before
-    Streams.compactIngestStore(spark, root)
-    dataDirs().toSeq shouldBe Seq("batch=compacted_3")
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe before
   }
 
   test("re-bootstrap evicts the cached bloom frame — no stale false negatives") {
@@ -296,157 +56,18 @@ class IngestIndexSpec extends SparkSpec with Matchers {
     val docsA = docsDf(Seq.tabulate(20)(i => (s"a$i", docText(i, 40))))
     val docsB = docsDf(Seq.tabulate(20)(i => (s"c$i", docText(100000L + i, 40))))
     Streams.bootstrapIngestStore(docsA, "doc_id", "text", root)
-    // prime the session bloom cache with the FIRST bootstrap's keys
+    // gate once against the FIRST bootstrap's content
     val warm = docsDf(Seq(("w0", docText(500000L, 40))))
-    verdictMap(IngestIndex.gateWithIndex(fpOf(warm), root, None))("w0")._4 shouldBe false
+    verdictMap(Streams.gateAgainstIngestStore(fpOf(warm), root, None))("w0")._4 shouldBe false
     // overwrite batch=bootstrap IN PLACE: same partition set, new content
-    // — set-equality alone would keep the stale frame (the r13 ADVICE)
     Streams.bootstrapIngestStore(docsB, "doc_id", "text", root)
-    // a dup of the NEW bootstrap must be flagged; a stale bloom would
-    // "prove it absent" (false negative, the one forbidden failure)
+    // a dup of the NEW bootstrap must be flagged; a gate that kept the
+    // first bootstrap's fingerprints would pass it (a false negative)
     val batch = docsDf(Seq(
       ("d0", docText(100000L, 40)), ("n0", docText(600000L, 40))))
-    val v = verdictMap(IngestIndex.gateWithIndex(fpOf(batch), root, None))
+    val v = verdictMap(Streams.gateAgainstIngestStore(fpOf(batch), root, None))
     v("d0")._1 shouldBe true
     v("d0")._4 shouldBe true
     v("n0")._4 shouldBe false
-  }
-
-  test("geometric in-stream merge bounds generation count; offline merge idempotent over it") {
-    val root = Files.createTempDirectory("idxgeom").toFile.getAbsolutePath
-    def dataDirs() = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getName).sorted.toSeq
-    val boot = docsDf(Seq.tabulate(200)(i => (s"s$i", docText(i, 40))))
-    Streams.bootstrapIngestStore(boot, "doc_id", "text", root)
-    // 8 folds of 2 constant-size batches each — the r13 tiered cut mints
-    // one generation per fold (8 after this loop); the geometric carry
-    // must keep the live count logarithmic
-    var b = 0
-    var maxGens = 0
-    (0 until 8).foreach { _ =>
-      (0 until 2).foreach { _ =>
-        val part = fpOf(docsDf(Seq.tabulate(10)(j =>
-            (s"b${b}_$j", docText(3000000L + b * 100L + j, 40)))))
-          .select(col("sig"), col("grams"))
-        part.write.mode("overwrite").parquet(s"$root/batch=$b")
-        IngestIndex.writeSidecars(part, root, s"batch=$b")
-        b += 1
-      }
-      IngestIndex.compact(spark, root, onlyBelow = Some(b.toLong),
-        includeCompacted = false)
-      maxGens = math.max(maxGens, dataDirs().size)
-    }
-    val gens = dataDirs()
-    gens.forall(_.startsWith("batch=compacted_")) shouldBe true
-    gens.size should be <= 5 // r13 behavior: 8 — linear in folds
-    maxGens should be <= 5
-    // every live generation carries sidecars (nothing silently legacy)
-    gens.foreach { g =>
-      new java.io.File(s"$root/_idx/$g").exists() shouldBe true
-      new java.io.File(s"$root/_bloom/$g").exists() shouldBe true
-    }
-    // verdicts over the merged store equal the full scan of its content
-    val batch = docsDf(Seq(
-      ("x0", docText(0L, 40)),                 // dup of bootstrap
-      ("x1", docText(3000000L, 40)),           // dup of batch 0's first doc
-      ("nv", docText(7777777L, 40))))          // novel
-    val fp = fpOf(batch)
-    val store = spark.read
-      .schema(Streams.ingestStoreSchema).parquet(root)
-    val indexed = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
-    indexed shouldBe fullScanVerdicts(fp, store)
-    indexed("x0")._1 shouldBe true
-    indexed("x1")._1 shouldBe true
-    indexed("nv")._4 shouldBe false
-    // the offline full merge stays idempotent over the geometric result
-    Streams.compactIngestStore(spark, root)
-    dataDirs().size shouldBe 1
-    verdictMap(IngestIndex.gateWithIndex(fp, root, None)) shouldBe indexed
-  }
-
-  test("a compacted generation missing sidecars is folded and repaired by the tiered fold") {
-    val root = Files.createTempDirectory("idxrepair").toFile.getAbsolutePath
-    val storeFp = fpOf(docsDf(Seq.tabulate(30)(i => (s"s$i", docText(i, 40)))))
-    Seq(0, 1).foreach { p =>
-      val part = storeFp.filter(pmod(hash(col("doc_id")), lit(2)) === p)
-        .select(col("sig"), col("grams"))
-      part.write.mode("overwrite").parquet(s"$root/batch=$p")
-      IngestIndex.writeSidecars(part, root, s"batch=$p")
-    }
-    Streams.compactIngestStore(spark, root)
-    // simulate the crash window: data renamed, sidecar renames lost
-    org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(s"$root/_idx/batch=compacted_0"))
-    org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(s"$root/_bloom/batch=compacted_0"))
-    val inc = fpOf(docsDf(Seq(("z0", docText(444444L, 40)))))
-      .select(col("sig"), col("grams"))
-    inc.write.mode("overwrite").parquet(s"$root/batch=5")
-    IngestIndex.writeSidecars(inc, root, "batch=5")
-    // the tiered fold must include the sidecar-less generation even
-    // though it is far larger than the increment — and rebuild sidecars
-    IngestIndex.compact(spark, root, onlyBelow = Some(6L),
-      includeCompacted = false)
-    val dirs = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getName).toSeq
-    dirs shouldBe Seq("batch=compacted_1")
-    new java.io.File(s"$root/_idx/batch=compacted_1").exists() shouldBe true
-    new java.io.File(s"$root/_bloom/batch=compacted_1").exists() shouldBe true
-    val batch = docsDf(Seq(("x0", docText(0L, 40)), ("n0", docText(888888L, 40))))
-    val fp = fpOf(batch)
-    val v = verdictMap(IngestIndex.gateWithIndex(fp, root, None))
-    v shouldBe fullScanVerdicts(fp,
-      spark.read.schema(Streams.ingestStoreSchema).parquet(root))
-    v("x0")._1 shouldBe true
-  }
-
-  test("wide bloom: no false negatives; FP rate within an order of the budget") {
-    val s2 = spark
-    import s2.implicits._
-    val n = 20000
-    val u60a = conv(substring(col("h"), 1, 15), 16, 10).cast("long")
-    val u60b = conv(substring(col("h"), 16, 15), 16, 10).cast("long")
-    val keys = spark.range(n.toLong)
-      .select(md5(concat(lit("k"), col("id"))).as("h"))
-      .select(u60a.as("ua"), u60b.as("ub"))
-      .localCheckpoint()
-    val m = IngestIndex.mBitsFor(n.toLong) // 8 bits/key/row
-    val k = IngestIndex.K
-    val bloom = keys.agg(graft.functions.BloomSketch
-      .bloom_build_wide(col("ua"), col("ub"), m, k).as("words"))
-    // every built key probes positive (the property the gate leans on)
-    keys.crossJoin(broadcast(bloom))
-      .filter(!graft.functions.BloomSketch
-        .bloom_probe_wide(col("ua"), col("ub"), col("words"), lit(m), k))
-      .count() shouldBe 0L
-    // fresh keys: FP rate near (1 - e^(-n/m))^k
-    val fps = spark.range(n.toLong)
-      .select(md5(concat(lit("fresh"), col("id"))).as("h"))
-      .select(u60a.as("ua"), u60b.as("ub"))
-      .crossJoin(broadcast(bloom))
-      .filter(graft.functions.BloomSketch.bloom_probe_wide(
-        col("ua"), col("ub"), col("words"), lit(m), k))
-      .count()
-    val expected = {
-      val p = 1.0 - math.exp(-1.0 * n / m)
-      math.pow(p, k) * n
-    }
-    fps.toDouble should be <= math.max(20.0, expected * 4)
-    graft.util.BlockRelease.release(keys)
-  }
-
-  test("geometry helpers: sbits/mBits scale with key count and stay in range") {
-    // sharding doubles once a bitset would exceed TargetMBits (r15 —
-    // finer rows so the trickle cold path has something to prune)
-    val base = IngestIndex.TargetMBits.toLong / IngestIndex.BitsPerKeyPerRow
-    IngestIndex.bloomShardBits(1000L) shouldBe 0
-    IngestIndex.bloomShardBits(base) shouldBe 0
-    IngestIndex.bloomShardBits(base * 4) shouldBe 2
-    IngestIndex.bloomShardBits(Long.MaxValue / 64) should be <= IngestIndex.IdxShardBits
-    IngestIndex.mBitsFor(1L) shouldBe IngestIndex.MinMBits
-    IngestIndex.mBitsFor(100000L) shouldBe (1 << 20) // 100k*8 = 800k <= 2^20
-    IngestIndex.mBitsFor(Long.MaxValue / 64) shouldBe IngestIndex.MaxMBits
   }
 }
