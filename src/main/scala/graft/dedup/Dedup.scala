@@ -684,7 +684,6 @@ object Dedup {
       else base.filter(col("n2") > 0).select(size(col("v"))).head(1)
         .headOption.fold(0)(_.getInt(0))
     val tier = LocalTier(base, tables, caller,
-      SizeGate.collectThreshold(2000000L),
       when(col("n2") > 0,
         VectorExpressions.hyperplane_sigs(col("v"), d, "neardup", bits, tables)),
       Seq(col("v"), col("n2")), size(col("v"))) { reps =>
@@ -732,8 +731,8 @@ object Dedup {
     * and bucket keys, a second the reps' verify payloads, and the driver
     * runs the same three steps. It runs only while members × bands, and
     * then the reps' projected candidates Σ C(|B|,2) and payload
-    * elements, stay within the tier's bound (the graph family's collect
-    * gate, [[SizeGate.collectThreshold]], default 2M); otherwise the
+    * elements, stay within the collect gate
+    * ([[SizeGate.collectThreshold]], default 2M); otherwise the
     * distributed steps above run.
     *
     * Returns (doc_id, canon_id, group_size): checkpointed, or a local
@@ -788,7 +787,7 @@ object Dedup {
     * kernel's guards and returns its exact pair predicate over positions
     * in that array. `caller` names the kernel in the density warning. */
   private final case class LocalTier(src: DataFrame, bands: Int,
-      caller: String, bound: Long, keys: Column, payload: Seq[Column],
+      caller: String, keys: Column, payload: Seq[Column],
       size: Column)(val verifier: Array[Row] => (Int, Int) => Boolean)
 
   /** One member as the driver tier's first job hands it over: `h` is
@@ -807,23 +806,24 @@ object Dedup {
     * ([[graft.util.SpreadScan.spreadInline]]):
     *
     *  1. the members' (id, singleton, content hashes, keys, payload size)
-    *     are collected within bound / bands rows
-    *     ([[SizeGate.collectWithin]]), so members × bands ≤ bound holds
+    *     are collected within gate / bands rows
+    *     ([[SizeGate.collectWithin]]), so members × bands ≤ gate holds
     *     for whatever reaches the driver. The driver forms the gids
     *     ([[localGids]]) and buckets the reps, and refuses the tier when
     *     their projected candidates Σ C(|B|,2) or their payload elements
-    *     exceed the bound: no payload has moved yet;
+    *     exceed the gate: no payload has moved yet;
     *  1. the reps' payloads are collected, and the driver verifies each
     *     distinct candidate rep pair whose components are still apart
     *     and unions the verified ones. */
   private def localGroups(t: LocalTier, contentCols: Seq[String],
       singleton: Column): Option[DataFrame] = {
-    if (t.bound < t.bands) return None
+    val gate = SizeGate.collectThreshold
+    if (gate < t.bands) return None
     val src = graft.util.SpreadScan.spreadInline(t.src)
     val rows = src.select(Seq(col("id"), singleton) ++
       contentHashes(contentCols) ++ Seq(when(!singleton, t.keys),
         when(!singleton, t.size)): _*).queryExecution.toRdd
-    val ms = SizeGate.collectWithin(rows, t.bound / t.bands)(_.map { r =>
+    val ms = SizeGate.collectWithin(rows, gate / t.bands)(_.map { r =>
       val single = r.getBoolean(1)
       LocalMember(r.getLong(0), single,
         if (single) null else (r.getLong(2), r.getLong(3), r.getLong(4)),
@@ -851,7 +851,7 @@ object Dedup {
         if (bk.size > 1) buckets += bk.toArray
       }
     }
-    if (cand2 > t.bound || reps.map(ms(_).size).sum > t.bound) return None
+    if (cand2 > gate || reps.map(ms(_).size).sum > gate) return None
     val repIds = reps.map(ids(_)) // sorted
     val payload = src.select(col("id"), struct(t.payload: _*))
     val width = t.payload.size
@@ -1078,8 +1078,7 @@ object Dedup {
       shingledHashes(docs, idCol, textCol, spread = spread)
         .select(col("doc_id").cast("long").as("id"), col("shingles"))
     // the driver tier spreads its own collect (SpreadScan.spreadInline)
-    val tier = LocalTier(members(spread = false), bands,
-      "minhashNearDupGroups", SizeGate.collectThreshold(2000000L),
+    val tier = LocalTier(members(spread = false), bands, "minhashNearDupGroups",
       lshBands(minhashSignature(col("shingles"), k), bands, k / bands)
         .getField("h"),
       Seq(col("shingles")), size(col("shingles"))) { reps =>

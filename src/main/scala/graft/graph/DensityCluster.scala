@@ -25,6 +25,10 @@ import graft.util.Checkpointer.CheckpointSyntax
   *
   * Multi-probe: `tables` independent hyperplane sets trade shuffle volume
   * for recall, the standard LSH knob.
+  *
+  * Below the collect gate ([[graft.util.SizeGate.collectThreshold]], in
+  * point pairs: n ≤ 2,000 by default) the whole clustering runs exactly
+  * on the driver instead; a gate of 0 forces the distributed tiers.
   */
 object DensityCluster {
 
@@ -41,18 +45,17 @@ object DensityCluster {
     *               the LSH tier remains the registered scale path (q46)
     * @return (id, label) — label = min core id of the cluster, or -1 noise */
   def dbscan(points: DataFrame, eps: Double, minPts: Int,
-      bits: Int = 12, tables: Int = 4,
-      bruteThreshold: Long = 2000L, dim: Int = -1,
+      bits: Int = 12, tables: Int = 4, dim: Int = -1,
       exactCandidates: Boolean = false): DataFrame = {
     val spark = points.sparkSession
 
-    // Small-n tier (same gate as Hdbscan's exact tier): EXACT DBSCAN on
-    // the collected points — all-pairs ε-graph instead of LSH candidates,
-    // so below the threshold the result is approximation-free while the
-    // LSH machinery serves the scale it was built for. Gate disabled at
-    // bruteThreshold ≤ 0 (skips the count() action too).
-    val nPts = if (bruteThreshold > 0) points.count() else Long.MaxValue
-    if (nPts <= bruteThreshold) {
+    // Small-n tier (Hdbscan's exact-tier gate): EXACT DBSCAN on the
+    // collected points while their n(n−1)/2 pairs fit the collect gate
+    // (n ≤ 2,000 by default) — all-pairs ε-graph instead of candidates,
+    // so below the gate the result is approximation-free while the
+    // distributed tiers serve the scale they were built for. A gate of 0
+    // forces them and skips the count() action too.
+    if (graft.util.SizeGate.pairsFit(points.count())) {
       import spark.implicits._
       val pts = points.select(col("id"), col("v"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)

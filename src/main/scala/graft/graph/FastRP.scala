@@ -40,8 +40,7 @@ object FastRP {
     // cache (FastRP's weighted averaging needs exactly it) — and the
     // cache path also closes a per-call leak: the old inline tier
     // returned without releasing its checkpointed sym.
-    val tiered = Louvain.symTiered(edges,
-      graft.util.SizeGate.collectThreshold(2000000L))
+    val tiered = Louvain.symTiered(edges)
     if (tiered.isRight) {
       val (es, _) = tiered.toOption.get
       return runInMemory(es, dim, iterationWeights).toSeq.toDF("node", "embedding")

@@ -53,8 +53,7 @@ object GraphAlgos {
     // collected array rides Louvain's r10 session cache — LPA is
     // weight-agnostic (lpaInMemory counts adjacency), so the shared
     // weighted array serves unchanged.
-    val tiered = Louvain.symTiered(edges,
-      graft.util.SizeGate.collectThreshold(2000000L))
+    val tiered = Louvain.symTiered(edges)
     if (tiered.isRight) {
       val csr = SeqCommunity.build(tiered.toOption.get._1)
       return lpaInMemory(csr, maxSteps).toSeq.toDF("node", "label")
@@ -147,7 +146,7 @@ object GraphAlgos {
     import spark.implicits._
     val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .cp()
-    if (pairs.count() <= graft.util.SizeGate.collectThreshold(2000000L)) {
+    if (pairs.count() <= graft.util.SizeGate.collectThreshold) {
       val es = pairs.as[(Long, Long)].collect()
       graft.util.BlockRelease.release(pairs) // edge-sized; don't leak per call
       val uf = new graft.util.UnionFind.Longs

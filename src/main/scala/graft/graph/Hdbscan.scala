@@ -15,22 +15,23 @@ import graft.util.Checkpointer.CheckpointSyntax
   * the DBSCAN substitute ([[DensityCluster]] remains as the flat-ε tier):
   *
   *  1. **Core distances**: distance to the minPts-th nearest neighbor —
-  *     EXACT at every scale (r10): in-memory brute under `bruteThreshold`
-  *     points (read through the collect gate, so a gate of 0 forces the
-  *     blocked tier), block-pair partitioned passes above it
+  *     EXACT at every scale (r10): in-memory brute while its n(n−1)/2
+  *     point pairs fit the collect gate
+  *     ([[graft.util.SizeGate.collectThreshold]]: n ≤ 2,000 by default; 0
+  *     forces the blocked tier), block-pair partitioned passes above it
   *     ([[blockedCores]] — every point pair is evaluated in exactly one
   *     memory-bounded task).
   *  2. **Mutual reachability**: d_mreach(a,b) = max(core_a, core_b, d(a,b)),
   *     never materialized as an edge set — each block-pair task folds it
   *     inside its local dense Prim ([[blockedMstEdges]]), whose ≤ P−1
   *     output edges form an exact MST superset by the cycle property.
-  *  3. **MST**: Kruskal over the collected sparsified union when it fits
-  *     the collect gate ([[graft.util.SizeGate.collectThreshold]], 5M
-  *     edges by default), else distributed Borůvka: each component picks
-  *     its minimum outgoing edge (deterministic total order on (w, a, b)),
-  *     components merge by pointer-doubling over the chosen-edge
-  *     functional graph — O(log n) rounds of node-sized shuffles, never
-  *     all-pairs.
+  *  3. **MST**: Kruskal over the collected sparsified union when its
+  *     edges fit the collect gate, else distributed Borůvka: each
+  *     component picks its minimum outgoing edge (deterministic total
+  *     order on (w, a, b)), components merge by pointer-doubling over the
+  *     chosen-edge functional graph — O(log n) rounds of node-sized
+  *     shuffles, never all-pairs — or on the driver once the components
+  *     fit the gate.
   *  4. **Hierarchy extraction** on the collected MST (n−1 edges — NODE-
   *     sized, the same collect-threshold discipline as [[Louvain]]):
   *     single-linkage dendrogram via union-find, condensed tree with
@@ -50,12 +51,9 @@ object Hdbscan {
     * @param taskTarget      ≈ points per block in the exact at-scale tier
     *                        (a task holds two blocks; memory ∝ taskTarget,
     *                        per-task work ∝ taskTarget²)
-    * @param bruteThreshold  default of the brute gate: at most this many
-    *                        points run the in-memory exact tier; the collect
-    *                        gate's setting, when one is made, replaces it
     * @return (id, label) — label = min member id of the cluster, −1 noise */
   def run(points: DataFrame, minPts: Int = 5, minClusterSize: Int = 5,
-      taskTarget: Int = 2048, bruteThreshold: Long = 2000L): DataFrame = {
+      taskTarget: Int = 2048): DataFrame = {
     require(minPts >= 1, s"minPts ($minPts) must be ≥ 1")
     require(taskTarget >= 2, s"taskTarget ($taskTarget) must be ≥ 2")
     // minClusterSize = 1 is degenerate HDBSCAN (every point a cluster, no
@@ -67,7 +65,7 @@ object Hdbscan {
     import spark.implicits._
 
     val n = points.count()
-    // Candidate edge tiers: under `bruteThreshold` the COMPLETE graph —
+    // Candidate edge tiers: with point pairs in the gate the COMPLETE graph —
     // this makes the small-n tier EXACT HDBSCAN (the MST and hierarchy are
     // the true ones; a kNN-only candidate set loses the inter-cluster
     // bridge edges, which inverts where sparse points fall out of the
@@ -78,7 +76,7 @@ object Hdbscan {
     // shuffle overhead at this size. Above the threshold, the block-pair
     // partitioned tier below — still EXACT (every pair charged to exactly
     // one task), just memory-bounded and distributed.
-    if (n <= graft.util.SizeGate.collectThreshold(bruteThreshold)) {
+    if (graft.util.SizeGate.pairsFit(n)) {
       val pts = points.select(col("id"), col("v"))
         .as[(Long, Array[Double])].collect().sortBy(_._1)
       return exactInMemory(pts, minPts, minClusterSize).toSeq.toDF("id", "label")
@@ -107,7 +105,7 @@ object Hdbscan {
     // distributed Borůvka rounds (several eager jobs each, O(log n) of
     // them) are reserved for unions that genuinely exceed one executor.
     val nCand = mre.count()
-    val gate = graft.util.SizeGate.collectThreshold(5000000L)
+    val gate = graft.util.SizeGate.collectThreshold
     val labels =
       if (nCand <= gate) {
         val edges = kruskalMst(mre.select(col("a"), col("b"), col("w"))
@@ -251,7 +249,7 @@ object Hdbscan {
     */
   private[graft] def extractLabelsDistributed(mst: DataFrame,
       points: DataFrame, minClusterSize: Int,
-      topFit: Long = 5000000L, componentFit: Long = 50000000L,
+      topFit: Long, componentFit: Long = 50000000L,
       minDriverBatch: Int = 4096): DataFrame = {
     val spark = mst.sparkSession
     import spark.implicits._
@@ -637,7 +635,14 @@ object Hdbscan {
     if (n == 0) return Map.empty
     val ids = pts.map(_._1)
     val vs = pts.map(_._2)
-    val m = n * (n - 1) / 2
+    // the pair arrays and their sort index are Int-indexed, and the
+    // sort's merge width reaches twice the pair count
+    val pairs = graft.util.SizeGate.pairCount(n)
+    if (pairs > Int.MaxValue / 2) throw new IllegalArgumentException(
+      s"graft: exact in-memory HDBSCAN over n = $n points needs $pairs " +
+        s"pairs, more than the ${Int.MaxValue / 2} its Int-indexed pair " +
+        "sort holds; a lower collect gate runs the blocked tier")
+    val m = pairs.toInt
     val w = new Array[Double](m) // pair distances, then mreach in place
     val ai = new Array[Int](m)
     val bi = new Array[Int](m)
@@ -865,8 +870,7 @@ object Hdbscan {
     * the choice — and the MST under distinct weights — deterministic), and
     * touching components merge via pointer doubling over the chosen-edge
     * functional graph (whose cycles are exactly the mutual-min 2-cycles). */
-  private[graft] def boruvkaMst(edges: DataFrame,
-      mergeCollect: Long = 10000000L): DataFrame = {
+  private[graft] def boruvkaMst(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val und = edges.select(col("a"), col("b"), col("w")).cp()
     var comp = und.select(col("a").as("node")).union(und.select(col("b")))
@@ -899,13 +903,13 @@ object Hdbscan {
         val chosen = minE.select(col("a"), col("b"), col("w")).distinct()
         mst = if (mst == null) chosen else mst.union(chosen)
         // Component merge. The merge graph is COMPONENT-sized and shrinks
-        // geometrically per round, so once it fits (mergeCollect), a
+        // geometrically per round, so once it fits the collect gate, a
         // driver union-find + broadcast relabel map is one job — the same
         // contracted-finish discipline as Louvain. Above the threshold
         // (first rounds at extreme n) pointer doubling over the chosen-
         // edge functional graph merges distributedly in O(log) hops.
         val relabel: DataFrame =
-          if (nComps <= mergeCollect) {
+          if (nComps <= graft.util.SizeGate.collectThreshold) {
             import spark.implicits._
             val pairs = minE.select(col("c"), col("tc")).as[(Long, Long)].collect()
             val uf = new graft.util.UnionFind.Longs
@@ -930,7 +934,11 @@ object Hdbscan {
                 q = q.as("x")
                   .join(q.select(col("c").as("p"), col("p").as("gp")).as("y"), Seq("p"), "left")
                   .select(col("c"), coalesce(col("gp"), col("p")).as("p"))
-              val nxt = q.cp()
+              // each hop's self-join squares the planner's size estimate,
+              // and a checkpoint keeps its plan's estimate: checkpointing
+              // a fresh frame keeps the estimate from growing eightfold in
+              // digits per pass, which stalled planning at 500 points
+              val nxt = spark.createDataFrame(q.rdd, q.schema).cp()
               changed = nxt.as("n")
                 .join(p.select(col("c"), col("p").as("prev")).as("o"), Seq("c"))
                 .filter(col("p") =!= col("prev")).count()

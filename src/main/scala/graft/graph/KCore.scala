@@ -34,8 +34,7 @@ object KCore {
     // symmetrized edges ride Louvain's r10 session cache — coreness is
     // weight-agnostic (peel reads adjacency only), so the weighted shared
     // array serves unchanged and q40 shares q42/q45/q47's one collect
-    val tiered = Louvain.symTiered(edges,
-      graft.util.SizeGate.collectThreshold(2000000L))
+    val tiered = Louvain.symTiered(edges)
     if (tiered.isRight) {
       val (es, _) = tiered.toOption.get
       val csr = SeqCommunity.build(es)

@@ -25,14 +25,14 @@ object Leiden {
       maxLevels: Int = 4): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val gate = graft.util.SizeGate.collectThreshold(2000000L)
+    val gate = graft.util.SizeGate.collectThreshold
 
     // Small-graph tier (same gate as Louvain/Hdbscan): under the collect
     // threshold the exact sequential Leiden runs directly — the
     // distributed rounds' per-round cost is pure scheduler latency there.
     // Collected artifacts ride Louvain's r10 session cache (q42/q45/q47
     // share one symmetrize+collect per cached projection).
-    val tiered = Louvain.symTiered(edges0, gate)
+    val tiered = Louvain.symTiered(edges0)
     if (tiered.isRight) {
       val (es, m2) = tiered.toOption.get
       val label = leidenInMemory(es, m2)

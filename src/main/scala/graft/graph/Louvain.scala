@@ -299,19 +299,20 @@ object Louvain {
     * pinned by BucketingSpec. Re-reading rewritten files = make a new
     * frame (`spark.read...` again) or route through Projection's
     * drop-and-rebuild, both of which miss this cache by construction. */
-  private[graft] def symTiered(edges0: DataFrame, collectThreshold: Long)
+  private[graft] def symTiered(edges0: DataFrame)
       : Either[(DataFrame, Long, Double), (SymEdges, Double)] = {
     val key = (edges0.sparkSession, edges0)
-    if (collectThreshold > 0) {
+    val gate = graft.util.SizeGate.collectThreshold
+    if (gate > 0) {
       collectedSym.peek(key) match {
-        case Some((es, m2)) if es.length <= collectThreshold =>
+        case Some((es, m2)) if es.length <= gate =>
           return Right((es, m2))
         case _ => ()
       }
     }
     val cached = checkpointedSym.peek(key)
     val (sym, nSymEdges, m2) = cached.getOrElse(symWithStats(edges0))
-    if (nSymEdges <= collectThreshold) {
+    if (nSymEdges <= gate) {
       val spark = edges0.sparkSession
       import spark.implicits._
       val es = SymEdges.fromTuples(sym.as[(Long, Long, Double)].collect())
@@ -334,8 +335,8 @@ object Louvain {
       maxLevels: Int = 4): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val gate = graft.util.SizeGate.collectThreshold(2000000L)
-    val tiered = symTiered(edges0, gate)
+    val gate = graft.util.SizeGate.collectThreshold
+    val tiered = symTiered(edges0)
     if (tiered.isRight) {
       // small-graph tier: exact sequential Louvain on the collected graph
       val (es, m2in) = tiered.toOption.get
@@ -373,7 +374,7 @@ object Louvain {
   def modularityOptimization(edges0: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = edges0.sparkSession
     import spark.implicits._
-    val tiered = symTiered(edges0, graft.util.SizeGate.collectThreshold(2000000L))
+    val tiered = symTiered(edges0)
     if (tiered.isRight) {
       val (es, m2) = tiered.toOption.get
       SeqCommunity.localMoveOnly(es, m2).toSeq.toDF("node", "label")

@@ -58,7 +58,7 @@ object PageRank {
     // iters >= 1 is load-bearing: with an empty loop the returned pr would
     // be a lazy plan over k, whose checkpoint blocks are released below.
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
-    val gate = graft.util.SizeGate.collectThreshold(2000000L)
+    val gate = graft.util.SizeGate.collectThreshold
     if (gate > 0 && edges.count() * 2 <= gate)
       return runInMemory(edges, iters, seed)
     val spark = edges.sparkSession

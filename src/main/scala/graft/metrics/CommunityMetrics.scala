@@ -168,7 +168,7 @@ object CommunityMetrics {
     */
   def ecs(members: DataFrame): DataFrame = {
     val sel = members.select(col("label"), col("v"))
-    collectVectors(sel, SizeGate.collectThreshold(2000000L))
+    collectVectors(sel, SizeGate.collectThreshold)
       .flatMap(localEcs)
       .fold(distributedEcs(members))(localFrame(members, _,
         ecsSchema(sel.schema("label"))))
@@ -208,7 +208,7 @@ object CommunityMetrics {
     * subtracted. `nodeVecs`: (node, v) unit vectors, so each dot product is
     * a cosine similarity. */
   def homophily(edges: DataFrame, nodeVecs: DataFrame): DataFrame = {
-    val gate = SizeGate.collectThreshold(2000000L)
+    val gate = SizeGate.collectThreshold
     val vecs = nodeVecs.select(col("node"), col("v"))
     val local = for {
       _ <- Option.when(integral(vecs.schema(0).dataType))(())
@@ -444,7 +444,7 @@ object CommunityMetrics {
     * for the distributed tier. */
   private def labeledAggregate(edges: DataFrame,
       labels: DataFrame): Option[(Aggregate, Labels)] = {
-    val gate = SizeGate.collectThreshold(2000000L)
+    val gate = SizeGate.collectThreshold
     for {
       es <- collectEdges(edges.select(col("src"), col("dst"), col("weight")), gate)
       lab <- collectLabels(labels, gate)

@@ -21,8 +21,9 @@ import graft.functions.VectorFunctions
   * No query passes a tier: every algorithm reads the collect gate
   * ([[graft.util.SizeGate.collectThreshold]]) at each of its gates,
   * nested ones included (q45's intra-community components, DBSCAN's and
-  * HDBSCAN's components, HDBSCAN's brute gate). Unset, each gate keeps
-  * its default (the exact in-memory tier at the test SFs);
+  * HDBSCAN's components, their brute gates). Unset, every gate reads
+  * the one default, `SizeGate.DefaultCollectThreshold` (the exact
+  * in-memory tier at the test SFs);
   * `SPARK_GRAFT_COLLECT_THRESHOLD=0` puts every one of them on its
   * distributed formulation, so the scale path is timed and
   * correctness-checked under the driver protocol (Bench/Verify). The
@@ -183,7 +184,9 @@ object GraphQueries {
   /** q46 — density clustering with noise labels over embeddings (G2's
     * HDBSCAN-equivalent; noise = -1 like the reference's F3 filter).
     * `dim` is threaded from the table's known embed width, so the LSH
-    * tier plans with no pre-candidate driver action.
+    * tier plans with no pre-candidate driver action. Within the collect
+    * gate (n(n−1)/2 point pairs, n ≤ 2,000 by default) DBSCAN runs its
+    * exact in-memory tier instead; the forced leg (gate 0) runs LSH.
     *
     * Surfaced under the hash oracle (point totality over the vec_id set +
     * `label_in_members`: every non-noise label is the id of a point in
@@ -216,18 +219,19 @@ object GraphQueries {
     * DBSCAN semantics (cores = ≥ minPts ε-neighbors at cosine ≥ 0.35,
     * clusters = min-id connected components of the core-core ε-graph,
     * borders take the smallest neighboring core's cluster, noise = −1)
-    * with the distributed exact all-pairs ε-graph instead of LSH
-    * candidates — every LABEL, not just a surface, is re-derived by
-    * DuckDB (ε-join + recursive-CTE min-label fixpoint, the q43
-    * precedent). Quadratic by construction and documented as such: the
-    * honest exactness tier (q39's role for near-dup), while q46's LSH
-    * banding stays the registered 100 TB path. */
+    * with an exact all-pairs ε-graph instead of LSH candidates: in memory
+    * within the collect gate (like q46), else the distributed exact join
+    * — every LABEL, not just a surface, is re-derived by DuckDB (ε-join +
+    * recursive-CTE min-label fixpoint, the q43 precedent). Quadratic by
+    * construction and documented as such: the honest exactness tier
+    * (q39's role for near-dup), while q46's LSH banding stays the
+    * registered 100 TB path. */
   val q64DbscanExact: Q = (spark, dir) => {
     val pts = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("id"),
         VectorFunctions.l2normalize(col("embedding")).as("v"))
     graft.graph.DensityCluster.dbscan(pts, eps = 0.35, minPts = 2,
-      bruteThreshold = 0L, dim = 64, exactCandidates = true)
+      dim = 64, exactCandidates = true)
   }
 
   /** q47 — modularity optimization (G7): parallel local moves, no

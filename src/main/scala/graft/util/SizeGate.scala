@@ -30,15 +30,34 @@ object SizeGate {
     * join-backs need no heavy-hitter split there). */
   val BroadcastRows: Long = 2000000L
 
+  /** The collect gate's one default: how many units a driver tier may
+    * hold or evaluate. Each gate counts its own unit (edge rows, label
+    * rows, vector elements, members × bands, or point pairs for the
+    * brute tiers of [[graft.graph.Hdbscan]] and
+    * [[graft.graph.DensityCluster]], which puts them at n ≤ 2,000). */
+  private[graft] val DefaultCollectThreshold: Long = 2000000L
+
   /** The collect-tier gate of the graph and dedup operators, read by
     * each operator at each of its gates: the value of the innermost
     * [[withCollectThreshold]] scope, else `SPARK_GRAFT_COLLECT_THRESHOLD`
     * (a deployment setting; the forced-distributed oracle leg sets it to
     * 0, which puts every gate, nested ones included, on its distributed
-    * tier), else `default`. */
-  private[graft] def collectThreshold(default: Long): Long =
-    scoped.value.getOrElse(
-      envLong("SPARK_GRAFT_COLLECT_THRESHOLD", default, min = 0L))
+    * tier), else [[DefaultCollectThreshold]]. */
+  private[graft] def collectThreshold: Long =
+    scoped.value.getOrElse(envLong("SPARK_GRAFT_COLLECT_THRESHOLD",
+      DefaultCollectThreshold, min = 0L))
+
+  /** n(n−1)/2, the point pairs a brute tier over `n` points evaluates
+    * (saturating at Long.MaxValue). */
+  private[graft] def pairCount(n: Long): Long =
+    (BigInt(n) * (n - 1) / 2).min(Long.MaxValue).toLong
+
+  /** Whether a brute tier over `n` points fits the collect gate, counted
+    * in point pairs. A gate of 0 fits none and leaves `n` unevaluated. */
+  private[graft] def pairsFit(n: => Long): Boolean = {
+    val gate = collectThreshold
+    gate > 0 && pairCount(n) <= gate
+  }
 
   private val scoped = new scala.util.DynamicVariable[Option[Long]](None)
 

@@ -6,7 +6,7 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.graph.{FastRP, GraphAlgos, KCore, Louvain, Projection}
 import graft.metrics.CommunityMetrics
-import graft.util.SizeGate.withCollectThreshold
+import graft.util.SizeGate.{pairCount, withCollectThreshold}
 
 /** Golden-graph tests (FIXTURES.md §B): exact values for deterministic
   * algorithms, invariants for heuristic ones. */
@@ -355,11 +355,13 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
       ((5000 + i).toLong, unit(v))
     }
     val pts = (clustered ++ noise).toDF("id", "v")
-    val exact = graft.graph.DensityCluster
-      .dbscan(pts, eps = 0.95, minPts = 4, bruteThreshold = 10000)
+    // the brute tier runs while the 3,060 points' pairs fit the gate
+    val pairs = pairCount(3060)
+    val exact = withCollectThreshold(pairs)(graft.graph.DensityCluster
+      .dbscan(pts, eps = 0.95, minPts = 4))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lsh = graft.graph.DensityCluster
-      .dbscan(pts, eps = 0.95, minPts = 4, bruteThreshold = 10) // force LSH tier
+    val lsh = withCollectThreshold(pairs - 1)(graft.graph.DensityCluster
+      .dbscan(pts, eps = 0.95, minPts = 4)) // force LSH tier
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // exact tier: the three planted clusters recovered, noise labeled -1
     (0 until 3).foreach { c =>
@@ -411,29 +413,35 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
     }
     def labels(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // each step runs once in the default scope and once under gate 0; the
-    // step's other gates are fixed by its parameters, so the component
-    // step is the only choice that differs
-    def bothScopes(name: String)(step: => Map[Long, Long]): Map[Long, Long] = {
-      var byDefault, forced = Map.empty[Long, Long]
+    // each step runs once in a `local` scope and once under gate 0; the
+    // local scope fixes the step's other gates, so the component step is
+    // the only choice that differs
+    def bothScopes(name: String, local: Long)(
+        step: => Map[Long, Long]): Map[Long, Long] = {
+      var byLocal, forced = Map.empty[Long, Long]
       withClue(s"$name: ") {
-        graphxJobsOf(s"$name-default") { byDefault = step } shouldBe 0
+        graphxJobsOf(s"$name-local") {
+          byLocal = withCollectThreshold(local)(step)
+        } shouldBe 0
         graphxJobsOf(s"$name-forced") {
           forced = withCollectThreshold(0L)(step)
         } should be > 0
-        forced shouldBe byDefault
+        forced shouldBe byLocal
       }
-      byDefault
+      byLocal
     }
 
-    // DBSCAN's components over the exact ε-graph (bruteThreshold = 0
-    // turns the brute gate off): two clusters and one noise point
+    // DBSCAN's components over the exact ε-graph: two clusters and one
+    // noise point. A gate of 30 lies between the ε-graph's 20 edges and
+    // the 55 point pairs, so the brute tier is off and the components
+    // collect
     val pts = (Seq.tabulate(5)(i => (i.toLong, Seq(1.0, 0.01 * i, 0.0))) ++
       Seq.tabulate(5)(i => (10L + i, Seq(0.0, 1.0, 0.01 * i))) :+
       ((99L, Seq(0.0, 0.0, 1.0)))).toDF("id", "v")
       .select(col("id"), graft.functions.VectorFunctions.l2normalize(col("v")).as("v"))
-    val db = bothScopes("dbscan")(labels(graft.graph.DensityCluster.dbscan(
-      pts, eps = 0.9, minPts = 2, bruteThreshold = 0L, exactCandidates = true)))
+    val db = bothScopes("dbscan", local = 30L)(labels(
+      graft.graph.DensityCluster.dbscan(pts, eps = 0.9, minPts = 2,
+        exactCandidates = true)))
     db(99L) shouldBe -1L
     (0L to 4L).map(db).toSet shouldBe Set(0L)
     (10L to 14L).map(db).toSet shouldBe Set(10L)
@@ -444,10 +452,45 @@ class GraphAlgoSpec extends SparkSpec with Matchers {
       (0 until 9).map(i => (100L + i, 101L + i, 0.12 + 0.01 * i)) :+
       ((9L, 100L, 5.0))
     val ids = (0L to 9L) ++ (100L to 109L)
-    val hd = bothScopes("hdbscan-extraction")(labels(
+    val hd = bothScopes("hdbscan-extraction", local = 2000000L)(labels(
       graft.graph.Hdbscan.extractLabelsDistributed(chains.toDF("a", "b", "w"),
         ids.toDF("id"), minClusterSize = 4, topFit = 5, minDriverBatch = 1)))
     hd shouldBe graft.graph.Hdbscan.extractLabels(chains.toArray, ids.toArray, 4)
+  }
+
+  test("the collect gate set to its default changes no tier: brute at 2,000 points, not 2,001") {
+    val s = spark
+    import s.implicits._
+    def unitPoints(n: Int): DataFrame = (0 until n).map { i =>
+      val v = Seq(1.0 + i % 7, (i * 13 % 11).toDouble, (i * 29 % 17).toDouble)
+      val norm = math.sqrt(v.map(x => x * x).sum)
+      (i.toLong, v.map(_ / norm))
+    }.toDF("id", "v")
+    def labels(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val algos = Seq[(String, DataFrame => DataFrame)](
+      "hdbscan" -> (graft.graph.Hdbscan.run(_, minPts = 4, minClusterSize = 4)),
+      "dbscan" -> (graft.graph.DensityCluster.dbscan(_, eps = 0.999, minPts = 4, dim = 3)))
+    for ((name, algo) <- algos; n <- Seq(2000, 2001)) withClue(s"$name, n = $n: ") {
+      val pts = unitPoints(n).cache()
+      pts.count()
+      // each run once with no scope, once with the gate set to its
+      // default, and once with a gate that exactly fits the n(n−1)/2
+      // pairs, which puts the brute tier on
+      var byDefault, explicit = Map.empty[Long, Long]
+      val jobsByDefault = jobsOf(s"$name-$n-default") { byDefault = labels(algo(pts)) }
+      val jobsExplicit = jobsOf(s"$name-$n-explicit") {
+        explicit = withCollectThreshold(2000000L)(labels(algo(pts)))
+      }
+      val jobsBrute = jobsOf(s"$name-$n-brute") {
+        withCollectThreshold(pairCount(n))(labels(algo(pts)))
+      }
+      jobsExplicit shouldBe jobsByDefault
+      explicit shouldBe byDefault
+      if (n == 2000) jobsByDefault shouldBe jobsBrute // the brute tier
+      else jobsByDefault should be > jobsBrute // the blocked or LSH tier
+      pts.unpersist()
+    }
   }
 
   test("Leiden: total single-label partition on the testdata graph") {

@@ -22,6 +22,7 @@ class GraphEdgeCasesSpec extends SparkSpec with Matchers {
     FastRP.run(empty, dim = 4).count() shouldBe 0
     val noPts = Seq.empty[(Long, Seq[Double])].toDF("id", "v")
     Hdbscan.run(noPts).count() shouldBe 0
+    graft.util.SizeGate.withCollectThreshold(0L)(Hdbscan.run(noPts)).count() shouldBe 0
   }
 
   test("single-edge graph: totality and sane labels through the sequential tier") {

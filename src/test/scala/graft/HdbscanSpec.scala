@@ -4,11 +4,18 @@ import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
 import graft.graph.Hdbscan
+import graft.util.SizeGate.{pairCount, withCollectThreshold}
 
 /** Golden/invariant specs for true HDBSCAN (SURVEY.md G2): planted-density
   * fixtures with known cluster recovery + noise semantics, plus a
   * hand-checked Borůvka MST. */
 class HdbscanSpec extends SparkSpec with Matchers {
+
+  /** Runs `body` with the brute tier over `n` points just past the
+    * collect gate: one pair under n(n−1)/2 forces the blocked tier and
+    * keeps the MST and extraction gates on the driver. */
+  private def blockedTier[T](n: Long)(body: => T): T =
+    withCollectThreshold(pairCount(n) - 1)(body)
 
   /** Two tight 8-dim blobs (30 pts each) + 12 scattered far-apart noise
     * points: the canonical planted-density fixture. Blob points sit on a
@@ -62,9 +69,18 @@ class HdbscanSpec extends SparkSpec with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     mst shouldBe Set((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 4L, 1.5), (4L, 5L, 4.0))
     // the fully-distributed merge path (pointer doubling) must agree
-    val mstDist = Hdbscan.boruvkaMst(edges, mergeCollect = 0L)
+    val mstDist = withCollectThreshold(0L)(Hdbscan.boruvkaMst(edges))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     mstDist shouldBe mst
+    // several rounds of pointer doubling: a 500-node ring with chords
+    // against Kruskal under the same (w, a, b) order
+    val ring = (0L until 500L).flatMap { i =>
+      Seq((i, (i + 1) % 500, (i * 7919 % 1009) / 1009.0),
+        (i, (i * 37 + 11) % 500, 1.0 + (i * 104729 % 997) / 997.0))
+    }.collect { case (a, b, w) if a != b => (math.min(a, b), math.max(a, b), w) }
+    withCollectThreshold(0L)(Hdbscan.boruvkaMst(ring.toDF("a", "b", "w")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet shouldBe Hdbscan.kruskalMst(ring.toArray).toSet
   }
 
   test("Borůvka on a disconnected graph yields one spanning tree per component") {
@@ -79,15 +95,15 @@ class HdbscanSpec extends SparkSpec with Matchers {
   }
 
   test("blocked exact tier = brute tier, label-exact (r10: the LSH tier is gone)") {
-    // bruteThreshold = 0 forces the block-pair partitioned path; with a
+    // blockedTier forces the block-pair partitioned path; with a
     // tiny taskTarget the 72 points spread over many block-pair tasks, so
     // the sparsified MST union is genuinely exercised. The blocked tier
     // computes the SAME unique (w, a, b)-ordered MST as the in-memory
     // brute tier, so labels (min member ids) must be EQUAL, not similar.
     val brute = Hdbscan.run(fixture, minPts = 4, minClusterSize = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val blocked = Hdbscan.run(fixture, minPts = 4, minClusterSize = 5,
-        taskTarget = 16, bruteThreshold = 0L) // force the blocked path
+    val blocked = blockedTier(72)(Hdbscan.run(fixture, minPts = 4,
+        minClusterSize = 5, taskTarget = 16))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     blocked shouldBe brute
     (0L until 30L).map(blocked).toSet.size shouldBe 1
@@ -101,11 +117,11 @@ class HdbscanSpec extends SparkSpec with Matchers {
     // the extraction tier — collected condensed tree vs the two-phase
     // pivot-split factorization (round-5 replacement for the flat cut).
     // Labels are min member ids, so exact equality is the contract.
-    val base = Hdbscan.run(fixture, minPts = 4, minClusterSize = 5,
-        bruteThreshold = 0L)
+    val base = blockedTier(72)(Hdbscan.run(fixture, minPts = 4,
+        minClusterSize = 5))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = graft.util.SizeGate.withCollectThreshold(20L)( // force two-phase extraction
-        Hdbscan.run(fixture, minPts = 4, minClusterSize = 5, bruteThreshold = 0L))
+    val dist = withCollectThreshold(20L)( // force two-phase extraction
+        Hdbscan.run(fixture, minPts = 4, minClusterSize = 5))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     dist.size shouldBe 72
     dist shouldBe base
@@ -258,8 +274,8 @@ class HdbscanSpec extends SparkSpec with Matchers {
       val brute = Hdbscan.run(pts, minPts = minPts, minClusterSize = mcs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val tt = 16 + (seed % 3) * 24 // 16/40/64 → varying block shapes
-      val blocked = Hdbscan.run(pts, minPts = minPts, minClusterSize = mcs,
-          taskTarget = tt, bruteThreshold = 0L)
+      val blocked = blockedTier(n)(Hdbscan.run(pts, minPts = minPts,
+          minClusterSize = mcs, taskTarget = tt))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       withClue(s"seed=$seed n=$n dim=$dim minPts=$minPts mcs=$mcs tt=$tt: ") {
         blocked shouldBe brute
@@ -317,11 +333,11 @@ class HdbscanSpec extends SparkSpec with Matchers {
       }
     }.toDF("id", "v")
 
-    val exact = Hdbscan.run(pts, minPts = 5, minClusterSize = 25,
-      bruteThreshold = 10000L).collect()
+    val exact = withCollectThreshold(pairCount(n))( // the brute tier
+      Hdbscan.run(pts, minPts = 5, minClusterSize = 25)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val blocked = Hdbscan.run(pts, minPts = 5, minClusterSize = 25,
-      bruteThreshold = 0L).collect() // default taskTarget → 3 blocks, 6 tasks
+    val blocked = blockedTier(n)( // default taskTarget → 3 blocks, 6 tasks
+      Hdbscan.run(pts, minPts = 5, minClusterSize = 25)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     exact.size shouldBe n
@@ -333,5 +349,14 @@ class HdbscanSpec extends SparkSpec with Matchers {
     // and the blocked tier must reproduce it EXACTLY — same unique MST,
     // same condensed tree, same min-member-id labels
     blocked shouldBe exact
+  }
+
+  test("brute tier past one sort's index: refused before any allocation") {
+    // 46,342 points are 1,073,767,311 pairs: n(n−1) overflows an Int, and
+    // the pair sort's merge width would pass Int.MaxValue
+    val pts = Array.tabulate(46342)(i => (i.toLong, Array(i.toDouble)))
+    val e = intercept[IllegalArgumentException](
+      Hdbscan.exactInMemory(pts, minPts = 2, minClusterSize = 2))
+    e.getMessage should include("n = 46342 points")
   }
 }

@@ -12,17 +12,20 @@ set -euo pipefail
 out="${1:-BENCH_FORCED_last.json}"
 
 # the distributed-tier query set fixed by the r10 verdict: q40-q49
-# (graph family), PageRank variants q94/q101, and the echo-chamber
-# metrics q15-q18 (modularity, structure, ECS, homophily), whose inputs
-# otherwise run on the driver; plus the MinHash and cosine near-dup
-# group kernels q110/q112, whose small corpora otherwise run on the driver.
+# (graph family) and q46's exact twin q64, PageRank variants q94/q101,
+# and the echo-chamber metrics q15-q18 (modularity, structure, ECS,
+# homophily), whose inputs otherwise run on the driver; plus the MinHash
+# and cosine near-dup group kernels q110/q112, whose small corpora
+# otherwise run on the driver.
 # Every operator reads the collect gate itself at each of its gates, so
-# =0 also reaches the nested component gates: q45's intra-community
-# components, DBSCAN's components (q46 above its 2,000-point in-memory
-# tier, q64 always) and HDBSCAN's extraction levels (q48/q49, once the MST
-# outgrows the 4,096-edge driver batch) run GraphX components here.
+# =0 also puts the brute tiers of DBSCAN and HDBSCAN on their distributed
+# tiers (q46 runs LSH, q64 the exact join, q48/q49 the blocked tier),
+# Borůvka's merge on pointer doubling, and reaches the nested component
+# gates: q45's intra-community components, DBSCAN's components (q46, q64)
+# and HDBSCAN's extraction levels (q48/q49, once the MST outgrows the
+# 4,096-edge driver batch) run GraphX components here.
 ONLY=q40_kcore,q41_label_prop,q42_louvain,q43_connected_components
-ONLY=$ONLY,q44_fastrp,q45_leiden,q46_density,q47_modularity_opt
+ONLY=$ONLY,q44_fastrp,q45_leiden,q46_density,q47_modularity_opt,q64_dbscan_exact
 ONLY=$ONLY,q48_hdbscan,q49_ep2_pipeline,q94_pagerank,q101_ppr,q15_modularity
 ONLY=$ONLY,q16_structure,q17_ecs,q18_homophily
 ONLY=$ONLY,q110_neardup_groups,q112_minhash_neardup_groups
